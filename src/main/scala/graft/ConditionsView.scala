@@ -37,15 +37,9 @@ final class ConditionsView(val df: DataFrame) {
 
   def getSampledDataWithTimeWeight(subject: String, of: String, startS: Long,
                                    endS: Long, method: String,
-                                   resolution: Int): DataFrame = {
-    val m = method.toLowerCase match {
-      case "linear" => TimeWeight.Linear
-      case "locf"   => TimeWeight.Locf
-      case other => throw new IllegalArgumentException(
-        s"unknown time_weight method '$other' (expected linear|locf)")
-    }
-    TimeWeight.sampledDataWithTimeWeight(df, subject, of, startS, endS, m, resolution)
-  }
+                                   resolution: Int): DataFrame =
+    TimeWeight.sampledDataWithTimeWeight(df, subject, of, startS, endS,
+      TimeWeight.method(method), resolution)
 
   def getUniqueMeasurementSubjects(startS: Long, endS: Long, of: String): DataFrame =
     TimeseriesQueries.uniqueMeasurementSubjects(df, of, startS, endS)

@@ -344,9 +344,7 @@ object SparkEntry {
     "q_interval_join" -> ((s, d) => {
       val c = conditions(s, d)
       val intervals = formatTimeIntervals(c, Subject, Of, S1, E1, clockS = E1)
-      val points = c.filter(col("measurement_of") === Of &&
-          col("timestamp") >= timestamp_seconds(lit(S1)) &&
-          col("timestamp") <= timestamp_seconds(lit(E1)))
+      val points = scan(c, Of, S1, E1)
         .select(unix_micros(col("timestamp")).as("ts_us"), col("measurement_subject"))
       graft.queries.IntervalJoin.pointInInterval(points, intervals,
           "ts_us", "time_us", "time_end_us", binWidthUs = 6L * 3600 * 1000000)
@@ -386,11 +384,8 @@ object SparkEntry {
     // batch-boundary pairs bridged by the carry — feeding the range in
     // three ordered slices must reproduce the batch q_rate stream exactly
     "q_rate_stream" -> ((s, d) => {
-      val real = conditions(s, d).filter(
-          col("measurement_of") === Of &&
-          col("measurement_number").isNotNull &&
-          col("timestamp") >= timestamp_seconds(lit(S1)) &&
-          col("timestamp") <= timestamp_seconds(lit(E1)))
+      val real = scan(conditions(s, d), Of, S1, E1)
+        .filter(col("measurement_number").isNotNull)
         .select("measurement_subject", "measurement_of", "measurement_number",
           "timestamp")
       withTempDir("graft_rate_stream") { tmp =>
@@ -568,9 +563,8 @@ object SparkEntry {
     // to the raw store and refresh the touched dates; serving afterward
     // must equal computing from raw rows
     "q_cagg_streamed" -> ((s, d) => {
-      val real = conditions(s, d).filter(
-        col("timestamp") >= timestamp_seconds(lit(S1)) &&
-        col("timestamp") < timestamp_seconds(lit(E1)))
+      val real = during(conditions(s, d), S1, E1)
+        .filter(col("timestamp") < timestamp_seconds(lit(E1)))
       withTempDir("graft_cagg_stream") { tmp =>
         def run(): Unit = BenchPhases.drainTimed("q_cagg_streamed")(
           graft.streaming.CaggStream.start(s, s"$tmp/input", s"$tmp/store",
@@ -666,11 +660,8 @@ object SparkEntry {
     // flush as in q_agg_interval_stream; shares the batch-replay oracle
     "q_ohlc_stream" -> ((s, d) => {
       import s.implicits._
-      val real = conditions(s, d).filter(
-          col("measurement_of") === Of &&
-          col("measurement_number").isNotNull &&
-          col("timestamp") >= timestamp_seconds(lit(S1)) &&
-          col("timestamp") <= timestamp_seconds(lit(E1)))
+      val real = scan(conditions(s, d), Of, S1, E1)
+        .filter(col("measurement_number").isNotNull)
         .select("measurement_subject", "measurement_number", "timestamp")
       withTempDir("graft_ohlc_stream") { tmp =>
         def run(): Unit = BenchPhases.drainTimed("q_ohlc_stream") {
@@ -705,11 +696,8 @@ object SparkEntry {
     // partials at read — shares the batch day-window oracle
     "q_stats_stream" -> ((s, d) => {
       import s.implicits._
-      val real = conditions(s, d).filter(
-          col("measurement_of") === Of &&
-          col("measurement_number").isNotNull &&
-          col("timestamp") >= timestamp_seconds(lit(S1)) &&
-          col("timestamp") <= timestamp_seconds(lit(E1)))
+      val real = scan(conditions(s, d), Of, S1, E1)
+        .filter(col("measurement_number").isNotNull)
         .select("measurement_subject", "measurement_number", "timestamp")
       withTempDir("graft_stats_stream") { tmp =>
         def run(): Unit = BenchPhases.drainTimed("q_stats_stream") {
@@ -749,9 +737,7 @@ object SparkEntry {
     // of) group
     "q_agg_interval_stream" -> ((s, d) => {
       import s.implicits._
-      val real = conditions(s, d).filter(
-          col("timestamp") >= org.apache.spark.sql.functions.timestamp_seconds(lit(S1)) &&
-          col("timestamp") <= org.apache.spark.sql.functions.timestamp_seconds(lit(E1)))
+      val real = during(conditions(s, d), S1, E1)
         .select("measurement_subject", "measurement_of", "measurement_number", "timestamp")
       withTempDir("graft_aggint_stream") { tmp =>
         def run(): Unit = BenchPhases.drainTimed("q_agg_interval_stream") {
@@ -792,10 +778,7 @@ object SparkEntry {
     // Oracle = the batch q_sessions oracle without the session ordinal.
     "q_sessions_stream" -> ((s, d) => {
       import s.implicits._
-      val real = conditions(s, d).filter(
-          col("measurement_of") === Of &&
-          col("timestamp") >= org.apache.spark.sql.functions.timestamp_seconds(lit(S1)) &&
-          col("timestamp") <= org.apache.spark.sql.functions.timestamp_seconds(lit(E1)))
+      val real = scan(conditions(s, d), Of, S1, E1)
         .select("measurement_subject", "timestamp")
       withTempDir("graft_sess_stream") { tmp =>
         def run(): Unit = BenchPhases.drainTimed("q_sessions_stream") {
@@ -3283,10 +3266,10 @@ object SparkEntry {
     // DuckDB's native ASOF LEFT JOIN as the oracle
     "q_asof" -> ((s, d) => {
       val cond = conditions(s, d)
-      val clicks = scan(cond, Subject, "click", S1, E1)
+      val clicks = scan(cond, "click", S1, E1, Some(Subject))
         .select(col("measurement_subject"), col("timestamp"),
           col("measurement_number").as("click_value"))
-      val views = scan(cond, Subject, "view", S1, E1)
+      val views = scan(cond, "view", S1, E1, Some(Subject))
         .select(col("measurement_subject"), col("timestamp"),
           col("measurement_number").as("view_value"))
       graft.queries.AsOfJoin.asofJoin(clicks, views,
@@ -3303,10 +3286,7 @@ object SparkEntry {
     "q_funnel" -> ((s, d) => {
       import org.apache.spark.sql.functions.{avg, when}
       val cond = conditions(s, d)
-      def side(of: String) = cond.filter(
-          col("measurement_of") === of &&
-          col("timestamp") >= org.apache.spark.sql.functions.timestamp_seconds(lit(S1)) &&
-          col("timestamp") <= org.apache.spark.sql.functions.timestamp_seconds(lit(E1)))
+      def side(of: String) = scan(cond, of, S1, E1)
         .select("measurement_subject", "timestamp")
       val horizonUs = 3600L * 1000000L
       graft.queries.AsOfJoin.asofNext(side("click"), side("view"),

@@ -219,14 +219,9 @@ object SqlTableFunctions {
     add("graft_sampled_data_with_time_weight",
       "graft_sampled_data_with_time_weight(subject, of, start_s, end_s, method, resolution)", 6) {
       (s, f, a) =>
-        val method = strArg(f, a, 4).toLowerCase match {
-          case "linear" => TimeWeight.Linear
-          case "locf"   => TimeWeight.Locf
-          case other => throw new IllegalArgumentException(
-            s"${f.name}: unknown time_weight method '$other' (expected linear|locf)")
-        }
         TimeWeight.sampledDataWithTimeWeight(cond(s, f), strArg(f, a, 0), strArg(f, a, 1),
-          longArg(f, a, 2), longArg(f, a, 3), method, intArg(f, a, 5))
+          longArg(f, a, 2), longArg(f, a, 3), TimeWeight.method(strArg(f, a, 4)),
+          intArg(f, a, 5))
     }
     add("graft_unique_measurement_subjects",
       "graft_unique_measurement_subjects(start_s, end_s, of)", 3) {

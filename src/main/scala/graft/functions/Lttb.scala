@@ -1,5 +1,6 @@
 package graft.functions
 
+import graft.queries.TimeseriesQueries
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -87,11 +88,8 @@ object Lttb {
         out.result()
       }
     }
-    conditions.filter(
-        col("measurement_of") === of &&
-        col("measurement_number").isNotNull &&
-        col("timestamp") >= timestamp_seconds(lit(startS)) &&
-        col("timestamp") <= timestamp_seconds(lit(endS)))
+    TimeseriesQueries.scan(conditions, of, startS, endS)
+      .filter(col("measurement_number").isNotNull)
       .select(col("measurement_subject"),
         (unix_micros(col("timestamp")) - startUs).as("x"),
         round(col("measurement_number") * scale, 0).cast("long").as("y"))

@@ -29,6 +29,14 @@ object TimeWeight {
   case object Linear extends Method
   case object Locf extends Method
 
+  /** The `method` argument of the B6 surfaces (`linear` | `locf`, any case). */
+  def method(name: String): Method = name.toLowerCase match {
+    case "linear" => Linear
+    case "locf"   => Locf
+    case other => throw new IllegalArgumentException(
+      s"unknown time_weight method '$other' (expected linear|locf)")
+  }
+
   def integrateSorted(pts: IndexedSeq[(Long, Double)], method: Method): Double = {
     if (pts.isEmpty) return Double.NaN
     val first = pts.head
@@ -63,7 +71,7 @@ object TimeWeight {
                                 resolution: Int): DataFrame = {
     val widthS = (endS - startS) / resolution
     require(widthS > 0, "resolution too fine for span")
-    TimeseriesQueries.scan(conditions, subject, of, startS, endS)
+    TimeseriesQueries.scan(conditions, of, startS, endS, Some(subject))
       // EAV rows of another value type under the same metric name carry a
       // null measurement_number; the toolkit's time_weight skips NULLs
       .filter(col("measurement_number").isNotNull)

@@ -23,10 +23,7 @@ object EventAnalytics {
     */
   def retentionCohorts(conditions: DataFrame, of: String,
                        startS: Long, endS: Long): DataFrame = {
-    val days = conditions.filter(
-        col("measurement_of") === of &&
-        col("timestamp") >= timestamp_seconds(lit(startS)) &&
-        col("timestamp") <= timestamp_seconds(lit(endS)))
+    val days = TimeseriesQueries.scan(conditions, of, startS, endS)
       .select(col("measurement_subject"),
         expr("unix_micros(timestamp) div 1000000 div 86400").as("day"))
       .distinct()
@@ -61,11 +58,9 @@ object EventAnalytics {
     val wUs = widthS * 1000000L
     val aggs = metrics.map(m =>
       round(avg(when(col("measurement_of") === m, col("measurement_number"))), 6).as(m))
-    conditions.filter(
-        col("measurement_of").isin(metrics: _*) &&
-        col("measurement_number").isNotNull &&
-        col("timestamp") >= timestamp_seconds(lit(startS)) &&
-        col("timestamp") <= timestamp_seconds(lit(endS)))
+    TimeseriesQueries.during(conditions, startS, endS)
+      .filter(col("measurement_of").isin(metrics: _*) &&
+        col("measurement_number").isNotNull)
       .select(col("measurement_subject"), col("measurement_of"),
         col("measurement_number"),
         expr(s"((unix_micros(timestamp) - pmod(unix_micros(timestamp), ${wUs}L)) div ${wUs}L) * ${widthS}L")
@@ -94,10 +89,7 @@ object EventAnalytics {
     require(steps.size >= 2, "funnel needs at least two steps")
     require(horizonS > 0, "horizonS must be positive")
     val horizonUs = horizonS * 1000000L
-    def evs(of: String) = conditions.filter(
-        col("measurement_of") === of &&
-        col("timestamp") >= timestamp_seconds(lit(startS)) &&
-        col("timestamp") <= timestamp_seconds(lit(endS)))
+    def evs(of: String) = TimeseriesQueries.scan(conditions, of, startS, endS)
       .select(col("measurement_subject").as("s"), col("timestamp"))
     var frame = evs(steps.head).select(col("s"), col("timestamp").as("ts_0"))
     for ((step, i) <- steps.tail.zipWithIndex) {

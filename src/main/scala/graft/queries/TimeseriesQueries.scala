@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.sources.ConditionsTable
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -44,32 +45,44 @@ object TimeseriesQueries {
   def timeBucketS(widthS: Long, ts: Column): Column =
     (floor((epochS(ts) - BucketOriginS) / widthS) * widthS + BucketOriginS).cast("long")
 
-  /** The common parameterized scan. Two plan-shape guarantees:
-    *  - the time range compares the timestamp column directly against
+  /** The common parameterized scan — the ONE filter over a conditions
+    * frame for metric, optional subject and time range [startS, endS]
+    * (both inclusive). Callers needing a half-open end or only numeric
+    * rows add one more `.filter`; Catalyst merges it into the same
+    * pushed filter. The time slice itself is [[during]].
+    */
+  def scan(conditions: DataFrame, of: String, startS: Long, endS: Long,
+           subject: Option[String] = None): DataFrame =
+    during(conditions.filter(series(of, subject)), startS, endS)
+
+  /** The series key predicate: metric `of`, and `subject` when given. Also
+    * selects rollup rows, which carry the same key columns.
+    */
+  def series(of: String, subject: Option[String] = None): Column = {
+    val metric = col("measurement_of") === of
+    subject.fold(metric)(s => metric && col("measurement_subject") === s)
+  }
+
+  /** The time slice [startS, endS] of a conditions frame, with two
+    * plan-shape guarantees:
+    *  - the range compares the timestamp column directly against
     *    literals (NOT `epochS(ts) >= x`, a function of the column that can
     *    never reach parquet min/max pruning) — for integer epoch bounds the
     *    two forms are exactly equivalent, and this one shows up in
     *    `PushedFilters` on a native conditions table;
-    *  - when the table is date-partitioned (see
-    *    [[graft.sources.ConditionsTable.write]]), an equivalent `date`
-    *    predicate is derived so directory-level partition pruning fires —
+    *  - when the frame is date-partitioned (see
+    *    [[graft.sources.ConditionsTable.write]]), the covering `date`
+    *    predicate is added so directory-level partition pruning fires —
     *    Spark does not infer it from the timestamp range the way
     *    TimescaleDB derives hypertable chunk exclusion.
     */
-  def scan(conditions: DataFrame, subject: String, of: String,
-           startS: Long, endS: Long): DataFrame = {
-    val base =
-      col("measurement_of") === of &&
-      col("measurement_subject") === subject &&
-      col("timestamp") >= timestamp_seconds(lit(startS)) &&
+  def during(conditions: DataFrame, startS: Long, endS: Long): DataFrame = {
+    val range = col("timestamp") >= timestamp_seconds(lit(startS)) &&
       col("timestamp") <= timestamp_seconds(lit(endS))
-    val pred =
+    conditions.filter(
       if (conditions.columns.contains("date"))
-        base &&
-          col("date") >= to_date(timestamp_seconds(lit(startS))) &&
-          col("date") <= to_date(timestamp_seconds(lit(endS)))
-      else base
-    conditions.filter(pred)
+        range && ConditionsTable.datesCovering(startS, endS)
+      else range)
   }
 
   /** B1 `get_aggregated_data` (`db/get_aggregated_data.sql`):
@@ -87,7 +100,7 @@ object TimeseriesQueries {
   /** B2 `get_aggregated_data_by_interval`: fixed-width bucket + AVG. */
   def aggregatedDataByInterval(conditions: DataFrame, subject: String, of: String,
                                startS: Long, endS: Long, intervalS: Long): DataFrame =
-    scan(conditions, subject, of, startS, endS)
+    scan(conditions, of, startS, endS, Some(subject))
       .groupBy(timeBucketS(intervalS, col("timestamp")).as("time_s"))
       .agg(avg("measurement_number").as("avg_measurement_number"))
       .orderBy("time_s")
@@ -104,7 +117,7 @@ object TimeseriesQueries {
     // PG raises division-by-zero for a zero span (LEAST(360, 0/900) = 0
     // divisor); fail fast with a real message instead of NaN buckets
     require(span > 0, s"span must be positive: start=$startS end=$endS")
-    val base = scan(conditions, subject, of, startS, endS)
+    val base = scan(conditions, of, startS, endS, Some(subject))
     if (span <= 86400) {
       // PG parity (exact): `span / LEAST(360, extract(epoch from span)/900)`
       // with FRACTIONAL arithmetic, interval division rounding to integer
@@ -142,7 +155,7 @@ object TimeseriesQueries {
     */
   def mostFrequentValueByInterval(conditions: DataFrame, subject: String, of: String,
                                   startS: Long, endS: Long): DataFrame = {
-    val slice = scan(conditions, subject, of, startS, endS)
+    val slice = scan(conditions, of, startS, endS, Some(subject))
     val total = slice.count() // driver-side action, mirrors the plpgsql pre-count
     val intervalS = if (total > 360) math.max(1L, (endS - startS) / 360) else 60L
     val counted = slice
@@ -265,10 +278,7 @@ object TimeseriesQueries {
   def largestGaps(conditions: DataFrame, of: String, startS: Long, endS: Long,
                   topN: Int): DataFrame = {
     val w = Window.partitionBy("measurement_subject").orderBy("timestamp")
-    conditions.filter(
-        col("measurement_of") === of &&
-        col("timestamp") >= timestamp_seconds(lit(startS)) &&
-        col("timestamp") <= timestamp_seconds(lit(endS)))
+    scan(conditions, of, startS, endS)
       .select(col("measurement_subject"), col("timestamp"))
       .withColumn("prev_ts", lag("timestamp", 1).over(w))
       .filter(col("prev_ts").isNotNull)
@@ -334,11 +344,8 @@ object TimeseriesQueries {
   private def hampelScan(conditions: DataFrame, of: String, startS: Long,
                          endS: Long, widthS: Long, scale: Int): DataFrame = {
     val wUs = widthS * 1000000L
-    conditions.filter(
-        col("measurement_of") === of &&
-        col("measurement_number").isNotNull &&
-        col("timestamp") >= timestamp_seconds(lit(startS)) &&
-        col("timestamp") <= timestamp_seconds(lit(endS)))
+    scan(conditions, of, startS, endS)
+      .filter(col("measurement_number").isNotNull)
       .select(col("measurement_subject"), col("timestamp"),
         round(col("measurement_number") * scale, 0).cast("long").as("c"))
       .withColumn("bucket_s",
@@ -424,11 +431,8 @@ object TimeseriesQueries {
     // ties on duplicate timestamps ordered by the reading, the
     // counterToRate convention
     val w = Window.partitionBy("measurement_subject").orderBy("timestamp", "c")
-    val base = conditions.filter(
-        col("measurement_of") === of &&
-        col("measurement_number").isNotNull &&
-        col("timestamp") >= timestamp_seconds(lit(startS)) &&
-        col("timestamp") <= timestamp_seconds(lit(endS)))
+    val base = scan(conditions, of, startS, endS)
+      .filter(col("measurement_number").isNotNull)
       .select(col("measurement_subject"), col("timestamp"),
         round(col("measurement_number") * scale, 0).cast("long").as("c"))
     val lagged = (1 until taps).foldLeft(base) { (df, j) =>
@@ -465,11 +469,8 @@ object TimeseriesQueries {
                  scale: Int = 100): DataFrame = {
     val w = Window.partitionBy("measurement_subject").orderBy("timestamp", "c")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    conditions.filter(
-        col("measurement_of") === of &&
-        col("measurement_number").isNotNull &&
-        col("timestamp") >= timestamp_seconds(lit(startS)) &&
-        col("timestamp") <= timestamp_seconds(lit(endS)))
+    scan(conditions, of, startS, endS)
+      .filter(col("measurement_number").isNotNull)
       .select(col("measurement_subject"), col("timestamp"),
         round(col("measurement_number") * scale, 0).cast("long").as("c"))
       .withColumn("__d", col("c") - targetCents - slackCents)
@@ -491,11 +492,8 @@ object TimeseriesQueries {
     // deterministic (lag's tie order otherwise differs across engines —
     // and two readings at one instant have no defined "order" anyway)
     val w = Window.partitionBy("measurement_subject").orderBy("timestamp", "c")
-    conditions.filter(
-        col("measurement_of") === of &&
-        col("measurement_number").isNotNull &&
-        col("timestamp") >= timestamp_seconds(lit(startS)) &&
-        col("timestamp") <= timestamp_seconds(lit(endS)))
+    scan(conditions, of, startS, endS)
+      .filter(col("measurement_number").isNotNull)
       .select(col("measurement_subject"), col("timestamp"),
         round(col("measurement_number") * scale, 0).cast("long").as("c"))
       .withColumn("prev_ts", lag("timestamp", 1).over(w))
@@ -534,11 +532,8 @@ object TimeseriesQueries {
     require(bucketS > 0, "bucket width must be positive")
     val w = Window.partitionBy("measurement_subject", "time_s")
       .orderBy("timestamp", "c")
-    conditions.filter(
-        col("measurement_of") === of &&
-        col("measurement_number").isNotNull &&
-        col("timestamp") >= timestamp_seconds(lit(startS)) &&
-        col("timestamp") <= timestamp_seconds(lit(endS)))
+    scan(conditions, of, startS, endS)
+      .filter(col("measurement_number").isNotNull)
       .select(col("measurement_subject"), col("timestamp"),
         round(col("measurement_number") * scale, 0).cast("long").as("c"),
         timeBucketS(bucketS, col("timestamp")).as("time_s"))
@@ -574,11 +569,8 @@ object TimeseriesQueries {
       .orderBy("t_us", "c")
     val wDesc = Window.partitionBy("measurement_subject", "time_s")
       .orderBy(col("t_us").desc, col("c").desc)
-    conditions.filter(
-        col("measurement_of") === of &&
-        col("measurement_number").isNotNull &&
-        col("timestamp") >= timestamp_seconds(lit(startS)) &&
-        col("timestamp") <= timestamp_seconds(lit(endS)))
+    scan(conditions, of, startS, endS)
+      .filter(col("measurement_number").isNotNull)
       .select(col("measurement_subject"),
         unix_micros(col("timestamp")).as("t_us"),
         round(col("measurement_number") * scale, 0).cast("long").as("c"),
@@ -618,11 +610,8 @@ object TimeseriesQueries {
     require(spanC % nbins == 0,
       s"bin width must be exact in scaled units: span $spanC, bins $nbins")
     val widthC = spanC / nbins
-    conditions.filter(
-        col("measurement_of") === of &&
-        col("measurement_number").isNotNull &&
-        col("timestamp") >= timestamp_seconds(lit(startS)) &&
-        col("timestamp") <= timestamp_seconds(lit(endS)))
+    scan(conditions, of, startS, endS)
+      .filter(col("measurement_number").isNotNull)
       .select(col("measurement_subject"),
         timeBucketS(bucketS, col("timestamp")).as("time_s"),
         round(col("measurement_number") * scale, 0).cast("long").as("c"))
@@ -642,9 +631,7 @@ object TimeseriesQueries {
     */
   def conditionsReport(conditions: DataFrame, startS: Long,
                        endS: Long, scale: Int = 100): DataFrame =
-    conditions.filter(
-        col("timestamp") >= timestamp_seconds(lit(startS)) &&
-        col("timestamp") <= timestamp_seconds(lit(endS)))
+    during(conditions, startS, endS)
       .select(col("measurement_of"), col("measurement_subject"),
         unix_micros(col("timestamp")).as("t_us"),
         round(col("measurement_number") * scale, 0).cast("long").as("c"))
@@ -666,11 +653,8 @@ object TimeseriesQueries {
   def gaugeAgg(conditions: DataFrame, of: String, startS: Long, endS: Long,
                bucketS: Long, scale: Int = 100): DataFrame = {
     require(scale > 0 && bucketS > 0, "scale and bucket width must be positive")
-    conditions.filter(
-        col("measurement_of") === of &&
-        col("measurement_number").isNotNull &&
-        col("timestamp") >= timestamp_seconds(lit(startS)) &&
-        col("timestamp") <= timestamp_seconds(lit(endS)))
+    scan(conditions, of, startS, endS)
+      .filter(col("measurement_number").isNotNull)
       .select(col("measurement_subject"),
         unix_micros(col("timestamp")).as("t_us"),
         round(col("measurement_number") * scale, 0).cast("long").as("c"),
@@ -707,11 +691,8 @@ object TimeseriesQueries {
     require(scale > 0 && widthS > 0, "scale and width must be positive")
     val w = Window.partitionBy("measurement_subject", "time_s")
       .orderBy("t_us", "c")
-    conditions.filter(
-        col("measurement_of") === of &&
-        col("measurement_number").isNotNull &&
-        col("timestamp") >= timestamp_seconds(lit(startS)) &&
-        col("timestamp") <= timestamp_seconds(lit(endS)))
+    scan(conditions, of, startS, endS)
+      .filter(col("measurement_number").isNotNull)
       .select(col("measurement_subject"),
         unix_micros(col("timestamp")).as("t_us"),
         round(col("measurement_number") * scale, 0).cast("long").as("c"),
@@ -791,11 +772,8 @@ object TimeseriesQueries {
     require(scale > 0 && bucketS > 0, "scale and bucket width must be positive")
     val w = Window.partitionBy("measurement_subject").orderBy("t_us", "c")
     val endUs = endS * 1000000L
-    val pts = conditions.filter(
-        col("measurement_of") === of &&
-        col("measurement_number").isNotNull &&
-        col("timestamp") >= timestamp_seconds(lit(startS)) &&
-        col("timestamp") <= timestamp_seconds(lit(endS)))
+    val pts = scan(conditions, of, startS, endS)
+      .filter(col("measurement_number").isNotNull)
       .select(col("measurement_subject"),
         unix_micros(col("timestamp")).as("t_us"),
         round(col("measurement_number") * scale, 0).cast("long").as("c"),
@@ -852,11 +830,8 @@ object TimeseriesQueries {
                    endS: Long, bucketS: Long, scale: Int = 100): DataFrame = {
     require(bucketS > 0, "bucket width must be positive")
     val w = Window.partitionBy("measurement_subject", "time_s")
-    conditions.filter(
-        col("measurement_of") === of &&
-        col("measurement_number").isNotNull &&
-        col("timestamp") >= timestamp_seconds(lit(startS)) &&
-        col("timestamp") <= timestamp_seconds(lit(endS)))
+    scan(conditions, of, startS, endS)
+      .filter(col("measurement_number").isNotNull)
       .select(col("measurement_subject"),
         unix_micros(col("timestamp")).as("t_us"),
         round(col("measurement_number") * scale, 0).cast("long").as("c"),
@@ -890,11 +865,8 @@ object TimeseriesQueries {
   def saxSymbols(conditions: DataFrame, of: String, startS: Long, endS: Long,
                  bucketS: Long, scale: Int = 100): DataFrame = {
     require(scale > 0 && bucketS > 0, "scale and bucket width must be positive")
-    val pts = conditions.filter(
-        col("measurement_of") === of &&
-        col("measurement_number").isNotNull &&
-        col("timestamp") >= timestamp_seconds(lit(startS)) &&
-        col("timestamp") <= timestamp_seconds(lit(endS)))
+    val pts = scan(conditions, of, startS, endS)
+      .filter(col("measurement_number").isNotNull)
       .select(col("measurement_subject"),
         round(col("measurement_number") * scale, 0).cast("long").as("c"),
         timeBucketS(bucketS, col("timestamp")).as("time_s"))
@@ -954,11 +926,8 @@ object TimeseriesQueries {
     require(bucketS > 0, "bucket width must be positive")
     val w = Window.partitionBy("measurement_subject").orderBy("t_us", "c")
     val endUs = endS * 1000000L
-    val pts = conditions.filter(
-        col("measurement_of") === of &&
-        col("measurement_number").isNotNull &&
-        col("timestamp") >= timestamp_seconds(lit(startS)) &&
-        col("timestamp") <= timestamp_seconds(lit(endS)))
+    val pts = scan(conditions, of, startS, endS)
+      .filter(col("measurement_number").isNotNull)
       .select(col("measurement_subject"),
         unix_micros(col("timestamp")).as("t_us"),
         round(col("measurement_number") * scale, 0).cast("long").as("c"),
@@ -999,10 +968,7 @@ object TimeseriesQueries {
     */
   def uniqueMeasurementSubjects(conditions: DataFrame, of: String,
                                 startS: Long, endS: Long): DataFrame =
-    conditions.filter(
-        col("measurement_of") === of &&
-        col("timestamp") >= timestamp_seconds(lit(startS)) &&
-        col("timestamp") <= timestamp_seconds(lit(endS)))
+    scan(conditions, of, startS, endS)
       .select("measurement_subject").distinct()
       .orderBy("measurement_subject")
 
@@ -1013,7 +979,7 @@ object TimeseriesQueries {
   def filterUnchangedRows(conditions: DataFrame, subject: String, of: String,
                           startS: Long, endS: Long): DataFrame = {
     val w = Window.partitionBy("measurement_subject").orderBy("timestamp")
-    scan(conditions, subject, of, startS, endS)
+    scan(conditions, of, startS, endS, Some(subject))
       .withColumn("prev", lag("measurement_string", 1).over(w))
       .filter(!(col("measurement_string") <=> col("prev")))
       .select(unix_micros(col("timestamp")).as("ts_us"),
@@ -1081,10 +1047,7 @@ object TimeseriesQueries {
   def sessionize(conditions: DataFrame, of: String, startS: Long, endS: Long,
                  gapS: Long): DataFrame = {
     val w = Window.partitionBy("measurement_subject").orderBy("timestamp")
-    conditions.filter(
-        col("measurement_of") === of &&
-        col("timestamp") >= timestamp_seconds(lit(startS)) &&
-        col("timestamp") <= timestamp_seconds(lit(endS)))
+    scan(conditions, of, startS, endS)
       .withColumn("prev_ts", lag("timestamp", 1).over(w))
       .withColumn("new_sess",
         when(col("prev_ts").isNull ||
@@ -1120,11 +1083,8 @@ object TimeseriesQueries {
     require(k > 0 && scale > 0, "k and scale must be positive")
     val w = Window.partitionBy("measurement_subject").orderBy("ts_us", "c")
       .rowsBetween(-(k - 1), Window.currentRow)
-    conditions.filter(
-        col("measurement_of") === of &&
-        col("measurement_number").isNotNull &&
-        col("timestamp") >= timestamp_seconds(lit(startS)) &&
-        col("timestamp") <= timestamp_seconds(lit(endS)))
+    scan(conditions, of, startS, endS)
+      .filter(col("measurement_number").isNotNull)
       .select(col("measurement_subject"),
         unix_micros(col("timestamp")).as("ts_us"),
         round(col("measurement_number") * scale, 0).cast("long").as("c"))
@@ -1159,11 +1119,8 @@ object TimeseriesQueries {
                        evalStartS: Long, evalEndS: Long,
                        k: Int = 3, scale: Int = 100): DataFrame = {
     require(k > 0 && scale > 0, "k and scale must be positive")
-    def slice(s: Long, e: Long) = conditions.filter(
-        col("measurement_of") === of &&
-        col("measurement_number").isNotNull &&
-        col("timestamp") >= timestamp_seconds(lit(s)) &&
-        col("timestamp") <= timestamp_seconds(lit(e)))
+    def slice(s: Long, e: Long) = scan(conditions, of, s, e)
+      .filter(col("measurement_number").isNotNull)
       .select(col("measurement_subject"),
         unix_micros(col("timestamp")).as("ts_us"),
         round(col("measurement_number") * scale, 0).cast("long").as("c"))
@@ -1208,11 +1165,8 @@ object TimeseriesQueries {
                widthS: Long, scale: Int = 100): DataFrame = {
     require(widthS > 0 && scale > 0, "widthS and scale must be positive")
     val wUs = widthS * 1000000L
-    conditions.filter(
-        col("measurement_of") === of &&
-        col("measurement_number").isNotNull &&
-        col("timestamp") >= timestamp_seconds(lit(startS)) &&
-        col("timestamp") <= timestamp_seconds(lit(endS)))
+    scan(conditions, of, startS, endS)
+      .filter(col("measurement_number").isNotNull)
       .select(col("measurement_subject"),
         unix_micros(col("timestamp")).as("ts_us"),
         round(col("measurement_number") * scale, 0).cast("long").as("c"))
@@ -1251,10 +1205,7 @@ object TimeseriesQueries {
     require(heartbeatS > 0, "heartbeatS must be positive")
     val hUs = heartbeatS * 1000000L
     val w = Window.partitionBy("measurement_subject").orderBy("ts_us")
-    conditions.filter(
-        col("measurement_of") === of &&
-        col("timestamp") >= timestamp_seconds(lit(startS)) &&
-        col("timestamp") <= timestamp_seconds(lit(endS)))
+    scan(conditions, of, startS, endS)
       .select(col("measurement_subject"), unix_micros(col("timestamp")).as("ts_us"))
       .withColumn("next_us", lead("ts_us", 1).over(w))
       .withColumn("live_us",
@@ -1293,11 +1244,8 @@ object TimeseriesQueries {
                      endS: Long): DataFrame = {
     val w = Window.partitionBy("measurement_subject")
       .orderBy("ts_us", "state")
-    conditions.filter(
-        col("measurement_of") === of &&
-        col("measurement_string").isNotNull &&
-        col("timestamp") >= timestamp_seconds(lit(startS)) &&
-        col("timestamp") <= timestamp_seconds(lit(endS)))
+    scan(conditions, of, startS, endS)
+      .filter(col("measurement_string").isNotNull)
       .select(col("measurement_subject"),
         unix_micros(col("timestamp")).as("ts_us"),
         col("measurement_string").as("state"))
@@ -1342,10 +1290,8 @@ object TimeseriesQueries {
               widthS: Long, strategy: GapfillStrategy): DataFrame = {
     require(widthS > 0, "widthS must be positive")
     val wUs = widthS * 1000000L
-    val slice = conditions.filter(
-        col("measurement_of") === of &&
-        col("measurement_number").isNotNull &&
-        col("timestamp") >= timestamp_seconds(lit(startS)) &&
+    val slice = scan(conditions, of, startS, endS)
+      .filter(col("measurement_number").isNotNull &&
         col("timestamp") < timestamp_seconds(lit(endS)))
       .select(col("measurement_subject"),
         unix_micros(col("timestamp")).as("ts_us"),
@@ -1428,11 +1374,8 @@ object TimeseriesQueries {
   def statsAgg(conditions: DataFrame, of: String, startS: Long, endS: Long,
                widthS: Long, scale: Int = 100): DataFrame = {
     require(widthS > 0 && scale > 0, "widthS and scale must be positive")
-    conditions.filter(
-        col("measurement_of") === of &&
-        col("measurement_number").isNotNull &&
-        col("timestamp") >= timestamp_seconds(lit(startS)) &&
-        col("timestamp") <= timestamp_seconds(lit(endS)))
+    scan(conditions, of, startS, endS)
+      .filter(col("measurement_number").isNotNull)
       .select(col("measurement_subject"),
         timeBucketS(widthS, col("timestamp")).as("time_s"),
         (col("timestamp").cast("long") - startS).as("x"),

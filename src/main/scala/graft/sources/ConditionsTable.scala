@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.model.TimeseriesRecord
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The `conditions` table — storage boundary of the normalize pipeline.
@@ -20,6 +20,24 @@ import org.apache.spark.sql.functions._
   * row groups too, not just partitions.
   */
 object ConditionsTable {
+
+  /** The `date` partition key: the UTC day of `timestamp`, computed from
+    * epoch days so the session time zone never enters — a store written
+    * in one zone reads back whole in any other. Every writer of a
+    * date-partitioned frame derives its key here.
+    */
+  def dateKey: Column =
+    date_from_unix_date(floor(unix_seconds(col("timestamp")) / 86400).cast("int"))
+
+  /** Partition predicate for [[dateKey]]-partitioned frames: keeps the
+    * dates that can hold a `timestamp` in [startS, endS] (epoch seconds).
+    * The day bounds are computed here on the driver, as date literals, so
+    * the predicate prunes directories in any session time zone.
+    */
+  def datesCovering(startS: Long, endS: Long): Column = {
+    def day(s: Long) = lit(java.time.LocalDate.ofEpochDay(Math.floorDiv(s, 86400L)))
+    col("date") >= day(startS) && col("date") <= day(endS)
+  }
 
   /** Normalize a set of raw event-hub strings into atomic records.
     * Narrow transformation — no shuffle; each input row fans out to 0..n
@@ -49,7 +67,7 @@ object ConditionsTable {
   }
 
   /** Wire records → storage rows: parse the ISO wire timestamp to a real
-    * TimestampType, encode geography as WKT, add the partition date.
+    * TimestampType, encode geography as WKT, add the partition [[dateKey]].
     */
   def toStorage(records: Dataset[TimeseriesRecord]): DataFrame =
     records.toDF()
@@ -60,7 +78,7 @@ object ConditionsTable {
             col("measurement_location").getItem(0))))
       .withColumn("timestamp",
         to_timestamp(col("timestamp"), "yyyy-MM-dd'T'HH:mm:ss.SSSSSS'Z'"))
-      .withColumn("date", to_date(col("timestamp")))
+      .withColumn("date", dateKey)
 
   /** Parse back a stored `SRID=4326;POINT(lon lat)` location to
     * `(lat, lon)`, validating the SRID and the PostGIS
@@ -207,9 +225,10 @@ object ConditionsTable {
     * (`writeStream.format("parquet")`): those pin their exact file set
     * in `_spark_metadata`, and log-based reads would throw on the
     * deleted files and never see the compacted ones — guarded with a
-    * hard error. [[graft.streaming.IngestPipeline]]'s conditions sinks
-    * are foreachBatch writers (no metadata log), so their stores
-    * compact fine.
+    * hard error. Of [[graft.streaming.IngestPipeline]]'s conditions
+    * sinks, only `startBmw` is a foreachBatch writer (no metadata log)
+    * whose store compacts; `startMqtt` and `startWire` use the file sink,
+    * so their stores are refused.
     *
     * Scale shape: the file census is listing metadata only; each
     * compacted date is one narrow read → sort → write of that date's

@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.queries.TimeseriesQueries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -191,14 +192,51 @@ object ContinuousAggregate {
     * Applied only when the stored width is known (sidecar or explicit
     * parameter): a guessed slack could prune a straddling bucket's rows.
     */
-  private def pruneDates(df: DataFrame, startS: Long, endS: Long,
-                         slackS: Option[Long]): DataFrame =
+  private[sources] def pruneDates(df: DataFrame, startS: Long, endS: Long,
+                                  slackS: Option[Long]): DataFrame =
     slackS match {
       case Some(w0) if df.columns.contains("date") =>
-        df.filter(col("date") >= to_date(timestamp_seconds(lit(startS))) &&
-          col("date") <= to_date(timestamp_seconds(lit(endS + w0))))
+        df.filter(ConditionsTable.datesCovering(startS, endS + w0))
       case _ => df
     }
+
+  /** The stored rows of one series whose buckets lie in [startS, endS),
+    * date-pruned as in [[pruneDates]].
+    */
+  private def storedSlice(roll: DataFrame, of: String, subject: Option[String],
+                          startS: Long, endS: Long,
+                          slackS: Option[Long]): DataFrame =
+    pruneDates(roll, startS, endS, slackS)
+      .filter(TimeseriesQueries.series(of, subject) &&
+        col("bucket_s") >= startS && col("bucket_s") < endS)
+
+  /** The raw rows of one series in [fromS, endS) — a realtime serve's
+    * tail past the watermark.
+    */
+  private def rawTail(raw: DataFrame, of: String, subject: Option[String],
+                      fromS: Long, endS: Long): DataFrame =
+    TimeseriesQueries.scan(raw, of, fromS, endS, subject)
+      .filter(col("timestamp") < timestamp_seconds(lit(endS)))
+
+  /** Write date-partitioned rollup rows, replacing the store. */
+  private[sources] def writeByDate(rows: DataFrame, path: String): Unit =
+    rows.repartition(col("date"))
+      .write.mode("overwrite").partitionBy("date").parquet(path)
+
+  /** Refresh write: overwrite ONLY the date partitions `rows` holds
+    * (dynamic partition overwrite — the analogue of refreshing a chunk
+    * range), restoring the session's overwrite mode afterwards.
+    */
+  private[sources] def overwriteDates(rows: DataFrame, path: String): Unit = {
+    val spark = rows.sparkSession
+    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
+    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    try writeByDate(rows, path)
+    finally prev match {
+      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
+      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
+    }
+  }
 
   /** Full build: materialize the per-(date, subject, of, bucket) partial
     * rollup of `conditions` at `widthS` bucket width.
@@ -206,9 +244,7 @@ object ContinuousAggregate {
   def create(conditions: DataFrame, path: String, widthS: Long,
              scale: Int = 100): Unit = {
     require(widthS > 0 && scale > 0, "widthS and scale must be positive")
-    rollup(conditions, widthS, scale)
-      .repartition(col("date"))
-      .write.mode("overwrite").partitionBy("date").parquet(path)
+    writeByDate(rollup(conditions, widthS, scale), path)
     writeWidthSidecar(conditions.sparkSession, path, widthS)
     writeScaleSidecar(conditions.sparkSession, path, scale)
     writeGridSidecar(conditions.sparkSession, path)
@@ -228,16 +264,8 @@ object ContinuousAggregate {
     requireRefreshWidth(spark, path, widthS)
     requireMatchingScale(spark, path, scale, "refresh")
     requireGrid(spark, path, widthS, "refresh")
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try rollup(conditions.filter(to_date(col("timestamp")) >= lit(sinceDate)),
-        widthS, scale)
-      .repartition(col("date"))
-      .write.mode("overwrite").partitionBy("date").parquet(path)
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
+    overwriteDates(rollup(
+      conditions.filter(ConditionsTable.dateKey >= lit(sinceDate)), widthS, scale), path)
     // refresh-maintained stores (e.g. CaggStream's rollup, never
     // create()d) get the sidecars on their first refresh
     writeWidthSidecar(spark, path, widthS)
@@ -265,17 +293,21 @@ object ContinuousAggregate {
     requireServableWidth(spark, path, widthS)
     requireMatchingScale(spark, path, scale, "serve")
     requireGrid(spark, path, storedWidthOf(spark, path).getOrElse(widthS), "serve")
-    pruneDates(spark.read.parquet(path), startS, endS,
-        storedWidthOf(spark, path))
-      .filter(col("measurement_subject") === subject &&
-        col("measurement_of") === of &&
-        col("bucket_s") >= startS && col("bucket_s") < endS)
+    serveAvg(storedSlice(spark.read.parquet(path), of, Some(subject), startS,
+      endS, storedWidthOf(spark, path)), widthS, scale)
+  }
+
+  /** Re-aggregate `(bucket_s, sum_scaled, n_events)` partials to the
+    * B2-shaped answer at serve width `widthS` — exact integer sums, one
+    * final divide.
+    */
+  private def serveAvg(partials: DataFrame, widthS: Long, scale: Int): DataFrame =
+    partials
       .withColumn("time_s", serveBucketOf(widthS))
       .groupBy("time_s")
       .agg(round(sum(col("sum_scaled")) / (sum(col("n_events")) * lit(scale * 1.0)), 6)
         .as("avg_measurement_number"))
       .orderBy("time_s")
-  }
 
   /** REAL-TIME serving (TimescaleDB real-time aggregate semantics):
     * materialized buckets UNION the raw tail past the refresh horizon.
@@ -318,33 +350,16 @@ object ContinuousAggregate {
     requireGrid(spark, path, storedWidthS, "realtime serve")
     val roll = readRollup(spark, path)
     val watermarkS = rollupWatermarkS(roll, storedWidthS, startS)
-    val storedAll = roll
-      .map(pruneDates(_, startS, endS, Some(storedWidthS)))
-      .getOrElse(
-        spark.emptyDataset(org.apache.spark.sql.Encoders.product[(Long, Long, Long)])
-          .toDF("bucket_s", "sum_scaled", "n_events"))
-    val stored = storedAll
-      .filter(col("bucket_s") >= startS && col("bucket_s") < endS &&
-        col("bucket_s") < watermarkS &&
-        (if (roll.isDefined) col("measurement_subject") === subject &&
-          col("measurement_of") === of else lit(false)))
-      .select(col("bucket_s"), col("sum_scaled"), col("n_events"))
-    val tailStart = math.max(watermarkS, startS)
+    val stored = roll.map(r =>
+      storedSlice(r, of, Some(subject), startS, endS, Some(storedWidthS))
+        .filter(col("bucket_s") < watermarkS)
+        .select(col("bucket_s"), col("sum_scaled"), col("n_events")))
     val tail = rollup(
-        raw.filter(col("measurement_subject") === subject &&
-          col("measurement_of") === of &&
-          col("timestamp") >= timestamp_seconds(lit(tailStart)) &&
-          col("timestamp") < timestamp_seconds(lit(endS))),
+        rawTail(raw, of, Some(subject), math.max(watermarkS, startS), endS),
         storedWidthS, scale)
       .filter(col("bucket_s") >= startS && col("bucket_s") < endS)
       .select(col("bucket_s"), col("sum_scaled"), col("n_events"))
-    stored.unionByName(tail)
-      .withColumn("time_s",
-        serveBucketOf(widthS))
-      .groupBy("time_s")
-      .agg(round(sum(col("sum_scaled")) / (sum(col("n_events")) * lit(scale * 1.0)), 6)
-        .as("avg_measurement_number"))
-      .orderBy("time_s")
+    serveAvg(stored.fold(tail)(_.unionByName(tail)), widthS, scale)
   }
 
   /** A rollup created over an empty slice has no files at all (no schema
@@ -389,15 +404,13 @@ object ContinuousAggregate {
     */
   def createDistinct(conditions: DataFrame, path: String, widthS: Long): Unit = {
     require(widthS > 0, "widthS must be positive")
-    conditions
+    writeByDate(conditions
       .select(col("measurement_of"), col("measurement_subject"), col("timestamp"))
       .withColumn("bucket_s", bucketOfTimestamp(widthS))
-      .withColumn("date", to_date(col("timestamp")))
+      .withColumn("date", ConditionsTable.dateKey)
       .groupBy("date", "measurement_of", "bucket_s")
       .agg(sort_array(collect_set(col("measurement_subject"))).as("subjects"),
-        hll_sketch_agg(col("measurement_subject")).as("hll"))
-      .repartition(col("date"))
-      .write.mode("overwrite").partitionBy("date").parquet(path)
+        hll_sketch_agg(col("measurement_subject")).as("hll")), path)
     writeWidthSidecar(conditions.sparkSession, path, widthS)
     writeGridSidecar(conditions.sparkSession, path)
   }
@@ -411,10 +424,8 @@ object ContinuousAggregate {
                     startS: Long, endS: Long, widthS: Long): DataFrame = {
     requireServableWidth(spark, path, widthS)
     requireGrid(spark, path, storedWidthOf(spark, path).getOrElse(widthS), "serve")
-    pruneDates(spark.read.parquet(path), startS, endS,
+    storedSlice(spark.read.parquet(path), of, None, startS, endS,
         storedWidthOf(spark, path))
-      .filter(col("measurement_of") === of &&
-        col("bucket_s") >= startS && col("bucket_s") < endS)
       .withColumn("time_s", serveBucketOf(widthS))
       .select(col("time_s"), explode(col("subjects")).as("subject"))
       .groupBy("time_s")
@@ -433,10 +444,8 @@ object ContinuousAggregate {
                           startS: Long, endS: Long, widthS: Long): DataFrame = {
     requireServableWidth(spark, path, widthS)
     requireGrid(spark, path, storedWidthOf(spark, path).getOrElse(widthS), "serve")
-    pruneDates(spark.read.parquet(path), startS, endS,
+    storedSlice(spark.read.parquet(path), of, None, startS, endS,
         storedWidthOf(spark, path))
-      .filter(col("measurement_of") === of &&
-        col("bucket_s") >= startS && col("bucket_s") < endS)
       .withColumn("time_s", serveBucketOf(widthS))
       .groupBy("time_s")
       .agg(hll_sketch_estimate(hll_union_agg(col("hll"))).as("n_subjects"))
@@ -462,20 +471,13 @@ object ContinuousAggregate {
     requireGrid(spark, path, storedWidthS, "realtime serve")
     val roll = readRollup(spark, path)
     val wm = rollupWatermarkS(roll, storedWidthS, startS)
-    val serveBucket =
-      serveBucketOf(widthS)
+    val serveBucket = serveBucketOf(widthS)
     val stored = roll.map(r =>
-      pruneDates(r, startS, endS, Some(storedWidthS))
-        .filter(col("measurement_of") === of &&
-          col("bucket_s") >= startS && col("bucket_s") < endS &&
-          col("bucket_s") < wm)
+      storedSlice(r, of, None, startS, endS, Some(storedWidthS))
+        .filter(col("bucket_s") < wm)
         .select(serveBucket.as("time_s"), col("hll")))
-    val tail = raw
-      .filter(col("measurement_of") === of &&
-        col("timestamp") >= timestamp_seconds(lit(math.max(wm, startS))) &&
-        col("timestamp") < timestamp_seconds(lit(endS)))
-      .withColumn("bucket_s",
-        bucketOfTimestamp(storedWidthS))
+    val tail = rawTail(raw, of, None, math.max(wm, startS), endS)
+      .withColumn("bucket_s", bucketOfTimestamp(storedWidthS))
       .filter(col("bucket_s") >= startS && col("bucket_s") < endS)
       .groupBy(serveBucket.as("time_s"))
       .agg(hll_sketch_agg(col("measurement_subject")).as("hll"))
@@ -500,26 +502,16 @@ object ContinuousAggregate {
     requireGrid(spark, path, storedWidthS, "realtime serve")
     val roll = readRollup(spark, path)
     val wm = rollupWatermarkS(roll, storedWidthS, startS)
-    val serveBucket =
-      serveBucketOf(widthS)
-    val stored = roll
-      .map(pruneDates(_, startS, endS, Some(storedWidthS)))
-      .getOrElse(
-        spark.emptyDataset(org.apache.spark.sql.Encoders.product[(Long, Seq[String])])
-          .toDF("bucket_s", "subjects"))
-      .filter(col("bucket_s") >= startS && col("bucket_s") < endS &&
-        col("bucket_s") < wm &&
-        (if (roll.isDefined) col("measurement_of") === of else lit(false)))
-      .select(serveBucket.as("time_s"), explode(col("subjects")).as("subject"))
-    val tail = raw
-      .filter(col("measurement_of") === of &&
-        col("timestamp") >= timestamp_seconds(lit(math.max(wm, startS))) &&
-        col("timestamp") < timestamp_seconds(lit(endS)))
-      .withColumn("bucket_s",
-        bucketOfTimestamp(storedWidthS))
+    val serveBucket = serveBucketOf(widthS)
+    val stored = roll.map(r =>
+      storedSlice(r, of, None, startS, endS, Some(storedWidthS))
+        .filter(col("bucket_s") < wm)
+        .select(serveBucket.as("time_s"), explode(col("subjects")).as("subject")))
+    val tail = rawTail(raw, of, None, math.max(wm, startS), endS)
+      .withColumn("bucket_s", bucketOfTimestamp(storedWidthS))
       .filter(col("bucket_s") >= startS && col("bucket_s") < endS)
       .select(serveBucket.as("time_s"), col("measurement_subject").as("subject"))
-    stored.unionByName(tail)
+    stored.fold(tail)(_.unionByName(tail))
       .groupBy("time_s")
       .agg(count_distinct(col("subject")).as("n_subjects"))
       .orderBy("time_s")
@@ -548,9 +540,7 @@ object ContinuousAggregate {
   def createStats(conditions: DataFrame, path: String, widthS: Long,
                   scale: Int = 100): Unit = {
     require(widthS > 0 && scale > 0, "widthS and scale must be positive")
-    statsRollup(conditions, widthS, scale)
-      .repartition(col("date"))
-      .write.mode("overwrite").partitionBy("date").parquet(path)
+    writeByDate(statsRollup(conditions, widthS, scale), path)
     writeWidthSidecar(conditions.sparkSession, path, widthS)
     writeScaleSidecar(conditions.sparkSession, path, scale)
     writeGridSidecar(conditions.sparkSession, path)
@@ -568,16 +558,8 @@ object ContinuousAggregate {
     requireRefreshWidth(spark, path, widthS)
     requireMatchingScale(spark, path, scale, "refresh")
     requireGrid(spark, path, widthS, "refresh")
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try statsRollup(conditions.filter(to_date(col("timestamp")) >= lit(sinceDate)),
-        widthS, scale)
-      .repartition(col("date"))
-      .write.mode("overwrite").partitionBy("date").parquet(path)
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
+    overwriteDates(statsRollup(
+      conditions.filter(ConditionsTable.dateKey >= lit(sinceDate)), widthS, scale), path)
     writeWidthSidecar(spark, path, widthS)
     writeScaleSidecar(spark, path, scale)
     writeGridSidecar(spark, path)
@@ -593,7 +575,7 @@ object ContinuousAggregate {
       .withColumn("bucket_s",
         bucketOfTimestamp(widthS))
       .withColumn("x", col("timestamp").cast("long") - col("bucket_s"))
-      .withColumn("date", to_date(col("timestamp")))
+      .withColumn("date", ConditionsTable.dateKey)
       .groupBy("date", "measurement_subject", "measurement_of", "bucket_s")
       .agg(count(lit(1)).as("n"),
         sum("x").as("sx"), sum("y").as("sy"),
@@ -612,13 +594,17 @@ object ContinuousAggregate {
                  of: String, startS: Long, endS: Long, widthS: Long): DataFrame = {
     requireServableWidth(spark, path, widthS)
     requireGrid(spark, path, storedWidthOf(spark, path).getOrElse(widthS), "serve")
-    val shifted = pruneDates(spark.read.parquet(path), startS, endS,
-        storedWidthOf(spark, path))
-      .filter(col("measurement_subject") === subject &&
-        col("measurement_of") === of &&
-        col("bucket_s") >= startS && col("bucket_s") < endS)
-      .withColumn("time_s",
-        serveBucketOf(widthS))
+    serveStats(storedSlice(spark.read.parquet(path), of, Some(subject), startS,
+      endS, storedWidthOf(spark, path)), widthS)
+  }
+
+  /** Translate each stats partial row's moments to its serve bucket's
+    * anchor (the exact integer algebra above), sum per serve bucket,
+    * derive.
+    */
+  private def serveStats(partials: DataFrame, widthS: Long): DataFrame = {
+    val shifted = partials
+      .withColumn("time_s", serveBucketOf(widthS))
       .withColumn("d", col("bucket_s") - col("time_s"))
       .select(col("time_s"), col("n"),
         (col("sx") + col("n") * col("d")).as("sx"),
@@ -626,7 +612,7 @@ object ContinuousAggregate {
         (col("sxx") + lit(2L) * col("d") * col("sx") + col("n") * col("d") * col("d")).as("sxx"),
         col("syy"),
         (col("sxy") + col("d") * col("sy")).as("sxy"))
-    graft.queries.TimeseriesQueries.statsDerive(
+    TimeseriesQueries.statsDerive(
       shifted.groupBy("time_s")
         .agg(sum("n").as("n"), sum("sx").as("sx"), sum("sy").as("sy"),
           sum("sxx").as("sxx"), sum("syy").as("syy"), sum("sxy").as("sxy"))
@@ -652,40 +638,16 @@ object ContinuousAggregate {
     requireGrid(spark, path, storedWidthS, "realtime serve")
     val roll = readRollup(spark, path)
     val wm = rollupWatermarkS(roll, storedWidthS, startS)
-    val stored = roll
-      .map(pruneDates(_, startS, endS, Some(storedWidthS)))
-      .getOrElse(
-        spark.emptyDataset(org.apache.spark.sql.Encoders.product[
-          (Long, Long, Long, Long, Long, Long, Long)])
-          .toDF("bucket_s", "n", "sx", "sy", "sxx", "syy", "sxy"))
-      .filter(col("bucket_s") >= startS && col("bucket_s") < endS &&
-        col("bucket_s") < wm &&
-        (if (roll.isDefined) col("measurement_subject") === subject &&
-          col("measurement_of") === of else lit(false)))
-      .select("bucket_s", "n", "sx", "sy", "sxx", "syy", "sxy")
+    val stored = roll.map(r =>
+      storedSlice(r, of, Some(subject), startS, endS, Some(storedWidthS))
+        .filter(col("bucket_s") < wm)
+        .select("bucket_s", "n", "sx", "sy", "sxx", "syy", "sxy"))
     val tail = statsRollup(
-        raw.filter(col("measurement_subject") === subject &&
-          col("measurement_of") === of &&
-          col("timestamp") >= timestamp_seconds(lit(math.max(wm, startS))) &&
-          col("timestamp") < timestamp_seconds(lit(endS))),
+        rawTail(raw, of, Some(subject), math.max(wm, startS), endS),
         storedWidthS, scale)
       .filter(col("bucket_s") >= startS && col("bucket_s") < endS)
       .select("bucket_s", "n", "sx", "sy", "sxx", "syy", "sxy")
-    val shifted = stored.unionByName(tail)
-      .withColumn("time_s",
-        serveBucketOf(widthS))
-      .withColumn("d", col("bucket_s") - col("time_s"))
-      .select(col("time_s"), col("n"),
-        (col("sx") + col("n") * col("d")).as("sx"),
-        col("sy"),
-        (col("sxx") + lit(2L) * col("d") * col("sx") + col("n") * col("d") * col("d")).as("sxx"),
-        col("syy"),
-        (col("sxy") + col("d") * col("sy")).as("sxy"))
-    graft.queries.TimeseriesQueries.statsDerive(
-      shifted.groupBy("time_s")
-        .agg(sum("n").as("n"), sum("sx").as("sx"), sum("sy").as("sy"),
-          sum("sxx").as("sxx"), sum("syy").as("syy"), sum("sxy").as("sxy"))
-        .orderBy("time_s"))
+    serveStats(stored.fold(tail)(_.unionByName(tail)), widthS)
   }
 
   private def rollup(conditions: DataFrame, widthS: Long, scale: Int): DataFrame = {
@@ -696,7 +658,7 @@ object ContinuousAggregate {
         round(col("measurement_number") * scale, 0).cast("long").as("c"))
       .withColumn("bucket_s",
         bucketOfTimestamp(widthS))
-      .withColumn("date", to_date(col("timestamp")))
+      .withColumn("date", ConditionsTable.dateKey)
       .groupBy("date", "measurement_subject", "measurement_of", "bucket_s")
       .agg(sum("c").as("sum_scaled"), count(lit(1)).as("n_events"))
   }

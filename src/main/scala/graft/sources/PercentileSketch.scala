@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.queries.TimeseriesQueries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -45,17 +46,14 @@ object PercentileSketch {
                widthS: Long, subBits: Int, scale: Int = 100): DataFrame = {
     require(widthS > 0 && scale > 0, "widthS and scale must be positive")
     require(subBits >= 1 && subBits <= 40, s"subBits out of range: $subBits")
-    conditions.filter(
-        col("measurement_of") === of &&
-        col("measurement_number").isNotNull &&
-        col("measurement_number") >= 0 &&
-        col("timestamp") >= timestamp_seconds(lit(startS)) &&
+    TimeseriesQueries.scan(conditions, of, startS, endS)
+      .filter(col("measurement_number") >= 0 &&
         col("timestamp") < timestamp_seconds(lit(endS)))
       .select(col("timestamp"),
         round(col("measurement_number") * scale, 0).cast("long").as("c"))
       // the shared origin-anchored grid (see ContinuousAggregate.OriginS)
       .withColumn("bucket_s", ContinuousAggregate.bucketOfTimestamp(widthS))
-      .withColumn("date", to_date(col("timestamp")))
+      .withColumn("date", ConditionsTable.dateKey)
       .withColumn("bl", length(bin(col("c"))).cast("int"))
       .withColumn("sub", expr(s"shiftright(c, greatest(bl - $subBits, 0))"))
       .groupBy("date", "bucket_s", "bl", "sub")
@@ -68,9 +66,8 @@ object PercentileSketch {
     */
   def create(conditions: DataFrame, path: String, of: String, startS: Long,
              endS: Long, widthS: Long, subBits: Int, scale: Int = 100): Unit = {
-    partials(conditions, of, startS, endS, widthS, subBits, scale)
-      .repartition(col("date"))
-      .write.mode("overwrite").partitionBy("date").parquet(path)
+    ContinuousAggregate.writeByDate(
+      partials(conditions, of, startS, endS, widthS, subBits, scale), path)
     writeSidecars(conditions.sparkSession, path, widthS, subBits, scale)
   }
 
@@ -114,17 +111,9 @@ object PercentileSketch {
       s"sinceDate must be yyyy-MM-dd, got $sinceDate")
     val spark = conditions.sparkSession
     requireRefreshParams(spark, path, widthS, subBits, scale)
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try partials(
-        conditions.filter(to_date(col("timestamp")) >= lit(sinceDate)),
-        of, startS, endS, widthS, subBits, scale)
-      .repartition(col("date"))
-      .write.mode("overwrite").partitionBy("date").parquet(path)
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
+    ContinuousAggregate.overwriteDates(partials(
+        conditions.filter(ConditionsTable.dateKey >= lit(sinceDate)),
+        of, startS, endS, widthS, subBits, scale), path)
     // refresh-maintained stores get the sidecars on their first refresh;
     // requireRefreshParams above has already rejected any mismatch
     writeSidecars(spark, path, widthS, subBits, scale)
@@ -162,16 +151,8 @@ object PercentileSketch {
     // must use the SAME grid (serveBucketOf) — a plain epoch-0 floor
     // coincides only at widths dividing the origin (hour/day) and would
     // silently mislabel e.g. weekly buckets by 4 days
-    val stored = spark.read.parquet(path)
-    val pruned = ContinuousAggregate.storedLongOf(spark, path, "_graft_width") match {
-      // same date-partition pruning as ContinuousAggregate serves: buckets
-      // in [startS, endS) live only in dates [date(startS), date(endS+w0)]
-      case Some(w0) if stored.columns.contains("date") =>
-        stored.filter(col("date") >= to_date(timestamp_seconds(lit(startS))) &&
-          col("date") <= to_date(timestamp_seconds(lit(endS + w0))))
-      case _ => stored
-    }
-    val merged = pruned
+    val merged = ContinuousAggregate.pruneDates(spark.read.parquet(path),
+        startS, endS, ContinuousAggregate.storedLongOf(spark, path, "_graft_width"))
       .filter(col("bucket_s") >= startS && col("bucket_s") < endS)
       .withColumn("time_s", ContinuousAggregate.serveBucketOf(widthS))
       .groupBy("time_s", "bl", "sub")

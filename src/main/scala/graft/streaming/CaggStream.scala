@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.sources.ContinuousAggregate
+import graft.sources.{ConditionsTable, ContinuousAggregate}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -133,7 +133,7 @@ object CaggStream {
     if (!fs.exists(stagedMarker)) {
       if (pending.isEmpty) { fs.delete(quarantine, true); return }
       spark.read.parquet(pending.map(_.getPath.toString).toSeq: _*)
-        .withColumn("date", to_date(col("timestamp")))
+        .withColumn("date", ConditionsTable.dateKey)
         .write.mode("overwrite").partitionBy("date").parquet(stagedDir.toString)
       fs.create(stagedMarker, true).close()
     } else if (!fs.exists(stagedDir) && pending.nonEmpty)
@@ -212,9 +212,9 @@ object CaggStream {
           // refresh below reads only the touched date directories
           // (partition pruning on the filter) — per-batch cost ∝ the
           // days the batch touches, never the store's age
-          b.withColumn("date", to_date(col("timestamp")))
+          b.withColumn("date", ConditionsTable.dateKey)
             .write.mode("append").partitionBy("date").parquet(storePath)
-          val minDate = b.agg(min(to_date(col("timestamp")))).head()
+          val minDate = b.agg(min(ConditionsTable.dateKey)).head()
           if (!minDate.isNullAt(0)) {
             val md = minDate.getDate(0).toString
             ContinuousAggregate.refresh(

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.queries.TimeseriesQueries
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -33,7 +34,7 @@ object CounterStream {
     val spark = conditions.sparkSession
     import spark.implicits._
     conditions.filter(
-        col("measurement_of") === of && col("measurement_number").isNotNull)
+        TimeseriesQueries.series(of) && col("measurement_number").isNotNull)
       .select(col("measurement_subject"),
         unix_micros(col("timestamp")).as("t_us"),
         round(col("measurement_number") * scale, 0).cast("long").as("c"))

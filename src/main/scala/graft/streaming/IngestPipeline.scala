@@ -97,14 +97,21 @@ object IngestPipeline {
     * without code edits.
     */
   def startMqtt(spark: SparkSession, src: SourceConfig, outputDir: String,
-                checkpointDir: String, trigger: Trigger): StreamingQuery = {
-    val records = normalize(readText(spark, src))
+                checkpointDir: String, trigger: Trigger): StreamingQuery =
+    startConditionsSink(normalize(readText(spark, src)), outputDir,
+      checkpointDir, trigger)
+
+  /** The conditions file sink of [[startMqtt]] and [[startWire]]: storage
+    * rows → date-partitioned parquet. Each micro-batch is clustered by
+    * the partition column before the partitioned write: files per batch
+    * ≈ #dates instead of #tasks × #dates — the small-files cliff of
+    * partitioned sinks (same pattern as the IVF index write; measured
+    * ~1.5 s of the q_ingest_wire bench on the storage hop).
+    */
+  private def startConditionsSink(records: Dataset[TimeseriesRecord],
+                                  outputDir: String, checkpointDir: String,
+                                  trigger: Trigger): StreamingQuery =
     ConditionsTable.toStorage(records)
-      // cluster each micro-batch by the partition column before the
-      // partitioned write: files per batch ≈ #dates instead of
-      // #tasks × #dates — the small-files cliff of partitioned sinks
-      // (same pattern as the IVF index write; measured ~1.5 s of the
-      // q_ingest_wire bench on the storage hop)
       .repartition(col("date"))
       .writeStream
       .partitionBy("date")
@@ -114,7 +121,6 @@ object IngestPipeline {
       .format("parquet")
       .option("path", outputDir)
       .start()
-  }
 
   /** Convert stage as its OWN pipeline (the reference's two-function
     * topology, `json_to_timeseries` → hub → `timeseries_to_timescale`):
@@ -157,18 +163,8 @@ object IngestPipeline {
   /** [[startWire]] with a config-selected wire source (A1's second hop). */
   def startWire(spark: SparkSession, wire: SourceConfig, outputDir: String,
                 checkpointDir: String, trigger: Trigger): StreamingQuery =
-    ConditionsTable.toStorage(
-        graft.sources.WireRecords.decode(readText(spark, wire)))
-      // see startMqtt: one shuffle per micro-batch buys files ≈ #dates
-      .repartition(col("date"))
-      .writeStream
-      .partitionBy("date")
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointDir)
-      .format("parquet")
-      .option("path", outputDir)
-      .start()
+    startConditionsSink(graft.sources.WireRecords.decode(readText(spark, wire)),
+      outputDir, checkpointDir, trigger)
 
   /** BMW-side dedup + convert (A23/A21): extract the (vin, lastUpdatedAt)
     * key, drop duplicates within a 1-day watermark (the poll cadence is

@@ -1,16 +1,22 @@
 package graft.queries
 
-import graft.sources.EventsAsConditions
-import org.apache.spark.sql.SparkSession
+import graft.ConditionsView
+import graft.sources.{ConditionsTable, EventsAsConditions}
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** Plan-shape assertions: the universal dashboard scan must reach parquet
   * as pushed filters + partition pruning on a native conditions table —
   * the Spark analogue of the reference's hypertable chunk exclusion and
   * subject/of indexes (SURVEY §4).
   */
-class QueryPlanSpec extends AnyFunSuite {
+class QueryPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   private lazy val spark = SparkSession.builder()
     .master("local[4]")
@@ -21,12 +27,31 @@ class QueryPlanSpec extends AnyFunSuite {
 
   private lazy val conditionsPath: String = {
     val dir = java.nio.file.Files.createTempDirectory("conditions_tbl").toString
-    EventsAsConditions.load(spark, "/root/testdata/sf0.001")
-      .withColumn("date", to_date(col("timestamp")))
-      .repartition(col("date"))
-      .sortWithinPartitions("measurement_of", "measurement_subject", "timestamp")
-      .write.mode("overwrite").partitionBy("date").parquet(dir)
+    ConditionsTable.write(EventsAsConditions.load(spark, "/root/testdata/sf0.001")
+      .withColumn("date", ConditionsTable.dateKey), dir)
     dir
+  }
+
+  /** Every parquet scan the actions of `body` execute, eager parts
+    * included. Listener events arrive asynchronously on one queue, so a
+    * marker query run after `body` flushes the ones before it.
+    */
+  private def scansOf(body: => Unit): Seq[FileSourceScanExec] = {
+    val scans = new ConcurrentLinkedQueue[FileSourceScanExec]()
+    val flushed = new CountDownLatch(1)
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (qe.analyzed.output.exists(_.name == "__scans_marker")) flushed.countDown()
+        else collect(qe.executedPlan) { case s: FileSourceScanExec => s }.foreach(scans.add)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      spark.range(1).toDF("__scans_marker").collect()
+      assert(flushed.await(60, TimeUnit.SECONDS), "query listener events never arrived")
+    } finally spark.listenerManager.unregister(listener)
+    scans.asScala.toSeq
   }
 
   test("scan pushes subject/of equality and timestamp range to parquet + prunes partitions") {
@@ -78,13 +103,35 @@ class QueryPlanSpec extends AnyFunSuite {
   }
 
   test("partition pruning actually reduces files read") {
-    val table = spark.read.parquet(conditionsPath)
-    val narrow = TimeseriesQueries.scan(table, "user_3", "click", 1704844800L, 1704931200L)
-    val partFilter = narrow.queryExecution.explainString(
-      org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-    // the PartitionFilters clause must constrain `date`
-    assert(partFilter.contains("PartitionFilters:") && partFilter.contains("date#"),
-      partFilter)
+    val view = new ConditionsView(spark.read.parquet(conditionsPath))
+    val (sub, of, s0, s1) = ("user_3", "click", 1704844800L, 1704931200L) // 1 day
+    val calls: Seq[(String, () => DataFrame)] = Seq(
+      "getAggregatedData" -> (() => view.getAggregatedData(sub, of, s0, s1, 24)),
+      "getAggregatedDataByInterval" ->
+        (() => view.getAggregatedDataByInterval(sub, of, s0, s1, 3600)),
+      "getAggregatedDataByDay" -> (() => view.getAggregatedDataByDay(sub, of, s0, s1)),
+      "getMostFrequentValueByTimeInterval" ->
+        (() => view.getMostFrequentValueByTimeInterval(sub, of, s0, s1)),
+      "getSampledData" -> (() => view.getSampledData(spark, sub, of, s0, s1, 24)),
+      "getSampledDataWithTimeWeight" ->
+        (() => view.getSampledDataWithTimeWeight(sub, of, s0, s1, "linear", 24)),
+      "getUniqueMeasurementSubjects" -> (() => view.getUniqueMeasurementSubjects(s0, s1, of)),
+      "filterUnchangedRows" -> (() => view.filterUnchangedRows(sub, of, s0, s1)),
+      "formatTimeIntervals" -> (() => view.formatTimeIntervals(sub, of, s0, s1, s1)))
+    val storeFiles = java.nio.file.Files.walk(java.nio.file.Paths.get(conditionsPath))
+      .iterator().asScala.count(_.toString.endsWith(".parquet"))
+    calls.foreach { case (name, call) =>
+      val scans = scansOf(call().collect())
+      assert(scans.nonEmpty, s"$name ran no parquet scan")
+      scans.foreach { scan =>
+        // the partition filters must constrain `date`, and the scan must
+        // read fewer files than the 30-date store holds
+        assert(scan.partitionFilters.exists(_.references.exists(_.name == "date")),
+          s"$name: ${scan.simpleString(400)}")
+        assert(scan.metrics("numFiles").value < storeFiles,
+          s"$name read ${scan.metrics("numFiles").value} of $storeFiles files")
+      }
+    }
   }
 
   private def plan(name: String): String =

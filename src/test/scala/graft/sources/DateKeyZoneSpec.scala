@@ -1,0 +1,85 @@
+package graft.sources
+
+import graft.ConditionsView
+import graft.model.TimeseriesRecord
+import org.apache.spark.sql.{Row, SparkSession}
+import org.scalatest.funsuite.AnyFunSuite
+
+/** The `date` partition key and its pruning predicate must not depend on
+  * the session time zone: a store written in one zone reads back whole in
+  * any other. Rows sit near UTC midnight, where a zone-local day differs
+  * from the UTC day.
+  */
+class DateKeyZoneSpec extends AnyFunSuite {
+
+  private lazy val spark = SparkSession.builder()
+    .master("local[2]")
+    .config("spark.sql.shuffle.partitions", "2")
+    .config("spark.sql.session.timeZone", "UTC")
+    .config("spark.ui.enabled", "false")
+    .getOrCreate()
+
+  private val T0 = 1704139200L // 2024-01-01T20:00:00Z
+
+  /** Every 10 minutes for 32 h from T0, two subjects, a numeric and a
+    * string metric.
+    */
+  private lazy val store: String = {
+    import spark.implicits._
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    val fmt = java.time.format.DateTimeFormatter
+      .ofPattern("yyyy-MM-dd'T'HH:mm:ss.SSSSSS'Z'").withZone(java.time.ZoneOffset.UTC)
+    val records = for {
+      i <- 0 until 192
+      sub <- Seq("s1", "s2")
+      ts = fmt.format(java.time.Instant.ofEpochSecond(T0 + i * 600L))
+      r <- Seq(
+        TimeseriesRecord(ts, sub, "p", "temp", "number", Some(i % 7 + 0.5), None, None, None, None),
+        TimeseriesRecord(ts, sub, "p", "state", "string", None,
+          Some(if (i % 3 == 0) "on" else "off"), None, None, None))
+    } yield r
+    val dir = java.nio.file.Files.createTempDirectory("date_key_zone").toString + "/store"
+    ConditionsTable.write(ConditionsTable.toStorage(records.toDS()), dir)
+    dir
+  }
+
+  private def sorted(rows: Array[Row]): Seq[String] = rows.map(_.toString).toSeq.sorted
+
+  test("a UTC-written store reads whole through ConditionsView in any session zone") {
+    val ranges = Seq(
+      1704160800L -> 1704168000L, // 2024-01-02 02:00–04:00Z
+      1704146400L -> 1704153000L, // 2024-01-01 22:00–23:50Z
+      1704150000L -> 1704157200L) // across 2024-01-02 00:00Z
+    val path = store // written under UTC
+    try for (zone <- Seq("America/Los_Angeles", "Pacific/Kiritimati")) {
+      spark.conf.set("spark.sql.session.timeZone", zone)
+      val partitioned = ConditionsView.fromParquet(spark, path)
+      val unpartitioned = new ConditionsView(ConditionsTable.read(spark, path).drop("date"))
+      for ((a, b) <- ranges) {
+        val what = s"[$a, $b] in $zone"
+        val subjects = partitioned.getUniqueMeasurementSubjects(a, b, "temp").collect()
+        assert(sorted(subjects) ==
+          sorted(unpartitioned.getUniqueMeasurementSubjects(a, b, "temp").collect()), what)
+        assert(subjects.length == 2, what)
+        val buckets = partitioned.getAggregatedDataByInterval("s1", "temp", a, b, 600).collect()
+        assert(sorted(buckets) == sorted(unpartitioned
+          .getAggregatedDataByInterval("s1", "temp", a, b, 600).collect()), what)
+        assert(buckets.length == ((b - a) / 600 + 1), what)
+        assert(sorted(partitioned.filterUnchangedRows("s2", "state", a, b).collect()) ==
+          sorted(unpartitioned.filterUnchangedRows("s2", "state", a, b).collect()), what)
+      }
+    } finally spark.conf.set("spark.sql.session.timeZone", "UTC")
+  }
+
+  test("the date key is the UTC day in any session zone, before the epoch too") {
+    import spark.implicits._
+    try for (zone <- Seq("America/Los_Angeles", "Pacific/Kiritimati")) {
+      spark.conf.set("spark.sql.session.timeZone", zone)
+      val days = Seq(-500000L, 0L, 1704153599999999L, 1704153600000000L).toDF("us")
+        .select(org.apache.spark.sql.functions.timestamp_micros($"us").as("timestamp"))
+        .select(ConditionsTable.dateKey.cast("string"))
+        .as[String].collect().toSeq
+      assert(days == Seq("1969-12-31", "1970-01-01", "2024-01-01", "2024-01-02"), zone)
+    } finally spark.conf.set("spark.sql.session.timeZone", "UTC")
+  }
+}
