@@ -4,7 +4,9 @@ import graft.functions.{Asap, TimeWeight}
 import graft.queries.TimeseriesQueries._
 import graft.operators.{Redaction, TextAnalysis}
 import graft.sources.EventsAsConditions
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.streaming.GateStream
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.{DoubleType, StringType, TimestampType}
 import org.apache.spark.sql.functions.{broadcast, coalesce, col, concat, concat_ws, count, element_at, format_string, lit, split, sum, timestamp_seconds, unix_micros, when, round => sround}
 
 /** Driver contract — one `queries` entry (+ matching DuckDB `oracleSql`)
@@ -132,6 +134,33 @@ object SparkEntry {
         run()
       case _ => ()
     } finally { cached.unpersist(false); () }
+  }
+
+  /** The restart-per-slice drain of a windowed stream row: `transform`
+    * over a parquet stream of `real`'s slices (intermediate drains skip
+    * the eviction-only no-data batch, see withNoDataBatchesDisabled),
+    * then one far-future SENTINEL row (2100-01-01, built from
+    * `real.schema`) and a terminal drain with no-data batches on, which
+    * advances the watermark past every real window's close so append
+    * mode flushes them all. Returns the output without the sentinel's
+    * own still-open rows.
+    */
+  private def drainWindowed(s: SparkSession, query: String, real: DataFrame,
+                            tmp: String)(transform: DataFrame => DataFrame): DataFrame = {
+    val in = s"$tmp/input"
+    def run(): Unit = BenchPhases.drainTimed(query)(
+      GateStream.startParquet(s, in, s"$tmp/out", s"$tmp/cp")(
+        transform(GateStream.read(s, in, real.schema))))
+    withNoDataBatchesDisabled(s)(stageSlices(query, real, in)(() => run()))
+    val sentinel = Row.fromSeq(real.schema.fields.toSeq.map(_.dataType match {
+      case StringType => "__sentinel__"
+      case DoubleType => 0.0
+      case TimestampType => new java.sql.Timestamp(4102444800L * 1000L)
+    }))
+    s.createDataFrame(java.util.List.of(sentinel), real.schema)
+      .coalesce(1).write.mode("append").parquet(in)
+    run()
+    s.read.parquet(s"$tmp/out").filter(col("measurement_subject") =!= "__sentinel__")
   }
 
   /** Flagship query on sf=0.001; driver smoke-checks rows>0. */
@@ -389,17 +418,10 @@ object SparkEntry {
         .select("measurement_subject", "measurement_of", "measurement_number",
           "timestamp")
       withTempDir("graft_rate_stream") { tmp =>
-        def run(): Unit = BenchPhases.drainTimed("q_rate_stream") {
-          val stream = s.readStream.schema(real.schema).parquet(s"$tmp/input")
-          graft.util.StreamParallelism.withSizedShufflePartitions(s, s"$tmp/input")(
-          graft.streaming.CounterStream.deltas(stream, Of)
-            .writeStream.format("parquet")
-            .option("path", s"$tmp/out")
-            .outputMode("append")
-            .option("checkpointLocation", s"$tmp/cp")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start())
-        }
+        def run(): Unit = BenchPhases.drainTimed("q_rate_stream")(
+          GateStream.startParquet(s, s"$tmp/input", s"$tmp/out", s"$tmp/cp")(
+            graft.streaming.CounterStream.deltas(
+              GateStream.read(s, s"$tmp/input", real.schema), Of)))
         // six non-overlapping, time-ascending slices; each is ONE file
         // so AvailableNow cannot split it out of order
         stageSlices("q_rate_stream", real, s"$tmp/input",
@@ -659,34 +681,12 @@ object SparkEntry {
     // state is one partial OHLC row per open (window, subject); sentinel
     // flush as in q_agg_interval_stream; shares the batch-replay oracle
     "q_ohlc_stream" -> ((s, d) => {
-      import s.implicits._
       val real = scan(conditions(s, d), Of, S1, E1)
         .filter(col("measurement_number").isNotNull)
         .select("measurement_subject", "measurement_number", "timestamp")
       withTempDir("graft_ohlc_stream") { tmp =>
-        def run(): Unit = BenchPhases.drainTimed("q_ohlc_stream") {
-          val stream = s.readStream.schema(real.schema).parquet(s"$tmp/input")
-          graft.util.StreamParallelism.withSizedShufflePartitions(s, s"$tmp/input")(
-          graft.queries.TimeseriesQueries.streamingOhlc(stream, intervalS = 86400)
-            .writeStream.format("parquet")
-            .option("path", s"$tmp/out")
-            .outputMode("append")
-            .option("checkpointLocation", s"$tmp/cp")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start())
-        }
-        def sentinel(epochS: Long): Unit =
-          Seq(("__sentinel__", 0.0, new java.sql.Timestamp(epochS * 1000L)))
-            .toDF("measurement_subject", "measurement_number", "timestamp")
-            .coalesce(1).write.mode("append").parquet(s"$tmp/input")
-        // intermediate maintenance drains skip the eviction-only
-        // no-data batch (see withNoDataBatchesDisabled); the terminal
-        // sentinel drain below keeps it to flush the last windows
-        withNoDataBatchesDisabled(s)(
-          stageSlices("q_ohlc_stream", real, s"$tmp/input")(() => run()))
-        sentinel(4102444800L); run()
-        s.read.parquet(s"$tmp/out")
-          .filter(col("measurement_subject") =!= "__sentinel__")
+        drainWindowed(s, "q_ohlc_stream", real, tmp)(
+          graft.queries.TimeseriesQueries.streamingOhlc(_, intervalS = 86400))
           .orderBy("time_us", "measurement_subject")
       }
     }),
@@ -695,35 +695,13 @@ object SparkEntry {
     // open (window, subject)); derived stats computed on the stored
     // partials at read — shares the batch day-window oracle
     "q_stats_stream" -> ((s, d) => {
-      import s.implicits._
       val real = scan(conditions(s, d), Of, S1, E1)
         .filter(col("measurement_number").isNotNull)
         .select("measurement_subject", "measurement_number", "timestamp")
       withTempDir("graft_stats_stream") { tmp =>
-        def run(): Unit = BenchPhases.drainTimed("q_stats_stream") {
-          val stream = s.readStream.schema(real.schema).parquet(s"$tmp/input")
-          graft.util.StreamParallelism.withSizedShufflePartitions(s, s"$tmp/input")(
-          graft.queries.TimeseriesQueries.streamingStatsAgg(stream, intervalS = 86400)
-            .writeStream.format("parquet")
-            .option("path", s"$tmp/out")
-            .outputMode("append")
-            .option("checkpointLocation", s"$tmp/cp")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start())
-        }
-        def sentinel(epochS: Long): Unit =
-          Seq(("__sentinel__", 0.0, new java.sql.Timestamp(epochS * 1000L)))
-            .toDF("measurement_subject", "measurement_number", "timestamp")
-            .coalesce(1).write.mode("append").parquet(s"$tmp/input")
-        // intermediate maintenance drains skip the eviction-only
-        // no-data batch (see withNoDataBatchesDisabled); the terminal
-        // sentinel drain below keeps it to flush the last windows
-        withNoDataBatchesDisabled(s)(
-          stageSlices("q_stats_stream", real, s"$tmp/input")(() => run()))
-        sentinel(4102444800L); run()
         graft.queries.TimeseriesQueries.statsDerive(
-          s.read.parquet(s"$tmp/out")
-            .filter(col("measurement_subject") =!= "__sentinel__"))
+          drainWindowed(s, "q_stats_stream", real, tmp)(
+            graft.queries.TimeseriesQueries.streamingStatsAgg(_, intervalS = 86400)))
           .orderBy("measurement_subject", "time_s")
       }
     }),
@@ -736,33 +714,11 @@ object SparkEntry {
     // replayed as epoch-aligned integer bucketing over every (subject,
     // of) group
     "q_agg_interval_stream" -> ((s, d) => {
-      import s.implicits._
       val real = during(conditions(s, d), S1, E1)
         .select("measurement_subject", "measurement_of", "measurement_number", "timestamp")
       withTempDir("graft_aggint_stream") { tmp =>
-        def run(): Unit = BenchPhases.drainTimed("q_agg_interval_stream") {
-          val stream = s.readStream.schema(real.schema).parquet(s"$tmp/input")
-          graft.util.StreamParallelism.withSizedShufflePartitions(s, s"$tmp/input")(
-          graft.queries.TimeseriesQueries.streamingIntervalStats(stream, intervalS = 86400)
-            .writeStream.format("parquet")
-            .option("path", s"$tmp/out")
-            .outputMode("append")
-            .option("checkpointLocation", s"$tmp/cp")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start())
-        }
-        def sentinel(epochS: Long): Unit =
-          Seq(("__sentinel__", "__sentinel__", 0.0, new java.sql.Timestamp(epochS * 1000L)))
-            .toDF("measurement_subject", "measurement_of", "measurement_number", "timestamp")
-            .coalesce(1).write.mode("append").parquet(s"$tmp/input")
-        // intermediate maintenance drains skip the eviction-only
-        // no-data batch (see withNoDataBatchesDisabled); the terminal
-        // sentinel drain below keeps it to flush the last windows
-        withNoDataBatchesDisabled(s)(
-          stageSlices("q_agg_interval_stream", real, s"$tmp/input")(() => run()))
-        sentinel(4102444800L); run()
-        s.read.parquet(s"$tmp/out")
-          .filter(col("measurement_subject") =!= "__sentinel__")
+        drainWindowed(s, "q_agg_interval_stream", real, tmp)(
+          graft.queries.TimeseriesQueries.streamingIntervalStats(_, intervalS = 86400))
           .orderBy("time_us", "measurement_subject", "measurement_of")
       }
     }),
@@ -777,33 +733,11 @@ object SparkEntry {
     // own still-open session is filtered out.
     // Oracle = the batch q_sessions oracle without the session ordinal.
     "q_sessions_stream" -> ((s, d) => {
-      import s.implicits._
       val real = scan(conditions(s, d), Of, S1, E1)
         .select("measurement_subject", "timestamp")
       withTempDir("graft_sess_stream") { tmp =>
-        def run(): Unit = BenchPhases.drainTimed("q_sessions_stream") {
-          val stream = s.readStream.schema(real.schema).parquet(s"$tmp/input")
-          graft.util.StreamParallelism.withSizedShufflePartitions(s, s"$tmp/input")(
-          graft.queries.TimeseriesQueries.streamingSessionize(stream, gapS = 7200)
-            .writeStream.format("parquet")
-            .option("path", s"$tmp/out")
-            .outputMode("append")
-            .option("checkpointLocation", s"$tmp/cp")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start())
-        }
-        def sentinel(epochS: Long): Unit =
-          Seq(("__sentinel__", new java.sql.Timestamp(epochS * 1000L)))
-            .toDF("measurement_subject", "timestamp")
-            .coalesce(1).write.mode("append").parquet(s"$tmp/input")
-        // intermediate maintenance drains skip the eviction-only
-        // no-data batch (see withNoDataBatchesDisabled); the terminal
-        // sentinel drain below keeps it to flush the last windows
-        withNoDataBatchesDisabled(s)(
-          stageSlices("q_sessions_stream", real, s"$tmp/input")(() => run()))
-        sentinel(4102444800L); run() // 2100-01-01: watermark past every close
-        s.read.parquet(s"$tmp/out")
-          .filter(col("measurement_subject") =!= "__sentinel__")
+        drainWindowed(s, "q_sessions_stream", real, tmp)(
+          graft.queries.TimeseriesQueries.streamingSessionize(_, gapS = 7200))
           .orderBy("measurement_subject", "session_start_us")
       }
     }),

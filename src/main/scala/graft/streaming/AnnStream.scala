@@ -25,19 +25,17 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * ([[Ann.neardupAgainstIvfIndex]] — catalog-validated properties,
   * single-pass probe assignment, packed rectangle kernel), so streaming
   * and batch cannot drift. `nProbe = nlist` makes the gate exact;
-  * `nProbe < nlist` is the documented recall/cost dial. Parquet appends
-  * are at-least-once on batch replay (same caveat as
-  * [[IngestPipeline.startBmw]]); an idempotent sink keyed on vec_id
-  * upgrades to exactly-once.
+  * `nProbe < nlist` is the documented recall/cost dial. Batches commit
+  * through [[DedupStream]]'s guarded anti-join shape
+  * ([[GateStream.commitOnce]]): `batch_id=<id>` directories written
+  * with OVERWRITE, and a replayed committed batch re-folds its rows
+  * instead of recomputing, so the output is effectively-once.
   *
-  * `clearCachePerBatch` (default true) drops the session cache after
-  * each batch's write: [[Ann.neardupAgainstIvfIndex]] caches its packed
-  * batch (that is what makes the probe assignment single-pass) and a
-  * long-running gate would otherwise accumulate one evictable-but-live
-  * packed batch per micro-batch. A dedicated streaming job owns its
-  * session's cache, so the blanket clear is the right default; pass
-  * false when embedding the gate in a session whose other caches must
-  * survive.
+  * The session cache is dropped after each batch's write:
+  * [[Ann.neardupAgainstIvfIndex]] caches its packed batch (that is what
+  * makes the probe assignment single-pass) and a long-running gate would
+  * otherwise accumulate one evictable-but-live packed batch per
+  * micro-batch. A dedicated streaming job owns its session's cache.
   */
 object AnnStream {
 
@@ -54,14 +52,13 @@ object AnnStream {
             threshold: Double, nProbe: Int,
             trigger: Trigger = Trigger.AvailableNow(),
             maxFilesPerTrigger: Option[Int] = None,
-            clearCachePerBatch: Boolean = true,
             appendAccepted: Boolean = false): StreamingQuery = {
     DedupStream.startWith(spark, inputDir, outputDir, checkpointDir,
       trigger, maxFilesPerTrigger, joinKey = "vec_id",
-      onAccepted =
-        if (appendAccepted) novel => Ann.appendToIvfIndex(novel, indexTable)
-        else _ => (),
-      afterBatch = () => if (clearCachePerBatch) spark.catalog.clearCache()) {
+      onAccepted = { novel =>
+        if (appendAccepted) Ann.appendToIvfIndex(novel, indexTable)
+        spark.catalog.clearCache()
+      }) {
       batch =>
         Ann.neardupAgainstIvfIndex(batch, indexTable, threshold, nProbe)
           .select(col("id_new").as("vec_id")).distinct()

@@ -15,8 +15,8 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *
   * Refresh recomputes dates ≥ the batch's min date from the FULL store,
   * so late rows inside a batch fold in correctly and a replayed batch is
-  * idempotent for the rollup (the raw append stays at-least-once, the
-  * usual foreachBatch caveat — an idempotent keyed sink upgrades it).
+  * idempotent for the rollup (the raw append is unguarded and stays
+  * at-least-once — an idempotent keyed sink upgrades it).
   * Per-batch cost ∝ the days the batch touches, never the store's age.
   */
 object CaggStream {
@@ -194,19 +194,9 @@ object CaggStream {
             trigger: Trigger = Trigger.AvailableNow(),
             maxFilesPerTrigger: Option[Int] = None): StreamingQuery = {
     migrateLegacyFlatStore(spark, storePath, aggPath, widthS)
-    val schema = spark.read.parquet(inputDir).schema
-    val reader = spark.readStream.schema(schema)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    // stream shuffle/state partitions sized from the input at start
-    // (scoped set around .start(); see StreamParallelism)
-    graft.util.StreamParallelism.withSizedShufflePartitions(spark, inputDir) {
-    reader.parquet(inputDir)
-      .writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val b = batch.toDF().persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    GateStream.startBatches(spark, inputDir, checkpointDir, trigger, maxFilesPerTrigger) {
+      (batch, _) =>
+        val b = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
           // the raw store is DATE-PARTITIONED like the rollup, so the
           // refresh below reads only the touched date directories
@@ -222,8 +212,6 @@ object CaggStream {
               aggPath, widthS, md)
           }
         } finally { b.unpersist(); () }
-      }
-      .start()
     }
   }
 }

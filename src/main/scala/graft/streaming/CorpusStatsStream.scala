@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.operators.TextAnalysis
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Streaming corpus statistics: each micro-batch of documents appends its
@@ -17,31 +17,18 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * small-file problem; [[TextAnalysis.compactVocabIndex]] folds the
   * partials back to one row per token, the
   * [[graft.sources.ConditionsTable.compact]] hygiene applied to the
-  * stats store. At-least-once on batch replay, as with the other gates —
-  * counts are NOT idempotent under replay, so production sinks should
-  * stage per-batch partials keyed by batchId and merge exactly-once.
+  * stats store. Unguarded and at-least-once: a replayed batch appends
+  * its partials again, and counts are NOT idempotent under replay, so
+  * production sinks should stage per-batch partials keyed by batchId
+  * and merge exactly-once.
   */
 object CorpusStatsStream {
 
   def start(spark: SparkSession, inputDir: String, indexTable: String,
             checkpointDir: String,
             trigger: Trigger = Trigger.AvailableNow(),
-            maxFilesPerTrigger: Option[Int] = None): StreamingQuery = {
-    val schema = spark.read.parquet(inputDir).schema
-    val reader = spark.readStream.schema(schema)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    // stream shuffle/state partitions sized from the input at start
-    // (scoped set around .start(); see StreamParallelism)
-    graft.util.StreamParallelism.withSizedShufflePartitions(spark, inputDir) {
-    reader.parquet(inputDir)
-      .writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        TextAnalysis.appendToVocabIndex(batch.toDF(), indexTable)
-      }
-      .start()
+            maxFilesPerTrigger: Option[Int] = None): StreamingQuery =
+    GateStream.startBatches(spark, inputDir, checkpointDir, trigger, maxFilesPerTrigger) {
+      (batch, _) => TextAnalysis.appendToVocabIndex(batch, indexTable)
     }
-  }
 }

@@ -22,8 +22,9 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * the exact join's.
   *
   * The benchmark shingles are cached lazily (lineage-recoverable,
-  * evictable); appends are at-least-once on batch replay, as with every
-  * `foreachBatch` parquet sink here.
+  * evictable). Batches commit through [[DedupStream]]'s guarded
+  * anti-join shape ([[GateStream.commitOnce]]): `batch_id=<id>`
+  * directories written with OVERWRITE, never recomputed once committed.
   */
 object DecontaminationStream {
 

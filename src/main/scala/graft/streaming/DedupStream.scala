@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.operators.Dedup
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -22,11 +22,16 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * batch-side machinery runs unchanged ([[Dedup.minhashPairsAgainstIndex]]
   * — catalog-validated parameters, co-partitioned band join,
   * candidate-bounded exact verification), so streaming and batch cannot
-  * drift. foreachBatch itself is at-least-once, so every gate writes
-  * its batch to a per-batch-id directory with OVERWRITE and guards
-  * replays of already-committed batches (see [[committed]]) — the
-  * output is effectively-once end to end; index folds stay idempotent
-  * set unions.
+  * drift. foreachBatch itself is at-least-once, so every gate here
+  * commits each batch through [[GateStream.commitOnce]]: a per-batch
+  * directory written with OVERWRITE, and a replay of an
+  * already-committed batch re-folds its rows instead of recomputing —
+  * the output is effectively-once end to end (`GateStreamSpec` replays
+  * every gate after a checkpoint loss); index folds stay idempotent set
+  * unions. The anti-join gates, the line gate and the digest gate write
+  * `batch_id=<id>` directories (readers get `batch_id` back through
+  * partition discovery); the URL gates write `batch-<id>` directories
+  * (read with `recursiveFileLookup`).
   */
 object DedupStream {
 
@@ -46,8 +51,8 @@ object DedupStream {
     * gate streams: MinHash buckets ([[start]]), SimHash band segments
     * (here), IVF lists ([[AnnStream]]). The stored signatures make the
     * per-batch probe recompute-free on the index side; everything else
-    * (external state, at-least-once appends, batch/stream shared code
-    * path) matches [[start]].
+    * (external state, the committed-batch guard, batch/stream shared
+    * code path) matches [[start]].
     *
     * `appendAccepted = true` additionally appends each batch's ACCEPTED
     * documents to the index ([[Dedup.appendToSimhashIndex]]), so later
@@ -101,7 +106,7 @@ object DedupStream {
     * every index-claimed line removed ([[Dedup.stripClaimedLines]] — the
     * fourth index family streaming gate, after MinHash buckets, SimHash
     * band segments and IVF lists). Unlike the other gates this TRANSFORMS
-    * rows rather than dropping them, so it has its own foreachBatch
+    * rows rather than dropping them, so it commits its own batch compute
     * instead of [[startWith]]'s anti-join shape. `appendAccepted` appends
     * each batch's surviving lines to the index
     * ([[Dedup.appendToLineIndex]]), closing the cross-batch duplicate
@@ -113,41 +118,17 @@ object DedupStream {
                  outputDir: String, checkpointDir: String,
                  trigger: Trigger = Trigger.AvailableNow(),
                  maxFilesPerTrigger: Option[Int] = None,
-                 appendAccepted: Boolean = false): StreamingQuery = {
-    val schema = spark.read.parquet(inputDir).schema
-    val reader = spark.readStream.schema(schema)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    // stream shuffle/state partitions sized from the input at start
-    // (scoped set around .start(); see StreamParallelism)
-    graft.util.StreamParallelism.withSizedShufflePartitions(spark, inputDir) {
-    reader.parquet(inputDir)
-      .writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        // same per-batch-dir overwrite + committed-batch guard as the
-        // anti-join gates: a replayed batch that already claimed its
-        // surviving lines would strip them from ITSELF on recompute
-        val batchPath = f"$outputDir/batch_id=$batchId"
-        if (committed(spark, batchPath)) {
-          if (appendAccepted) readCommitted(spark, batchPath).foreach(r =>
-            Dedup.appendToLineIndex(
-              r.select(explode(split(col("text"), "\n")).as("line")),
-              indexTable))
-        } else {
-          val out = Dedup.stripClaimedLines(batch.toDF(), indexTable)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          try {
-            out.write.mode("overwrite").parquet(batchPath)
-            if (appendAccepted) Dedup.appendToLineIndex(
-              out.select(explode(split(col("text"), "\n")).as("line")), indexTable)
-          } finally out.unpersist()
+                 appendAccepted: Boolean = false): StreamingQuery =
+    GateStream.startBatches(spark, inputDir, checkpointDir, trigger, maxFilesPerTrigger) {
+      (batch, batchId) =>
+        // guarded: a replayed batch that already claimed its surviving
+        // lines would strip them from ITSELF on recompute
+        GateStream.commitOnce(spark, f"$outputDir/batch_id=$batchId")(
+          Dedup.stripClaimedLines(batch, indexTable)) { out =>
+          if (appendAccepted) Dedup.appendToLineIndex(
+            out.select(explode(split(col("text"), "\n")).as("line")), indexTable)
         }
-      }
-      .start()
     }
-  }
 
   /** URL-frontier gate: candidate crawl batches pass only if their
     * CANONICAL URL is not yet claimed by the persisted frontier index
@@ -158,13 +139,14 @@ object DedupStream {
     * canonicals for the next batches).
     *
     * Failure contract: the output write and the index append are two
-    * non-atomic writes, but BOTH are idempotent under a
-    * checkpoint-replayed retry — the output lands in a per-batch-id
-    * subdirectory rewritten with `overwrite` (read the tree with
-    * `recursiveFileLookup`), and a re-appended claim is harmless
-    * duplicate state (the probe treats claims as a set / takes the max
-    * `claimed_at`). So the gate is effectively-once end to end, not
-    * merely at-least-once like a bare `append` would be.
+    * non-atomic writes, committed through [[GateStream.commitOnce]] —
+    * the output lands in a `batch-<id>` subdirectory rewritten with
+    * `overwrite` (read the tree with `recursiveFileLookup`), a replayed
+    * committed batch re-claims its committed canonicals instead of
+    * recomputing, and a re-appended claim is harmless duplicate state
+    * (the probe treats claims as a set / takes the max `claimed_at`).
+    * So the gate is effectively-once end to end, not merely
+    * at-least-once like a bare `append` would be.
     */
   def startUrls(spark: SparkSession, inputDir: String, indexTable: String,
                 outputDir: String, checkpointDir: String, urlCol: String = "url",
@@ -225,84 +207,19 @@ object DedupStream {
       graft.operators.UrlOps.stripSeenUrls(indexable, urlCol, indexTable)
     }
 
-  /** Has a per-batch output directory already COMMITTED (its
-    * `_SUCCESS` marker exists)? The replay guard every index-folding
-    * gate needs: foreachBatch is at-least-once, and a replayed batch
-    * that already folded its accepted keys into the index would
-    * recompute an EMPTY novel set (its own keys now probe as seen) and
-    * overwrite the committed rows with nothing. A committed batch is
-    * therefore never recomputed — the gate re-folds the committed
-    * rows' keys instead (harmless duplicate index state, the append
-    * contract) and leaves the output untouched. A batch that crashed
-    * MID-write has no marker, and its index fold (ordered after the
-    * write) never ran — the replay recomputes the identical novel set
-    * against the unchanged index and the overwrite clears the orphan
-    * part-files.
-    */
-  private def committed(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path, "_SUCCESS")
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
-  /** The committed rows of a replayed batch directory — None when the
-    * batch was EMPTY (an empty frame commits `_SUCCESS` with zero part
-    * files, which a bare parquet read cannot infer a schema from;
-    * empty also means there is nothing to re-fold).
-    */
-  private def readCommitted(spark: SparkSession,
-                            path: String): Option[DataFrame] = {
-    val dir = new org.apache.hadoop.fs.Path(path)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hasParts = fs.listStatus(dir)
-      .exists(_.getPath.getName.startsWith("part-"))
-    if (hasParts) Some(spark.read.parquet(path)) else None
-  }
-
   private def startUrlsWith(spark: SparkSession, inputDir: String,
                             outputDir: String, checkpointDir: String,
                             trigger: Trigger, maxFilesPerTrigger: Option[Int],
                             appendAccepted: Boolean, indexTable: String)(
-                            gate: DataFrame => DataFrame): StreamingQuery = {
-    val schema = spark.read.parquet(inputDir).schema
-    val reader = spark.readStream.schema(schema)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    // stream shuffle/state partitions sized from the input at start
-    // (scoped set around .start(); see StreamParallelism)
-    graft.util.StreamParallelism.withSizedShufflePartitions(spark, inputDir) {
-    reader.parquet(inputDir)
-      .writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val batchPath = f"$outputDir/batch-$batchId%05d"
-        if (committed(spark, batchPath)) {
-          // replayed, already-committed batch: converge index state
-          // from the committed rows; never recompute (see [[committed]])
-          if (appendAccepted) readCommitted(spark, batchPath).foreach(r =>
-            graft.operators.UrlOps.appendToUrlIndex(
-              r.select("canon_url"), indexTable))
-        } else {
-          val out = gate(batch.toDF())
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          try {
-            out.write.mode("overwrite").parquet(batchPath)
-            if (appendAccepted) graft.operators.UrlOps.appendToUrlIndex(
-              out.select("canon_url"), indexTable)
-          } finally out.unpersist()
+                            gate: DataFrame => DataFrame): StreamingQuery =
+    GateStream.startBatches(spark, inputDir, checkpointDir, trigger, maxFilesPerTrigger) {
+      (batch, batchId) =>
+        GateStream.commitOnce(spark, f"$outputDir/batch-$batchId%05d")(gate(batch)) { out =>
+          if (appendAccepted)
+            graft.operators.UrlOps.appendToUrlIndex(out.select("canon_url"), indexTable)
         }
-      }
-      .start()
     }
-  }
 
-  /** Shared gate plumbing: parquet file stream (schema from a driver-side
-    * batch peek of the same directory), `dupIds(batch)` = the `joinKey`
-    * ids the prober flags against the index, anti-join keeps the novel
-    * rows; `onAccepted` receives each batch's novel frame (index-append
-    * hooks — cached so the probe doesn't recompute); `afterBatch` runs
-    * last (cache hygiene hooks — see [[AnnStream]]).
-    */
   /** Payload-digest gate — the crawl-side FIRST dedup tier as a
     * stream (the eighth external-state streaming family): each
     * micro-batch of parsed WARC records is probed against a persisted
@@ -321,83 +238,34 @@ object DedupStream {
                   maxFilesPerTrigger: Option[Int] = None,
                   appendAccepted: Boolean = false): StreamingQuery = {
     import graft.sources.WarcIngest
-    val schema = spark.read.parquet(inputDir).schema
-    val reader = spark.readStream.schema(schema)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    // stream shuffle/state partitions sized from the input at start
-    // (scoped set around .start(); see StreamParallelism)
-    graft.util.StreamParallelism.withSizedShufflePartitions(spark, inputDir) {
-    reader.parquet(inputDir)
-      .writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        // per-batch partition dir + overwrite + the committed-batch
-        // guard = replay-idempotent in BOTH crash windows (see
-        // [[committed]]); readers get batch_id back via partition
-        // discovery
-        val batchPath = f"$outputDir/batch_id=$batchId"
-        if (committed(spark, batchPath)) {
-          if (appendAccepted) readCommitted(spark, batchPath).foreach { r =>
-            WarcIngest.appendToDigestIndex(r, indexTable)
+    GateStream.startBatches(spark, inputDir, checkpointDir, trigger, maxFilesPerTrigger) {
+      (batch, batchId) =>
+        GateStream.commitOnce(spark, f"$outputDir/batch_id=$batchId")(
+          WarcIngest.novelByDigest(batch, indexTable)) { novel =>
+          if (appendAccepted) {
+            WarcIngest.appendToDigestIndex(novel, indexTable)
+            // the batch frame lives in a CLONED session — keep the
+            // OUTER session's cached relation fresh for the next probe
             spark.catalog.refreshTable(indexTable)
           }
-        } else {
-          val novel = WarcIngest.novelByDigest(batch.toDF(), indexTable)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          try {
-            novel.write.mode("overwrite").parquet(batchPath)
-            if (appendAccepted) {
-              WarcIngest.appendToDigestIndex(novel, indexTable)
-              // the batch frame lives in a CLONED session — keep the
-              // OUTER session's cached relation fresh for the next probe
-              spark.catalog.refreshTable(indexTable)
-            }
-          } finally novel.unpersist()
         }
-      }
-      .start()
     }
   }
 
+  /** The anti-join gate shape: `dupIds(batch)` = the `joinKey` ids the
+    * prober flags against the index, the left anti-join keeps the novel
+    * rows, and `onAccepted` folds each committed batch's novel rows into
+    * the index (cached, so the fold doesn't recompute the probe).
+    */
   private[streaming] def startWith(spark: SparkSession, inputDir: String, outputDir: String,
                         checkpointDir: String, trigger: Trigger,
                         maxFilesPerTrigger: Option[Int],
                         joinKey: String = "doc_id",
-                        onAccepted: DataFrame => Unit = _ => (),
-                        afterBatch: () => Unit = () => ())(
-                        dupIds: DataFrame => DataFrame): StreamingQuery = {
-    val schema = spark.read.parquet(inputDir).schema
-    val reader = spark.readStream.schema(schema)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    // stream shuffle/state partitions sized from the input at start
-    // (scoped set around .start(); see StreamParallelism)
-    graft.util.StreamParallelism.withSizedShufflePartitions(spark, inputDir) {
-    reader.parquet(inputDir)
-      .writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        // same per-batch-dir overwrite + committed-batch guard as
-        // [[startDigest]] — the index folds in `onAccepted` make the
-        // recompute replay-UNSTABLE, so a committed batch re-folds
-        // from its committed rows instead of recomputing
-        val batchPath = f"$outputDir/batch_id=$batchId"
-        if (committed(spark, batchPath)) {
-          readCommitted(spark, batchPath).foreach(onAccepted)
-        } else {
-          val novel = batch.toDF().join(dupIds(batch.toDF()), Seq(joinKey), "left_anti")
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          try {
-            novel.write.mode("overwrite").parquet(batchPath)
-            onAccepted(novel)
-          } finally novel.unpersist()
-        }
-        afterBatch()
-      }
-      .start()
+                        onAccepted: DataFrame => Unit = _ => ())(
+                        dupIds: DataFrame => DataFrame): StreamingQuery =
+    GateStream.startBatches(spark, inputDir, checkpointDir, trigger, maxFilesPerTrigger) {
+      (batch, batchId) =>
+        GateStream.commitOnce(spark, f"$outputDir/batch_id=$batchId")(
+          batch.join(dupIds(batch), Seq(joinKey), "left_anti"))(onAccepted)
     }
-  }
 }

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.operators.LinkGraph
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -59,20 +59,9 @@ object LinkStream {
                     recomputeEveryN: Int = 1): StreamingQuery = {
     require(recomputeEveryN >= 1,
       s"recomputeEveryN must be >= 1, got $recomputeEveryN")
-    val schema = spark.read.parquet(inputDir).schema
-    val reader = spark.readStream.schema(schema)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    val stream = reader.parquet(inputDir)
-    // stream shuffle/state partitions sized from the input at start
-    // (scoped set around .start(); see StreamParallelism)
-    graft.util.StreamParallelism.withSizedShufflePartitions(spark, inputDir) {
-    stream
-      .writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        LinkGraph.appendToEdgeIndex(batch.toDF(), indexTable)
+    GateStream.startBatches(spark, inputDir, checkpointDir, trigger, maxFilesPerTrigger) {
+      (batch, id) =>
+        LinkGraph.appendToEdgeIndex(batch, indexTable)
         // the batch frame lives in a CLONED session (micro-batch
         // execution), so the append's refresh hits the clone's catalog
         // only — refresh the OUTER session too or its cached relation
@@ -90,8 +79,6 @@ object LinkStream {
           LinkGraph.pagerankAgainstIndex(spark, indexTable, iters, dampingPct)
             .write.mode("overwrite").parquet(f"$outputDir/batch_id=$id")
         }
-      }
-      .start()
     }
   }
 

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.operators.Dedup
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Streaming maintenance of a corpus k-min-value overlap sketch — the
@@ -20,22 +20,8 @@ object OverlapSketchStream {
   def start(spark: SparkSession, inputDir: String, sketchTable: String,
             checkpointDir: String,
             trigger: Trigger = Trigger.AvailableNow(),
-            maxFilesPerTrigger: Option[Int] = None): StreamingQuery = {
-    val schema = spark.read.parquet(inputDir).schema
-    val reader = spark.readStream.schema(schema)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    // stream shuffle/state partitions sized from the input at start
-    // (scoped set around .start(); see StreamParallelism)
-    graft.util.StreamParallelism.withSizedShufflePartitions(spark, inputDir) {
-    reader.parquet(inputDir)
-      .writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        Dedup.mergeIntoOverlapSketch(batch.toDF(), sketchTable)
-      }
-      .start()
+            maxFilesPerTrigger: Option[Int] = None): StreamingQuery =
+    GateStream.startBatches(spark, inputDir, checkpointDir, trigger, maxFilesPerTrigger) {
+      (batch, _) => Dedup.mergeIntoOverlapSketch(batch, sketchTable)
     }
-  }
 }

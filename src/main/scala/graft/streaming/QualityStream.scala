@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.operators.QualityModels
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -18,8 +18,8 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * table) upgrades the gate between batches with no checkpoint surgery.
   * Scoring inside `foreachBatch` runs the exact batch scorer
   * ([[QualityModels.scoreAgainstModel]]), so streaming and batch cannot
-  * drift. Parquet appends are at-least-once on batch replay, as with the
-  * other gates.
+  * drift. Unguarded: survivors are APPENDED to `outputDir`, so a
+  * replayed batch lands twice (at-least-once on batch replay).
   */
 object QualityStream {
 
@@ -27,26 +27,13 @@ object QualityStream {
             outputDir: String, checkpointDir: String,
             threshold: Double = 0.0,
             trigger: Trigger = Trigger.AvailableNow(),
-            maxFilesPerTrigger: Option[Int] = None): StreamingQuery = {
-    val schema = spark.read.parquet(inputDir).schema
-    val reader = spark.readStream.schema(schema)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    // stream shuffle/state partitions sized from the input at start
-    // (scoped set around .start(); see StreamParallelism)
-    graft.util.StreamParallelism.withSizedShufflePartitions(spark, inputDir) {
-    reader.parquet(inputDir)
-      .writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val passed = QualityModels.scoreAgainstModel(batch.toDF(), modelTable)
+            maxFilesPerTrigger: Option[Int] = None): StreamingQuery =
+    GateStream.startBatches(spark, inputDir, checkpointDir, trigger, maxFilesPerTrigger) {
+      (batch, _) =>
+        val passed = QualityModels.scoreAgainstModel(batch, modelTable)
           .filter(col("score") > threshold)
           .select("doc_id")
-        batch.toDF().join(passed, Seq("doc_id"), "left_semi")
+        batch.join(passed, Seq("doc_id"), "left_semi")
           .write.mode("append").parquet(outputDir)
-      }
-      .start()
     }
-  }
 }

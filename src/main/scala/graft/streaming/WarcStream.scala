@@ -39,25 +39,17 @@ object WarcStream {
       StructField("modificationTime", TimestampType),
       StructField("length", LongType),
       StructField("content", BinaryType)))
-    val reader = spark.readStream.format("binaryFile")
-      .schema(binaryFileSchema)
-    maxFilesPerTrigger.foreach(n =>
-      reader.option("maxFilesPerTrigger", n.toString))
-    val records = reader.load(inputDir)
-      .select(col("path").as("archive"),
-        explode(WarcIngest.splitGzMembers(col("content"))).as("record"))
-    val parsed = WarcIngest.responsesOnly(
-      WarcIngest.parseRawRecords(records))
-    // stream shuffle/state partitions sized from the input at start
-    // (scoped set around .start(); see StreamParallelism)
-    graft.util.StreamParallelism.withSizedShufflePartitions(spark, inputDir) {
-    parsed.writeStream
-      .format("parquet")
-      .option("path", outputDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .trigger(trigger)
-      .start()
+    // the sink half of the gate skeleton: input-sized shuffle
+    // partitions, append mode, trigger and checkpoint
+    GateStream.startParquet(spark, inputDir, outputDir, checkpointDir, trigger) {
+      val reader = spark.readStream.format("binaryFile")
+        .schema(binaryFileSchema)
+      maxFilesPerTrigger.foreach(n =>
+        reader.option("maxFilesPerTrigger", n.toString))
+      val records = reader.load(inputDir)
+        .select(col("path").as("archive"),
+          explode(WarcIngest.splitGzMembers(col("content"))).as("record"))
+      WarcIngest.responsesOnly(WarcIngest.parseRawRecords(records))
     }
   }
 }

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.operators.Sampling
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Streaming weighted sampling without replacement over an unbounded
@@ -18,22 +18,8 @@ object WeightedSampleStream {
   def start(spark: SparkSession, inputDir: String, stateTable: String,
             checkpointDir: String,
             trigger: Trigger = Trigger.AvailableNow(),
-            maxFilesPerTrigger: Option[Int] = None): StreamingQuery = {
-    val schema = spark.read.parquet(inputDir).schema
-    val reader = spark.readStream.schema(schema)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    // stream shuffle/state partitions sized from the input at start
-    // (scoped set around .start(); see StreamParallelism)
-    graft.util.StreamParallelism.withSizedShufflePartitions(spark, inputDir) {
-    reader.parquet(inputDir)
-      .writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        Sampling.mergeIntoWeightedSample(batch.toDF(), stateTable)
-      }
-      .start()
+            maxFilesPerTrigger: Option[Int] = None): StreamingQuery =
+    GateStream.startBatches(spark, inputDir, checkpointDir, trigger, maxFilesPerTrigger) {
+      (batch, _) => Sampling.mergeIntoWeightedSample(batch, stateTable)
     }
-  }
 }

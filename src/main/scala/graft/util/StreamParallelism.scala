@@ -62,12 +62,6 @@ object StreamParallelism {
     if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L
   }
 
-  /** ceil(bytes / targetPartitionBytes), floored at 1 — more partitions
-    * than the session constant when the data calls for it, fewer when it
-    * doesn't. No core-count term on purpose: a partition above the
-    * target size is worth a task wherever it runs, and a partition far
-    * below it is pure per-partition overhead on any cluster.
-    */
   /** The validated `graft.stream.shufflePartitions` override, if set.
     * Validated HERE (parse + positive, message naming the key — the
     * same discipline as the TargetBytesKey require) so a typo'd value
@@ -86,6 +80,12 @@ object StreamParallelism {
       n
     }
 
+  /** ceil(bytes / targetPartitionBytes), floored at 1 — more partitions
+    * than the session constant when the data calls for it, fewer when it
+    * doesn't. No core-count term on purpose: a partition above the
+    * target size is worth a task wherever it runs, and a partition far
+    * below it is pure per-partition overhead on any cluster.
+    */
   def sizedPartitions(spark: SparkSession, bytes: Long): Int =
     forcedPartitions(spark) match {
       case Some(forced) => forced
@@ -118,25 +118,25 @@ object StreamParallelism {
     */
   def withSizedShufflePartitions[T](spark: SparkSession,
                                     inputPath: String)(start: => T): T = {
-    val forced = forcedPartitions(spark)
     // an EMPTY dir carries no sizing signal — keep the session's
     // provisioned setting rather than latching 1 into a fresh
     // checkpoint forever (the object doc's start-before-data rule);
     // a forced override still applies verbatim
-    val n = forced match {
-      case Some(f) => f
-      case None =>
-        val bytes = dirBytes(spark, inputPath)
-        if (bytes == 0L) return start
-        sizedPartitions(spark, bytes)
+    val n = forcedPartitions(spark).orElse {
+      val bytes = dirBytes(spark, inputPath)
+      if (bytes == 0L) None else Some(sizedPartitions(spark, bytes))
     }
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, n.toString)
-    try start
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
+    n match {
+      case None => start
+      case Some(parts) =>
+        val key = "spark.sql.shuffle.partitions"
+        val prev = spark.conf.getOption(key)
+        spark.conf.set(key, parts.toString)
+        try start
+        finally prev match {
+          case Some(v) => spark.conf.set(key, v)
+          case None => spark.conf.unset(key)
+        }
     }
   }
 }

@@ -162,55 +162,6 @@ class DedupStreamSpec extends AnyFunSuite {
     } finally spark.sql("DROP TABLE IF EXISTS url_gate_spec_index")
   }
 
-  test("digest gate replay: re-running every batch after a checkpoint " +
-      "loss leaves committed output unchanged (no duplicates, no " +
-      "emptied batches) even with appendAccepted folds") {
-    import spark.implicits._
-    import graft.sources.WarcIngest
-    // parsed-WARC-shaped rows; docs 2 and 4 share a digest but are
-    // staged in DIFFERENT single-file batches, so the fold admits
-    // exactly one of them
-    val rows = Seq(
-      ("https://a.com/1", "id:1", "response", "md5:aaa", "<p>1</p>"),
-      ("https://a.com/2", "id:2", "response", "md5:bbb", "<p>2</p>"),
-      ("https://a.com/3", "id:3", "response", "", "<p>3</p>"),
-      ("https://a.com/4", "id:4", "response", "md5:bbb", "<p>4</p>"))
-      .toDF("url", "record_id", "warc_type", "payload_digest", "html")
-    WarcIngest.writeDigestIndex(
-      rows.filter(col("record_id") === "id:1"), "digest_replay_idx")
-    try {
-      val tmp = Files.createTempDirectory("dgr").toString
-      val flat = new java.io.File(s"$tmp/in"); flat.mkdirs()
-      Seq("id:2", "id:3", "id:4").zipWithIndex.foreach { case (id, i) =>
-        rows.filter(col("record_id") === id).coalesce(1)
-          .write.parquet(s"$tmp/stage/f$i")
-        new java.io.File(s"$tmp/stage/f$i").listFiles
-          .filter(_.getName.endsWith(".parquet")).foreach { f =>
-            java.nio.file.Files.move(f.toPath,
-              java.nio.file.Paths.get(s"$tmp/in/part-$i.parquet"))
-          }
-      }
-      DedupStream.startDigest(spark, s"$tmp/in", "digest_replay_idx",
-        s"$tmp/out", s"$tmp/cp", maxFilesPerTrigger = Some(1),
-        appendAccepted = true).awaitTermination()
-      val first = spark.read.parquet(s"$tmp/out")
-        .select("record_id").collect().map(_.getString(0)).sorted.toSeq
-      // one of the md5:bbb pair + the digest-less doc 3; doc 1 seeded
-      assert(first.length == 2 && first.contains("id:3"), first)
-      // REPLAY: wipe the checkpoint — every batch re-runs with its own
-      // digests already folded into the index (the window where the
-      // old append-mode sink emptied or duplicated batches)
-      graft.util.FsUtil.deleteRecursively(new java.io.File(s"$tmp/cp"))
-      DedupStream.startDigest(spark, s"$tmp/in", "digest_replay_idx",
-        s"$tmp/out", s"$tmp/cp", maxFilesPerTrigger = Some(1),
-        appendAccepted = true).awaitTermination()
-      val second = spark.read.parquet(s"$tmp/out")
-        .select("record_id").collect().map(_.getString(0)).sorted.toSeq
-      assert(second == first,
-        s"replay changed committed output: $first -> $second")
-    } finally spark.sql("DROP TABLE IF EXISTS digest_replay_idx")
-  }
-
   test("TTL frontier gate: stale claims expire per the row's own clock, fresh ones hold") {
     import spark.implicits._
     import graft.operators.UrlOps
