@@ -64,7 +64,8 @@ object SparkEntry {
     * split provably cannot change any windowed/stateful result.
     */
   // five slices (was six through round 10): pb_n = 5 still clears the
-  // ≥5-batch adjudication bar, and the round-11 BatchVolumeProbe showed
+  // ≥5-batch adjudication bar, and the round-11 batch-volume probe
+  // (SCALING.md, "Round-11: batch-volume sensitivity probe") showed
   // restart-cycle cost is pure fixed overhead (marginal 2.50 vs 2.60
   // s/run at 7× volume difference), so one fewer batch is the only
   // drain trim that doesn't change what the marginal measures
@@ -84,7 +85,7 @@ object SparkEntry {
     * AvailableNow drain per arrival; with no-data batches on, EVERY
     * drain appends an eviction-only batch that re-executes the whole
     * stateful plan (measured ~1.0–1.2 s per restart at sf0.1, ~45% of
-    * drain wall — StreamDurationProbe) just to emit windows the
+    * drain wall — SCALING.md, "Round 15") just to emit windows the
     * watermark closed at the end of that drain's data batch. In the
     * maintenance-loop deployment those emissions are equally correct
     * one arrival later: the NEXT restart's data batch runs with the
@@ -3299,14 +3300,12 @@ object SparkEntry {
       withTempDir("graft_wire_bench") { tmp =>
         BenchPhases.timed("q_ingest_wire", "stage")(
           emonEnvelopes(s, d).write.text(s"$tmp/input"))
-        BenchPhases.timed("q_ingest_wire", "convert")(
+        BenchPhases.drainTimed("q_ingest_wire", "convert")(
           graft.streaming.IngestPipeline
-            .startConvertToWire(s, s"$tmp/input", s"$tmp/wire", s"$tmp/cp_convert")
-            .awaitTermination())
-        BenchPhases.timed("q_ingest_wire", "store")(
+            .startConvertToWire(s, s"$tmp/input", s"$tmp/wire", s"$tmp/cp_convert"))
+        BenchPhases.drainTimed("q_ingest_wire", "store")(
           graft.streaming.IngestPipeline
-            .startWire(s, s"$tmp/wire", s"$tmp/out", s"$tmp/cp_store")
-            .awaitTermination())
+            .startWire(s, s"$tmp/wire", s"$tmp/out", s"$tmp/cp_store"))
         s.read.parquet(s"$tmp/out")
           .select(unix_micros(col("timestamp")).as("ts_us"), col("measurement_subject"),
             col("measurement_of"), col("measurement_number"))

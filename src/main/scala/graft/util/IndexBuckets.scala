@@ -20,7 +20,14 @@ import org.apache.spark.sql.DataFrame
   * being written (`optimizedPlan.stats.sizeInBytes` — file-size-based
   * for scan-derived frames, scaled through projections), so the
   * derivation costs no extra job. Estimates are approximate; buckets
-  * only need the right order of magnitude, and the count is recorded in
+  * only need the right order of magnitude. The estimate is taken BEFORE
+  * aggregation: without column statistics Catalyst sizes a `distinct` /
+  * `groupBy` as its input scaled by row width, so a distinct-heavy
+  * writer over a heavily duplicated input (many pages sharing the same
+  * lines, URLs or digests) over-derives its count by the duplication
+  * factor. The derived count is clamped to
+  * `spark.sql.sources.bucketing.maxBuckets` (Spark refuses a bucketed
+  * write above it) and to 2^20. The count is recorded in
   * the table properties so every APPEND reuses the write-time value
   * (bucket count latches at first write — like stream state partitions,
   * see [[StreamParallelism]]).
@@ -56,6 +63,9 @@ object IndexBuckets {
     */
   private val MaxDerived = 1 << 20
 
+  /** Spark's own ceiling on a bucketed write's bucket count. */
+  private val MaxBucketsKey = "spark.sql.sources.bucketing.maxBuckets"
+
   /** Resolve a writer's `buckets` parameter: an explicit positive count
     * is used verbatim (tests and callers that pin geometry), [[Auto]]
     * derives from `frame`'s plan-size estimate.
@@ -87,11 +97,8 @@ object IndexBuckets {
         // under the plan) — deriving from that would pin the cap, so
         // fall back to the historical 64 and let the operator force a
         // real count for such sources
-        if (est >= BigInt(Long.MaxValue) / 2) 64
-        else {
-          val n = (est + target - 1) / target
-          n.max(1).min(MaxDerived).toInt
-        }
+        val n = if (est >= BigInt(Long.MaxValue) / 2) BigInt(64) else (est + target - 1) / target
+        n.max(1).min(spark.conf.get(MaxBucketsKey).toInt.min(MaxDerived)).toInt
     }
   }
 }

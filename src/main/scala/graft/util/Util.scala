@@ -36,17 +36,28 @@ object FsUtil {
 
 /** Small shared helpers. */
 object Util {
-  /** A random version-4 UUID string from `ThreadLocalRandom` — the
-    * correlation-id generator for the ingest hot path.
-    * `java.util.UUID.randomUUID` draws from the JVM's global
-    * `SecureRandom`, whose internal lock serializes every converter
-    * task on the executor (one draw PER EVENT across all cores);
-    * correlation ids need uniqueness, not cryptographic strength, so a
-    * thread-local PRNG with the standard v4 variant/version bits keeps
-    * the same wire format without the contention.
+  /** Per-JVM root of the correlation-id generator, seeded once from
+    * `SecureRandom` so executor JVMs never share a (time-derived) seed.
+    */
+  private val root = new java.util.SplittableRandom(new java.security.SecureRandom().nextLong())
+
+  /** Each thread splits its own generator off the root once (the only
+    * locked step); every draw after that is thread-confined.
+    */
+  private val local = ThreadLocal.withInitial[java.util.SplittableRandom](
+    () => root.synchronized(root.split()))
+
+  /** A random version-4 UUID string — the correlation-id generator for
+    * the ingest hot path. `java.util.UUID.randomUUID` draws from the
+    * JVM's global `SecureRandom`, whose internal lock serializes every
+    * converter task on the executor (one draw PER EVENT across all
+    * cores); correlation ids need uniqueness, not cryptographic
+    * strength, so a thread-local `SplittableRandom` with the standard v4
+    * variant/version bits keeps the same wire format without the
+    * contention.
     */
   def fastRandomUuid(): String = {
-    val r = java.util.concurrent.ThreadLocalRandom.current()
+    val r = local.get()
     val msb = (r.nextLong() & 0xffffffffffff0fffL) | 0x0000000000004000L
     val lsb = (r.nextLong() & 0x3fffffffffffffffL) | 0x8000000000000000L
     new java.util.UUID(msb, lsb).toString

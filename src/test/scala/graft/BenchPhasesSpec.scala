@@ -28,7 +28,7 @@ class BenchPhasesSpec extends AnyFunSuite {
     // three single-row files; maxFilesPerTrigger=1 => three data batches
     (1 to 3).foreach(i =>
       Seq(i.toLong).toDF("v").coalesce(1).write.mode("append").parquet(in))
-    BenchPhases.repStart()
+    BenchPhases.repStart(spark)
     BenchPhases.drainTimed("spec_row") {
       spark.readStream.schema(spark.read.parquet(in).schema)
         .option("maxFilesPerTrigger", 1).parquet(in)
@@ -64,7 +64,7 @@ class BenchPhasesSpec extends AnyFunSuite {
     val snap2 = BenchPhases.repSnapshot("spec_row")
     assert(snap2("pb_n") == 3.0, s"restarted stream's batch must accumulate: $snap2")
     // repStart clears everything including the first-batch skip
-    BenchPhases.repStart()
+    BenchPhases.repStart(spark)
     assert(BenchPhases.repSnapshot("spec_row").isEmpty)
   }
 }

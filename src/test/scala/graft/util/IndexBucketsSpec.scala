@@ -6,7 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
 /** Pins the size-derived index-bucket policy (r16 optimization):
-  * buckets = ceil(estimated bytes / target) floored at 1, target
+  * buckets = ceil(estimated bytes / target) floored at 1 and clamped
+  * to `spark.sql.sources.bucketing.maxBuckets`, target
   * defaulting to 128MB with `graft.index.targetBucketBytes` override,
   * `graft.index.buckets` forced verbatim, explicit writer parameters
   * untouched — and the resolved count rides the table properties so
@@ -43,6 +44,24 @@ class IndexBucketsSpec extends AnyFunSuite {
       spark.conf.set(IndexBuckets.TargetBytesKey, "128MB")
       assert(IndexBuckets.resolve(onDisk, IndexBuckets.Auto) == 1)
     } finally spark.conf.unset(IndexBuckets.TargetBytesKey)
+  }
+
+  test("a derived count clamps to spark.sql.sources.bucketing.maxBuckets and writes") {
+    import spark.implicits._
+    // a 1-byte target derives one bucket per estimated byte, far above 50
+    val df = (1L to 1000L).toDF("v")
+    spark.conf.set("spark.sql.sources.bucketing.maxBuckets", "50")
+    spark.conf.set(IndexBuckets.TargetBytesKey, "1")
+    try {
+      val n = IndexBuckets.resolve(df, IndexBuckets.Auto)
+      assert(n == 50)
+      df.write.format("parquet").bucketBy(n, "v").mode("overwrite").saveAsTable("ib_clamp")
+      assert(spark.table("ib_clamp").count() == 1000L)
+      spark.sql("DROP TABLE ib_clamp")
+    } finally {
+      spark.conf.unset(IndexBuckets.TargetBytesKey)
+      spark.conf.unset("spark.sql.sources.bucketing.maxBuckets")
+    }
   }
 
   test("forced override wins verbatim and is validated naming the key") {
