@@ -132,7 +132,7 @@ object Asap {
   }
 
   /** The B5 query: distributed grid-reduce to `resolution` buckets, ASAP
-    * window search on the grid, result re-parallelized.
+    * window search on the grid, result returned as a local relation.
     */
   def sampledData(spark: SparkSession, conditions: DataFrame, subject: String,
                   of: String, startS: Long, endS: Long, resolution: Int): DataFrame = {
@@ -144,8 +144,8 @@ object Asap {
       .filter(!_.isNullAt(1)) // all-null buckets (non-numeric EAV rows)
       .map(r => Point(r.getLong(0), r.getDouble(1)))
       .toIndexedSeq
+    // already time-ordered: a local relation, which collects without a job
     smooth(gapFill(grid, widthS))
       .toDF("time_s", "smoothed_value")
-      .orderBy("time_s")
   }
 }

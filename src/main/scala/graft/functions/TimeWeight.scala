@@ -71,7 +71,7 @@ object TimeWeight {
                                 resolution: Int): DataFrame = {
     val widthS = (endS - startS) / resolution
     require(widthS > 0, "resolution too fine for span")
-    TimeseriesQueries.scan(conditions, of, startS, endS, Some(subject))
+    TimeseriesQueries.inOrder(TimeseriesQueries.scan(conditions, of, startS, endS, Some(subject))
       // EAV rows of another value type under the same metric name carry a
       // null measurement_number; the toolkit's time_weight skips NULLs
       .filter(col("measurement_number").isNotNull)
@@ -79,7 +79,6 @@ object TimeWeight {
       .agg(collect_list(struct(unix_micros(col("timestamp")),
         col("measurement_number"))).as("pts"))
       .select(col("time_s"),
-        twUdf(method)(col("pts")).as("time_weighted_value"))
-      .orderBy("time_s")
+        twUdf(method)(col("pts")).as("time_weighted_value")), "time_s")
   }
 }

@@ -1052,21 +1052,24 @@ object Dedup {
     * opens D files per matching bucket — the classic small-file creep of
     * any append-only store. Compaction snapshots the table
     * (localCheckpoint — the overwrite drops the very files being read),
-    * rewrites it in one bucketed pass (same `graft.buckets` bucketing,
-    * so probes stay co-partitioned and lossless), and restores every
-    * `graft.*` property the overwrite discarded. Content, bucketing
-    * geometry and probe results are unchanged by construction
-    * (spec-pinned); run it on the maintenance cadence, cost = one
-    * index-sized bucketed write.
+    * rewrites it in one bucketed pass, and restores every `graft.*`
+    * property the overwrite discarded. The bucket count is re-derived
+    * from the table's current size through [[graft.util.IndexBuckets]]
+    * (the count latched at the seed write was sized for the seed, not
+    * for the table as it has grown) and `graft.buckets` records the new
+    * count, so later appends and probes stay co-partitioned with the
+    * rewritten files. Content and probe results
+    * are unchanged by construction — every probe joins on the full
+    * bucket key (spec-pinned); run it on the maintenance cadence,
+    * cost = one index-sized bucketed write.
     */
   def compactIndex(spark: org.apache.spark.sql.SparkSession, tableName: String,
                    bucketCol: String): Unit = {
-    val props = spark.sql(s"SHOW TBLPROPERTIES $tableName").collect()
+    val seeded = spark.sql(s"SHOW TBLPROPERTIES $tableName").collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
       .filter { case (k, _) => k.startsWith("graft.") }
-    require(props.contains("graft.buckets"),
+    require(seeded.contains("graft.buckets"),
       s"$tableName carries no graft.buckets property — not a graft index table")
-    val buckets = props("graft.buckets").toInt
     // Two-phase copy through a TMP table: the previous shape snapshotted
     // to executor-memory localCheckpoint blocks and overwrote the ONLY
     // copy — an executor lost mid-rewrite destroyed the accumulated
@@ -1097,6 +1100,10 @@ object Dedup {
       val loc = spark.sessionState.catalog.getTableMetadata(ident).location
       spark.read.parquet(loc.toString)
     }
+    // sized from the live table's files (a plain scan's estimate is their
+    // on-disk bytes); the graft.index.* overrides apply as at a seed write
+    val buckets = graft.util.IndexBuckets.resolve(filesOf(tableName), graft.util.IndexBuckets.Auto)
+    val props = seeded + ("graft.buckets" -> buckets.toString)
     def writeAs(df: DataFrame, to: String): Unit = {
       // one writing task per hash partition of the bucket key — without
       // this, every reader partition emits its own file per bucket and

@@ -1,9 +1,10 @@
 package graft.queries
 
 import graft.sources.ConditionsTable
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** The nine dashboard analytics functions (`db/` SQL files), re-expressed as
   * DataFrame transforms over a conditions-shaped input
@@ -17,11 +18,14 @@ import org.apache.spark.sql.functions._
   * partition pruning + parquet row-group skipping — the Spark analogue of
   * hypertable chunk exclusion + the subject/of hash indexes.
   *
-  * Scale notes: every query below is a single scan → partial hash-agg →
-  * final agg/window → sort over an already-filtered slice. The only
-  * whole-slice-to-one-node operators are the window functions of B8/B9,
-  * which the reference bounds to a single (subject, metric) series — the
-  * same bound applies here (`Window.partitionBy(measurement_subject)`).
+  * Scale notes: each of the nine queries is a single parallel scan →
+  * partial hash-agg → final agg/window over an already-filtered slice,
+  * and its bounded result is ordered in one task by [[inOrder]] (no
+  * range-partitioned global sort, so a dashboard call runs two Spark
+  * jobs). The only whole-slice-to-one-node operators are the window
+  * functions of B8/B9, which the reference bounds to a single
+  * (subject, metric) series — the same bound applies here
+  * (`Window.partitionBy(measurement_subject)`).
   *
   * Output timestamps are emitted as BIGINT epoch seconds (`time_s`) to make
   * results engine-portable (parquet µs-vs-ns unit mismatches otherwise).
@@ -85,6 +89,23 @@ object TimeseriesQueries {
       else range)
   }
 
+  /** The one ordering step of the nine dashboard queries' results:
+    * gather into one partition, sort there. A global `orderBy` would
+    * range-partition instead — a sampling job for the partitioner, then
+    * an exchange — which for a handful of rows is pure per-job cost.
+    *
+    * Bound: only for results that are small by construction — limited
+    * by the resolution (B1, B5, B6), the bucket count over the range
+    * (B2–B4), the distinct subjects of one metric (B7) or one series'
+    * change points (B8, B9). The scan and the partial aggregate below
+    * stay parallel; only the final aggregate's output and what follows
+    * run in the single task. A frame already in one partition
+    * (`SinglePartition`) needs no exchange for any later window,
+    * aggregate or sort, so operators chained after it stay in that task.
+    */
+  def inOrder(df: DataFrame, cols: String*): DataFrame =
+    df.coalesce(1).sortWithinPartitions(cols.map(col): _*)
+
   /** B1 `get_aggregated_data` (`db/get_aggregated_data.sql`):
     * resolution-bounded time-bucketed AVG; bucket width = span/maxN,
     * LIMIT maxN.
@@ -100,10 +121,9 @@ object TimeseriesQueries {
   /** B2 `get_aggregated_data_by_interval`: fixed-width bucket + AVG. */
   def aggregatedDataByInterval(conditions: DataFrame, subject: String, of: String,
                                startS: Long, endS: Long, intervalS: Long): DataFrame =
-    scan(conditions, of, startS, endS, Some(subject))
+    inOrder(scan(conditions, of, startS, endS, Some(subject))
       .groupBy(timeBucketS(intervalS, col("timestamp")).as("time_s"))
-      .agg(avg("measurement_number").as("avg_measurement_number"))
-      .orderBy("time_s")
+      .agg(avg("measurement_number").as("avg_measurement_number")), "time_s")
 
   /** B3 `get_aggregated_data_by_day`: span ≤ 1 day → fine buckets anchored
     * at each row's own midnight (width = span/least(360, span/900)) with
@@ -134,40 +154,56 @@ object TimeseriesQueries {
       // µs magnitudes (≤ ~1.7e15) are exactly representable in double, so
       // the double floor-division is exact at bucket boundaries
       val bucketUs = dayUs + (floor((tsUs - dayUs) / lit(widthUs.toDouble)) * widthUs).cast("long")
-      base.groupBy((bucketUs / lit(1e6)).cast("long").as("time_s"))
-        .agg(avg("measurement_number").as("avg_measurement_number"))
-        .orderBy("time_s")
+      inOrder(base.groupBy((bucketUs / lit(1e6)).cast("long").as("time_s"))
+        .agg(avg("measurement_number").as("avg_measurement_number")), "time_s")
     } else {
-      base.groupBy((unix_micros(date_trunc("day", col("timestamp"))) / 1000000L)
+      inOrder(base.groupBy((unix_micros(date_trunc("day", col("timestamp"))) / 1000000L)
           .cast("long").as("time_s"))
-        .agg(max("measurement_number").as("avg_measurement_number"))
-        .orderBy("time_s")
+        .agg(max("measurement_number").as("avg_measurement_number")), "time_s")
     }
   }
 
   /** B4 `get_most_frequent_value_by_time_interval`: adaptive-interval
-    * per-bucket MODE of `measurement_string`. Two-phase like the reference:
-    * a COUNT pre-query picks the interval (span/360 if >360 rows else 60 s),
-    * then plain epoch-floor bucketing (the reference bypasses `time_bucket`
-    * here). PG's ordered-set `mode()` tie-breaks to the first value in sort
-    * order, so the deterministic formulation is count + row_number over
-    * (count DESC, value ASC) — Spark's built-in `mode` has arbitrary ties.
+    * per-bucket MODE of `measurement_string`. The reference picks the
+    * interval with a COUNT pre-query (span/360 if >360 rows else 60 s),
+    * then buckets by plain epoch floor (it bypasses `time_bucket` here).
+    * The pre-query folds into the same plan: the parallel aggregate counts
+    * the slice by BOTH candidate buckets and the value, and the counts,
+    * gathered into one task, are reduced there by [[modeOfCounts]] — their
+    * sum (= the slice's row count) picks the bucket, so no driver-side
+    * action remains. The gathered rows are at most the slice's distinct
+    * (minute, value) pairs, one series' bound like B8's window.
     */
   def mostFrequentValueByInterval(conditions: DataFrame, subject: String, of: String,
                                   startS: Long, endS: Long): DataFrame = {
-    val slice = scan(conditions, of, startS, endS, Some(subject))
-    val total = slice.count() // driver-side action, mirrors the plpgsql pre-count
-    val intervalS = if (total > 360) math.max(1L, (endS - startS) / 360) else 60L
-    val counted = slice
-      .groupBy((floor(epochS(col("timestamp")) / intervalS) * intervalS).cast("long").as("time_s"),
-        col("measurement_string"))
-      .agg(count(lit(1)).as("cnt"))
-    val w = Window.partitionBy("time_s")
-      .orderBy(col("cnt").desc, col("measurement_string").asc)
-    counted.withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select(col("time_s"), col("measurement_string").as("most_common_value"))
-      .orderBy("time_s")
+    def bucket(intervalS: Long): Column =
+      (floor(epochS(col("timestamp")) / intervalS) * intervalS).cast("long")
+    val counts = scan(conditions, of, startS, endS, Some(subject))
+      .groupBy(bucket(60L), bucket(math.max(1L, (endS - startS) / 360)), col("measurement_string"))
+      .agg(count(lit(1)))
+      .coalesce(1)
+    inOrder(counts.mapPartitions(modeOfCounts)(Encoders.tuple(Encoders.LONG, Encoders.STRING))
+      .toDF("time_s", "most_common_value"), "time_s")
+  }
+
+  /** B4's reduction of one slice's gathered counts — rows of (60 s
+    * bucket, span/360 bucket, value, count) — to (bucket, mode): the
+    * wider bucket when the counts sum to more than 360 rows, else the
+    * 60 s one. PG's ordered-set `mode()` tie-breaks to the first value in
+    * sort order, so the mode is the first value by (count DESC, value ASC
+    * NULLS FIRST), values compared as Spark orders strings (UTF-8 bytes) —
+    * the deterministic formulation Spark's built-in `mode` lacks.
+    */
+  private def modeOfCounts(counts: Iterator[Row]): Iterator[(java.lang.Long, String)] = {
+    val rows = counts.map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.getLong(3))).toVector
+    val wide = rows.iterator.map(_._4).sum > 360
+    def precedes(a: (String, Long), b: (String, Long)): Boolean =
+      if (a._2 != b._2) a._2 > b._2
+      else b._1 != null &&
+        (a._1 == null || UTF8String.fromString(a._1).compareTo(UTF8String.fromString(b._1)) < 0)
+    rows.groupMapReduce(r => (if (wide) r._2 else r._1, r._3))(_._4)(_ + _)
+      .groupMapReduce(_._1._1)(e => (e._1._2, e._2))((a, b) => if (precedes(a, b)) a else b)
+      .iterator.map { case (t, (v, _)) => (Long.box(t), v) }
   }
 
   /** B5 v1 (`get_sampled_data` stand-in): grid-bucket AVG at
@@ -184,11 +220,12 @@ object TimeseriesQueries {
     // series already reduced to <= resolution rows by the bucketed agg, so
     // the single window partition is resolution-bounded, not data-bounded
     // (the WindowExec "no partition defined" warning is expected and
-    // harmless here; the distributed work happened in the grid reduce)
+    // harmless here; the distributed work happened in the grid reduce).
+    // The grid arrives in one partition from inOrder, so neither this
+    // window nor the final ordering adds an exchange.
     val w = Window.orderBy("time_s").rowsBetween(-2, 2)
-    gridded.select(col("time_s"),
-      avg("avg_measurement_number").over(w).as("smoothed_value"))
-      .orderBy("time_s")
+    inOrder(gridded.select(col("time_s"),
+      avg("avg_measurement_number").over(w).as("smoothed_value")), "time_s")
   }
 
   /** Streaming variant of the bucketed AVG (B1/B2) over a live conditions
@@ -968,9 +1005,8 @@ object TimeseriesQueries {
     */
   def uniqueMeasurementSubjects(conditions: DataFrame, of: String,
                                 startS: Long, endS: Long): DataFrame =
-    scan(conditions, of, startS, endS)
-      .select("measurement_subject").distinct()
-      .orderBy("measurement_subject")
+    inOrder(scan(conditions, of, startS, endS)
+      .select("measurement_subject").distinct(), "measurement_subject")
 
   /** B8 `filter_unchanged_rows`: change-point detection — keep rows where
     * `measurement_string` differs (null-safely) from the previous row of
@@ -979,12 +1015,12 @@ object TimeseriesQueries {
   def filterUnchangedRows(conditions: DataFrame, subject: String, of: String,
                           startS: Long, endS: Long): DataFrame = {
     val w = Window.partitionBy("measurement_subject").orderBy("timestamp")
-    scan(conditions, of, startS, endS, Some(subject))
+    inOrder(scan(conditions, of, startS, endS, Some(subject))
       .withColumn("prev", lag("measurement_string", 1).over(w))
       .filter(!(col("measurement_string") <=> col("prev")))
       .select(unix_micros(col("timestamp")).as("ts_us"),
-        col("measurement_subject"), col("measurement_of"), col("measurement_string"))
-      .orderBy("ts_us")
+        col("measurement_subject"), col("measurement_of"), col("measurement_string")),
+      "ts_us")
   }
 
   /** B9 `format_time_intervals`: gaps-and-islands over B8's change points —
@@ -996,12 +1032,11 @@ object TimeseriesQueries {
   def formatTimeIntervals(conditions: DataFrame, subject: String, of: String,
                           startS: Long, endS: Long, clockS: Long): DataFrame = {
     val w = Window.partitionBy("measurement_subject").orderBy("ts_us")
-    filterUnchangedRows(conditions, subject, of, startS, endS)
+    inOrder(filterUnchangedRows(conditions, subject, of, startS, endS)
       .withColumn("next_us", lead("ts_us", 1).over(w))
       .select(col("ts_us").as("time_us"),
         coalesce(col("next_us"), lit(clockS * 1000000L)).as("time_end_us"),
-        col("measurement_string"))
-      .orderBy("time_us")
+        col("measurement_string")), "time_us")
   }
 
   /** Streaming sessionization over a live conditions feed: Spark's

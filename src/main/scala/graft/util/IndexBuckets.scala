@@ -30,7 +30,8 @@ import org.apache.spark.sql.DataFrame
   * write above it) and to 2^20. The count is recorded in
   * the table properties so every APPEND reuses the write-time value
   * (bucket count latches at first write — like stream state partitions,
-  * see [[StreamParallelism]]).
+  * see [[StreamParallelism]]) until [[graft.operators.Dedup.compactIndex]]
+  * rewrites the table and derives the count again from its current size.
   *
   * Probe-parallelism note: a co-partitioned gate join adopts the
   * index's bucket count as the join parallelism when the index is too
@@ -41,7 +42,7 @@ import org.apache.spark.sql.DataFrame
   *
   * Overrides, for deployments whose seed volume is not representative
   * of steady state (the latch means a table seeded tiny and grown 1000×
-  * keeps its seed-time bucket count until compaction rewrites it):
+  * keeps its seed-time bucket count until compaction re-derives it):
   *  - `graft.index.buckets` — explicit count, used verbatim;
   *  - `graft.index.targetBucketBytes` — bytes per bucket for the
   *    derivation (default 128MB, the guide's lower file-size bound).

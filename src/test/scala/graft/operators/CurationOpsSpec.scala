@@ -394,6 +394,50 @@ class CurationOpsSpec extends AnyFunSuite {
     }
   }
 
+  test("compactIndex re-derives the bucket count of a table seeded small and grown") {
+    import graft.util.IndexBuckets
+    def bucketsOf(table: String): (Int, Int) = {
+      val ident = spark.sessionState.sqlParser.parseTableIdentifier(table)
+      val spec = spark.sessionState.catalog.getTableMetadata(ident).bucketSpec
+      val prop = spark.sql(s"SHOW TBLPROPERTIES $table").collect()
+        .collectFirst { case r if r.getString(0) == "graft.buckets" => r.getString(1).toInt }
+      (spec.map(_.numBuckets).getOrElse(-1), prop.getOrElse(-1))
+    }
+    // the seed is read from its own small file, so the size estimate the
+    // seed write derives from is that of five documents
+    val seedDir = java.nio.file.Files.createTempDirectory("cmp_seed").toString + "/docs"
+    docs.filter(col("doc_id") % 10 === 0).coalesce(1).write.parquet(seedDir)
+    val probe = docs.filter(col("doc_id") % 10 === 5)
+    spark.conf.set(IndexBuckets.TargetBytesKey, "4KB")
+    try {
+      Dedup.writeSignatureIndex(spark.read.parquet(seedDir), "sig_grow_idx")
+      val (seedBuckets, seedProp) = bucketsOf("sig_grow_idx")
+      assert(seedBuckets == seedProp)
+      Seq(1, 2, 3, 4, 6, 7, 8, 9).foreach(k =>
+        Dedup.appendToSignatureIndex(docs.filter(col("doc_id") % 10 === k), "sig_grow_idx"))
+      // appends reuse the latched seed count
+      assert(bucketsOf("sig_grow_idx") == ((seedBuckets, seedProp)))
+      val union = docs.filter(col("doc_id") % 10 =!= 5)
+      val before = Dedup.minhashPairsAgainstIndex(probe, "sig_grow_idx", union)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      val rowsBefore = spark.table("sig_grow_idx").count()
+      Dedup.compactIndex(spark, "sig_grow_idx", "bh")
+      val (grown, grownProp) = bucketsOf("sig_grow_idx")
+      assert(grown > seedBuckets, s"compaction kept $seedBuckets buckets, derived $grown")
+      assert(grownProp == grown, "graft.buckets must record the re-derived count")
+      assert(spark.table("sig_grow_idx").count() == rowsBefore)
+      val after = Dedup.minhashPairsAgainstIndex(probe, "sig_grow_idx", union)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(after == before)
+      // the next append writes into the re-derived bucketing
+      Dedup.appendToSignatureIndex(docs.filter(lit(false)), "sig_grow_idx")
+      assert(bucketsOf("sig_grow_idx") == ((grown, grown)))
+    } finally {
+      spark.conf.unset(IndexBuckets.TargetBytesKey)
+      spark.sql("DROP TABLE IF EXISTS sig_grow_idx")
+    }
+  }
+
   test("compactIndex resolves db-qualified tables through the catalog") {
     // the data path must come from the catalog, not be reconstructed as
     // <warehouse>/<name> — a db-qualified index lives under <db>.db/<tbl>
