@@ -362,16 +362,6 @@ object Dedup {
     (a, b)
   }
 
-  /** MinHash signatures: one row per doc, `sig` = array of numPerm minima.
-    * Signature i = min over shingles of (a_i·x + b_i) mod p, x =
-    * xxhash64(shingle) mod p. One typed [[graft.functions.Sketches.MinHashAgg]]
-    * per group (single compiled buffer; 64 parallel `min()` columns fell out
-    * of whole-stage codegen and ran 40× slower) — partial aggregation keeps
-    * the shuffle at one buffer per (partition, doc).
-    */
-  def minhashSignatures(docs: DataFrame, n: Int = 3, numPerm: Int = 64): DataFrame =
-    signaturesFromExploded(shingles(docs, n), numPerm)
-
   private def signaturesFromExploded(ex: DataFrame, numPerm: Int,
                                      seed: Long = 42L): DataFrame = {
     val spark = ex.sparkSession

@@ -241,16 +241,6 @@ object Multimodal {
     bb.array()
   }
 
-  /** Repartition a media table so each partition holds roughly
-    * `targetPartitionBytes` of content — size-aware, not row-count-aware.
-    */
-  def repartitionByBytes(media: DataFrame, targetPartitionBytes: Long): DataFrame = {
-    val row = media.agg(sum(length(col("content")))).collect()(0)
-    val totalBytes = if (row.isNullAt(0)) 0L else row.getLong(0) // empty table
-    val parts = math.max(1, (totalBytes / targetPartitionBytes).toInt)
-    media.repartition(parts)
-  }
-
   /** Batched feature extraction: one decoder instance per partition, one
     * pass over the rows (the mapInPandas/Arrow-batch shape, Scala-typed).
     */
@@ -359,21 +349,4 @@ object Multimodal {
                                maxHamming: Int = 4): DataFrame =
     Dedup.sigPairsAgainstIndex(aHashSigs(newMedia), indexTable, maxHamming)
       .toDF("id_new", "id_index", "hamming")
-
-  /** Frame/chunk sampling: every `stride`-th fixed-size block of the
-    * content — the frame-sample plan shape with the codec stubbed out
-    * (a real video decoder replaces `grabBlock`).
-    */
-  def sampleFrames(spark: SparkSession, media: DataFrame,
-                   frameSize: Int = 256, stride: Int = 4): DataFrame = {
-    import spark.implicits._
-    media.select(col("id"), col("content")).as[(Long, Array[Byte])]
-      .flatMap { case (id, content) =>
-        def grabBlock(f: Int): Array[Byte] =
-          content.slice(f * frameSize, math.min((f + 1) * frameSize, content.length))
-        val nFrames = math.max(0, (content.length + frameSize - 1) / frameSize)
-        (0 until nFrames by stride).map(f => (id, f, grabBlock(f)))
-      }
-      .toDF("id", "frame_idx", "frame")
-  }
 }

@@ -475,17 +475,6 @@ object WarcIngest {
     }.otherwise(decode(bin, "ISO-8859-1"))
   }
 
-  /** [[decodeRecords]] with the detection tier: (`url`, `html`,
-    * `charset`, `fetch_ts`). Map-only like the UTF-8 path.
-    */
-  def decodeRecordsSniffed(records: DataFrame, urlCol: String = "url",
-                           contentCol: String = "content",
-                           dateCol: String = "warc_date"): DataFrame =
-    records.select(col(urlCol).as("url"),
-      decodeSniffed(col(contentCol)).as("html"),
-      sniffCharset(col(contentCol)).as("charset"),
-      col(dateCol).as("fetch_ts"))
-
   /** Inflate ONE record-gzip member — the layout real WARC archives
     * use (Common Crawl stores one gzip member per record, so members
     * are independently splittable/fetchable); this kernel is the step

@@ -94,5 +94,46 @@ class BenchSpec extends AnyFunSuite {
     val os = graft.SparkEntry.oracleSql.keySet
     assert((qs -- os).isEmpty, s"queries without an oracle: ${(qs -- os).toSeq.sorted}")
     assert((os -- qs).isEmpty, s"oracles without a query: ${(os -- qs).toSeq.sorted}")
+    assert(qs.size == 309, s"${qs.size} contract queries")
+    graft.SparkEntry.families.zipWithIndex.foreach { case (f, i) =>
+      assert(f.nonEmpty, s"family $i of SparkEntry.families is empty")
+    }
+    // a SQL face with a method twin serves that twin's oracle string
+    val faceTwins = Seq(
+      "q_sql_agg" -> "q_agg", "q_sql_intervals" -> "q_intervals",
+      "q_sql_counter_agg" -> "q_counter_agg", "q_sql_cagg_realtime" -> "q_cagg_realtime",
+      "q_sql_corpus_overlap" -> "q_corpus_overlap", "q_sql_exact_norm" -> "q_dedup_exact_norm",
+      "q_sql_line_dedup_intra" -> "q_line_dedup_intra",
+      "q_sql_weighted_sample" -> "q_weighted_sample",
+      "q_sql_counter_rollup" -> "q_counter_rollup", "q_sql_histogram" -> "q_histogram",
+      "q_sql_state" -> "q_state", "q_sql_gaps" -> "q_gaps", "q_sql_hampel" -> "q_outliers",
+      "q_sql_gopher" -> "q_gopher", "q_sql_ann_topk" -> "q_ann_topk",
+      "q_sql_curate_v2" -> "q_curate_v2", "q_sql_quality" -> "q_quality_classifier",
+      "q_sql_mmr" -> "q_ann_mmr", "q_sql_shuffle" -> "q_epoch_shuffle",
+      "q_sql_export" -> "q_training_export", "q_sql_ivf_topk" -> "q_ann_ivf_indexed",
+      "q_sql_html_text" -> "q_html_text", "q_sql_html_main" -> "q_html_main",
+      "q_sql_url_canon" -> "q_url_canon", "q_sql_url_dedup" -> "q_url_dedup",
+      "q_sql_url_robots" -> "q_url_robots", "q_sql_crawl_plan" -> "q_crawl_plan",
+      "q_sql_crawl_plan_status" -> "q_crawl_plan_status",
+      "q_sql_robots_parse" -> "q_robots_parse", "q_sql_crawl_delays" -> "q_robots_delay",
+      "q_sql_meta_robots" -> "q_html_noindex", "q_sql_text_normalize" -> "q_text_normalize",
+      "q_sql_url_blocklist" -> "q_url_blocklist",
+      "q_sql_url_blocklist_psl" -> "q_url_blocklist_psl",
+      "q_sql_crawl_curate" -> "q_crawl_curate", "q_sql_link_edges" -> "q_link_extract",
+      "q_sql_link_pagerank" -> "q_link_pagerank", "q_sql_link_hits" -> "q_link_hits",
+      "q_sql_url_report" -> "q_link_url_report", "q_sql_link_hits_host" -> "q_link_hits_host",
+      "q_sql_warc_revisits" -> "q_warc_revisit_resolve",
+      "q_sql_anchor_labels" -> "q_link_anchor_labels")
+    val oracle = graft.SparkEntry.oracleSql
+    faceTwins.foreach { case (face, twin) =>
+      assert(oracle(face) == oracle(twin), s"$face does not serve $twin's oracle")
+    }
+    // the faces without a method twin: every other q_sql_* row is listed above
+    val untwinned = Set("q_sql_robots_status", "q_sql_delays_status", "q_sql_sitemap_frontier")
+    assert(qs.filter(_.startsWith("q_sql_")) == faceTwins.map(_._1).toSet ++ untwinned)
+    val dup = graft.contract.Q("q_x", (s, _) => s.emptyDataFrame, "SELECT 1")
+    val err = intercept[IllegalArgumentException](
+      graft.contract.Q.byName(Seq(dup, dup.copy(oracle = "SELECT 2")))(_.oracle))
+    assert(err.getMessage.contains("q_x"), err.getMessage)
   }
 }

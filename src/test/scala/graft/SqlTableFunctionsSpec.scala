@@ -556,13 +556,14 @@ class SqlTableFunctionsSpec extends AnyFunSuite {
     // without a gate fails HERE, instead of shipping unverified. A face
     // counts as gated when its exact name appears (word-bounded, so
     // shared prefixes can't mask each other) in either gate surface:
-    //  - SparkEntry.scala — the q_sql_* oracle rows call faces by name
-    //    inside spark.sql(...), and the driver hash-matches them against
-    //    DuckDB at two scale factors;
+    //  - the contract family modules — the q_sql_* oracle rows call faces
+    //    by name inside sqlFace(...), and the driver hash-matches them
+    //    against DuckDB at two scale factors;
     //  - this spec — the assertSame(...) plan/row-equality cases.
-    val gateSources = Seq(
-      "src/main/scala/graft/SparkEntry.scala",
-      "src/test/scala/graft/SqlTableFunctionsSpec.scala")
+    val contractDir = new java.io.File("src/main/scala/graft/contract")
+    assert(contractDir.isDirectory, s"meta-spec must run from the repo root (missing $contractDir)")
+    val gateSources = contractDir.listFiles().toSeq.map(_.getPath).filter(_.endsWith(".scala")).sorted :+
+      "src/test/scala/graft/SqlTableFunctionsSpec.scala"
     val texts = gateSources.map { p =>
       val f = java.nio.file.Paths.get(p)
       assert(java.nio.file.Files.exists(f),

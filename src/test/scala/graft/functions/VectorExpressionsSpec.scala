@@ -49,6 +49,20 @@ class VectorExpressionsSpec extends AnyFunSuite {
     assert(plan.contains("*(1) Project [vectordot"), plan)
   }
 
+  test("every GraftFunctions.expressions name resolves to its expression class") {
+    // register and the builder-time extension iterate the same table, so
+    // one session given register covers both paths
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    val names = graft.GraftFunctions.expressions.map(_._1)
+    assert(names.distinct == names, names)
+    val reg = spark.sessionState.functionRegistry
+    graft.GraftFunctions.expressions.foreach { case (name, cls, _) =>
+      val built = reg.lookupFunction(FunctionIdentifier(name), Seq(Literal(1), Literal(2)))
+      assert(built.getClass == cls, s"$name built ${built.getClass}")
+    }
+  }
+
   test("type checking rejects non-float arrays") {
     import spark.implicits._
     Seq((Seq(1.0, 2.0), Seq(3.0, 4.0))).toDF("a", "b").createOrReplaceTempView("dvecs")
