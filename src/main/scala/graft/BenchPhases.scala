@@ -4,9 +4,11 @@ import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.{AtomicLong, AtomicReference, LongAdder}
 
 import org.apache.spark.SparkContext
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart,
   SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** The bench's one metrics layer: per-rep phase times for composite
@@ -46,6 +48,10 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * before the counters are read. The shared queue delivers in order,
   * so by then every event of the rep has been counted; the marker's own
   * job, stage and task are not. Fences run outside the timed region.
+  * The same fences read Spark's JVM-wide codegen counters: classes
+  * compiled (`CodegenMetrics.METRIC_COMPILATION_TIME`'s count) and the
+  * nanoseconds spent compiling them (`CodeGenerator.compileTime`). Both
+  * count cache misses only, so a rep that reuses generated code reads 0.
   */
 object BenchPhases {
 
@@ -159,7 +165,9 @@ object BenchPhases {
   /** One row's Spark counters for a rep: `counters` holds `jobs`,
     * `stages`, `tasks`, `shuffle_read_bytes`, `shuffle_write_bytes`,
     * `spill_bytes` (disk), `executor_run_s` (summed task run time; read it
-    * beside the row's wall time for the driver-bound share) and, for
+    * beside the row's wall time for the driver-bound share), `compiles`
+    * and `compile_ms` (Janino compiles of generated classes, in any
+    * thread of the JVM, and their milliseconds) and, for
     * stream rows, `data_batches` and `jobs_per_batch` (jobs of the row's
     * streaming queries over its data batches); `batchMs` is the mean
     * `durationMs` breakdown of the marginal batches (see [[drainTimed]]).
@@ -173,7 +181,8 @@ object BenchPhases {
   def repMetrics(spark: SparkSession, query: String): Option[RowMetrics] =
     for { start <- Option(baseline.get); end <- Counters.fence(spark.sparkContext) } yield {
       val d = end.zip(start).map { case (e, s) => (e - s).toDouble }
-      val Array(jobs, streamJobs, stages, tasks, shRead, shWrite, spill, runMs) = d
+      val Array(jobs, streamJobs, stages, tasks, shRead, shWrite, spill, runMs,
+        compiles, compileNs) = d
       val all = rep(query)
       val batches = all.getOrElse(DataBatches, 0.0)
       val cnt = all.getOrElse(PbCnt, 0.0)
@@ -183,7 +192,8 @@ object BenchPhases {
       RowMetrics(
         Map("jobs" -> jobs, "stages" -> stages, "tasks" -> tasks,
           "shuffle_read_bytes" -> shRead, "shuffle_write_bytes" -> shWrite,
-          "spill_bytes" -> spill, "executor_run_s" -> runMs / 1000.0) ++ stream,
+          "spill_bytes" -> spill, "executor_run_s" -> runMs / 1000.0,
+          "compiles" -> compiles, "compile_ms" -> compileNs / 1e6) ++ stream,
         if (cnt > 0) BatchParts.map(k => k -> all.getOrElse(PartMs + k, 0.0) / cnt).toMap
         else Map.empty)
     }
@@ -255,7 +265,8 @@ object BenchPhases {
           seen.wait(math.max(1L, deadline - System.currentTimeMillis()))
       }
       if (seen.get < token) None
-      else Some(Array(jobs, streamJobs, stages, tasks, shRead, shWrite, spill, runMs).map(_.sum))
+      else Some(Array(jobs, streamJobs, stages, tasks, shRead, shWrite, spill, runMs).map(_.sum) ++
+        Array(CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime))
     }
   }
 }

@@ -10,6 +10,9 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * alongside the Scala API. `register` applies them to a session that
   * already exists (e.g. a shared test session or a notebook);
   * [[GraftExtensions]] applies the same table at builder time.
+  * `register` is idempotent: it skips a name the session's registry
+  * already holds, so calling it before every SQL statement costs a
+  * lookup, not a re-registration.
   */
 object GraftFunctions {
   /** Name, expression class and builder of every native SQL function. */
@@ -21,7 +24,8 @@ object GraftFunctions {
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
     expressions.foreach { case (name, _, build) =>
-      reg.createOrReplaceTempFunction(name, build, "built-in")
+      if (!reg.functionExists(FunctionIdentifier(name)))
+        reg.createOrReplaceTempFunction(name, build, "built-in")
     }
     // the nine dashboard queries as SQL table functions (reads the
     // session's `conditions` relation — see SqlTableFunctions)

@@ -813,12 +813,16 @@ object SqlTableFunctions {
     t.build(spark, args).queryExecution.logical
   }
 
-  /** Register on an existing session (temp table functions). */
-  def register(spark: SparkSession): Unit =
+  /** Register on an existing session (temp table functions), skipping
+    * names the session already holds.
+    */
+  def register(spark: SparkSession): Unit = {
+    val reg = spark.sessionState.tableFunctionRegistry
     all.foreach { t =>
-      spark.sessionState.tableFunctionRegistry
-        .createOrReplaceTempFunction(t.name, planBuilder(t), "built-in")
+      if (!reg.functionExists(FunctionIdentifier(t.name)))
+        reg.createOrReplaceTempFunction(t.name, planBuilder(t), "built-in")
     }
+  }
 
   /** The same bindings as [[SparkSessionExtensions.injectTableFunction]]
     * tuples, for [[GraftExtensions]].

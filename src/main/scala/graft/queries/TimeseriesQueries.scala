@@ -1,9 +1,11 @@
 package graft.queries
 
+import graft.functions.expressions.BoundParam
 import graft.sources.ConditionsTable
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, GraftColumn, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, LongType, TimestampType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** The nine dashboard analytics functions (`db/` SQL files), re-expressed as
@@ -45,15 +47,29 @@ object TimeseriesQueries {
     */
   def epochS(ts: Column): Column = unix_micros(ts) / 1000000.0
 
-  /** `time_bucket(width, ts)` as BIGINT epoch seconds. */
-  def timeBucketS(widthS: Long, ts: Column): Column =
-    (floor((epochS(ts) - BucketOriginS) / widthS) * widthS + BucketOriginS).cast("long")
+  /** A per-call value as a query parameter ([[BoundParam]]): the
+    * generated code reads it by reference, so calls that differ only in
+    * such values (a fresh time range, a bucket width derived from it)
+    * reuse one compiled class. `lit` stays for constants and for what
+    * Spark needs foldable (a limit, a window frame, a `date_trunc` unit).
+    */
+  def param(value: Any, dataType: DataType): Column = GraftColumn(BoundParam(value, dataType))
+
+  /** `time_bucket(width, ts)` as BIGINT epoch seconds; the width is a
+    * [[param]].
+    */
+  def timeBucketS(widthS: Long, ts: Column): Column = {
+    val width = param(widthS, LongType)
+    (floor((epochS(ts) - BucketOriginS) / width) * width + BucketOriginS).cast("long")
+  }
 
   /** The common parameterized scan — the ONE filter over a conditions
     * frame for metric, optional subject and time range [startS, endS]
     * (both inclusive). Callers needing a half-open end or only numeric
     * rows add one more `.filter`; Catalyst merges it into the same
-    * pushed filter. The time slice itself is [[during]].
+    * pushed filter. The time slice itself is [[during]]: its bounds are
+    * bound parameters, so a new range reuses the generated code, and
+    * they still reach parquet `PushedFilters`.
     */
   def scan(conditions: DataFrame, of: String, startS: Long, endS: Long,
            subject: Option[String] = None): DataFrame =
@@ -67,22 +83,27 @@ object TimeseriesQueries {
     subject.fold(metric)(s => metric && col("measurement_subject") === s)
   }
 
-  /** The time slice [startS, endS] of a conditions frame, with two
+  /** The time slice [startS, endS] of a conditions frame, with three
     * plan-shape guarantees:
-    *  - the range compares the timestamp column directly against
-    *    literals (NOT `epochS(ts) >= x`, a function of the column that can
+    *  - the range compares the timestamp column directly against the
+    *    bounds (NOT `epochS(ts) >= x`, a function of the column that can
     *    never reach parquet min/max pruning) — for integer epoch bounds the
     *    two forms are exactly equivalent, and this one shows up in
     *    `PushedFilters` on a native conditions table;
+    *  - the bounds are bound parameters ([[param]], TimestampType µs), not
+    *    literals: the generated filter reads them by reference, so a call
+    *    with a fresh range compiles nothing new, and being `Literal`s to
+    *    the planner they still reach `PushedFilters`;
     *  - when the frame is date-partitioned (see
     *    [[graft.sources.ConditionsTable.write]]), the covering `date`
     *    predicate is added so directory-level partition pruning fires —
     *    Spark does not infer it from the timestamp range the way
-    *    TimescaleDB derives hypertable chunk exclusion.
+    *    TimescaleDB derives hypertable chunk exclusion. Its dates stay
+    *    literals: pruning is evaluated while planning, never compiled.
     */
   def during(conditions: DataFrame, startS: Long, endS: Long): DataFrame = {
-    val range = col("timestamp") >= timestamp_seconds(lit(startS)) &&
-      col("timestamp") <= timestamp_seconds(lit(endS))
+    def bound(s: Long) = param(Math.multiplyExact(s, 1000000L), TimestampType)
+    val range = col("timestamp") >= bound(startS) && col("timestamp") <= bound(endS)
     conditions.filter(
       if (conditions.columns.contains("date"))
         range && ConditionsTable.datesCovering(startS, endS)
@@ -172,14 +193,16 @@ object TimeseriesQueries {
     * gathered into one task, are reduced there by [[modeOfCounts]] — their
     * sum (= the slice's row count) picks the bucket, so no driver-side
     * action remains. The gathered rows are at most the slice's distinct
-    * (minute, value) pairs, one series' bound like B8's window.
+    * (minute, value) pairs, one series' bound like B8's window. The
+    * span/360 width is a [[param]]; the 60 s one is a constant.
     */
   def mostFrequentValueByInterval(conditions: DataFrame, subject: String, of: String,
                                   startS: Long, endS: Long): DataFrame = {
-    def bucket(intervalS: Long): Column =
+    def bucket(intervalS: Column): Column =
       (floor(epochS(col("timestamp")) / intervalS) * intervalS).cast("long")
     val counts = scan(conditions, of, startS, endS, Some(subject))
-      .groupBy(bucket(60L), bucket(math.max(1L, (endS - startS) / 360)), col("measurement_string"))
+      .groupBy(bucket(lit(60L)), bucket(param(math.max(1L, (endS - startS) / 360), LongType)),
+        col("measurement_string"))
       .agg(count(lit(1)))
       .coalesce(1)
     inOrder(counts.mapPartitions(modeOfCounts)(Encoders.tuple(Encoders.LONG, Encoders.STRING))
@@ -1027,7 +1050,8 @@ object TimeseriesQueries {
     * each change point opens an interval closed by the next one; the final
     * interval closes at `clockS` (the reference uses `now()`,
     * `db/format_time_intervals.sql:36` — nondeterminism injected as a
-    * parameter here). The procedural loop collapses to one LEAD window.
+    * parameter here, bound as a [[param]]). The procedural loop
+    * collapses to one LEAD window.
     */
   def formatTimeIntervals(conditions: DataFrame, subject: String, of: String,
                           startS: Long, endS: Long, clockS: Long): DataFrame = {
@@ -1035,7 +1059,7 @@ object TimeseriesQueries {
     inOrder(filterUnchangedRows(conditions, subject, of, startS, endS)
       .withColumn("next_us", lead("ts_us", 1).over(w))
       .select(col("ts_us").as("time_us"),
-        coalesce(col("next_us"), lit(clockS * 1000000L)).as("time_end_us"),
+        coalesce(col("next_us"), param(clockS * 1000000L, LongType)).as("time_end_us"),
         col("measurement_string")), "time_us")
   }
 

@@ -1,7 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.queries.TimeseriesQueries.param
+import java.util.concurrent.atomic.AtomicLong
+import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.types.LongType
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.file.Files
@@ -59,7 +63,26 @@ class BenchSpec extends AnyFunSuite {
     assert(more.counters("stages") - base.counters("stages") == 3.0, s"$base vs $more")
     assert(base.batchMs.isEmpty && !base.counters.contains("jobs_per_batch"))
     Seq("jobs", "stages", "tasks", "shuffle_read_bytes", "shuffle_write_bytes",
-      "spill_bytes", "executor_run_s").foreach(k => assert(base.counters.contains(k), k))
+      "spill_bytes", "executor_run_s", "compiles", "compile_ms")
+      .foreach(k => assert(base.counters.contains(k), k))
+  }
+
+  test("compiles: a never-seen literal compiles on every rep, a param on none once warm") {
+    // every rep filters on a value no query in this JVM has used yet
+    val fresh = new AtomicLong(System.nanoTime() % 1000000000L + 104729L)
+    def row(name: String, bound: Long => Column): BenchPhases.RowMetrics = {
+      val q = (s: SparkSession) =>
+        s.range(500).filter(col("id") >= bound(fresh.incrementAndGet() % 400)).select(col("id") * 3)
+      q(spark).count() // the first use of the shape compiles either way
+      Bench.timeQuery(spark, name, (s, _) => q(s), "unused", reps = 2)
+        .metrics.getOrElse(fail(s"$name carried no metrics"))
+    }
+    val literal = row("literal_row", v => lit(v))
+    val bound = row("param_row", v => param(v, LongType))
+    assert(literal.counters("compiles") >= 1.0, s"$literal")
+    assert(literal.counters("compile_ms") > 0.0, s"$literal")
+    assert(bound.counters("compiles") == 0.0, s"$bound")
+    assert(bound.counters("compile_ms") == 0.0, s"$bound")
   }
 
   test("a drained stream row breaks per_batch_s into batch_ms and counts jobs per batch") {

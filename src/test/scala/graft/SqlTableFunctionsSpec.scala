@@ -3,6 +3,7 @@ package graft
 import graft.functions.{Asap, TimeWeight}
 import graft.queries.TimeseriesQueries
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.scalatest.funsuite.AnyFunSuite
 
 /** SQL-path ≡ method-path for all nine dashboard table functions: the SQL
@@ -60,6 +61,23 @@ class SqlTableFunctionsSpec extends AnyFunSuite {
   private def cond: DataFrame = spark.table(SqlTableFunctions.ConditionsRelation)
 
   test("graft_aggregated_data ≡ aggregatedData") {
+    assertSame(
+      s"SELECT * FROM graft_aggregated_data('s1', 'm', $T0, $T1, 50)",
+      TimeseriesQueries.aggregatedData(cond, "s1", "m", T0, T1, 50))
+  }
+
+  test("a second register keeps every registered builder, and a face still resolves") {
+    val fns = spark.sessionState.functionRegistry
+    val tableFns = spark.sessionState.tableFunctionRegistry
+    def builders(): Seq[AnyRef] =
+      (GraftFunctions.expressions.map(e => fns.lookupFunctionBuilder(FunctionIdentifier(e._1))) ++
+        SqlTableFunctions.injections.map(t => tableFns.lookupFunctionBuilder(t._1)))
+        .map(_.getOrElse(fail("a graft function is not registered")))
+    val first = builders()
+    GraftFunctions.register(spark)
+    val second = builders()
+    assert(first.size == GraftFunctions.expressions.size + SqlTableFunctions.injections.size)
+    first.zip(second).foreach { case (a, b) => assert(a eq b, "register replaced a builder") }
     assertSame(
       s"SELECT * FROM graft_aggregated_data('s1', 'm', $T0, $T1, 50)",
       TimeseriesQueries.aggregatedData(cond, "s1", "m", T0, T1, 50))

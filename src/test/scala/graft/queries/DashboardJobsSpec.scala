@@ -5,6 +5,7 @@ import graft.functions.{Asap, TimeWeight}
 import graft.sources.ConditionsTable
 import java.util.concurrent.{CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicLong
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -15,7 +16,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * most two Spark jobs (the scan's map stage and one result task), plans
   * no range-partitioned sort, and returns exactly the rows — in order —
   * of the global-`orderBy` formulation spelled out below (B4 with its
-  * driver-side count pre-query).
+  * driver-side count pre-query). A refresh — the same call over the same
+  * span ending later — compiles no generated class.
   */
 class DashboardJobsSpec extends AnyFunSuite {
 
@@ -234,6 +236,35 @@ class DashboardJobsSpec extends AnyFunSuite {
       assert(rows.nonEmpty || name.endsWith("empty"), s"$name returned no rows")
       assert(df.schema == ref.schema)
       assert(rows == expected)
+    }
+  }
+
+  /** The nine calls over [s, e], with the span-derived widths a
+    * dashboard derives (B2 120 buckets, as perfbench's calls do).
+    */
+  private def refresh(s: Long, e: Long): Seq[(String, () => DataFrame)] = Seq(
+    "B1 aggregated" -> (() => view.getAggregatedData("s1", "state", s, e, 100)),
+    "B2 by interval" -> (() => view.getAggregatedDataByInterval("s1", "state", s, e, (e - s) / 120)),
+    "B3 by day" -> (() => view.getAggregatedDataByDay("s1", "state", s, e)),
+    "B4 mode" -> (() => view.getMostFrequentValueByTimeInterval("s1", "state", s, e)),
+    "B5 asap" -> (() => view.getSampledData(spark, "s1", "state", s, e, 60)),
+    "B6 time weight" -> (() => view.getSampledDataWithTimeWeight("s1", "state", s, e, "linear", 50)),
+    "B7 subjects" -> (() => view.getUniqueMeasurementSubjects(s, e, "state")),
+    "B8 change points" -> (() => view.filterUnchangedRows("s1", "state", s, e)),
+    "B9 intervals" -> (() => view.formatTimeIntervals("s1", "state", s, e, e)))
+
+  refresh(0L, 0L).map(_._1).zipWithIndex.foreach { case (name, i) =>
+    test(s"$name: a refresh of the same span 60 s later compiles no class") {
+      val (s, e) = (T0 + 3600 + 7 * i, T0 + 3600 + 7 * i + 86400)
+      def compiled(call: () => DataFrame): (Long, Int) = {
+        val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+        val n = call().collect().length
+        (CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before, n)
+      }
+      compiled(refresh(s, e)(i)._2)
+      val (classes, n) = compiled(refresh(s + 60, e + 60)(i)._2)
+      assert(n > 0, s"$name returned no rows")
+      assert(classes == 0L, s"$name compiled $classes classes for a range 60 s later")
     }
   }
 }
