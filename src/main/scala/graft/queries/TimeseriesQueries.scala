@@ -20,13 +20,18 @@ import org.apache.spark.unsafe.types.UTF8String
   * partition pruning + parquet row-group skipping — the Spark analogue of
   * hypertable chunk exclusion + the subject/of hash indexes.
   *
-  * Scale notes: each of the nine queries is a single parallel scan →
-  * partial hash-agg → final agg/window over an already-filtered slice,
-  * and its bounded result is ordered in one task by [[inOrder]] (no
-  * range-partitioned global sort, so a dashboard call runs two Spark
-  * jobs). The only whole-slice-to-one-node operators are the window
-  * functions of B8/B9, which the reference bounds to a single
-  * (subject, metric) series — the same bound applies here
+  * Scale notes: each of the nine queries is a scan → partial hash-agg →
+  * final agg/window over an already-filtered slice, and its bounded
+  * result is ordered in one task by [[inOrder]] (no range-partitioned
+  * global sort). How the slice is read follows its size ([[during]]): a
+  * slice no larger than `spark.sql.files.openCostInBytes`, which Spark
+  * would not split if it sat in one file, is read in one task, so the
+  * aggregate, window and sort above it need no exchange and a dashboard
+  * call runs one Spark job. A larger slice is scanned and partially
+  * aggregated in parallel, then gathered through one hash exchange (two
+  * jobs). The only whole-slice-to-one-node operators of a large slice
+  * are the window functions of B8/B9, which the reference bounds to a
+  * single (subject, metric) series — the same bound applies here
   * (`Window.partitionBy(measurement_subject)`).
   *
   * Output timestamps are emitted as BIGINT epoch seconds (`time_s`) to make
@@ -83,7 +88,7 @@ object TimeseriesQueries {
     subject.fold(metric)(s => metric && col("measurement_subject") === s)
   }
 
-  /** The time slice [startS, endS] of a conditions frame, with three
+  /** The time slice [startS, endS] of a conditions frame, with four
     * plan-shape guarantees:
     *  - the range compares the timestamp column directly against the
     *    bounds (NOT `epochS(ts) >= x`, a function of the column that can
@@ -99,15 +104,28 @@ object TimeseriesQueries {
     *    predicate is added so directory-level partition pruning fires —
     *    Spark does not infer it from the timestamp range the way
     *    TimescaleDB derives hypertable chunk exclusion. Its dates stay
-    *    literals: pruning is evaluated while planning, never compiled.
+    *    literals: pruning is evaluated while planning, never compiled;
+    *  - when the frame is one file relation whose covered files total at
+    *    most `spark.sql.files.openCostInBytes`
+    *    ([[graft.sources.ConditionsTable.sliceBytes]]) — the floor of
+    *    Spark's own split size, so a slice it would not split if it sat
+    *    in one file — the slice is `coalesce(1)`'d: one task reads it,
+    *    and its `SinglePartition` satisfies any later aggregate's or
+    *    `partitionBy` window's distribution, so no exchange is planned. A
+    *    larger slice, or any other frame (local, JDBC, streaming, a
+    *    union), is returned as filtered and keeps its parallel scan.
     */
   def during(conditions: DataFrame, startS: Long, endS: Long): DataFrame = {
     def bound(s: Long) = param(Math.multiplyExact(s, 1000000L), TimestampType)
     val range = col("timestamp") >= bound(startS) && col("timestamp") <= bound(endS)
-    conditions.filter(
+    val slice = conditions.filter(
       if (conditions.columns.contains("date"))
         range && ConditionsTable.datesCovering(startS, endS)
       else range)
+    val openCost = conditions.sparkSession.sessionState.conf.filesOpenCostInBytes
+    if (ConditionsTable.sliceBytes(conditions, startS, endS).exists(_ <= openCost))
+      slice.coalesce(1)
+    else slice
   }
 
   /** The one ordering step of the nine dashboard queries' results:
@@ -118,8 +136,10 @@ object TimeseriesQueries {
     * Bound: only for results that are small by construction — limited
     * by the resolution (B1, B5, B6), the bucket count over the range
     * (B2–B4), the distinct subjects of one metric (B7) or one series'
-    * change points (B8, B9). The scan and the partial aggregate below
-    * stay parallel; only the final aggregate's output and what follows
+    * change points (B8, B9). Over a slice [[during]] reads in one task
+    * the gather is a no-op and scan, aggregate and sort share that task;
+    * over a larger slice the scan and the partial aggregate below stay
+    * parallel, and only the final aggregate's output and what follows
     * run in the single task. A frame already in one partition
     * (`SinglePartition`) needs no exchange for any later window,
     * aggregate or sort, so operators chained after it stay in that task.

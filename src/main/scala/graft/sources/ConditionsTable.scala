@@ -1,8 +1,12 @@
 package graft.sources
 
 import graft.model.TimeseriesRecord
+import java.time.LocalDate
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{GreaterThanOrEqual, LessThanOrEqual, Literal}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DateType
 
 /** The `conditions` table — storage boundary of the normalize pipeline.
   *
@@ -35,9 +39,47 @@ object ConditionsTable {
     * the predicate prunes directories in any session time zone.
     */
   def datesCovering(startS: Long, endS: Long): Column = {
-    def day(s: Long) = lit(java.time.LocalDate.ofEpochDay(Math.floorDiv(s, 86400L)))
-    col("date") >= day(startS) && col("date") <= day(endS)
+    val (first, last) = coveringDays(startS, endS)
+    col("date") >= lit(first) && col("date") <= lit(last)
   }
+
+  /** The first and last UTC day that can hold a `timestamp` in
+    * [startS, endS]: the bounds of [[datesCovering]] and [[sliceBytes]].
+    */
+  private def coveringDays(startS: Long, endS: Long): (LocalDate, LocalDate) =
+    (LocalDate.ofEpochDay(Math.floorDiv(startS, 86400L)),
+      LocalDate.ofEpochDay(Math.floorDiv(endS, 86400L)))
+
+  /** The bytes the time slice [startS, endS] of a file-backed conditions
+    * frame reads: the summed lengths of its files in the dates
+    * [[datesCovering]] keeps, or of all its files (never less than the
+    * scan reads) when the frame has no `date` column or the relation no
+    * DateType `date` partition. The files come from the relation's own
+    * file index with the covering-date partition filter — the cached
+    * listing its scan reads — so no filesystem call and no job is made.
+    *
+    * `None` for any frame that is not over exactly one file relation:
+    * streaming, local and JDBC frames, and unions such as a rollup's
+    * stored ∪ tail.
+    */
+  def sliceBytes(conditions: DataFrame, startS: Long, endS: Long): Option[Long] =
+    if (conditions.isStreaming) None
+    else conditions.queryExecution.analyzed.collectLeaves() match {
+      case Seq(leaf: LogicalRelation) => leaf.relation match {
+        case fs: HadoopFsRelation =>
+          val prunes = conditions.columns.contains("date") &&
+            fs.partitionSchema.exists(f => f.name == "date" && f.dataType == DateType)
+          val partitionFilter = if (!prunes) Nil else {
+            val date = leaf.output.find(_.name == "date").get
+            val (first, last) = coveringDays(startS, endS)
+            Seq(GreaterThanOrEqual(date, Literal(first)), LessThanOrEqual(date, Literal(last)))
+          }
+          Some(fs.location.listFiles(partitionFilter, Nil).iterator
+            .flatMap(_.files).map(_.getLen).sum)
+        case _ => None
+      }
+      case _ => None
+    }
 
   /** Normalize a set of raw event-hub strings into atomic records.
     * Narrow transformation — no shuffle; each input row fans out to 0..n

@@ -3,21 +3,27 @@ package graft.queries
 import graft.ConditionsView
 import graft.functions.{Asap, TimeWeight}
 import graft.sources.ConditionsTable
-import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
-/** Each of the nine dashboard calls over a date-partitioned store runs at
-  * most two Spark jobs (the scan's map stage and one result task), plans
-  * no range-partitioned sort, and returns exactly the rows — in order —
+/** Each of the nine dashboard calls over a date-partitioned store whose
+  * slice is below `spark.sql.files.openCostInBytes` runs one Spark job of
+  * one task with no exchange, and returns exactly the rows — in order —
   * of the global-`orderBy` formulation spelled out below (B4 with its
-  * driver-side count pre-query). A refresh — the same call over the same
-  * span ending later — compiles no generated class.
+  * driver-side count pre-query). Over a slice above that size, or a
+  * local frame, a call keeps its parallel scan: a hash exchange and at
+  * most two jobs (the scan's map stage and one result task). A refresh —
+  * the same call over the same span ending later — compiles no generated
+  * class.
   */
 class DashboardJobsSpec extends AnyFunSuite {
 
@@ -37,7 +43,7 @@ class DashboardJobsSpec extends AnyFunSuite {
     * metric — numbers are multiples of 0.5, so every AVG is exact in any
     * summation order.
     */
-  private lazy val view: ConditionsView = {
+  private lazy val rows: DataFrame = {
     import spark.implicits._
     val s1 = (0L until 5 * 86400 / StepS).map { i =>
       (i * StepS, "s1", "state",
@@ -47,13 +53,17 @@ class DashboardJobsSpec extends AnyFunSuite {
     val others = for (s <- 2 to 4; i <- 0L until 200L)
       yield (i * 1800 + s, s"s$s", "state", Some(i * 0.5), Some(States((i % 3).toInt)))
     val temp = (0L until 500L).map(i => (i * 600, "s1", "temp", Some(i * 0.5), None))
-    val rows = (s1 ++ others ++ temp).toDF("offset_s", "measurement_subject",
+    (s1 ++ others ++ temp).toDF("offset_s", "measurement_subject",
         "measurement_of", "measurement_number", "measurement_string")
       .select(timestamp_seconds(col("offset_s") + T0).as("timestamp"),
         col("measurement_subject"), col("measurement_of"),
         col("measurement_number"), col("measurement_string"))
+      .withColumn("date", ConditionsTable.dateKey)
+  }
+
+  private lazy val view: ConditionsView = {
     val dir = java.nio.file.Files.createTempDirectory("dashboard_jobs").toString
-    ConditionsTable.write(rows.withColumn("date", ConditionsTable.dateKey), dir)
+    ConditionsTable.write(rows, dir)
     ConditionsView.fromParquet(spark, dir)
   }
 
@@ -62,33 +72,53 @@ class DashboardJobsSpec extends AnyFunSuite {
 
   private val TagKey = "graft.test.dashboardCall"
 
-  /** Jobs run by `body` in this thread, counted by a listener: jobs are
-    * tagged through a local property, and a marker job with its own tag
-    * after `body` is the fence — the bus delivers in order, so once the
-    * marker's start is seen every job of `body` has been counted.
+  /** What `body` runs in this thread: its rows, and the Spark jobs, tasks
+    * and executed plans of its actions. Jobs and stages are tagged through
+    * a local property and plans arrive through a query listener; a marker
+    * action with its own tag after `body` is the fence — each bus
+    * delivers in order, so once the marker is seen every event of `body`
+    * has been counted.
     */
-  private def jobsOf[A](body: => A): (A, Long) = {
+  private case class Run(rows: Seq[Row], jobs: Long, tasks: Long, plans: Seq[String]) {
+    def exchanges: Seq[String] = plans.filter(_.contains("Exchange"))
+  }
+
+  private def runOf(body: => Seq[Row]): Run = {
     val sc = spark.sparkContext
     val token = s"call-${System.nanoTime()}"
     val fenceToken = s"$token-fence"
     val jobs = new AtomicLong()
-    val fenced = new CountDownLatch(1)
+    val tasks = new AtomicLong()
+    val plans = new ConcurrentLinkedQueue[String]()
+    val fenced = new CountDownLatch(2)
+    def tag(p: java.util.Properties) = Option(p).flatMap(p => Option(p.getProperty(TagKey)))
     val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty(TagKey))) match {
-          case Some(`token`) => jobs.incrementAndGet()
-          case Some(`fenceToken`) => fenced.countDown()
-          case _ =>
-        }
+      override def onJobStart(e: SparkListenerJobStart): Unit = tag(e.properties) match {
+        case Some(`token`) => jobs.incrementAndGet()
+        case Some(`fenceToken`) => fenced.countDown()
+        case _ =>
+      }
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        if (tag(e.properties).contains(token)) tasks.addAndGet(e.stageInfo.numTasks)
+    }
+    val queries = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (qe.analyzed.output.exists(_.name == "__fence")) fenced.countDown()
+        else plans.add(qe.executedPlan.toString)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
     }
     sc.addSparkListener(listener)
+    spark.listenerManager.register(queries)
     try {
       sc.setLocalProperty(TagKey, token)
-      val a = try body finally sc.setLocalProperty(TagKey, fenceToken)
-      try sc.parallelize(Seq(0), 1).count() finally sc.setLocalProperty(TagKey, null)
-      assert(fenced.await(60, TimeUnit.SECONDS), "the fence job never reached the listener")
-      (a, jobs.get)
-    } finally sc.removeSparkListener(listener)
+      val rows = try body finally sc.setLocalProperty(TagKey, fenceToken)
+      try spark.range(1).toDF("__fence").collect() finally sc.setLocalProperty(TagKey, null)
+      assert(fenced.await(60, TimeUnit.SECONDS), "the fence never reached the listeners")
+      Run(rows, jobs.get, tasks.get, plans.asScala.toSeq)
+    } finally {
+      spark.listenerManager.unregister(queries)
+      sc.removeSparkListener(listener)
+    }
   }
 
   // The global-orderBy formulations each call must match row for row.
@@ -226,32 +256,62 @@ class DashboardJobsSpec extends AnyFunSuite {
   }
 
   calls.foreach { case (name, call, reference) =>
+    // the body pins one job of one task and no exchange at all
     test(s"$name: ≤ 2 jobs, no range-partitioned exchange, rows of the orderBy form") {
       val ref = reference()
       val expected = ref.collect().toSeq
-      val ((df, rows), jobs) = jobsOf { val d = call(); (d, d.collect().toSeq) }
-      assert(jobs <= 2, s"$name ran $jobs Spark jobs")
-      val plan = df.queryExecution.executedPlan.toString
-      assert(!plan.toLowerCase.contains("rangepartitioning"), plan)
-      assert(rows.nonEmpty || name.endsWith("empty"), s"$name returned no rows")
+      var df: DataFrame = null
+      val run = runOf { df = call(); df.collect().toSeq }
+      assert(run.jobs == 1, s"$name ran ${run.jobs} Spark jobs")
+      assert(run.tasks == 1, s"$name ran ${run.tasks} tasks")
+      assert(run.plans.nonEmpty && run.exchanges.isEmpty, run.plans.mkString("\n"))
+      assert(run.rows.nonEmpty || name.endsWith("empty"), s"$name returned no rows")
       assert(df.schema == ref.schema)
-      assert(rows == expected)
+      assert(run.rows == expected)
+    }
+  }
+
+  test("a slice above spark.sql.files.openCostInBytes keeps the parallel scan") {
+    val expected = calls.map { case (_, _, reference) => reference().collect().toSeq }
+    val smallest = ConditionsTable.sliceBytes(view.df, T0, T0).get
+    val key = "spark.sql.files.openCostInBytes"
+    try {
+      spark.conf.set(key, smallest - 1)
+      calls.zip(expected).foreach { case ((name, call, _), rows) =>
+        val run = runOf(call().collect().toSeq)
+        assert(run.exchanges.exists(_.contains("hashpartitioning")), s"$name: ${run.plans}")
+        assert(run.jobs <= 2, s"$name ran ${run.jobs} Spark jobs")
+        assert(run.rows == rows, name)
+      }
+    } finally spark.conf.unset(key)
+  }
+
+  test("a local conditions frame keeps the parallel scan") {
+    val local = new ConditionsView(rows)
+    assert(ConditionsTable.sliceBytes(local.df, Start, End).isEmpty)
+    refresh(Start, End, view).zip(refresh(Start, End, local)).foreach {
+      case ((name, stored), (_, call)) =>
+        val run = runOf(call().collect().toSeq)
+        assert(run.exchanges.exists(_.contains("hashpartitioning")), s"$name: ${run.plans}")
+        assert(run.jobs <= 2, s"$name ran ${run.jobs} Spark jobs")
+        assert(run.rows == stored().collect().toSeq, name)
     }
   }
 
   /** The nine calls over [s, e], with the span-derived widths a
     * dashboard derives (B2 120 buckets, as perfbench's calls do).
     */
-  private def refresh(s: Long, e: Long): Seq[(String, () => DataFrame)] = Seq(
-    "B1 aggregated" -> (() => view.getAggregatedData("s1", "state", s, e, 100)),
-    "B2 by interval" -> (() => view.getAggregatedDataByInterval("s1", "state", s, e, (e - s) / 120)),
-    "B3 by day" -> (() => view.getAggregatedDataByDay("s1", "state", s, e)),
-    "B4 mode" -> (() => view.getMostFrequentValueByTimeInterval("s1", "state", s, e)),
-    "B5 asap" -> (() => view.getSampledData(spark, "s1", "state", s, e, 60)),
-    "B6 time weight" -> (() => view.getSampledDataWithTimeWeight("s1", "state", s, e, "linear", 50)),
-    "B7 subjects" -> (() => view.getUniqueMeasurementSubjects(s, e, "state")),
-    "B8 change points" -> (() => view.filterUnchangedRows("s1", "state", s, e)),
-    "B9 intervals" -> (() => view.formatTimeIntervals("s1", "state", s, e, e)))
+  private def refresh(s: Long, e: Long, on: => ConditionsView = view)
+      : Seq[(String, () => DataFrame)] = Seq(
+    "B1 aggregated" -> (() => on.getAggregatedData("s1", "state", s, e, 100)),
+    "B2 by interval" -> (() => on.getAggregatedDataByInterval("s1", "state", s, e, (e - s) / 120)),
+    "B3 by day" -> (() => on.getAggregatedDataByDay("s1", "state", s, e)),
+    "B4 mode" -> (() => on.getMostFrequentValueByTimeInterval("s1", "state", s, e)),
+    "B5 asap" -> (() => on.getSampledData(spark, "s1", "state", s, e, 60)),
+    "B6 time weight" -> (() => on.getSampledDataWithTimeWeight("s1", "state", s, e, "linear", 50)),
+    "B7 subjects" -> (() => on.getUniqueMeasurementSubjects(s, e, "state")),
+    "B8 change points" -> (() => on.filterUnchangedRows("s1", "state", s, e)),
+    "B9 intervals" -> (() => on.formatTimeIntervals("s1", "state", s, e, e)))
 
   refresh(0L, 0L).map(_._1).zipWithIndex.foreach { case (name, i) =>
     test(s"$name: a refresh of the same span 60 s later compiles no class") {

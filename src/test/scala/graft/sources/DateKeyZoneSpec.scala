@@ -82,4 +82,35 @@ class DateKeyZoneSpec extends AnyFunSuite {
       assert(days == Seq("1969-12-31", "1970-01-01", "2024-01-01", "2024-01-02"), zone)
     } finally spark.conf.set("spark.sql.session.timeZone", "UTC")
   }
+
+  test("sliceBytes is the covered date partitions' bytes on disk, in any session zone") {
+    import spark.implicits._
+    val path = store
+    def onDisk(keep: String => Boolean): Long =
+      new java.io.File(path).listFiles().filter(d => d.isDirectory && keep(d.getName))
+        .flatMap(_.listFiles()).filter(_.getName.endsWith(".parquet")).map(_.length).sum
+    def covered(a: Long, b: Long): Long = onDisk { dir =>
+      val day = java.time.LocalDate.parse(dir.stripPrefix("date=")).toEpochDay
+      day >= Math.floorDiv(a, 86400L) && day <= Math.floorDiv(b, 86400L)
+    }
+    val ranges = Seq(
+      1704160800L -> 1704168000L, // 2024-01-02 02:00–04:00Z: one date
+      1704146400L -> 1704153000L, // 2024-01-01 22:00–23:50Z: one date
+      1704150000L -> 1704157200L, // across 2024-01-02 00:00Z: two dates
+      0L -> 3600L) // 1970-01-01: no stored date
+    try for (zone <- Seq("UTC", "America/Los_Angeles")) {
+      spark.conf.set("spark.sql.session.timeZone", zone)
+      val table = ConditionsTable.read(spark, path)
+      for ((a, b) <- ranges)
+        assert(ConditionsTable.sliceBytes(table, a, b).contains(covered(a, b)), s"[$a, $b] in $zone")
+      // without its `date` column a slice cannot prune: every file counts
+      assert(ConditionsTable.sliceBytes(table.drop("date"), 0L, 3600L).contains(onDisk(_ => true)))
+    } finally spark.conf.set("spark.sql.session.timeZone", "UTC")
+    assert(covered(0L, 3600L) == 0L && covered(1704150000L, 1704157200L) > covered(1704160800L, 1704168000L))
+    val table = ConditionsTable.read(spark, path)
+    val local = Seq((1704160800L, "s1")).toDF("timestamp", "measurement_subject")
+    assert(ConditionsTable.sliceBytes(local, 1704160800L, 1704168000L).isEmpty)
+    assert(ConditionsTable.sliceBytes(table.unionByName(ConditionsTable.read(spark, path)),
+      1704160800L, 1704168000L).isEmpty)
+  }
 }
