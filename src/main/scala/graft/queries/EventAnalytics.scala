@@ -48,8 +48,10 @@ object EventAnalytics {
     * ...)` form the oracle uses. Deliberately NOT Dataset `.pivot()`:
     * Spark plans that as TWO aggregation stages ((subject, bucket, of)
     * avg, then a pivotfirst regroup on (subject, bucket) — a second
-    * exchange); the conditional-agg form is one stage, one exchange
-    * (plan pinned in QueryPlanSpec).
+    * exchange); the conditional-agg form is one partial+final aggregate
+    * pair (plan pinned in QueryPlanSpec), with one exchange over a slice
+    * read in parallel and none over a slice
+    * [[TimeseriesQueries.during]] reads in one task.
     */
   def pivotWide(conditions: DataFrame, metrics: Seq[String],
                 startS: Long, endS: Long, widthS: Long): DataFrame = {

@@ -24,8 +24,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * final agg/window over an already-filtered slice, and its bounded
   * result is ordered in one task by [[inOrder]] (no range-partitioned
   * global sort). How the slice is read follows its size ([[during]]): a
-  * slice no larger than `spark.sql.files.openCostInBytes`, which Spark
-  * would not split if it sat in one file, is read in one task, so the
+  * slice no larger than [[OneTaskSliceBytes]] is read in one task, so the
   * aggregate, window and sort above it need no exchange and a dashboard
   * call runs one Spark job. A larger slice is scanned and partially
   * aggregated in parallel, then gathered through one hash exchange (two
@@ -88,6 +87,16 @@ object TimeseriesQueries {
     subject.fold(metric)(s => metric && col("measurement_subject") === s)
   }
 
+  /** The largest slice [[during]] reads in one task: 4 MiB. Measured
+    * (SCALING.md "Round 20", "Where one task stops winning"): on 2 and 4
+    * cores one task beats the parallel scan with its hash exchange at 2
+    * and 4 MB, ties at 6 MB and loses from 10 MB. More cores move the
+    * crossover down, toward the size whose one-task scan costs what the
+    * second job and the exchange cost (about 3–7 MB), so the cut sits
+    * below the measured crossover and inside that estimate.
+    */
+  val OneTaskSliceBytes: Long = 4L << 20
+
   /** The time slice [startS, endS] of a conditions frame, with four
     * plan-shape guarantees:
     *  - the range compares the timestamp column directly against the
@@ -106,14 +115,13 @@ object TimeseriesQueries {
     *    TimescaleDB derives hypertable chunk exclusion. Its dates stay
     *    literals: pruning is evaluated while planning, never compiled;
     *  - when the frame is one file relation whose covered files total at
-    *    most `spark.sql.files.openCostInBytes`
-    *    ([[graft.sources.ConditionsTable.sliceBytes]]) — the floor of
-    *    Spark's own split size, so a slice it would not split if it sat
-    *    in one file — the slice is `coalesce(1)`'d: one task reads it,
-    *    and its `SinglePartition` satisfies any later aggregate's or
-    *    `partitionBy` window's distribution, so no exchange is planned. A
-    *    larger slice, or any other frame (local, JDBC, streaming, a
-    *    union), is returned as filtered and keeps its parallel scan.
+    *    most [[OneTaskSliceBytes]]
+    *    ([[graft.sources.ConditionsTable.sliceBytes]]), the slice is
+    *    `coalesce(1)`'d: one task reads it, and its `SinglePartition`
+    *    satisfies any later aggregate's or `partitionBy` window's
+    *    distribution, so no exchange is planned. A larger slice, or any
+    *    other frame (local, JDBC, streaming, a union, a catalog table),
+    *    is returned as filtered and keeps its parallel scan.
     */
   def during(conditions: DataFrame, startS: Long, endS: Long): DataFrame = {
     def bound(s: Long) = param(Math.multiplyExact(s, 1000000L), TimestampType)
@@ -122,8 +130,7 @@ object TimeseriesQueries {
       if (conditions.columns.contains("date"))
         range && ConditionsTable.datesCovering(startS, endS)
       else range)
-    val openCost = conditions.sparkSession.sessionState.conf.filesOpenCostInBytes
-    if (ConditionsTable.sliceBytes(conditions, startS, endS).exists(_ <= openCost))
+    if (ConditionsTable.sliceBytes(conditions, startS, endS).exists(_ <= OneTaskSliceBytes))
       slice.coalesce(1)
     else slice
   }

@@ -54,18 +54,28 @@ object ConditionsTable {
     * frame reads: the summed lengths of its files in the dates
     * [[datesCovering]] keeps, or of all its files (never less than the
     * scan reads) when the frame has no `date` column or the relation no
-    * DateType `date` partition. The files come from the relation's own
-    * file index with the covering-date partition filter — the cached
-    * listing its scan reads — so no filesystem call and no job is made.
+    * DateType `date` partition. The frame must read a path
+    * (`spark.read.parquet`, a streaming sink's output included): the
+    * files come from its relation's own file index with the
+    * covering-date partition filter — the cached listing its scan
+    * reads — so no filesystem call and no job is made.
     *
-    * `None` for any frame that is not over exactly one file relation:
-    * streaming, local and JDBC frames, and unions such as a rollup's
-    * stored ∪ tail.
+    * Spark's own size estimate does not give this number:
+    * `optimizedPlan.stats.sizeInBytes` of a path read is the whole
+    * store's bytes, because Spark prunes the partitions of such a relation
+    * only while planning the physical scan (`PruneFileSourcePartitions`
+    * rewrites only a catalog table's index).
+    *
+    * `None` for any frame that is not over exactly one such relation:
+    * streaming, local and JDBC frames, unions such as a rollup's
+    * stored ∪ tail, and catalog tables — a partitioned one's index asks
+    * the metastore and lists the files again on every call, and a
+    * bucketed one ([[writeBucketed]]) keeps the layout its owner chose.
     */
   def sliceBytes(conditions: DataFrame, startS: Long, endS: Long): Option[Long] =
     if (conditions.isStreaming) None
     else conditions.queryExecution.analyzed.collectLeaves() match {
-      case Seq(leaf: LogicalRelation) => leaf.relation match {
+      case Seq(leaf: LogicalRelation) if leaf.catalogTable.isEmpty => leaf.relation match {
         case fs: HadoopFsRelation =>
           val prunes = conditions.columns.contains("date") &&
             fs.partitionSchema.exists(f => f.name == "date" && f.dataType == DateType)

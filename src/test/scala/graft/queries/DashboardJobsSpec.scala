@@ -16,10 +16,10 @@ import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
 /** Each of the nine dashboard calls over a date-partitioned store whose
-  * slice is below `spark.sql.files.openCostInBytes` runs one Spark job of
-  * one task with no exchange, and returns exactly the rows — in order —
-  * of the global-`orderBy` formulation spelled out below (B4 with its
-  * driver-side count pre-query). Over a slice above that size, or a
+  * slice is at most `TimeseriesQueries.OneTaskSliceBytes` runs one Spark
+  * job of one task with no exchange, and returns exactly the rows — in
+  * order — of the global-`orderBy` formulation spelled out below (B4 with
+  * its driver-side count pre-query). Over a slice above that size, or a
   * local frame, a call keeps its parallel scan: a hash exchange and at
   * most two jobs (the scan's map stage and one result task). A refresh —
   * the same call over the same span ending later — compiles no generated
@@ -64,6 +64,23 @@ class DashboardJobsSpec extends AnyFunSuite {
   private lazy val view: ConditionsView = {
     val dir = java.nio.file.Files.createTempDirectory("dashboard_jobs").toString
     ConditionsTable.write(rows, dir)
+    ConditionsView.fromParquet(spark, dir)
+  }
+
+  /** The same rows plus a metric no call reads, of unique 64-character
+    * strings that do not compress, over the same five days: a five-day
+    * slice of this store is larger than `OneTaskSliceBytes`.
+    */
+  private lazy val wide: ConditionsView = {
+    val n = 150000L
+    val noise = spark.range(n).select(
+        timestamp_seconds(lit(T0) + col("id") * (5 * 86400L) / n).as("timestamp"),
+        lit("noise").as("measurement_subject"), lit("noise").as("measurement_of"),
+        col("id").cast("double").as("measurement_number"),
+        sha2(col("id").cast("string"), 256).as("measurement_string"))
+      .withColumn("date", ConditionsTable.dateKey)
+    val dir = java.nio.file.Files.createTempDirectory("dashboard_jobs_wide").toString
+    ConditionsTable.write(rows.unionByName(noise), dir)
     ConditionsView.fromParquet(spark, dir)
   }
 
@@ -256,7 +273,6 @@ class DashboardJobsSpec extends AnyFunSuite {
   }
 
   calls.foreach { case (name, call, reference) =>
-    // the body pins one job of one task and no exchange at all
     test(s"$name: ≤ 2 jobs, no range-partitioned exchange, rows of the orderBy form") {
       val ref = reference()
       val expected = ref.collect().toSeq
@@ -271,19 +287,39 @@ class DashboardJobsSpec extends AnyFunSuite {
     }
   }
 
-  test("a slice above spark.sql.files.openCostInBytes keeps the parallel scan") {
-    val expected = calls.map { case (_, _, reference) => reference().collect().toSeq }
-    val smallest = ConditionsTable.sliceBytes(view.df, T0, T0).get
-    val key = "spark.sql.files.openCostInBytes"
-    try {
-      spark.conf.set(key, smallest - 1)
-      calls.zip(expected).foreach { case ((name, call, _), rows) =>
+  test("a slice above OneTaskSliceBytes keeps the parallel scan") {
+    assert(ConditionsTable.sliceBytes(wide.df, Start, End)
+      .exists(_ > TimeseriesQueries.OneTaskSliceBytes))
+    refresh(Start, End).zip(refresh(Start, End, wide)).foreach {
+      case ((name, small), (_, call)) =>
         val run = runOf(call().collect().toSeq)
         assert(run.exchanges.exists(_.contains("hashpartitioning")), s"$name: ${run.plans}")
         assert(run.jobs <= 2, s"$name ran ${run.jobs} Spark jobs")
-        assert(run.rows == rows, name)
-      }
-    } finally spark.conf.unset(key)
+        assert(run.rows == small().collect().toSeq, name)
+    }
+  }
+
+  test("above OneTaskSliceBytes, stats, counter and time-weight aggregates combine before one shuffle") {
+    def body(on: ConditionsView) = Seq(
+      "statsAgg" -> TimeseriesQueries.statsDerive(
+        TimeseriesQueries.statsAgg(on.df, "state", Start, End, widthS = 86400)),
+      "counterAgg" -> TimeseriesQueries.counterAgg(on.df, "state", Start, End, bucketS = 21600),
+      "interpolatedTimeWeight" ->
+        TimeseriesQueries.interpolatedTimeWeight(on.df, "state", Start, End, bucketS = 21600))
+    body(wide).zip(body(view)).foreach { case ((name, q), (_, small)) =>
+      val plan = q.queryExecution.executedPlan.toString
+      val ops = plan.linesIterator.toSeq
+      def at(op: String) = ops.indexWhere(_.contains(op))
+      assert(ops.count(_.contains("Exchange hashpartitioning")) == 1, s"$name\n$plan")
+      assert(at("partial_") >= 0 &&
+        ops.exists(l => l.contains("HashAggregate") && !l.contains("partial_")), s"$name\n$plan")
+      if (name == "statsAgg") // the partial aggregate runs below (printed after) the shuffle
+        assert(at("partial_") > at("Exchange hashpartitioning"), plan)
+      else // the window's exchange serves the aggregate too
+        assert(ops.count(_.contains("Window")) == 1, plan)
+      assert(!small.queryExecution.executedPlan.toString.contains("Exchange"), name)
+      assert(q.collect().toSeq == small.collect().toSeq, name)
+    }
   }
 
   test("a local conditions frame keeps the parallel scan") {

@@ -105,6 +105,12 @@ class DateKeyZoneSpec extends AnyFunSuite {
         assert(ConditionsTable.sliceBytes(table, a, b).contains(covered(a, b)), s"[$a, $b] in $zone")
       // without its `date` column a slice cannot prune: every file counts
       assert(ConditionsTable.sliceBytes(table.drop("date"), 0L, 3600L).contains(onDisk(_ => true)))
+      // Spark's estimate of the same slice is the whole store, not the
+      // covered dates: a path read's partitions are pruned only in the
+      // physical scan
+      val (a, b) = ranges.head
+      assert(table.filter(ConditionsTable.datesCovering(a, b)).queryExecution.optimizedPlan
+        .stats.sizeInBytes == BigInt(onDisk(_ => true)))
     } finally spark.conf.set("spark.sql.session.timeZone", "UTC")
     assert(covered(0L, 3600L) == 0L && covered(1704150000L, 1704157200L) > covered(1704160800L, 1704168000L))
     val table = ConditionsTable.read(spark, path)
@@ -112,5 +118,12 @@ class DateKeyZoneSpec extends AnyFunSuite {
     assert(ConditionsTable.sliceBytes(local, 1704160800L, 1704168000L).isEmpty)
     assert(ConditionsTable.sliceBytes(table.unionByName(ConditionsTable.read(spark, path)),
       1704160800L, 1704168000L).isEmpty)
+    // catalog tables, bucketed or date-partitioned, keep the parallel plan
+    ConditionsTable.writeBucketed(table, "date_key_bucketed", buckets = 2)
+    table.write.mode("overwrite").partitionBy("date").saveAsTable("date_key_partitioned")
+    try for (name <- Seq("date_key_bucketed", "date_key_partitioned"))
+      assert(ConditionsTable.sliceBytes(spark.table(name), 1704160800L, 1704168000L).isEmpty, name)
+    finally Seq("date_key_bucketed", "date_key_partitioned")
+      .foreach(name => spark.sql(s"DROP TABLE IF EXISTS $name"))
   }
 }
