@@ -1243,15 +1243,15 @@ object ConditionsContract {
          |FROM j1 LEFT JOIN j2 ON j1.s = j2.s AND j1.t1 = j2.t1
          |GROUP BY 1 ORDER BY 1""".stripMargin),
     // end-to-end converter path under load: synthesize emon MQTT envelopes
-    // from the events table, run the REAL convertEvent flatMap, emit the
-    // wire records — the whole normalize stage is oracle-checked
+    // from the events table, run the REAL convertEvent flatMap, render the
+    // wire timestamp — the whole normalize stage is oracle-checked
     Q("q_ingest_emon", (s, d) => {
       import s.implicits._
       emonEnvelopes(s, d).as[String]
         .flatMap(raw => graft.convert.Converters.convertEvent(raw).getOrElse(Vector.empty))
-        .toDF()
-        .select(col("timestamp"), col("measurement_subject"), col("measurement_of"),
-          col("measurement_number"))
+        .map(r => (graft.model.Timestamps.format(r.timestamp), r.measurement_subject,
+          r.measurement_of, r.measurement_number))
+        .toDF("timestamp", "measurement_subject", "measurement_of", "measurement_number")
         .orderBy("timestamp", "measurement_number")
     },
       """SELECT strftime(ts, '%Y-%m-%dT%H:%M:%S.%f') || 'Z' AS "timestamp",

@@ -18,7 +18,7 @@ import graft.model.TimeseriesRecord
   * loses less data with identical accepted values.
   *
   * `correlation_id = lastUpdatedAt` (`bmw_to_timescale.py:183`) — it doubles
-  * as the streaming dedup key (see [[graft.streaming.BmwDedup]]).
+  * as the streaming dedup key (see [[graft.streaming.IngestPipeline.bmwDeduped]]).
   */
 object Bmw {
 
@@ -36,7 +36,8 @@ object Bmw {
     // The reference stores lastUpdatedAt raw and relies on PostgreSQL's
     // timestamptz parse (`bmw_to_timescale.py:178`), which APPLIES UTC
     // offsets — so this boundary uses the offset-applying normalization,
-    // unlike the MQTT converters' dateutil-wall-clock parity. BMW emits
+    // unlike the MQTT converters' dateutil-wall-clock parity, and takes
+    // the colon-less `-0800` form the dedup's event time accepts. BMW emits
     // 7 fractional digits; the RAW string stays the correlation/dedup key.
     val ts = graft.model.Timestamps.fromStringUtc(lastUpdatedAt)
     val cid = Some(lastUpdatedAt)

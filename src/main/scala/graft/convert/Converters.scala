@@ -2,6 +2,7 @@ package graft.convert
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import graft.model.{TimeseriesRecord, Timestamps}
+import java.time.Instant
 
 import scala.util.control.NonFatal
 
@@ -45,7 +46,7 @@ object Converters {
   }
 
   /** Normalize the dynamic timestamp leaf (numeric epoch or string). */
-  private def normalizeTs(node: JsonNode): String =
+  private def normalizeTs(node: JsonNode): Instant =
     if (node.isNumber) Timestamps.fromEpochSeconds(node.asDouble)
     else if (node.isTextual) Timestamps.fromString(node.asText)
     else throw new IllegalArgumentException(s"Unsupported timestamp: $node")
@@ -103,7 +104,7 @@ object Converters {
     * this guard, `JsonFlatten.flatten`'s non-object short-circuit would
     * silently classify a malformed meter message as "validly filtered".
     */
-  private def flattenBranch(node: JsonNode, where: String, ts: String,
+  private def flattenBranch(node: JsonNode, where: String, ts: Instant,
                             correlationId: Option[String], publisher: String,
                             subject: String, ignore: Set[String],
                             prefix: String): Vector[TimeseriesRecord] = {

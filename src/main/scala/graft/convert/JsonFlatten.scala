@@ -2,6 +2,7 @@ package graft.convert
 
 import com.fasterxml.jackson.databind.JsonNode
 import graft.model.{PayloadType, TimeseriesRecord}
+import java.time.Instant
 
 import scala.collection.immutable.VectorBuilder
 import scala.jdk.CollectionConverters._
@@ -39,7 +40,7 @@ object JsonFlatten {
       throw new IllegalArgumentException(s"Unknown payload type: ${n.getNodeType}")
 
   /** Build one atomic record from a leaf node. */
-  def leafRecord(of: String, node: JsonNode, timestamp: String, subject: String,
+  def leafRecord(of: String, node: JsonNode, timestamp: Instant, subject: String,
                  publisher: String, correlationId: Option[String]): TimeseriesRecord =
     recordType(node) match {
       case PayloadType.Number =>
@@ -54,7 +55,7 @@ object JsonFlatten {
     }
 
   def flatten(payload: JsonNode,
-              timestamp: String,
+              timestamp: Instant,
               correlationId: Option[String],
               publisher: String,
               subject: String,

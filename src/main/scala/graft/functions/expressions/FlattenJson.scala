@@ -48,7 +48,7 @@ case class FlattenJson(child: Expression)
     val records =
       try {
         val node = FlattenJson.mapper.readTree(raw.toString)
-        JsonFlatten.flatten(node, timestamp = "", correlationId = None,
+        JsonFlatten.flatten(node, timestamp = java.time.Instant.EPOCH, correlationId = None,
           publisher = "", subject = "")
       } catch { case scala.util.control.NonFatal(_) => return Nil }
     records.map { r =>

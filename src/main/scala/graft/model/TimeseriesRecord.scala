@@ -1,6 +1,6 @@
 package graft.model
 
-import org.apache.spark.sql.types._
+import java.time.Instant
 
 /** The atomic timeseries record — the single shape every source payload is
   * exploded into (row-oriented EAV).
@@ -12,13 +12,17 @@ import org.apache.spark.sql.types._
   * `measurement_number/string/bool/location` is set, selected by
   * `measurement_data_type`.
   *
-  * `timestamp` is kept in the reference wire format
-  * (`%Y-%m-%dT%H:%M:%S.%fZ`, `shared_code/helpers.py:83,89`) at the
-  * conversion layer; [[graft.sources.ConditionsTable]] parses it to a real
-  * `TimestampType` at the storage boundary.
+  * `timestamp` is the µs-exact event instant, parsed once by the converter
+  * ([[Timestamps]]); the record encoder writes it as `TimestampType`, so no
+  * layer parses it again. The reference's `%Y-%m-%dT%H:%M:%S.%fZ` string
+  * (`shared_code/helpers.py:83,89`) exists only on the wire hop
+  * ([[graft.sources.WireRecords.emit]]). The location stays `[lat, lon]`,
+  * the shape the wire hop emits; [[graft.sources.ConditionsTable.toStorage]]
+  * renders it as PostGIS WKT `SRID=4326;POINT(lon lat)` (reference
+  * `shared_code/timescale.py:219-270`).
   */
 final case class TimeseriesRecord(
-    timestamp: String,
+    timestamp: Instant,
     measurement_subject: String,
     measurement_publisher: String,
     measurement_of: String,
@@ -32,56 +36,23 @@ final case class TimeseriesRecord(
 
 object TimeseriesRecord {
 
-  def number(timestamp: String, subject: String, publisher: String, of: String,
+  def number(timestamp: Instant, subject: String, publisher: String, of: String,
              value: Double, correlationId: Option[String]): TimeseriesRecord =
     TimeseriesRecord(timestamp, subject, publisher, of, PayloadType.Number.tag,
       Some(value), None, None, None, correlationId)
 
-  def string(timestamp: String, subject: String, publisher: String, of: String,
+  def string(timestamp: Instant, subject: String, publisher: String, of: String,
              value: String, correlationId: Option[String]): TimeseriesRecord =
     TimeseriesRecord(timestamp, subject, publisher, of, PayloadType.Str.tag,
       None, Some(value), None, None, correlationId)
 
-  def boolean(timestamp: String, subject: String, publisher: String, of: String,
+  def boolean(timestamp: Instant, subject: String, publisher: String, of: String,
               value: Boolean, correlationId: Option[String]): TimeseriesRecord =
     TimeseriesRecord(timestamp, subject, publisher, of, PayloadType.Bool.tag,
       None, None, Some(value), None, correlationId)
 
-  def geography(timestamp: String, subject: String, publisher: String, of: String,
+  def geography(timestamp: Instant, subject: String, publisher: String, of: String,
                 latLon: Seq[Double], correlationId: Option[String]): TimeseriesRecord =
     TimeseriesRecord(timestamp, subject, publisher, of, PayloadType.Geography.tag,
       None, None, None, Some(latLon), correlationId)
-
-  // Geography values become PostGIS-style WKT `SRID=4326;POINT(lon lat)`
-  // (lon/lat swap — reference `shared_code/timescale.py:219-270`) at the
-  // single storage-boundary encoder: ConditionsTable.toStorage.
-
-  /** Storage schema of the `conditions` table once the wire timestamp has
-    * been parsed (`db/create_table_and_roles.sql:35-46`). Partition columns
-    * (`date`) are added at write time by [[graft.sources.ConditionsTable]].
-    */
-  val conditionsSchema: StructType = StructType(Seq(
-    StructField("timestamp", TimestampType, nullable = false),
-    StructField("measurement_subject", StringType, nullable = false),
-    StructField("measurement_publisher", StringType, nullable = true),
-    StructField("measurement_of", StringType, nullable = false),
-    StructField("measurement_data_type", StringType, nullable = true),
-    StructField("measurement_number", DoubleType, nullable = true),
-    StructField("measurement_string", StringType, nullable = true),
-    StructField("measurement_bool", BooleanType, nullable = true),
-    StructField("measurement_location", StringType, nullable = true), // WKT
-    StructField("correlation_id", StringType, nullable = true)
-  ))
-
-  /** Schema of the MQTT-ish source envelope
-    * (`{topic, payload, qos, retain, timestamp}`; payload is double-encoded
-    * JSON kept as a string because its schema is dynamic — SURVEY §1.3).
-    */
-  val envelopeSchema: StructType = StructType(Seq(
-    StructField("topic", StringType, nullable = false),
-    StructField("payload", StringType, nullable = true),
-    StructField("qos", IntegerType, nullable = true),
-    StructField("retain", IntegerType, nullable = true),
-    StructField("timestamp", StringType, nullable = true)
-  ))
 }

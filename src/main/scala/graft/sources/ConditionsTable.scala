@@ -118,8 +118,10 @@ object ConditionsTable {
     raw.filter(s => graft.convert.Converters.convertEventEither(s).isLeft)
   }
 
-  /** Wire records → storage rows: parse the ISO wire timestamp to a real
-    * TimestampType, encode geography as WKT, add the partition [[dateKey]].
+  /** Records → storage rows: encode geography as WKT and add the partition
+    * [[dateKey]]. The record's instant is already the `TimestampType`
+    * column (its encoder writes it), so the stored instant is the one the
+    * converter parsed, in any session time zone.
     */
   def toStorage(records: Dataset[TimeseriesRecord]): DataFrame =
     records.toDF()
@@ -128,8 +130,6 @@ object ConditionsTable {
           format_string("SRID=4326;POINT(%s %s)",
             col("measurement_location").getItem(1),
             col("measurement_location").getItem(0))))
-      .withColumn("timestamp",
-        to_timestamp(col("timestamp"), "yyyy-MM-dd'T'HH:mm:ss.SSSSSS'Z'"))
       .withColumn("date", dateKey)
 
   /** Parse back a stored `SRID=4326;POINT(lon lat)` location to

@@ -53,12 +53,10 @@ object WireRecords {
     require(node.isObject, s"record must be an object: $node")
     val missing = RequiredFields.filterNot(node.has)
     require(missing.isEmpty, s"Missing fields: ${missing.mkString(", ")}")
-    // Normalize the timestamp like the reference's PG insert would parse it
-    // (timestamptz: flexible ISO, offsets applied): any legal form becomes
-    // the canonical 6-digit-µs wire format the storage boundary parses, and
-    // an unparseable one throws → the whole message dead-letters. Without
-    // this, a legal-but-uncanonical timestamp (e.g. no fractional digits)
-    // would pass validation and silently store a NULL timestamp.
+    // Parse the timestamp like the reference's PG insert would (timestamptz:
+    // flexible ISO, offsets applied, rounded to the µs): any legal form
+    // becomes the record's instant, and an unparseable one throws → the
+    // whole message dead-letters.
     val ts = graft.model.Timestamps.fromStringUtc(node.get("timestamp").asText)
     val publisher = node.get("measurement_publisher").asText
     val subject = node.get("measurement_subject").asText
@@ -125,12 +123,14 @@ object WireRecords {
 
   /** Record → wire JSON, the inverse of [[parse]]: the reference's
     * `json_converter.send_messages` shape (`json_converter.py:73-99`) —
-    * one JSON object per record with a dynamic `measurement_value`
-    * (number / boolean / string / [lat, lon]) and the data-type tag.
+    * one JSON object per record with the `%Y-%m-%dT%H:%M:%S.%fZ`
+    * timestamp, a dynamic `measurement_value` (number / boolean / string /
+    * [lat, lon]) and the data-type tag. This hop is where a record's
+    * instant becomes a string.
     */
   def emit(r: TimeseriesRecord): String = {
     val node = mapper.createObjectNode()
-    node.put("timestamp", r.timestamp)
+    node.put("timestamp", graft.model.Timestamps.format(r.timestamp))
     node.put("measurement_publisher", r.measurement_publisher)
     node.put("measurement_subject", r.measurement_subject)
     node.put("measurement_of", r.measurement_of)

@@ -77,15 +77,10 @@ object IngestPipeline {
     }
   }
 
-  /** Normalize a (streaming or batch) Dataset of raw event-hub payloads —
-    * the exact batch code path ([[ConditionsTable.normalize]]), so golden
-    * tests cover the streaming transform too.
-    */
-  def normalize(raw: Dataset[String]): Dataset[TimeseriesRecord] =
-    ConditionsTable.normalize(raw.sparkSession, raw)
-
   /** MQTT-side pipeline (A1/A5/A7): text-file source (one JSON event per
-    * line) → normalize → date-partitioned parquet conditions sink.
+    * line) → normalize → date-partitioned parquet conditions sink. The
+    * normalize step is [[ConditionsTable.normalize]], the batch code path,
+    * so golden tests cover the streaming transform too.
     */
   def startMqtt(spark: SparkSession, inputDir: String, outputDir: String,
                 checkpointDir: String,
@@ -98,8 +93,8 @@ object IngestPipeline {
     */
   def startMqtt(spark: SparkSession, src: SourceConfig, outputDir: String,
                 checkpointDir: String, trigger: Trigger): StreamingQuery =
-    startConditionsSink(normalize(readText(spark, src)), outputDir,
-      checkpointDir, trigger)
+    startConditionsSink(ConditionsTable.normalize(spark, readText(spark, src)),
+      outputDir, checkpointDir, trigger)
 
   /** The conditions file sink of [[startMqtt]] and [[startWire]]: storage
     * rows → date-partitioned parquet. Each micro-batch is clustered by
@@ -140,7 +135,8 @@ object IngestPipeline {
     */
   def startConvertToWire(spark: SparkSession, src: SourceConfig, wire: SourceConfig,
                          checkpointDir: String, trigger: Trigger): StreamingQuery = {
-    val out = graft.sources.WireRecords.emit(normalize(readText(spark, src)))
+    val out = graft.sources.WireRecords.emit(
+      ConditionsTable.normalize(spark, readText(spark, src)))
     val base = out.toDF("value").writeStream
       .outputMode("append")
       .trigger(trigger)
@@ -166,12 +162,6 @@ object IngestPipeline {
     startConditionsSink(graft.sources.WireRecords.decode(readText(spark, wire)),
       outputDir, checkpointDir, trigger)
 
-  /** BMW-side dedup + convert (A23/A21): extract the (vin, lastUpdatedAt)
-    * key, drop duplicates within a 1-day watermark (the poll cadence is
-    * 10 min, so a day of dedup state safely covers the reference's
-    * semantics while keeping state bounded — the Azure Table grew forever),
-    * then explode vehicle state into atomic records.
-    */
   /** BMW `lastUpdatedAt` → TimestampType: trim sub-µs digits (BMW emits up
     * to 7 fractional digits; Spark parses ≤ 6), preserving ANY zone tail —
     * `Z`/`z` (uppercased — ANSI cast rejects lowercase), `+01:00`, `-0800`,
@@ -186,6 +176,12 @@ object IngestPipeline {
       lastUpdatedAt, "(\\.\\d{6})\\d*([Zz]|[+-]\\d{2}(?::?\\d{2})?)?$", "$1$2"),
       "z", "Z"))
 
+  /** BMW-side dedup + convert (A23/A21): extract the (vin, lastUpdatedAt)
+    * key, drop duplicates within a 1-day watermark (the poll cadence is
+    * 10 min, so a day of dedup state safely covers the reference's
+    * semantics while keeping state bounded — the Azure Table grew forever),
+    * then explode vehicle state into atomic records.
+    */
   def bmwDeduped(raw: Dataset[String]): Dataset[TimeseriesRecord] = {
     import raw.sparkSession.implicits._
     val keyed = raw

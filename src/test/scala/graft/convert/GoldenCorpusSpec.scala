@@ -30,7 +30,7 @@ class GoldenCorpusSpec extends AnyFunSuite {
   }
 
   private def assertMatches(name: String, got: TimeseriesRecord, exp: JsonNode): Unit = {
-    assert(got.timestamp == exp.get("timestamp").asText, s"$name: timestamp")
+    assert(Timestamps.format(got.timestamp) == exp.get("timestamp").asText, s"$name: timestamp")
     assert(got.measurement_subject == exp.get("measurement_subject").asText, s"$name: subject")
     assert(got.measurement_publisher == exp.get("measurement_publisher").asText, s"$name: publisher")
     assert(got.measurement_of == exp.get("measurement_of").asText, s"$name: of")
@@ -182,7 +182,19 @@ class GoldenCorpusSpec extends AnyFunSuite {
     assert(byOf("coordinates").measurement_location.exists(ll =>
       math.abs(ll(0) - 12.34567890123456) < 1e-12 && math.abs(ll(1) - 34.56789012345678) < 1e-12))
     assert(recs.forall(_.correlation_id.contains("2023-10-27T21:55:00.0000000Z")))
-    // timestamp normalized to the 6-digit wire format; raw string kept as cid
-    assert(recs.forall(_.timestamp == "2023-10-27T21:55:00.000000Z"))
+    // timestamp rounded to the µs; raw string kept as cid
+    assert(recs.forall(r => Timestamps.format(r.timestamp) == "2023-10-27T21:55:00.000000Z"))
+  }
+
+  test("bmw poll stamped with a colon-less offset converts at its instant") {
+    val msg = mapper.readTree(getClass.getResourceAsStream("/bmw_topic_messages.json"))
+      .get(0).deepCopy[com.fasterxml.jackson.databind.node.ObjectNode]()
+    msg.get("state").asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+      .put("lastUpdatedAt", "2023-10-27T19:55:00.1234567-0100")
+    val recs = Bmw.convertMessage(msg.toString)
+      .getOrElse(fail("a -0100 poll must convert, not drop"))
+    assert(recs.size == 6)
+    assert(recs.forall(_.timestamp == java.time.Instant.parse("2023-10-27T20:55:00.123457Z")))
+    assert(recs.forall(_.correlation_id.contains("2023-10-27T19:55:00.1234567-0100")))
   }
 }

@@ -9,6 +9,7 @@ class JsonFlattenSpec extends AnyFunSuite {
 
   private val mapper = new ObjectMapper()
   private def tree(s: String) = mapper.readTree(s)
+  private val T = java.time.Instant.EPOCH
 
   test("type inference: string/bool/number/geography, bool before number") {
     assert(JsonFlatten.recordType(tree("\"x\"")) == PayloadType.Str)
@@ -29,7 +30,7 @@ class JsonFlattenSpec extends AnyFunSuite {
   test("deep nesting: prefix NOT extended on recursion, ignore-keys prune subtrees") {
     val payload = tree(
       """{"a": 1, "skip": {"b": 2}, "nested": {"c": 3, "deeper": {"d": "x"}}}""")
-    val recs = JsonFlatten.flatten(payload, "T", Some("C"), "pub", "subj",
+    val recs = JsonFlatten.flatten(payload, T, Some("C"), "pub", "subj",
       ignoreKeys = Set("skip"), prefix = Some("pre"))
     assert(recs.map(_.measurement_of) == Vector("pre_a", "pre_c", "pre_d"))
     assert(recs(0).measurement_number.contains(1.0))
@@ -37,8 +38,8 @@ class JsonFlattenSpec extends AnyFunSuite {
   }
 
   test("empty / null payloads yield no records") {
-    assert(JsonFlatten.flatten(tree("{}"), "T", None, "p", "s").isEmpty)
-    assert(JsonFlatten.flatten(null, "T", None, "p", "s").isEmpty)
+    assert(JsonFlatten.flatten(tree("{}"), T, None, "p", "s").isEmpty)
+    assert(JsonFlatten.flatten(null, T, None, "p", "s").isEmpty)
   }
 
   test("property: leaf count invariant — records == scalar leaves not under ignored keys") {
@@ -59,7 +60,7 @@ class JsonFlattenSpec extends AnyFunSuite {
     }
     val prop = Prop.forAll(objGen(3)) { json =>
       val node = tree(json)
-      JsonFlatten.flatten(node, "T", None, "p", "s").size == countLeaves(node)
+      JsonFlatten.flatten(node, T, None, "p", "s").size == countLeaves(node)
     }
     assert(SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(100), prop).passed)
   }

@@ -92,9 +92,10 @@ class DashboardJobsSpec extends AnyFunSuite {
   /** What `body` runs in this thread: its rows, and the Spark jobs, tasks
     * and executed plans of its actions. Jobs and stages are tagged through
     * a local property and plans arrive through a query listener; a marker
-    * action with its own tag after `body` is the fence — each bus
-    * delivers in order, so once the marker is seen every event of `body`
-    * has been counted.
+    * action before `body` opens the plan window and one with its own tag
+    * after `body` is the fence — each bus delivers in order, so a plan of
+    * an earlier action that reaches the listener late is not counted, and
+    * once the fence is seen every event of `body` has been counted.
     */
   private case class Run(rows: Seq[Row], jobs: Long, tasks: Long, plans: Seq[String]) {
     def exchanges: Seq[String] = plans.filter(_.contains("Exchange"))
@@ -108,6 +109,7 @@ class DashboardJobsSpec extends AnyFunSuite {
     val tasks = new AtomicLong()
     val plans = new ConcurrentLinkedQueue[String]()
     val fenced = new CountDownLatch(2)
+    val opened = new CountDownLatch(1)
     def tag(p: java.util.Properties) = Option(p).flatMap(p => Option(p.getProperty(TagKey)))
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = tag(e.properties) match {
@@ -119,14 +121,18 @@ class DashboardJobsSpec extends AnyFunSuite {
         if (tag(e.properties).contains(token)) tasks.addAndGet(e.stageInfo.numTasks)
     }
     val queries = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        if (qe.analyzed.output.exists(_.name == "__fence")) fenced.countDown()
-        else plans.add(qe.executedPlan.toString)
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
+        val output = qe.analyzed.output
+        if (output.exists(_.name == "__open")) opened.countDown()
+        else if (output.exists(_.name == "__fence")) fenced.countDown()
+        else if (opened.getCount == 0) plans.add(qe.executedPlan.toString)
+      }
       override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
     }
     sc.addSparkListener(listener)
     spark.listenerManager.register(queries)
     try {
+      spark.range(1).toDF("__open").collect()
       sc.setLocalProperty(TagKey, token)
       val rows = try body finally sc.setLocalProperty(TagKey, fenceToken)
       try spark.range(1).toDF("__fence").collect() finally sc.setLocalProperty(TagKey, null)

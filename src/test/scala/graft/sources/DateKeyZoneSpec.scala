@@ -27,12 +27,10 @@ class DateKeyZoneSpec extends AnyFunSuite {
   private lazy val store: String = {
     import spark.implicits._
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    val fmt = java.time.format.DateTimeFormatter
-      .ofPattern("yyyy-MM-dd'T'HH:mm:ss.SSSSSS'Z'").withZone(java.time.ZoneOffset.UTC)
     val records = for {
       i <- 0 until 192
       sub <- Seq("s1", "s2")
-      ts = fmt.format(java.time.Instant.ofEpochSecond(T0 + i * 600L))
+      ts = java.time.Instant.ofEpochSecond(T0 + i * 600L)
       r <- Seq(
         TimeseriesRecord(ts, sub, "p", "temp", "number", Some(i % 7 + 0.5), None, None, None, None),
         TimeseriesRecord(ts, sub, "p", "state", "string", None,

@@ -68,8 +68,8 @@ class WireRecordsSpec extends AnyFunSuite {
     val offset = rec("power", "number", "1")
       .replace("2024-01-03T00:00:00.000000Z", "2024-01-03T01:00:00+01:00")
     val got = WireRecords.parse(offset).toOption.get.head
-    assert(got.timestamp == "2024-01-03T00:00:00.000000Z")
-    // and the storage boundary parses it to a real (non-null) timestamp
+    assert(graft.model.Timestamps.format(got.timestamp) == "2024-01-03T00:00:00.000000Z")
+    // and the storage boundary stores it as a real (non-null) timestamp
     import spark.implicits._
     val stored = ConditionsTable.toStorage(Seq(got).toDS())
       .select("timestamp").collect()
@@ -108,8 +108,8 @@ class WireRecordsSpec extends AnyFunSuite {
     val str = Gen.alphaNumStr.suchThat(_.nonEmpty)
     val finite = Gen.chooseNum(-1e12, 1e12)
     val cid = Gen.option(str)
-    // canonical wire timestamps (normalization is the identity on them, so
-    // emit → parse is an exact round trip)
+    // µs instants (the wire parse is the identity on them, so emit → parse
+    // is an exact round trip)
     val wireTs = Gen.chooseNum(0L, 4102444800L)
       .map(e => graft.model.Timestamps.fromEpochSeconds(e.toDouble))
     val recGen: Gen[TimeseriesRecord] = for {

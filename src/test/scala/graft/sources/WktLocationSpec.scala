@@ -48,7 +48,7 @@ class WktLocationSpec extends AnyFunSuite {
     import spark.implicits._
     val pts = Seq((51.501364, -0.14189), (-33.8688, 151.2093), (0.0, 0.0))
     val recs = pts.map { case (lat, lon) =>
-      TimeseriesRecord.geography("2023-10-27T21:55:00.000000Z", "car", "bmw",
+      TimeseriesRecord.geography(java.time.Instant.parse("2023-10-27T21:55:00.000000Z"), "car", "bmw",
         "coordinates", Vector(lat, lon), Some("cid"))
     }
     val stored = ConditionsTable.toStorage(spark.createDataset(recs))

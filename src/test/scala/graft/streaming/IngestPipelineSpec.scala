@@ -62,7 +62,7 @@ class IngestPipelineSpec extends AnyFunSuite {
     assert(back.filter("measurement_publisher = 'glow'").count() == 17)
     // value fidelity through serialize→parse: every typed column round-trips
     val viaBatch = graft.sources.ConditionsTable.toStorage(
-      IngestPipeline.normalize(spark.createDataset(goldenBodies)(
+      graft.sources.ConditionsTable.normalize(spark, spark.createDataset(goldenBodies)(
         org.apache.spark.sql.Encoders.STRING)))
     val cols = Seq("timestamp", "measurement_subject", "measurement_of",
       "measurement_number", "measurement_string", "measurement_bool",
@@ -70,6 +70,59 @@ class IngestPipelineSpec extends AnyFunSuite {
     def key(df: org.apache.spark.sql.DataFrame) =
       df.selectExpr(cols: _*).collect().map(_.toSeq).toSet
     assert(key(back) == key(viaBatch.toDF()))
+  }
+
+  /** The instants the golden corpus's expected records name, in µs. */
+  private def goldenInstantsUs: Seq[Long] =
+    mapper.readTree(getClass.getResourceAsStream("/golden_test_data.json")).fields.asScala
+      .filter(e => e.getValue.get("type").asText == "EventHubEvent" &&
+        e.getValue.hasNonNull("expected"))
+      .flatMap { e =>
+        mapper.readTree(e.getValue.get("expected").asText).elements.asScala
+          // the corpus predates emon.py:48's ignore_keys=["time"]
+          .filterNot(r => e.getKey == "emontx4_json" && r.get("measurement_of").asText == "time")
+          .map { r =>
+            val t = java.time.Instant.parse(r.get("timestamp").asText)
+            t.getEpochSecond * 1000000L + t.getNano / 1000L
+          }
+      }.toSeq.sorted
+
+  private def inZone[T](zone: String)(body: => T): T = {
+    val before = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", zone)
+    try body finally spark.conf.set("spark.sql.session.timeZone", before)
+  }
+
+  private def storedUs(path: String): Seq[Long] =
+    spark.read.parquet(path).selectExpr("unix_micros(timestamp)")
+      .collect().map(_.getLong(0)).toSeq.sorted
+
+  test("golden corpus store built in a Los Angeles session equals the UTC-built store") {
+    import graft.sources.ConditionsTable
+    def build(zone: String): String = inZone(zone) {
+      val dir = Files.createTempDirectory("zone_store").toString + "/store"
+      ConditionsTable.write(ConditionsTable.toStorage(ConditionsTable.normalize(spark,
+        spark.createDataset(goldenBodies)(org.apache.spark.sql.Encoders.STRING))), dir)
+      dir
+    }
+    def dates(dir: String): Seq[String] =
+      new java.io.File(dir).listFiles().map(_.getName).filter(_.startsWith("date=")).toSeq.sorted
+    val la = build("America/Los_Angeles")
+    val utc = build("UTC")
+    assert(storedUs(la) == storedUs(utc))
+    assert(storedUs(utc) == goldenInstantsUs)
+    assert(dates(la) == dates(utc))
+  }
+
+  test("mqtt drain in a Los Angeles session stores the instants its envelopes name") {
+    val in = Files.createTempDirectory("la_in").toString
+    val out = Files.createTempDirectory("la_out").toString
+    val ckpt = Files.createTempDirectory("la_ckpt").toString
+    Files.write(java.nio.file.Paths.get(s"$in/events.txt"), goldenBodies.mkString("\n").getBytes)
+    inZone("America/Los_Angeles") {
+      IngestPipeline.startMqtt(spark, in, out, ckpt).awaitTermination(60000)
+    }
+    assert(storedUs(out) == goldenInstantsUs)
   }
 
   test("streaming windowed aggregation matches the batch computation") {

@@ -63,7 +63,7 @@ class JdbcSinkSpec extends AnyFunSuite {
     import graft.model.TimeseriesRecord
     val url = s"jdbc:derby:${Files.createTempDirectory("derby_types")}/types_db;create=true"
     val props = new java.util.Properties()
-    val t = "2024-01-15T12:30:45.123456Z"
+    val t = java.time.Instant.parse("2024-01-15T12:30:45.123456Z")
     def rec(of: String, dt: String, num: Option[Double] = None,
             str: Option[String] = None, bool: Option[Boolean] = None,
             loc: Option[Seq[Double]] = None) =
