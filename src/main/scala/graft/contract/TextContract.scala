@@ -458,7 +458,7 @@ object TextContract {
       sqlFace(s, SqlTableFunctions.DocumentsRelation -> table(s, d, "documents"))(
         "SELECT * FROM graft_quality_classifier('en', 5)"), qQualityClassifier.oracle),
     // the persisted-model serving path: train once into a catalog table
-    // (token weights + prior/w0 scalars in TBLPROPERTIES), score the
+    // (token weights + prior/w0 scalars in its table properties), score the
     // held-out slice FROM THE TABLE — bit-identical to training-time
     // scoring, shares the q_quality_classifier oracle
     // persisted-model serving computes the same numbers

@@ -24,6 +24,12 @@ object Bmw {
 
   final case class Key(vin: String, lastUpdatedAt: String)
 
+  /** One parse of a raw poll: its dedup key, the instant of its
+    * `lastUpdatedAt` and its records, all stamped with that instant.
+    */
+  final case class Poll(vin: String, lastUpdatedAt: String, eventTime: java.time.Instant,
+                        records: Vector[TimeseriesRecord])
+
   def key(body: JsonNode): Key =
     Key(body.get("vin").asText, body.get("state").get("lastUpdatedAt").asText)
 
@@ -31,13 +37,14 @@ object Bmw {
   def validLatLon(lat: Double, lon: Double): Boolean =
     lat >= -90 && lat <= 90 && lon >= -180 && lon <= 180
 
-  def convert(body: JsonNode): Vector[TimeseriesRecord] = {
+  def convert(body: JsonNode): Vector[TimeseriesRecord] = poll(body).records
+
+  private def poll(body: JsonNode): Poll = {
     val Key(vin, lastUpdatedAt) = key(body)
     // The reference stores lastUpdatedAt raw and relies on PostgreSQL's
     // timestamptz parse (`bmw_to_timescale.py:178`), which APPLIES UTC
     // offsets — so this boundary uses the offset-applying normalization,
-    // unlike the MQTT converters' dateutil-wall-clock parity, and takes
-    // the colon-less `-0800` form the dedup's event time accepts. BMW emits
+    // unlike the MQTT converters' dateutil-wall-clock parity. BMW emits
     // 7 fractional digits; the RAW string stays the correlation/dedup key.
     val ts = graft.model.Timestamps.fromStringUtc(lastUpdatedAt)
     val cid = Some(lastUpdatedAt)
@@ -85,15 +92,20 @@ object Bmw {
     } out += TimeseriesRecord.geography(ts, vin, "bmw", "coordinates",
       Vector(latNode.asDouble, lonNode.asDouble), cid)
 
-    out.result()
+    Poll(vin, lastUpdatedAt, ts, out.result())
   }
 
-  /** Parse + convert one raw BMW message; `None` on malformed input. */
-  def convertMessage(raw: String): Option[Vector[TimeseriesRecord]] =
+  /** Parse one raw BMW message once; `None` on malformed input, an
+    * unparseable `lastUpdatedAt` included.
+    */
+  def parsePoll(raw: String): Option[Poll] =
     try {
       val body = Converters.mapper.readTree(raw)
       require(body.hasNonNull("vin") && body.hasNonNull("state"), "missing vin/state")
       require(body.get("state").hasNonNull("lastUpdatedAt"), "missing lastUpdatedAt")
-      Some(convert(body))
+      Some(poll(body))
     } catch { case scala.util.control.NonFatal(_) => None }
+
+  /** Parse + convert one raw BMW message; `None` on malformed input. */
+  def convertMessage(raw: String): Option[Vector[TimeseriesRecord]] = parsePoll(raw).map(_.records)
 }

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.util.IndexTable
 
 /** Similarity search over an embedding column (`Array[Float]`).
   *
@@ -581,8 +582,8 @@ object Ann {
                     nlist: Int = 16, sampleSize: Int = 2000): Unit = {
     val spark = embeddings.sparkSession
     import spark.implicits._
-    Dedup.dropManaged(spark, tableName)
-    Dedup.dropManaged(spark, s"${tableName}_centroids")
+    IndexTable.drop(spark, tableName)
+    IndexTable.drop(spark, s"${tableName}_centroids")
     val sample = uniformSample(embeddings, sampleSize).map(_._2)
     require(sample.nonEmpty, s"cannot build IVF index $tableName over an empty corpus")
     val effNlist = math.min(nlist, sample.length)
@@ -626,10 +627,8 @@ object Ann {
     // probes validate against; nlistRequested preserves the caller's
     // intent so a drift rebuild over a now-larger corpus can train the
     // full requested count instead of pinning the seed-time shrinkage
-    spark.sql(
-      s"ALTER TABLE $tableName SET TBLPROPERTIES(" +
-        s"'graft.nlist' = '$effNlist', 'graft.nlistRequested' = '$nlist', " +
-        s"'graft.meanDist' = '$refDist')")
+    IndexTable.setProps(spark, tableName, "graft.nlist" -> effNlist,
+      "graft.nlistRequested" -> nlist, "graft.meanDist" -> refDist)
   }
 
   /** Append NEW vectors to a persisted [[writeIvfIndex]] table WITHOUT
@@ -649,10 +648,7 @@ object Ann {
   def appendToIvfIndex(newVecs: DataFrame, tableName: String): Unit = {
     val spark = newVecs.sparkSession
     import spark.implicits._
-    val props = spark.sql(s"SHOW TBLPROPERTIES $tableName").collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-    require(props.contains("graft.nlist"),
-      s"IVF index $tableName carries no graft.nlist property — not written by writeIvfIndex")
+    IndexTable.prop(spark, tableName, "graft.nlist", "writeIvfIndex")
     val centroids = spark.table(s"${tableName}_centroids")
       .as[(Int, Seq[Double])].collect().sortBy(_._1).map(_._2.toArray)
     val bc = spark.sparkContext.broadcast(centroids)
@@ -720,11 +716,7 @@ object Ann {
                              threshold: Double, nProbe: Int): DataFrame = {
     val spark = newVecs.sparkSession
     import spark.implicits._
-    val props = spark.sql(s"SHOW TBLPROPERTIES $tableName").collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-    require(props.contains("graft.nlist"),
-      s"IVF index $tableName carries no graft.nlist property — not written by writeIvfIndex")
-    val nlist = props("graft.nlist").toInt
+    val nlist = IndexTable.prop(spark, tableName, "graft.nlist", "writeIvfIndex").toInt
     require(nProbe >= 1 && nProbe <= nlist, s"nProbe must be in [1, $nlist]")
     val centroids = spark.table(s"${tableName}_centroids")
       .as[(Int, Seq[Double])].collect().sortBy(_._1).map(_._2.toArray)
@@ -824,15 +816,12 @@ object Ann {
     */
   def ivfDrift(spark: org.apache.spark.sql.SparkSession,
                tableName: String): (Double, Double, Double) = {
-    val props = spark.sql(s"SHOW TBLPROPERTIES $tableName").collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-    val ref = props.getOrElse("graft.meanDist", throw new IllegalArgumentException(
-      s"IVF index $tableName carries no graft.meanDist property — " +
-        "not written by writeIvfIndex (or written before drift tracking)")).toDouble
+    val ref = IndexTable.prop(spark, tableName, "graft.meanDist", "writeIvfIndex").toDouble
     // serves both index families: an SQ8 table stores codes, so the live
     // statistic decodes per row (reference was written the same way)
     val cur =
-      if (props.get("graft.sq8").contains("true")) meanAssignedDistSq8(spark, tableName)
+      if (IndexTable.props(spark, tableName).get("graft.sq8").contains("true"))
+        meanAssignedDistSq8(spark, tableName)
       else meanAssignedDist(spark, tableName)
     // ref = 0 means the write-time assignment was PERFECT (e.g. a seed
     // corpus with ≤ nlist distinct patterns) — any later nonzero live
@@ -858,14 +847,11 @@ object Ann {
     * bounded amortized cost — rebuilds trigger at a drift level, not a
     * cadence, so a stationary corpus never pays one.
     *
-    * The rebuild writes the replacement under a TMP table name while the
-    * live index stays intact, then swaps with a metadata drop + rename:
-    * the previous shape snapshotted the corpus to executor-memory blocks
-    * (localCheckpoint) and overwrote the ONLY copy — an executor lost
-    * mid-rewrite destroyed the index unrecoverably. Now a failed build
-    * leaves the live index untouched; the only crash window is the
-    * drop→rename metadata swap AFTER the replacement is fully
-    * materialized (recovery: rename the `*_rebuild_tmp` tables by hand).
+    * The rebuild is a [[graft.util.IndexTable.rewrite]]: the replacement
+    * (rows, centroids, `graft.*` properties) is written under
+    * `*_rebuild_tmp` while the live index stays intact, so a failed build
+    * leaves it untouched, and is then copied over the live name from the
+    * tmp tables' files.
     * Rebuilding retrains on the FULL current corpus (same `sampleSize`
     * bound) at the originally REQUESTED nlist, so afterwards drift = 1
     * by construction and probe results equal a from-scratch index.
@@ -878,48 +864,22 @@ object Ann {
     appendToIvfIndex(newVecs, tableName)
     val (_, _, ratio) = ivfDrift(spark, tableName)
     if (ratio > driftThreshold) {
-      val props = spark.sql(s"SHOW TBLPROPERTIES $tableName").collect()
-        .map(r => r.getString(0) -> r.getString(1)).toMap
-      // pre-nlistRequested tables fall back to the effective count
-      val nlist = props.getOrElse("graft.nlistRequested", props("graft.nlist")).toInt
-      val tmp = s"${tableName}_rebuild_tmp"
-      writeIvfIndex(spark.table(tableName).select(col("vec_id"), col("embedding")),
-        tmp, nlist, sampleSize)
-      promoteIvfTmp(spark, tmp, tableName)
+      IndexTable.rewrite(spark, tableName, s"${tableName}_rebuild_tmp", Seq("_centroids")) { tmp =>
+        writeIvfIndex(spark.table(tableName).select(col("vec_id"), col("embedding")),
+          tmp, requestedNlist(spark, tableName), sampleSize)
+      }
       (ratio, true)
     } else (ratio, false)
   }
 
-  /** Phase 2 of a crash-safe index rebuild: copy a fully-built `tmp`
-    * index (rows + centroids + `graft.*` properties) over the live name
-    * FROM the tmp table's parquet files. Disk-backed — an executor lost
-    * during the copy is a plain task retry, unlike the previous
-    * localCheckpoint-snapshot shape whose executor-memory blocks were
-    * unrecomputable once the live table had been dropped (one lost
-    * executor mid-rewrite destroyed the index permanently). The crash
-    * window is only after the drop, when the tmp table still holds the
-    * full content (recovery: re-run the copy by hand). An ALTER TABLE
-    * RENAME swap would avoid the second write, but does not reliably
-    * carry partitioned managed-table data in the in-memory catalog.
+  /** The list count a drift rebuild trains: the caller's request, not the
+    * seed-time shrinkage; pre-`nlistRequested` tables fall back to the
+    * effective count.
     */
-  private def promoteIvfTmp(spark: org.apache.spark.sql.SparkSession,
-                            tmp: String, tableName: String): Unit = {
-    val props = spark.sql(s"SHOW TBLPROPERTIES $tmp").collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-      .filter { case (k, _) => k.startsWith("graft.") }
-    val rows = spark.table(tmp)
-    val cents = spark.table(s"${tmp}_centroids")
-    Dedup.dropManaged(spark, tableName)
-    Dedup.dropManaged(spark, s"${tableName}_centroids")
-    rows.repartition(col("ivf_list"))
-      .write.format("parquet").partitionBy("ivf_list")
-      .mode("overwrite").saveAsTable(tableName)
-    cents.write.format("parquet").mode("overwrite").saveAsTable(s"${tableName}_centroids")
-    val kv = props.map { case (k, v) => s"'$k' = '$v'" }.mkString(", ")
-    spark.sql(s"ALTER TABLE $tableName SET TBLPROPERTIES($kv)")
-    Dedup.dropManaged(spark, tmp)
-    Dedup.dropManaged(spark, s"${tmp}_centroids")
-  }
+  private def requestedNlist(spark: org.apache.spark.sql.SparkSession,
+                             tableName: String): Int =
+    IndexTable.props(spark, tableName).getOrElse("graft.nlistRequested",
+      IndexTable.prop(spark, tableName, "graft.nlist", "writeIvfIndex")).toInt
 
   /** Top-k against a persisted [[writeIvfIndex]] table — never retrains:
     * centroids come from the side table (nlist rows, a bounded collect),
@@ -962,11 +922,7 @@ object Ann {
   private def validatedCentroids(spark: org.apache.spark.sql.SparkSession,
                                  tableName: String, nProbe: Int): Array[Array[Double]] = {
     import spark.implicits._
-    val props = spark.sql(s"SHOW TBLPROPERTIES $tableName").collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-    require(props.contains("graft.nlist"),
-      s"IVF index $tableName carries no graft.nlist property — not written by writeIvfIndex")
-    val nlist = props("graft.nlist").toInt
+    val nlist = IndexTable.prop(spark, tableName, "graft.nlist", "writeIvfIndex").toInt
     require(nProbe >= 1 && nProbe <= nlist, s"nProbe must be in [1, $nlist]")
     spark.table(s"${tableName}_centroids")
       .as[(Int, Seq[Double])].collect().sortBy(_._1).map(_._2.toArray)
@@ -1129,8 +1085,8 @@ object Ann {
                        nlist: Int = 16, sampleSize: Int = 2000): Unit = {
     val spark = embeddings.sparkSession
     import spark.implicits._
-    Dedup.dropManaged(spark, tableName)
-    Dedup.dropManaged(spark, s"${tableName}_centroids")
+    IndexTable.drop(spark, tableName)
+    IndexTable.drop(spark, s"${tableName}_centroids")
     val sample = uniformSample(embeddings, sampleSize).map(_._2)
     require(sample.nonEmpty, s"cannot build IVF-SQ8 index $tableName over an empty corpus")
     val effNlist = math.min(nlist, sample.length)
@@ -1172,10 +1128,8 @@ object Ann {
       case d: java.lang.Double => d.doubleValue()
       case _ => 0.0 // empty corpus is rejected above; defensive only
     }
-    spark.sql(
-      s"ALTER TABLE $tableName SET TBLPROPERTIES(" +
-        s"'graft.nlist' = '$effNlist', 'graft.nlistRequested' = '$nlist', " +
-        s"'graft.sq8' = 'true', 'graft.meanDist' = '$refDist')")
+    IndexTable.setProps(spark, tableName, "graft.nlist" -> effNlist,
+      "graft.nlistRequested" -> nlist, "graft.sq8" -> true, "graft.meanDist" -> refDist)
   }
 
   /** [[meanAssignedDist]] for an SQ8 table: the stored codes decode
@@ -1214,10 +1168,7 @@ object Ann {
   def appendToIvfSq8Index(newVecs: DataFrame, tableName: String): Unit = {
     val spark = newVecs.sparkSession
     import spark.implicits._
-    val props = spark.sql(s"SHOW TBLPROPERTIES $tableName").collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-    require(props.get("graft.sq8").contains("true"),
-      s"$tableName carries no graft.sq8 property — not written by writeIvfSq8Index")
+    IndexTable.prop(spark, tableName, "graft.sq8", "writeIvfSq8Index")
     val centroids = spark.table(s"${tableName}_centroids")
       .as[(Int, Seq[Double])].collect().sortBy(_._1).map(_._2.toArray)
     val bc = spark.sparkContext.broadcast(centroids)
@@ -1259,69 +1210,62 @@ object Ann {
     appendToIvfSq8Index(newVecs, tableName)
     val (_, _, ratio) = ivfDrift(spark, tableName)
     if (ratio > driftThreshold) {
-      val props = spark.sql(s"SHOW TBLPROPERTIES $tableName").collect()
-        .map(r => r.getString(0) -> r.getString(1)).toMap
-      // pre-nlistRequested tables fall back to the effective count
-      val nlist = props.getOrElse("graft.nlistRequested", props("graft.nlist")).toInt
+      val nlist = requestedNlist(spark, tableName)
       // The rebuild RETRAINS centroids but keeps the stored CODES
       // byte-identical (re-quantizing through writeIvfSq8Index would add
       // a second quantization error), so it writes rows inline — under a
-      // TMP table name while the live index stays intact, same
-      // crash-safety shape as maintainIvfIndex: a failed build leaves
-      // the index untouched; only the drop→rename swap is a crash window.
-      val tmp = s"${tableName}_rebuild_tmp"
-      Dedup.dropManaged(spark, tmp)
-      Dedup.dropManaged(spark, s"${tmp}_centroids")
-      val corpus = spark.table(tableName)
-        .select(col("vec_id"), col("code"), col("mn"), col("mx"), col("nrm"))
-      // train fresh centroids on the decoded corpus
-      val sampleF = uniformSample(
-        corpus.select(col("vec_id"),
-          sq8DequantUdf(col("code"), col("mn"), col("mx")).as("dq"))
-          .select(col("vec_id"),
-            expr("transform(dq, x -> CAST(x AS FLOAT))").as("embedding")),
-        sampleSize).map(_._2)
-      require(sampleF.nonEmpty, s"cannot rebuild IVF-SQ8 index $tableName: empty corpus")
-      val effNlist = math.min(nlist, sampleF.length)
-      val centroids = trainCentroids(sampleF, effNlist)
-      val bc = spark.sparkContext.broadcast(centroids)
-      val assignUdf = udf { (code: Array[Byte], mn: Float, mx: Float) =>
-        nearestCentroid(sq8Dequant(code, mn, mx).map(_.toFloat), bc.value)
+      // TMP table name while the live index stays intact, the
+      // maintainIvfIndex rewrite: a failed build leaves the index
+      // untouched.
+      IndexTable.rewrite(spark, tableName, s"${tableName}_rebuild_tmp", Seq("_centroids")) { tmp =>
+        val corpus = spark.table(tableName)
+          .select(col("vec_id"), col("code"), col("mn"), col("mx"), col("nrm"))
+        // train fresh centroids on the decoded corpus
+        val sampleF = uniformSample(
+          corpus.select(col("vec_id"),
+            sq8DequantUdf(col("code"), col("mn"), col("mx")).as("dq"))
+            .select(col("vec_id"),
+              expr("transform(dq, x -> CAST(x AS FLOAT))").as("embedding")),
+          sampleSize).map(_._2)
+        require(sampleF.nonEmpty, s"cannot rebuild IVF-SQ8 index $tableName: empty corpus")
+        val effNlist = math.min(nlist, sampleF.length)
+        val centroids = trainCentroids(sampleF, effNlist)
+        val bc = spark.sparkContext.broadcast(centroids)
+        val assignUdf = udf { (code: Array[Byte], mn: Float, mx: Float) =>
+          nearestCentroid(sq8Dequant(code, mn, mx).map(_.toFloat), bc.value)
+        }
+        // drift reference observed on the write pass (see writeIvfSq8Index)
+        val distUdf = udf { (code: Array[Byte], mn: Float, mx: Float, list: Int) =>
+          val v = sq8Dequant(code, mn, mx)
+          val c = bc.value(list)
+          var d = 0.0
+          var i = 0
+          val n = math.min(v.length, c.length)
+          while (i < n) { val x = v(i) - c(i); d += x * x; i += 1 }
+          math.sqrt(d)
+        }
+        val obs = new org.apache.spark.sql.Observation()
+        corpus
+          .withColumn("ivf_list", assignUdf(col("code"), col("mn"), col("mx")))
+          .withColumn("dist", distUdf(col("code"), col("mn"), col("mx"), col("ivf_list")))
+          .observe(obs, avg(col("dist")).as("mean_dist"))
+          .select("vec_id", "code", "mn", "mx", "nrm", "ivf_list")
+          .repartition(col("ivf_list"))
+          .write.format("parquet").partitionBy("ivf_list")
+          .mode("overwrite").saveAsTable(tmp)
+        centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
+          .toDF("ivf_list", "centroid")
+          .write.format("parquet").mode("overwrite").saveAsTable(s"${tmp}_centroids")
+        val refDist = obs.get("mean_dist") match {
+          case d: java.lang.Double => d.doubleValue()
+          case _ => 0.0
+        }
+        // ONE property update on the not-yet-live table: the previous
+        // two-ALTER shape left a window where graft.sq8 was set but
+        // graft.meanDist absent, and a concurrent ivfDrift call threw
+        IndexTable.setProps(spark, tmp, "graft.nlist" -> effNlist,
+          "graft.nlistRequested" -> nlist, "graft.sq8" -> true, "graft.meanDist" -> refDist)
       }
-      // drift reference observed on the write pass (see writeIvfSq8Index)
-      val distUdf = udf { (code: Array[Byte], mn: Float, mx: Float, list: Int) =>
-        val v = sq8Dequant(code, mn, mx)
-        val c = bc.value(list)
-        var d = 0.0
-        var i = 0
-        val n = math.min(v.length, c.length)
-        while (i < n) { val x = v(i) - c(i); d += x * x; i += 1 }
-        math.sqrt(d)
-      }
-      val obs = new org.apache.spark.sql.Observation()
-      corpus
-        .withColumn("ivf_list", assignUdf(col("code"), col("mn"), col("mx")))
-        .withColumn("dist", distUdf(col("code"), col("mn"), col("mx"), col("ivf_list")))
-        .observe(obs, avg(col("dist")).as("mean_dist"))
-        .select("vec_id", "code", "mn", "mx", "nrm", "ivf_list")
-        .repartition(col("ivf_list"))
-        .write.format("parquet").partitionBy("ivf_list")
-        .mode("overwrite").saveAsTable(tmp)
-      centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-        .toDF("ivf_list", "centroid")
-        .write.format("parquet").mode("overwrite").saveAsTable(s"${tmp}_centroids")
-      val refDist = obs.get("mean_dist") match {
-        case d: java.lang.Double => d.doubleValue()
-        case _ => 0.0
-      }
-      // ONE property statement on the not-yet-live table: the previous
-      // two-ALTER shape left a window where graft.sq8 was set but
-      // graft.meanDist absent, and a concurrent ivfDrift call threw
-      spark.sql(
-        s"ALTER TABLE $tmp SET TBLPROPERTIES(" +
-          s"'graft.nlist' = '$effNlist', 'graft.nlistRequested' = '$nlist', " +
-          s"'graft.sq8' = 'true', 'graft.meanDist' = '$refDist')")
-      promoteIvfTmp(spark, tmp, tableName)
       (ratio, true)
     } else (ratio, false)
   }
@@ -1367,11 +1311,8 @@ object Ann {
 
   private def validatedSq8Centroids(spark: org.apache.spark.sql.SparkSession,
                                     tableName: String, nProbe: Int): Array[Array[Double]] = {
-    val props = spark.sql(s"SHOW TBLPROPERTIES $tableName").collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-    require(props.get("graft.sq8").contains("true"),
-      s"$tableName carries no graft.sq8 property — not written by writeIvfSq8Index")
-    val nlist = props("graft.nlist").toInt
+    IndexTable.prop(spark, tableName, "graft.sq8", "writeIvfSq8Index")
+    val nlist = IndexTable.prop(spark, tableName, "graft.nlist", "writeIvfSq8Index").toInt
     require(nProbe >= 1 && nProbe <= nlist, s"nProbe must be in [1, $nlist]")
     import spark.implicits._
     spark.table(s"${tableName}_centroids")

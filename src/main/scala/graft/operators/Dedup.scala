@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.util.{IndexBuckets, IndexTable}
 
 /** Document deduplication for large-scale training-data pipelines.
   *
@@ -25,37 +26,6 @@ import org.apache.spark.sql.functions._
   *    (doc × perm) row blowup.
   */
 object Dedup {
-
-  /** Drop a managed table AND its warehouse directory. `DROP TABLE` alone
-    * is not enough across sessions: a fresh in-memory catalog doesn't know
-    * the table, but the previous session's directory survives on disk and
-    * `saveAsTable` then fails with LOCATION_ALREADY_EXISTS. Index writers
-    * call this first so an index rebuild works from any session.
-    */
-  private[graft] def dropManaged(spark: org.apache.spark.sql.SparkSession,
-                                 table: String): Unit = {
-    // resolve the on-disk location from the CATALOG (db-qualified names,
-    // non-default current databases and relocated tables all break a
-    // <warehouse>/<name> reconstruction); for a stale directory with no
-    // catalog entry, the catalog's own default path is the right guess.
-    // External tables are dropped catalog-only — their data isn't ours.
-    val ident = spark.sessionState.sqlParser.parseTableIdentifier(table)
-    val catalog = spark.sessionState.catalog
-    val loc =
-      if (!catalog.tableExists(ident))
-        Some(new org.apache.hadoop.fs.Path(catalog.defaultTablePath(ident)))
-      else {
-        val meta = catalog.getTableMetadata(ident)
-        if (meta.tableType == org.apache.spark.sql.catalyst.catalog.CatalogTableType.MANAGED)
-          Some(new org.apache.hadoop.fs.Path(meta.location))
-        else None
-      }
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    loc.foreach { p =>
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) fs.delete(p, true)
-    }
-  }
 
   /** Compiled shingle kernel (tokens = single-space splits, matching
     * DuckDB `string_split(t, ' ')` + list comprehension for oracle parity).
@@ -208,20 +178,10 @@ object Dedup {
     * co-partitioned — a batch probe shuffles only the batch side.
     */
   def writeLineIndex(indexDocs: DataFrame, tableName: String,
-                     buckets: Int = graft.util.IndexBuckets.Auto): Unit = {
-    dropManaged(indexDocs.sparkSession, tableName)
-    val frame = indexDocs
+                     buckets: Int = IndexBuckets.Auto): Unit =
+    IndexTable.write(indexDocs
       .select(posexplode(split(col("text"), "\n")).as(Seq("idx", "line")))
-      .select("line").distinct()
-    // size-derived by default ([[graft.util.IndexBuckets]]); the resolved
-    // count rides the table properties so appends stay co-bucketed
-    val b = graft.util.IndexBuckets.resolve(frame, buckets)
-    frame.write.format("parquet")
-      .bucketBy(b, "line").sortBy("line")
-      .mode("overwrite").saveAsTable(tableName)
-    indexDocs.sparkSession.sql(
-      s"ALTER TABLE $tableName SET TBLPROPERTIES('graft.buckets' = '$b')")
-  }
+      .select("line").distinct(), tableName, "line", buckets)
 
   /** Append NEW lines to a [[writeLineIndex]] table (daily-batch index
     * maintenance — accepted crawl lines claim their text for tomorrow's
@@ -229,18 +189,8 @@ object Dedup {
     * bucketing is re-validated from the catalog like
     * [[appendToSignatureIndex]].
     */
-  def appendToLineIndex(newLines: DataFrame, tableName: String): Unit = {
-    val spark = newLines.sparkSession
-    val buckets = spark.sql(s"SHOW TBLPROPERTIES $tableName").collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-      .getOrElse("graft.buckets", throw new IllegalArgumentException(
-        s"line index $tableName carries no graft.buckets property — " +
-          "not written by writeLineIndex")).toInt
-    newLines.select("line").distinct()
-      .write.format("parquet")
-      .bucketBy(buckets, "line").sortBy("line")
-      .mode("append").saveAsTable(tableName)
-  }
+  def appendToLineIndex(newLines: DataFrame, tableName: String): Unit =
+    IndexTable.append(newLines.select("line").distinct(), tableName, "line", "writeLineIndex")
 
   /** [[lineDedup]] for a NEW batch against a persisted [[writeLineIndex]]
     * corpus: a batch line survives iff it is NOT claimed by the index AND
@@ -532,26 +482,18 @@ object Dedup {
     * column is retained for parameter validation and debugging.
     */
   def writeSignatureIndex(indexDocs: DataFrame, tableName: String,
-                          buckets: Int = graft.util.IndexBuckets.Auto,
+                          buckets: Int = IndexBuckets.Auto,
                           n: Int = 3, numPerm: Int = 64,
-                          bands: Int = 16): Unit = {
-    dropManaged(indexDocs.sparkSession, tableName)
-    val frame =
-      bandHashes(signaturesFromExploded(shingles(indexDocs, n), numPerm), bands, numPerm)
-        .select(col("doc_id").as("doc_index"), col("band"), col("bh"))
-    // size-derived by default ([[graft.util.IndexBuckets]]); recorded in
-    // the table properties so appends stay co-bucketed
-    val b = graft.util.IndexBuckets.resolve(frame, buckets)
-    frame.write.format("parquet")
-      .bucketBy(b, "bh").sortBy("bh")
-      .mode("overwrite").saveAsTable(tableName)
+                          bands: Int = 16): Unit =
     // sketch parameters ride the table metadata so per-batch validation
     // is a catalog lookup, not an index scan
-    indexDocs.sparkSession.sql(
-      s"ALTER TABLE $tableName SET TBLPROPERTIES(" +
-        s"'graft.n' = '$n', 'graft.numPerm' = '$numPerm', 'graft.bands' = '$bands', " +
-        s"'graft.buckets' = '$b')")
-  }
+    IndexTable.write(bandRows(indexDocs, n, numPerm, bands), tableName, "bh", buckets,
+      "graft.n" -> n, "graft.numPerm" -> numPerm, "graft.bands" -> bands)
+
+  /** A corpus's signature-index rows: (doc_index, band, bh). */
+  private def bandRows(docs: DataFrame, n: Int, numPerm: Int, bands: Int): DataFrame =
+    bandHashes(signaturesFromExploded(shingles(docs, n), numPerm), bands, numPerm)
+      .select(col("doc_id").as("doc_index"), col("band"), col("bh"))
 
   /** Append a NEW batch's band hashes to a persisted
     * [[writeSignatureIndex]] table — the daily-batch maintenance path
@@ -569,19 +511,10 @@ object Dedup {
     * size. Callers own doc_id uniqueness across appends.
     */
   def appendToSignatureIndex(newDocs: DataFrame, tableName: String): Unit = {
-    val spark = newDocs.sparkSession
-    val props = spark.sql(s"SHOW TBLPROPERTIES $tableName").collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-    def prop(key: String): Int = props.getOrElse(key, throw new IllegalArgumentException(
-      s"signature index $tableName carries no $key property — " +
-        "not written by writeSignatureIndex")).toInt
+    def prop(key: String): Int =
+      IndexTable.prop(newDocs.sparkSession, tableName, key, "writeSignatureIndex").toInt
     val (n, numPerm, bands) = (prop("graft.n"), prop("graft.numPerm"), prop("graft.bands"))
-    val buckets = prop("graft.buckets")
-    bandHashes(signaturesFromExploded(shingles(newDocs, n), numPerm), bands, numPerm)
-      .select(col("doc_id").as("doc_index"), col("band"), col("bh"))
-      .write.format("parquet")
-      .bucketBy(buckets, "bh").sortBy("bh")
-      .mode("append").saveAsTable(tableName)
+    IndexTable.append(bandRows(newDocs, n, numPerm, bands), tableName, "bh", "writeSignatureIndex")
   }
 
   /** Table-name entry point: validates n/numPerm/bands against the
@@ -592,17 +525,14 @@ object Dedup {
                                indexDocs: DataFrame, n: Int, numPerm: Int,
                                bands: Int, threshold: Double): DataFrame = {
     val spark = newDocs.sparkSession
-    val props = spark.sql(s"SHOW TBLPROPERTIES $indexTable").collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
     for ((key, expected) <- Seq("graft.n" -> n, "graft.numPerm" -> numPerm,
         "graft.bands" -> bands)) {
       // absent property = index not written by writeSignatureIndex; fail
       // loudly rather than silently skip validation (a parameter mismatch
-      // silently ADMITS near-dups — the exact hazard validation exists for)
-      val v = props.getOrElse(key, throw new IllegalArgumentException(
-        s"signature index $indexTable carries no $key property — " +
-          "not written by writeSignatureIndex; use the DataFrame overload " +
-          "with validateBands = true if the parameters are pinned elsewhere"))
+      // silently ADMITS near-dups — the exact hazard validation exists for;
+      // the DataFrame overload with validateBands = true serves indexes
+      // whose parameters are pinned elsewhere)
+      val v = IndexTable.prop(spark, indexTable, key, "writeSignatureIndex")
       require(v == expected.toString,
         s"signature index $indexTable was written with $key=$v, caller expects $expected")
     }
@@ -834,7 +764,7 @@ object Dedup {
     * document, appended as the corpus grows.
     */
   def writeSimhashIndex(indexDocs: DataFrame, tableName: String,
-                        buckets: Int = graft.util.IndexBuckets.Auto,
+                        buckets: Int = IndexBuckets.Auto,
                         maxHamming: Int = 3): Unit =
     writeSigIndex(simhash(indexDocs), tableName, buckets, maxHamming)
 
@@ -845,23 +775,18 @@ object Dedup {
     * on the signature being 64 bits, not on what produced it.
     */
   def writeSigIndex(sigs: DataFrame, tableName: String,
-                    buckets: Int = graft.util.IndexBuckets.Auto,
+                    buckets: Int = IndexBuckets.Auto,
                     maxHamming: Int = 3): Unit = {
     require(maxHamming >= 0 && maxHamming <= 31, "maxHamming must be in [0, 31]")
-    dropManaged(sigs.sparkSession, tableName)
-    val frame = simhashBanded(sigs, maxHamming)
+    IndexTable.write(bandedSigs(sigs, maxHamming), tableName, "sk", buckets,
+      "graft.maxHamming" -> maxHamming)
+  }
+
+  /** A signature frame's index rows: (doc_index, sig_index, band, sk). */
+  private def bandedSigs(sigs: DataFrame, maxHamming: Int): DataFrame =
+    simhashBanded(sigs, maxHamming)
       .select(col("doc_id").as("doc_index"), col("sig").as("sig_index"),
         col("band"), xxhash64(col("band"), col("seg")).as("sk"))
-    // size-derived by default ([[graft.util.IndexBuckets]]); recorded in
-    // the table properties so appends stay co-bucketed
-    val b = graft.util.IndexBuckets.resolve(frame, buckets)
-    frame.write.format("parquet")
-      .bucketBy(b, "sk").sortBy("sk")
-      .mode("overwrite").saveAsTable(tableName)
-    sigs.sparkSession.sql(
-      s"ALTER TABLE $tableName SET TBLPROPERTIES(" +
-        s"'graft.maxHamming' = '$maxHamming', 'graft.buckets' = '$b')")
-  }
 
   /** Append a NEW batch's banded signatures to a persisted
     * [[writeSimhashIndex]] table — same maintenance contract as
@@ -877,20 +802,9 @@ object Dedup {
     * [[writeSigIndex]].
     */
   def appendToSigIndex(newSigs: DataFrame, tableName: String): Unit = {
-    val spark = newSigs.sparkSession
-    val props = spark.sql(s"SHOW TBLPROPERTIES $tableName").collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-    def prop(key: String): Int = props.getOrElse(key, throw new IllegalArgumentException(
-      s"signature index $tableName carries no $key property — " +
-        "not written by writeSigIndex")).toInt
-    val maxHamming = prop("graft.maxHamming")
-    val buckets = prop("graft.buckets")
-    simhashBanded(newSigs, maxHamming)
-      .select(col("doc_id").as("doc_index"), col("sig").as("sig_index"),
-        col("band"), xxhash64(col("band"), col("seg")).as("sk"))
-      .write.format("parquet")
-      .bucketBy(buckets, "sk").sortBy("sk")
-      .mode("append").saveAsTable(tableName)
+    val maxHamming =
+      IndexTable.prop(newSigs.sparkSession, tableName, "graft.maxHamming", "writeSigIndex").toInt
+    IndexTable.append(bandedSigs(newSigs, maxHamming), tableName, "sk", "writeSigIndex")
   }
 
   /** Corpus-level overlap triage — the k-min-value Jaccard estimator
@@ -957,13 +871,16 @@ object Dedup {
   def writeOverlapSketch(corpus: DataFrame, tableName: String, n: Int = 3,
                          numPerm: Int = 32): Unit = {
     val spark = corpus.sparkSession
-    dropManaged(spark, tableName)
+    IndexTable.drop(spark, tableName)
     permMins(corpus, n, numPerm, "min_a")
       .write.format("parquet").mode("overwrite").saveAsTable(tableName)
-    spark.sql(
-      s"ALTER TABLE $tableName SET TBLPROPERTIES(" +
-        s"'graft.n' = '$n', 'graft.numPerm' = '$numPerm')")
+    IndexTable.setProps(spark, tableName, "graft.n" -> n, "graft.numPerm" -> numPerm)
   }
+
+  /** One sketch parameter of a [[writeOverlapSketch]] table. */
+  private def sketchProp(spark: org.apache.spark.sql.SparkSession, tableName: String,
+                         key: String): Int =
+    IndexTable.prop(spark, tableName, key, "writeOverlapSketch").toInt
 
   /** Fold a NEW batch of documents into a [[writeOverlapSketch]] table:
     * per-perm min is trivially mergeable (min(min(A), min(B)) =
@@ -978,12 +895,8 @@ object Dedup {
   def mergeIntoOverlapSketch(newDocs: DataFrame, tableName: String): Unit = {
     val spark = newDocs.sparkSession
     import spark.implicits._
-    val props = spark.sql(s"SHOW TBLPROPERTIES $tableName").collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-    def prop(key: String): Int = props.getOrElse(key, throw new IllegalArgumentException(
-      s"overlap sketch $tableName carries no $key property — " +
-        "not written by writeOverlapSketch")).toInt
-    val (n, numPerm) = (prop("graft.n"), prop("graft.numPerm"))
+    val (n, numPerm) =
+      (sketchProp(spark, tableName, "graft.n"), sketchProp(spark, tableName, "graft.numPerm"))
     val stored = spark.table(tableName).as[(Int, Long)].collect().toMap
     val batch = permMins(newDocs, n, numPerm, "min_a")
       .as[(Int, Long)].collect().toMap
@@ -1009,13 +922,9 @@ object Dedup {
   def corpusOverlapAgainstSketch(newCorpus: DataFrame,
                                  tableName: String): DataFrame = {
     val spark = newCorpus.sparkSession
-    val props = spark.sql(s"SHOW TBLPROPERTIES $tableName").collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-    def prop(key: String): Int = props.getOrElse(key, throw new IllegalArgumentException(
-      s"overlap sketch $tableName carries no $key property — " +
-        "not written by writeOverlapSketch")).toInt
-    overlapFromMins(spark.table(tableName),
-      permMins(newCorpus, prop("graft.n"), prop("graft.numPerm"), "min_b"))
+    overlapFromMins(spark.table(tableName), permMins(newCorpus,
+      sketchProp(spark, tableName, "graft.n"), sketchProp(spark, tableName, "graft.numPerm"),
+      "min_b"))
   }
 
   /** The exact tier of [[corpusOverlap]]: |A∩B| / |A∪B| over the two
@@ -1040,78 +949,22 @@ object Dedup {
     * [[appendToSignatureIndex]]/[[appendToSigIndex]]/[[appendToLineIndex]]
     * batch adds one file per bucket, so after D daily appends a probe
     * opens D files per matching bucket — the classic small-file creep of
-    * any append-only store. Compaction snapshots the table
-    * (localCheckpoint — the overwrite drops the very files being read),
-    * rewrites it in one bucketed pass, and restores every `graft.*`
-    * property the overwrite discarded. The bucket count is re-derived
-    * from the table's current size through [[graft.util.IndexBuckets]]
-    * (the count latched at the seed write was sized for the seed, not
-    * for the table as it has grown) and `graft.buckets` records the new
-    * count, so later appends and probes stay co-partitioned with the
-    * rewritten files. Content and probe results
-    * are unchanged by construction — every probe joins on the full
-    * bucket key (spec-pinned); run it on the maintenance cadence,
-    * cost = one index-sized bucketed write.
+    * any append-only store. [[graft.util.IndexTable.rewrite]] copies the
+    * table through a tmp table in one bucketed pass per phase, keeps every
+    * `graft.*` property, and re-derives the bucket count from the table's
+    * current size through [[graft.util.IndexBuckets]] (the count latched
+    * at the seed write was sized for the seed, not for the table as it
+    * has grown); `graft.buckets` records the new count, so later appends
+    * and probes stay co-partitioned with the rewritten files. `bucketCol`
+    * names the table's bucket column; the rewrite keeps the catalog's
+    * bucket spec. Content and probe results are unchanged by construction
+    * — every probe joins on the full bucket key (spec-pinned); run it on
+    * the maintenance cadence, cost = two index-sized bucketed writes.
     */
   def compactIndex(spark: org.apache.spark.sql.SparkSession, tableName: String,
                    bucketCol: String): Unit = {
-    val seeded = spark.sql(s"SHOW TBLPROPERTIES $tableName").collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-      .filter { case (k, _) => k.startsWith("graft.") }
-    require(seeded.contains("graft.buckets"),
-      s"$tableName carries no graft.buckets property — not a graft index table")
-    // Two-phase copy through a TMP table: the previous shape snapshotted
-    // to executor-memory localCheckpoint blocks and overwrote the ONLY
-    // copy — an executor lost mid-rewrite destroyed the accumulated
-    // index unrecoverably (blocks are not recomputable once the table is
-    // dropped). Now phase 1 writes the compacted copy to disk while the
-    // live index stays intact (a failed write changes nothing), and
-    // phase 2 rebuilds the live table FROM the tmp table's parquet files
-    // — disk-backed, so task retries after executor loss just re-read.
-    // The crash window is phase 2 after the drop: the tmp table then
-    // still holds the full content (recovery: re-run phase 2 by hand).
-    // Costs one extra index write vs the unsafe shape — maintenance
-    // cadence work, bought for crash safety. (ALTER TABLE RENAME would
-    // avoid the second write but does not reliably carry partitioned
-    // managed-table data in the in-memory catalog.)
-    // read the source as PLAIN parquet files, not the catalog table: the
-    // bucketed-table scan advertises HashPartitioning(bucketCol), the
-    // optimizer then ELIMINATES the repartition below as redundant, and
-    // when the bucketed scan is auto-disabled as not-beneficial the
-    // writer inherits one partition per FILE — the "compaction" emits as
-    // many files as it read (observed: 8 → 8). A plain file scan claims
-    // no partitioning, so the repartition always survives. The data path
-    // comes from the CATALOG, never reconstructed from the warehouse dir:
-    // db-qualified names ("db.tbl"), a non-default current database
-    // (<warehouse>/<db>.db/<tbl>) and relocated tables all break the
-    // naive <warehouse>/<name> guess.
-    def filesOf(table: String): DataFrame = {
-      val ident = spark.sessionState.sqlParser.parseTableIdentifier(table)
-      val loc = spark.sessionState.catalog.getTableMetadata(ident).location
-      spark.read.parquet(loc.toString)
-    }
-    // sized from the live table's files (a plain scan's estimate is their
-    // on-disk bytes); the graft.index.* overrides apply as at a seed write
-    val buckets = graft.util.IndexBuckets.resolve(filesOf(tableName), graft.util.IndexBuckets.Auto)
-    val props = seeded + ("graft.buckets" -> buckets.toString)
-    def writeAs(df: DataFrame, to: String): Unit = {
-      // one writing task per hash partition of the bucket key — without
-      // this, every reader partition emits its own file per bucket and
-      // the "compaction" leaves the file count unchanged
-      df.repartition(buckets, col(bucketCol))
-        .write.format("parquet")
-        .bucketBy(buckets, bucketCol).sortBy(bucketCol)
-        .mode("overwrite").saveAsTable(to)
-      val kv = props.map { case (k, v) => s"'$k' = '$v'" }.mkString(", ")
-      spark.sql(s"ALTER TABLE $to SET TBLPROPERTIES($kv)")
-    }
-    val tmp = s"${tableName}_compact_tmp"
-    dropManaged(spark, tmp)
-    writeAs(filesOf(tableName), tmp)
-    val staged = filesOf(tmp)
-    dropManaged(spark, tableName)
-    writeAs(staged, tableName)
-    dropManaged(spark, tmp)
+    IndexTable.prop(spark, tableName, "graft.buckets", "an index writer")
+    IndexTable.rewrite(spark, tableName, s"${tableName}_compact_tmp")()
   }
 
   /** Incremental SimHash near-dups against a PERSISTED index
@@ -1137,11 +990,7 @@ object Dedup {
                            maxHamming: Int = 3): DataFrame = {
     require(maxHamming >= 0 && maxHamming <= 31, "maxHamming must be in [0, 31]")
     val spark = newSigs.sparkSession
-    val props = spark.sql(s"SHOW TBLPROPERTIES $indexTable").collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-    val v = props.getOrElse("graft.maxHamming", throw new IllegalArgumentException(
-      s"signature index $indexTable carries no graft.maxHamming property — " +
-        "not written by writeSigIndex"))
+    val v = IndexTable.prop(spark, indexTable, "graft.maxHamming", "writeSigIndex")
     require(v == maxHamming.toString,
       s"signature index $indexTable was written with maxHamming=$v, caller expects $maxHamming")
     val bandsNew = simhashBanded(newSigs, maxHamming)

@@ -1117,18 +1117,9 @@ object LinkGraph {
     * index families.
     */
   def writeEdgeIndex(edges: DataFrame, tableName: String,
-                     buckets: Int = graft.util.IndexBuckets.Auto): Unit = {
-    Dedup.dropManaged(edges.sparkSession, tableName)
-    val frame = edges.select(col("src"), col("dst")).distinct()
-    // size-derived by default ([[graft.util.IndexBuckets]]); the resolved
-    // count rides the table properties so appends stay co-bucketed
-    val b = graft.util.IndexBuckets.resolve(frame, buckets)
-    frame.write.format("parquet")
-      .bucketBy(b, "src").sortBy("src")
-      .mode("overwrite").saveAsTable(tableName)
-    edges.sparkSession.sql(
-      s"ALTER TABLE $tableName SET TBLPROPERTIES('graft.buckets' = '$b')")
-  }
+                     buckets: Int = graft.util.IndexBuckets.Auto): Unit =
+    graft.util.IndexTable.write(edges.select(col("src"), col("dst")).distinct(),
+      tableName, "src", buckets)
 
   /** Append a new batch of edges (daily-crawl shape) to a
     * [[writeEdgeIndex]] table; bucketing re-validated from the catalog
@@ -1139,23 +1130,9 @@ object LinkGraph {
     * grouping distribution, so the dedup costs no Exchange), which is
     * what makes retrying a failed append idempotent.
     */
-  def appendToEdgeIndex(newEdges: DataFrame, tableName: String): Unit = {
-    val spark = newEdges.sparkSession
-    val buckets = spark.sql(s"SHOW TBLPROPERTIES $tableName").collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-      .getOrElse("graft.buckets", throw new IllegalArgumentException(
-        s"edge index $tableName carries no graft.buckets property — " +
-          "not written by writeEdgeIndex")).toInt
-    newEdges.select(col("src"), col("dst")).distinct()
-      .write.format("parquet")
-      .bucketBy(buckets, "src").sortBy("src")
-      .mode("append").saveAsTable(tableName)
-    // drop the session's cached relation (file listing included): a
-    // reader that already scanned this table — the previous micro-batch
-    // of a streaming append→recompute loop — would otherwise keep
-    // serving the PRE-append file set and silently miss the new edges
-    spark.catalog.refreshTable(tableName)
-  }
+  def appendToEdgeIndex(newEdges: DataFrame, tableName: String): Unit =
+    graft.util.IndexTable.append(newEdges.select(col("src"), col("dst")).distinct(),
+      tableName, "src", "writeEdgeIndex")
 
   /** The deduplicated edge view of an index table — cross-append
     * duplicate (src, dst) pairs collapse without an Exchange (the

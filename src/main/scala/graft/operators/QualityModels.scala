@@ -113,7 +113,7 @@ object QualityModels {
          log((col("cn") + 1).cast("double") / (col("nn") + col("v")))).as("w"))
     // clears both the catalog entry and any orphan warehouse directory a
     // previous session left behind (LOCATION_ALREADY_EXISTS otherwise)
-    Dedup.dropManaged(spark, tableName)
+    graft.util.IndexTable.drop(spark, tableName)
     weights.write.format("parquet").mode("overwrite").saveAsTable(tableName)
     // the scalars go through the SAME Catalyst log as the per-token
     // weights (a driver-side math.log can differ from the expression
@@ -128,8 +128,8 @@ object QualityModels {
         (log(lit(1.0) / (col("np") + col("v"))) -
          log(lit(1.0) / (col("nn") + col("v")))).as("w0"))
       .collect()
-    spark.sql(s"ALTER TABLE $tableName SET TBLPROPERTIES(" +
-      s"'graft.prior' = '${sc.getDouble(0)}', 'graft.w0' = '${sc.getDouble(1)}')")
+    graft.util.IndexTable.setProps(spark, tableName,
+      "graft.prior" -> sc.getDouble(0), "graft.w0" -> sc.getDouble(1))
   }
 
   /** Score docs against a persisted [[writeNbModel]] table: explode →
@@ -141,12 +141,9 @@ object QualityModels {
     */
   def scoreAgainstModel(docs: DataFrame, tableName: String): DataFrame = {
     val spark = docs.sparkSession
-    val props = spark.sql(s"SHOW TBLPROPERTIES $tableName").collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-    require(props.contains("graft.prior") && props.contains("graft.w0"),
-      s"$tableName carries no graft.prior/graft.w0 — not written by writeNbModel")
-    val prior = props("graft.prior").toDouble
-    val w0 = props("graft.w0").toDouble
+    def prop(key: String): Double =
+      graft.util.IndexTable.prop(spark, tableName, key, "writeNbModel").toDouble
+    val (prior, w0) = (prop("graft.prior"), prop("graft.w0"))
     val contrib = docs.select(col("doc_id"), explode(tokens).as("t"))
       .join(spark.table(tableName), Seq("t"), "left")
       .select(col("doc_id"), coalesce(col("w"), lit(w0)).as("w"))

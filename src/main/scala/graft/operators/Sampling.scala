@@ -237,7 +237,7 @@ object Sampling {
     require(docs.schema(key).dataType == org.apache.spark.sql.types.LongType,
       s"weighted-sample state requires a LongType key column, got " +
         s"'$key': ${docs.schema(key).dataType.simpleString}")
-    graft.operators.Dedup.dropManaged(spark, tableName)
+    graft.util.IndexTable.drop(spark, tableName)
     // state carries only (id, raw key): the sample's identity — weights
     // are re-joinable from source, and a weight-typed column would make
     // the state schema depend on the weight column's type. The es_key is
@@ -246,10 +246,8 @@ object Sampling {
     topKRaw(docs, weightCol, k, key, salt)
       .select(col(key), col("__es_raw").as("es_key"))
       .write.format("parquet").mode("overwrite").saveAsTable(tableName)
-    spark.sql(
-      s"ALTER TABLE $tableName SET TBLPROPERTIES(" +
-        s"'graft.weightCol' = '$weightCol', 'graft.k' = '$k', " +
-        s"'graft.salt' = '$salt', 'graft.key' = '$key')")
+    graft.util.IndexTable.setProps(spark, tableName, "graft.weightCol" -> weightCol,
+      "graft.k" -> k, "graft.salt" -> salt, "graft.key" -> key)
   }
 
   /** Fold a new batch into a [[writeWeightedSampleState]] table: batch
@@ -261,11 +259,9 @@ object Sampling {
   def mergeIntoWeightedSample(newDocs: DataFrame, tableName: String): Unit = {
     val spark = newDocs.sparkSession
     import spark.implicits._
-    val props = spark.sql(s"SHOW TBLPROPERTIES $tableName").collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-    def prop(key: String): String = props.getOrElse(key, throw new IllegalArgumentException(
-      s"weighted-sample state $tableName carries no $key property — " +
-        "not written by writeWeightedSampleState"))
+    val props = graft.util.IndexTable.props(spark, tableName)
+    def prop(key: String): String =
+      graft.util.IndexTable.prop(spark, tableName, key, "writeWeightedSampleState")
     val (weightCol, k, salt) = (prop("graft.weightCol"), prop("graft.k").toInt,
       prop("graft.salt"))
     // graft.key arrived WITH the raw-key state format: a table lacking it

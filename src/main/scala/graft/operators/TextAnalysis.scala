@@ -632,7 +632,7 @@ object TextAnalysis {
         countDistinct(col("doc_id")).as("df"))
 
   def writeVocabIndex(docs: DataFrame, tableName: String): Unit = {
-    Dedup.dropManaged(docs.sparkSession, tableName)
+    graft.util.IndexTable.drop(docs.sparkSession, tableName)
     vocabPartials(docs)
       .write.format("parquet").mode("overwrite").saveAsTable(tableName)
   }

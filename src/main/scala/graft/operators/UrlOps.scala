@@ -694,19 +694,11 @@ object UrlOps {
   def writeUrlIndex(df: DataFrame, urlCol: String, tableName: String,
                     buckets: Int = graft.util.IndexBuckets.Auto,
                     claimedAtCol: Option[String] = None): Unit = {
-    Dedup.dropManaged(df.sparkSession, tableName)
     val at = claimedAtCol.map(c => col(c).cast("long")).getOrElse(lit(0L))
-    val frame = df.select(canonicalizeUrl(col(urlCol)).as("canon_url"),
-        at.as("claimed_at"))
-      .groupBy("canon_url").agg(max("claimed_at").as("claimed_at"))
-    // size-derived by default ([[graft.util.IndexBuckets]]); the resolved
-    // count rides the table properties so appends stay co-bucketed
-    val b = graft.util.IndexBuckets.resolve(frame, buckets)
-    frame.write.format("parquet")
-      .bucketBy(b, "canon_url").sortBy("canon_url")
-      .mode("overwrite").saveAsTable(tableName)
-    df.sparkSession.sql(
-      s"ALTER TABLE $tableName SET TBLPROPERTIES('graft.buckets' = '$b')")
+    graft.util.IndexTable.write(
+      df.select(canonicalizeUrl(col(urlCol)).as("canon_url"), at.as("claimed_at"))
+        .groupBy("canon_url").agg(max("claimed_at").as("claimed_at")),
+      tableName, "canon_url", buckets)
   }
 
   /** Append newly-claimed canonical URLs (a `canon_url` column, plus
@@ -718,19 +710,12 @@ object UrlOps {
     * the streaming gate's retry path idempotent.
     */
   def appendToUrlIndex(newUrls: DataFrame, tableName: String): Unit = {
-    val spark = newUrls.sparkSession
-    val buckets = spark.sql(s"SHOW TBLPROPERTIES $tableName").collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-      .getOrElse("graft.buckets", throw new IllegalArgumentException(
-        s"url index $tableName carries no graft.buckets property — " +
-          "not written by writeUrlIndex")).toInt
     val at = if (newUrls.columns.contains("claimed_at"))
       col("claimed_at").cast("long") else lit(0L)
-    newUrls.select(col("canon_url"), at.as("claimed_at"))
-      .groupBy("canon_url").agg(max("claimed_at").as("claimed_at"))
-      .write.format("parquet")
-      .bucketBy(buckets, "canon_url").sortBy("canon_url")
-      .mode("append").saveAsTable(tableName)
+    graft.util.IndexTable.append(
+      newUrls.select(col("canon_url"), at.as("claimed_at"))
+        .groupBy("canon_url").agg(max("claimed_at").as("claimed_at")),
+      tableName, "canon_url", "writeUrlIndex")
   }
 
   /** Rows of `df` whose canonical URL is NOT yet claimed by the index —

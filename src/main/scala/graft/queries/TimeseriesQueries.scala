@@ -177,7 +177,10 @@ object TimeseriesQueries {
     * at each row's own midnight (width = span/least(360, span/900)) with
     * AVG; span > 1 day → daily MAX (column deliberately still named
     * `avg_measurement_number`, as in the reference at
-    * `db/get_aggregated_data_by_day.sql:45`).
+    * `db/get_aggregated_data_by_day.sql:45`). Midnight is the UTC day's
+    * ([[ConditionsTable.utcDay]], the store's `date` key), in any session
+    * time zone; PG's `date_trunc` follows `TimeZone`, which the reference
+    * deployment runs at UTC.
     */
   def aggregatedDataByDay(conditions: DataFrame, subject: String, of: String,
                           startS: Long, endS: Long): DataFrame = {
@@ -197,7 +200,7 @@ object TimeseriesQueries {
       // bit-identical to PG's numeric floor — and widthUs is a whole number
       // of seconds here, so the µs bucket is losslessly emitted as time_s.
       val widthUs = math.rint(span * 1e6 / math.min(360.0, span / 900.0)).toLong
-      val dayUs = unix_micros(date_trunc("day", col("timestamp")))
+      val dayUs = ConditionsTable.utcDay(col("timestamp")) * 86400000000L
       val tsUs = unix_micros(col("timestamp"))
       // µs magnitudes (≤ ~1.7e15) are exactly representable in double, so
       // the double floor-division is exact at bucket boundaries
@@ -205,8 +208,7 @@ object TimeseriesQueries {
       inOrder(base.groupBy((bucketUs / lit(1e6)).cast("long").as("time_s"))
         .agg(avg("measurement_number").as("avg_measurement_number")), "time_s")
     } else {
-      inOrder(base.groupBy((unix_micros(date_trunc("day", col("timestamp"))) / 1000000L)
-          .cast("long").as("time_s"))
+      inOrder(base.groupBy((ConditionsTable.utcDay(col("timestamp")) * 86400L).as("time_s"))
         .agg(max("measurement_number").as("avg_measurement_number")), "time_s")
     }
   }

@@ -30,8 +30,13 @@ object ConditionsTable {
     * in one zone reads back whole in any other. Every writer of a
     * date-partitioned frame derives its key here.
     */
-  def dateKey: Column =
-    date_from_unix_date(floor(unix_seconds(col("timestamp")) / 86400).cast("int"))
+  def dateKey: Column = date_from_unix_date(utcDay(col("timestamp")).cast("int"))
+
+  /** Days since the epoch of the UTC day holding the instant `ts` (a
+    * long): the one day formula of [[dateKey]] and of the queries that
+    * bucket by day, independent of the session time zone.
+    */
+  def utcDay(ts: Column): Column = floor(unix_seconds(ts) / 86400)
 
   /** Partition predicate for [[dateKey]]-partitioned frames: keeps the
     * dates that can hold a `timestamp` in [startS, endS] (epoch seconds).

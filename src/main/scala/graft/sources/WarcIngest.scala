@@ -232,39 +232,21 @@ object WarcIngest {
     * shuffles.
     */
   def writeDigestIndex(parsed: DataFrame, tableName: String,
-                       buckets: Int = graft.util.IndexBuckets.Auto): Unit = {
-    graft.operators.Dedup.dropManaged(parsed.sparkSession, tableName)
-    val frame = parsed.filter(col("warc_type") === "response")
+                       buckets: Int = graft.util.IndexBuckets.Auto): Unit =
+    graft.util.IndexTable.write(responseDigests(parsed), tableName, "dig", buckets)
+
+  /** The distinct effective digests of a parsed batch's RESPONSE records. */
+  private def responseDigests(parsed: DataFrame): DataFrame =
+    parsed.filter(col("warc_type") === "response")
       .select(effectiveDigest.as("dig")).distinct()
-    // size-derived by default ([[graft.util.IndexBuckets]]); the resolved
-    // count rides the table properties so appends stay co-bucketed
-    val b = graft.util.IndexBuckets.resolve(frame, buckets)
-    frame.write.format("parquet")
-      .bucketBy(b, "dig").sortBy("dig")
-      .mode("overwrite").saveAsTable(tableName)
-    parsed.sparkSession.sql(
-      s"ALTER TABLE $tableName SET TBLPROPERTIES('graft.buckets' = '$b')")
-  }
 
   /** Append a batch's digests (idempotent: duplicate digests are
     * harmless index state — the probe is an anti-join). Refreshes the
     * writing session's cached relation, the [[graft.operators
     * .LinkGraph.appendToEdgeIndex]] rule.
     */
-  def appendToDigestIndex(parsed: DataFrame, tableName: String): Unit = {
-    val spark = parsed.sparkSession
-    val buckets = spark.sql(s"SHOW TBLPROPERTIES $tableName").collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-      .getOrElse("graft.buckets", throw new IllegalArgumentException(
-        s"digest index $tableName carries no graft.buckets property — " +
-          "not written by writeDigestIndex")).toInt
-    parsed.filter(col("warc_type") === "response")
-      .select(effectiveDigest.as("dig")).distinct()
-      .write.format("parquet")
-      .bucketBy(buckets, "dig").sortBy("dig")
-      .mode("append").saveAsTable(tableName)
-    spark.catalog.refreshTable(tableName)
-  }
+  def appendToDigestIndex(parsed: DataFrame, tableName: String): Unit =
+    graft.util.IndexTable.append(responseDigests(parsed), tableName, "dig", "writeDigestIndex")
 
   /** The RESPONSE records of a parsed batch whose effective digest is
     * NOT in a [[writeDigestIndex]] table — the novel content a fetch

@@ -3,7 +3,7 @@ package graft.streaming
 import graft.convert.{Bmw, Converters}
 import graft.model.TimeseriesRecord
 import graft.sources.ConditionsTable
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -162,38 +162,20 @@ object IngestPipeline {
     startConditionsSink(graft.sources.WireRecords.decode(readText(spark, wire)),
       outputDir, checkpointDir, trigger)
 
-  /** BMW `lastUpdatedAt` → TimestampType: trim sub-µs digits (BMW emits up
-    * to 7 fractional digits; Spark parses ≤ 6), preserving ANY zone tail —
-    * `Z`/`z` (uppercased — ANSI cast rejects lowercase), `+01:00`, `-0800`,
-    * hour-only `+01`. An offset-suffixed timestamp used to miss the old
-    * `(\.\d{6})\d*(Z?)$` pattern, keep its 7th digit, parse to null and be
-    * silently dropped by the watermark. `try_to_timestamp` because under
-    * ANSI semantics a plain cast THROWS on malformed input — one bad
-    * record would kill the whole stream instead of dead-lettering.
-    */
-  def normalizedEventTime(lastUpdatedAt: Column): Column =
-    try_to_timestamp(translate(regexp_replace(
-      lastUpdatedAt, "(\\.\\d{6})\\d*([Zz]|[+-]\\d{2}(?::?\\d{2})?)?$", "$1$2"),
-      "z", "Z"))
-
-  /** BMW-side dedup + convert (A23/A21): extract the (vin, lastUpdatedAt)
-    * key, drop duplicates within a 1-day watermark (the poll cadence is
-    * 10 min, so a day of dedup state safely covers the reference's
-    * semantics while keeping state bounded — the Azure Table grew forever),
-    * then explode vehicle state into atomic records.
+  /** BMW-side dedup + convert (A23/A21): parse each poll once into its
+    * (vin, lastUpdatedAt) key, its event instant and its records
+    * ([[Bmw.parsePoll]]; a malformed poll or an unparseable time is
+    * dropped there), drop duplicate keys within a 1-day watermark on that
+    * instant (the poll cadence is 10 min, so a day of dedup state safely
+    * covers the reference's semantics while keeping state bounded — the
+    * Azure Table grew forever), then explode the records.
     */
   def bmwDeduped(raw: Dataset[String]): Dataset[TimeseriesRecord] = {
     import raw.sparkSession.implicits._
-    val keyed = raw
-      .select(col("value"),
-        get_json_object(col("value"), "$.vin").as("vin"),
-        get_json_object(col("value"), "$.state.lastUpdatedAt").as("last_updated_at"))
-      .filter(col("vin").isNotNull && col("last_updated_at").isNotNull)
-      .withColumn("event_time", normalizedEventTime(col("last_updated_at")))
-      .withWatermark("event_time", "1 day")
-      .dropDuplicatesWithinWatermark("vin", "last_updated_at")
-    keyed.select(col("value")).as[String]
-      .flatMap(s => Bmw.convertMessage(s).getOrElse(Vector.empty))
+    raw.flatMap(Bmw.parsePoll(_))
+      .withWatermark("eventTime", "1 day")
+      .dropDuplicatesWithinWatermark("vin", "lastUpdatedAt")
+      .flatMap(_.records)
   }
 
   /** BMW pipeline with the reference's dual-sink fan-out (A6): every

@@ -66,8 +66,7 @@ object IndexLayoutProbe {
     for ((label, buckets) <- Seq(
         "before" -> 64, "after" -> graft.util.IndexBuckets.Auto)) {
       graft.operators.LinkGraph.writeEdgeIndex(edges, "ilp_edge_idx", buckets)
-      val props = spark.sql("SHOW TBLPROPERTIES ilp_edge_idx").collect()
-        .map(r => r.getString(0) -> r.getString(1)).toMap
+      val props = graft.util.IndexTable.props(spark, "ilp_edge_idx")
       val loc = spark.sql("DESCRIBE TABLE EXTENDED ilp_edge_idx").collect()
         .find(_.getString(0) == "Location").map(_.getString(1)).getOrElse("?")
       val nFiles = {

@@ -27,11 +27,12 @@ import org.apache.spark.sql.DataFrame
   * lines, URLs or digests) over-derives its count by the duplication
   * factor. The derived count is clamped to
   * `spark.sql.sources.bucketing.maxBuckets` (Spark refuses a bucketed
-  * write above it) and to 2^20. The count is recorded in
-  * the table properties so every APPEND reuses the write-time value
-  * (bucket count latches at first write — like stream state partitions,
-  * see [[StreamParallelism]]) until [[graft.operators.Dedup.compactIndex]]
-  * rewrites the table and derives the count again from its current size.
+  * write above it) and to 2^20. [[IndexTable.write]] resolves the count
+  * here and records it as `graft.buckets`, so every [[IndexTable.append]]
+  * reuses the write-time value (bucket count latches at first write —
+  * like stream state partitions, see [[StreamParallelism]]) until
+  * [[IndexTable.rewrite]] (behind [[graft.operators.Dedup.compactIndex]])
+  * derives the count again from the table's current size.
   *
   * Probe-parallelism note: a co-partitioned gate join adopts the
   * index's bucket count as the join parallelism when the index is too

@@ -60,6 +60,20 @@ class TimestampsSpec extends AnyFunSuite {
       == java.time.Instant.parse("2022-12-26T14:02:28Z"))
   }
 
+  test("fromStringUtc applies every offset form a BMW poll carries") {
+    val offset = java.time.Instant.parse("2023-10-27T20:55:00.123457Z")
+    Seq("2023-10-27T21:55:00.1234567+01:00", "2023-10-27T19:55:00.1234567-0100",
+        "2023-10-27T21:55:00.1234567+01", "2023-10-27T20:55:00.1234567z",
+        "2023-10-27T20:55:00.1234567Z")
+      .foreach(raw => assert(Timestamps.fromStringUtc(raw) == offset, raw))
+    assert(Timestamps.fromStringUtc("2023-10-27T21:55:00.0000000Z")
+      == java.time.Instant.parse("2023-10-27T21:55:00Z"))
+    assert(Timestamps.fromStringUtc("2023-10-27T21:55:00Z")
+      == java.time.Instant.parse("2023-10-27T21:55:00Z"))
+    assert(Timestamps.fromStringUtc("2023-10-27T21:55:00.123456Z")
+      == java.time.Instant.parse("2023-10-27T21:55:00.123456Z"))
+  }
+
   test("epoch range check") {
     intercept[IllegalArgumentException](Timestamps.fromEpochSeconds(-1.0))
     intercept[IllegalArgumentException](Timestamps.fromEpochSeconds(253402300800.0))

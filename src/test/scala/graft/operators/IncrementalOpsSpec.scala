@@ -434,6 +434,6 @@ class IncrementalOpsSpec extends AnyFunSuite {
       // append the accepted lines: tomorrow's identical batch is claimed
       Dedup.appendToLineIndex(Seq("nova", "mu").toDF("line"), "line_idx_spec")
       assert(Dedup.lineDedupAgainstIndex(batch, "line_idx_spec").count() == 0)
-    } finally Dedup.dropManaged(spark, "line_idx_spec")
+    } finally graft.util.IndexTable.drop(spark, "line_idx_spec")
   }
 }

@@ -25,7 +25,7 @@ class IncrementalVocabSpec extends AnyFunSuite {
       val direct = TextAnalysis.vocabulary(docs, k = 50)
         .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
       assert(served == direct, "three-slice merge must equal one-shot computation")
-    } finally Dedup.dropManaged(spark, "vocab_spec_idx")
+    } finally graft.util.IndexTable.drop(spark, "vocab_spec_idx")
   }
 
   test("compaction folds append partials without changing served results") {
@@ -42,7 +42,7 @@ class IncrementalVocabSpec extends AnyFunSuite {
       val rowsAfter = spark.table("vocab_cpt_idx").count()
       assert(rowsAfter < rowsBefore,
         s"compaction must fold duplicate token partials: $rowsBefore -> $rowsAfter")
-    } finally Dedup.dropManaged(spark, "vocab_cpt_idx")
+    } finally graft.util.IndexTable.drop(spark, "vocab_cpt_idx")
   }
 
   test("hashEmbed vectors are unit-norm, deterministic, and ANN-compatible") {

@@ -81,7 +81,7 @@ class QualityModelsSpec extends AnyFunSuite {
 
   test("scoreAgainstModel refuses a table not written by writeNbModel") {
     import spark.implicits._
-    Dedup.dropManaged(spark, "nb_spec_bogus")
+    graft.util.IndexTable.drop(spark, "nb_spec_bogus")
     Seq(("x", 0.5)).toDF("t", "w").write.mode("overwrite")
       .saveAsTable("nb_spec_bogus")
     val e = intercept[IllegalArgumentException] {

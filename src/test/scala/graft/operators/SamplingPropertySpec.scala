@@ -250,6 +250,23 @@ class SamplingPropertySpec extends AnyFunSuite {
     }
   }
 
+  test("weighted-sample state seeded with a quoted salt merges like the one-shot draw") {
+    import spark.implicits._
+    val docs = (1L to 60L).map(i => (i, (i % 7 + 1).toDouble)).toDF("doc_id", "w")
+    try {
+      Sampling.writeWeightedSampleState(docs.filter(lit(false)), "ws_quoted", "w", k = 10,
+        salt = "o'brien")
+      Sampling.mergeIntoWeightedSample(docs, "ws_quoted")
+      val merged = spark.table("ws_quoted")
+        .select(col("doc_id"), round(col("es_key"), 6).as("es_key")).collect()
+        .map(r => (r.getLong(0), r.getDouble(1))).sortBy(_._1).toSeq
+      val oneShot = Sampling.weightedSample(docs, "w", k = 10, salt = "o'brien")
+        .select("doc_id", "es_key").collect()
+        .map(r => (r.getLong(0), r.getDouble(1))).sortBy(_._1).toSeq
+      assert(merged == oneShot, s"merged $merged vs one-shot $oneShot")
+    } finally spark.sql("DROP TABLE IF EXISTS ws_quoted")
+  }
+
   test("weightedSample: dominant weight always wins, non-positive weights excluded, partitioning-invariant") {
     import spark.implicits._
     val docs = ((1L to 50L).map(i => (i, 1.0)) :+ (99L, 1e9) :+ (100L, 0.0) :+ (101L, -3.0))

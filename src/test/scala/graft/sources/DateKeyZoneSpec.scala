@@ -69,6 +69,24 @@ class DateKeyZoneSpec extends AnyFunSuite {
     } finally spark.conf.set("spark.sql.session.timeZone", "UTC")
   }
 
+  test("B3 by_day buckets by the UTC day in any session zone") {
+    val path = store // written under UTC
+    val days = Seq(1704067200L, 1704153600L, 1704240000L) // 2024-01-01..03 00:00Z
+    def byDay(a: Long, b: Long): Seq[(Long, Double)] =
+      ConditionsView.fromParquet(spark, path).getAggregatedDataByDay("s1", "temp", a, b)
+        .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    val utcLong = byDay(days.head, days.head + 3 * 86400L)
+    val utcShort = byDay(1704146400L, 1704157200L) // 22:00Z–01:00Z, 900 s grid
+    assert(utcLong.map(_._1) == days)
+    assert(utcShort.nonEmpty)
+    try for (zone <- Seq("America/Los_Angeles", "Asia/Kathmandu")) {
+      spark.conf.set("spark.sql.session.timeZone", zone)
+      assert(byDay(days.head, days.head + 3 * 86400L) == utcLong, zone)
+      assert(byDay(1704146400L, 1704157200L) == utcShort, zone)
+    } finally spark.conf.set("spark.sql.session.timeZone", "UTC")
+  }
+
   test("the date key is the UTC day in any session zone, before the epoch too") {
     import spark.implicits._
     try for (zone <- Seq("America/Los_Angeles", "Pacific/Kiritimati")) {

@@ -195,7 +195,7 @@ class IngestPipelineSpec extends AnyFunSuite {
 
   test("bmw event-time parses offset-suffixed and long-fraction timestamps") {
     import spark.implicits._
-    val df = Seq(
+    val stamps = Seq(
       "2023-10-27T21:55:00.0000000Z",      // 7 digits + Z (the BMW shape)
       "2023-10-27T21:55:00.1234567+01:00", // 7 digits + positive offset
       "2023-10-27T19:55:00.1234567-0100",  // compact negative offset
@@ -203,15 +203,32 @@ class IngestPipelineSpec extends AnyFunSuite {
       "2023-10-27T21:55:00Z",              // no fraction at all
       "2023-10-27T21:55:00.1234567+01",    // hour-only offset
       "2023-10-27T20:55:00.1234567z"       // lowercase z
-    ).toDF("last_updated_at")
-      .select(IngestPipeline.normalizedEventTime(
-        org.apache.spark.sql.functions.col("last_updated_at")).as("t"))
-    val got = df.collect().map(r => Option(r.getTimestamp(0)))
-    assert(got.forall(_.isDefined), s"null event_time rows: ${got.toSeq}")
-    // the offset rows are all the same instant as 20:55:00.123456Z
-    assert(got(1).get.getTime == got(2).get.getTime)
-    assert(got(1).get.getTime == got(5).get.getTime) // +01 == +01:00
-    assert(got(1).get.getTime == got(6).get.getTime) // lowercase z == UTC
+    )
+    // one poll per stamp, each its own vin: the dedup keeps them all, and
+    // each poll's one record is stored at the instant of its event time
+    val polls = stamps.zipWithIndex.map { case (at, i) =>
+      s"""{"vin": "V$i", "state": {"lastUpdatedAt": "$at", "currentMileage": $i}}"""
+    }
+    val in = Files.createTempDirectory("bmw_time_in").toString
+    val out = Files.createTempDirectory("bmw_time_out").toString
+    val mon = Files.createTempDirectory("bmw_time_mon").toString
+    val ckpt = Files.createTempDirectory("bmw_time_ckpt").toString
+    Files.write(java.nio.file.Paths.get(s"$in/polls.txt"), polls.mkString("\n").getBytes)
+    IngestPipeline.startBmw(spark, in, out, mon, ckpt).awaitTermination(60000)
+    val got = spark.read.parquet(out)
+      .selectExpr("measurement_subject", "unix_micros(timestamp)").as[(String, Long)]
+      .collect().toMap
+    assert(got.size == stamps.size, s"dropped polls: ${got.keys.toSeq.sorted}")
+    def micros(iso: String): Long = {
+      val t = java.time.Instant.parse(iso)
+      t.getEpochSecond * 1000000L + t.getNano / 1000L
+    }
+    // the offset rows are all the same instant, rounded like PG
+    Seq(1, 2, 5, 6).foreach(i =>
+      assert(got(s"V$i") == micros("2023-10-27T20:55:00.123457Z"), stamps(i)))
+    assert(got("V0") == micros("2023-10-27T21:55:00Z"))
+    assert(got("V3") == micros("2023-10-27T21:55:00.123456Z"))
+    assert(got("V4") == got("V0"))
   }
 
   test("bmw streaming dedup: 3 messages, 1 duplicate skipped, dual sink") {
