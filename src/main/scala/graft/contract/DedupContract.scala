@@ -401,7 +401,7 @@ object DedupContract {
         graft.operators.Dedup.appendToSignatureIndex(
           docs.filter(col("doc_id") % 3 === 1), "graft_sig_compact"))
       BenchPhases.timed("q_dedup_idx_compact", "compact")(
-        graft.operators.Dedup.compactIndex(s, "graft_sig_compact", "bh"))
+        graft.operators.Dedup.compactIndex(s, "graft_sig_compact"))
       graft.operators.Dedup.minhashPairsAgainstIndex(
         docs.filter(col("doc_id") % 3 === 2), "graft_sig_compact",
         docs.filter(col("doc_id") % 3 =!= 2))

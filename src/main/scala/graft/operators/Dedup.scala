@@ -955,14 +955,14 @@ object Dedup {
     * current size through [[graft.util.IndexBuckets]] (the count latched
     * at the seed write was sized for the seed, not for the table as it
     * has grown); `graft.buckets` records the new count, so later appends
-    * and probes stay co-partitioned with the rewritten files. `bucketCol`
-    * names the table's bucket column; the rewrite keeps the catalog's
-    * bucket spec. Content and probe results are unchanged by construction
-    * — every probe joins on the full bucket key (spec-pinned); run it on
-    * the maintenance cadence, cost = two index-sized bucketed writes.
+    * and probes stay co-partitioned with the rewritten files. The rewrite
+    * keeps the catalog's bucket spec, so the bucket column is the one the
+    * index was written with. Content and probe results are unchanged by
+    * construction — every probe joins on the full bucket key
+    * (spec-pinned); run it on the maintenance cadence, cost = two
+    * index-sized bucketed writes.
     */
-  def compactIndex(spark: org.apache.spark.sql.SparkSession, tableName: String,
-                   bucketCol: String): Unit = {
+  def compactIndex(spark: org.apache.spark.sql.SparkSession, tableName: String): Unit = {
     IndexTable.prop(spark, tableName, "graft.buckets", "an index writer")
     IndexTable.rewrite(spark, tableName, s"${tableName}_compact_tmp")()
   }

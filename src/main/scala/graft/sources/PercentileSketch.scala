@@ -1,9 +1,11 @@
 package graft.sources
 
 import graft.queries.TimeseriesQueries
+import graft.sources.RollupStore.Params
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Composable percentile sketch — the TimescaleDB-toolkit `percentile_agg`
   * / UDDSketch shape (reference dashboards would call
@@ -41,6 +43,9 @@ import org.apache.spark.sql.functions._
   */
 object PercentileSketch {
 
+  private val SketchSchema = StructType.fromDDL(
+    "date DATE, bucket_s BIGINT, bl INT, sub BIGINT, n BIGINT")
+
   /** Per-(date, bucket, sketch-cell) counts for one metric. */
   def partials(conditions: DataFrame, of: String, startS: Long, endS: Long,
                widthS: Long, subBits: Int, scale: Int = 100): DataFrame = {
@@ -51,8 +56,8 @@ object PercentileSketch {
         col("timestamp") < timestamp_seconds(lit(endS)))
       .select(col("timestamp"),
         round(col("measurement_number") * scale, 0).cast("long").as("c"))
-      // the shared origin-anchored grid (see ContinuousAggregate.OriginS)
-      .withColumn("bucket_s", ContinuousAggregate.bucketOfTimestamp(widthS))
+      // the shared origin-anchored grid (see RollupStore.OriginS)
+      .withColumn("bucket_s", RollupStore.bucketOfTimestamp(widthS))
       .withColumn("date", ConditionsTable.dateKey)
       .withColumn("bl", length(bin(col("c"))).cast("int"))
       .withColumn("sub", expr(s"shiftright(c, greatest(bl - $subBits, 0))"))
@@ -61,44 +66,15 @@ object PercentileSketch {
   }
 
   /** Materialize the sketch partials date-partitioned (the percentile
-    * continuous aggregate). `widthS`/`subBits` are the store's fixed
-    * creation parameters, as with [[ContinuousAggregate.create]].
+    * continuous aggregate). `widthS`, `subBits` and `scale` are the
+    * store's fixed creation parameters, recorded and checked by the
+    * [[RollupStore]] contract: a serve `subBits` other than the creation
+    * value reconstructs wrong bucket edges (`shiftleft(sub, bl − subBits)`).
     */
   def create(conditions: DataFrame, path: String, of: String, startS: Long,
-             endS: Long, widthS: Long, subBits: Int, scale: Int = 100): Unit = {
-    ContinuousAggregate.writeByDate(
-      partials(conditions, of, startS, endS, widthS, subBits, scale), path)
-    writeSidecars(conditions.sparkSession, path, widthS, subBits, scale)
-  }
-
-  /** The creation parameters travel with the store (the
-    * [[ContinuousAggregate]] `_graft_width` contract, extended): a serve
-    * width that is not a multiple of the stored width assigns whole
-    * stored buckets to the wrong serve bucket, and a serve `subBits`
-    * different from creation reconstructs wrong bucket edges
-    * (`shiftleft(sub, bl − subBits)`) — both silently wrong percentiles,
-    * so [[query]] validates against the sidecars. `scale` only names the
-    * unit of the output cents, but a mismatched reading misinterprets
-    * every value, so it is recorded and checked too.
-    */
-  private def writeSidecars(spark: SparkSession, path: String, widthS: Long,
-                            subBits: Int, scale: Int): Unit = {
-    ContinuousAggregate.writeLongSidecar(spark, path, "_graft_width", widthS)
-    ContinuousAggregate.writeLongSidecar(spark, path, "_graft_subbits", subBits.toLong)
-    ContinuousAggregate.writeLongSidecar(spark, path, "_graft_scale", scale.toLong)
-  }
-
-  private def requireServable(spark: SparkSession, path: String,
-                              widthS: Long, subBits: Int): Unit = {
-    ContinuousAggregate.storedLongOf(spark, path, "_graft_width").foreach(w0 =>
-      require(widthS % w0 == 0,
-        s"serve width $widthS is not a multiple of the stored width $w0 " +
-          s"(recorded in $path/_graft_width)"))
-    ContinuousAggregate.storedLongOf(spark, path, "_graft_subbits").foreach(b0 =>
-      require(b0 == subBits,
-        s"serve subBits $subBits does not match the store's subBits $b0 " +
-          s"(recorded in $path/_graft_subbits) — edges would reconstruct wrong"))
-  }
+             endS: Long, widthS: Long, subBits: Int, scale: Int = 100): Unit =
+    RollupStore.create(conditions, path, Params(widthS, Some(scale), Some(subBits)))(
+      partials(_, of, startS, endS, widthS, subBits, scale))
 
   /** Incremental refresh: recompute only dates ≥ `sinceDate` and
     * dynamic-overwrite exactly those partitions — counts are composable,
@@ -106,55 +82,27 @@ object PercentileSketch {
     */
   def refresh(conditions: DataFrame, path: String, of: String, startS: Long,
               endS: Long, widthS: Long, subBits: Int, sinceDate: String,
-              scale: Int = 100): Unit = {
-    require(sinceDate.matches("""\d{4}-\d{2}-\d{2}"""),
-      s"sinceDate must be yyyy-MM-dd, got $sinceDate")
-    val spark = conditions.sparkSession
-    requireRefreshParams(spark, path, widthS, subBits, scale)
-    ContinuousAggregate.overwriteDates(partials(
-        conditions.filter(ConditionsTable.dateKey >= lit(sinceDate)),
-        of, startS, endS, widthS, subBits, scale), path)
-    // refresh-maintained stores get the sidecars on their first refresh;
-    // requireRefreshParams above has already rejected any mismatch
-    writeSidecars(spark, path, widthS, subBits, scale)
-  }
-
-  private def requireRefreshParams(spark: SparkSession, path: String,
-                                   widthS: Long, subBits: Int,
-                                   scale: Int): Unit = {
-    ContinuousAggregate.storedLongOf(spark, path, "_graft_width").foreach(w0 =>
-      require(w0 == widthS,
-        s"refresh width $widthS does not match the store's width $w0 — " +
-          "a mismatched refresh would corrupt the sketch"))
-    ContinuousAggregate.storedLongOf(spark, path, "_graft_subbits").foreach(b0 =>
-      require(b0 == subBits,
-        s"refresh subBits $subBits does not match the store's subBits $b0 — " +
-          "a mismatched refresh would mix incompatible cell keys"))
-    ContinuousAggregate.storedLongOf(spark, path, "_graft_scale").foreach(s0 =>
-      require(s0 == scale,
-        s"refresh scale $scale does not match the store's scale $s0 — " +
-          "a mismatched refresh would mix cent magnitudes"))
-  }
+              scale: Int = 100): Unit =
+    RollupStore.refresh(conditions, path,
+        Params(widthS, Some(scale), Some(subBits)), sinceDate)(
+      partials(_, of, startS, endS, widthS, subBits, scale))
 
   /** Serve p50/p95/p99 per `widthS` bucket FROM stored partials (widthS
     * must be a multiple of the store's creation width; bounds half-open
-    * and store-bucket-aligned, the [[ContinuousAggregate.query]]
-    * containment rule). Ranks are ceil(N·p) computed in pure integers;
+    * and store-bucket-aligned, the [[RollupStore.serve]] containment
+    * rule). Ranks are ceil(N·p) computed in pure integers;
     * the estimate is the lower edge of the cell whose cumulative count
     * reaches the rank. Output cents are exact BIGINTs.
     */
   def query(spark: SparkSession, path: String, startS: Long, endS: Long,
             widthS: Long, subBits: Int): DataFrame = {
-    requireServable(spark, path, widthS, subBits)
-    // partials are stored on the shared origin-anchored grid
-    // (ContinuousAggregate.bucketOfTimestamp), so the serve re-bucketing
-    // must use the SAME grid (serveBucketOf) — a plain epoch-0 floor
-    // coincides only at widths dividing the origin (hour/day) and would
-    // silently mislabel e.g. weekly buckets by 4 days
-    val merged = ContinuousAggregate.pruneDates(spark.read.parquet(path),
-        startS, endS, ContinuousAggregate.storedLongOf(spark, path, "_graft_width"))
-      .filter(col("bucket_s") >= startS && col("bucket_s") < endS)
-      .withColumn("time_s", ContinuousAggregate.serveBucketOf(widthS))
+    // partials are stored on the shared origin-anchored grid, so the
+    // serve re-bucketing must use the SAME grid (serveBucketOf) — a plain
+    // epoch-0 floor coincides only at widths dividing the origin
+    // (hour/day) and would silently mislabel e.g. weekly buckets by 4 days
+    val merged = RollupStore.serve(spark, path, SketchSchema, startS, endS,
+        Params(widthS, subBits = Some(subBits)))
+      .withColumn("time_s", RollupStore.serveBucketOf(widthS))
       .groupBy("time_s", "bl", "sub")
       .agg(sum("n").as("n"))
     val wCum = Window.partitionBy("time_s").orderBy("bl", "sub")

@@ -889,7 +889,7 @@ object ScaleProbe {
       (1 to 3).foreach(i =>
         Dedup.appendToSignatureIndex(corpus.filter(col("doc_id") % 4 === i), "cmp_probe"))
       val rowsBefore = spark.table("cmp_probe").count()
-      val (_, tCompact) = time(Dedup.compactIndex(spark, "cmp_probe", "bh"))
+      val (_, tCompact) = time(Dedup.compactIndex(spark, "cmp_probe"))
       val rowsAfter = spark.table("cmp_probe").count()
       spark.sql("DROP TABLE IF EXISTS cmp_probe")
       println(s"""{"m":$m,"index_rows":$rowsBefore,"compact_sec":${fmt(tCompact)},"rows_preserved":${rowsBefore == rowsAfter}}""")

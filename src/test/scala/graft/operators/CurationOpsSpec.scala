@@ -373,7 +373,7 @@ class CurationOpsSpec extends AnyFunSuite {
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       val filesBefore = spark.table("sig_cmp_idx").inputFiles.length
       val rowsBefore = spark.table("sig_cmp_idx").count()
-      Dedup.compactIndex(spark, "sig_cmp_idx", "bh")
+      Dedup.compactIndex(spark, "sig_cmp_idx")
       val filesAfter = spark.table("sig_cmp_idx").inputFiles.length
       assert(filesAfter < filesBefore,
         s"compaction must reduce files: $filesBefore -> $filesAfter")
@@ -386,7 +386,7 @@ class CurationOpsSpec extends AnyFunSuite {
       // a table without graft.buckets fails loudly
       spark.table("sig_cmp_idx").write.mode("overwrite").saveAsTable("sig_cmp_noprops")
       intercept[IllegalArgumentException] {
-        Dedup.compactIndex(spark, "sig_cmp_noprops", "bh")
+        Dedup.compactIndex(spark, "sig_cmp_noprops")
       }
     } finally {
       spark.sql("DROP TABLE IF EXISTS sig_cmp_idx")
@@ -421,7 +421,7 @@ class CurationOpsSpec extends AnyFunSuite {
       val before = Dedup.minhashPairsAgainstIndex(probe, "sig_grow_idx", union)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       val rowsBefore = spark.table("sig_grow_idx").count()
-      Dedup.compactIndex(spark, "sig_grow_idx", "bh")
+      Dedup.compactIndex(spark, "sig_grow_idx")
       val (grown, grownProp) = bucketsOf("sig_grow_idx")
       assert(grown > seedBuckets, s"compaction kept $seedBuckets buckets, derived $grown")
       assert(grownProp == grown, "graft.buckets must record the re-derived count")
@@ -454,7 +454,7 @@ class CurationOpsSpec extends AnyFunSuite {
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       val filesBefore = spark.table("graft_cmp_db.sig_idx").inputFiles.length
       val rowsBefore = spark.table("graft_cmp_db.sig_idx").count()
-      Dedup.compactIndex(spark, "graft_cmp_db.sig_idx", "bh")
+      Dedup.compactIndex(spark, "graft_cmp_db.sig_idx")
       assert(spark.table("graft_cmp_db.sig_idx").inputFiles.length < filesBefore)
       assert(spark.table("graft_cmp_db.sig_idx").count() == rowsBefore)
       val after = Dedup.minhashPairsAgainstIndex(probe, "graft_cmp_db.sig_idx", union)

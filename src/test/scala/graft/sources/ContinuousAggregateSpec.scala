@@ -408,7 +408,7 @@ class ContinuousAggregateSpec extends AnyFunSuite {
     val c = conditions(2)
     val path = tmp("cagg_grid_mismatch")
     ContinuousAggregate.create(c, path, widthS = 3600)
-    ContinuousAggregate.writeLongSidecar(spark, path, "_graft_grid", 0L)
+    RollupStore.writeSidecar(spark, path, RollupStore.GridFile, 0L)
     val ex = intercept[IllegalArgumentException](ContinuousAggregate.query(
       spark, path, "s0", "m", T0, T0 + 86400L, widthS = 3600).collect())
     assert(ex.getMessage.contains("grid"), ex.getMessage)
@@ -434,9 +434,61 @@ class ContinuousAggregateSpec extends AnyFunSuite {
     ContinuousAggregate.create(c, hourly, widthS = 3600)
     dropSidecar(hourly, "_graft_grid")
     ContinuousAggregate.refresh(c, hourly, widthS = 3600, sinceDate = "2024-01-03")
-    assert(ContinuousAggregate.storedGridOf(spark, hourly).isDefined,
+    assert(RollupStore.recorded(spark, hourly).grid.isDefined,
       "refresh must re-record the grid sidecar")
     assert(ContinuousAggregate.query(spark, hourly, "s0", "m",
       T0, T0 + 86400L, widthS = 86400).count() > 0)
+  }
+
+  test("a rollup created over an empty slice serves no rows in the serve's usual schema") {
+    val c = conditions(2)
+    val none = c.filter(lit(false))
+    def fields(df: org.apache.spark.sql.DataFrame) =
+      df.schema.fields.map(f => (f.name, f.dataType)).toSeq
+    def emptyLike(empty: org.apache.spark.sql.DataFrame,
+                  usual: org.apache.spark.sql.DataFrame): Unit = {
+      assert(empty.collect().isEmpty)
+      assert(usual.count() > 0, "test setup: the filled store must serve rows")
+      assert(fields(empty) == fields(usual))
+    }
+    val (avg, avgFull) = (tmp("cagg_empty_avg"), tmp("cagg_full_avg"))
+    ContinuousAggregate.create(none, avg, widthS = 3600)
+    ContinuousAggregate.create(c, avgFull, widthS = 3600)
+    def avgServe(p: String) =
+      ContinuousAggregate.query(spark, p, "s0", "m", T0, T0 + 86400L, widthS = 86400)
+    emptyLike(avgServe(avg), avgServe(avgFull))
+    val (stats, statsFull) = (tmp("cagg_empty_stats"), tmp("cagg_full_stats"))
+    ContinuousAggregate.createStats(none, stats, widthS = 3600)
+    ContinuousAggregate.createStats(c, statsFull, widthS = 3600)
+    def statsServe(p: String) =
+      ContinuousAggregate.queryStats(spark, p, "s0", "m", T0, T0 + 86400L, widthS = 86400)
+    emptyLike(statsServe(stats), statsServe(statsFull))
+    val (dist, distFull) = (tmp("cagg_empty_distinct"), tmp("cagg_full_distinct"))
+    ContinuousAggregate.createDistinct(none, dist, widthS = 3600)
+    ContinuousAggregate.createDistinct(c, distFull, widthS = 3600)
+    def exact(p: String) =
+      ContinuousAggregate.queryDistinct(spark, p, "m", T0, T0 + 86400L, widthS = 86400)
+    emptyLike(exact(dist), exact(distFull))
+    def approx(p: String) =
+      ContinuousAggregate.queryDistinctApprox(spark, p, "m", T0, T0 + 86400L, widthS = 86400)
+    emptyLike(approx(dist), approx(distFull))
+  }
+
+  test("refresh and refreshStats reject a non-positive width or scale on a path with no recorded parameters") {
+    // CaggStream creates its rollup through refresh, so the first refresh
+    // must check what create checks
+    val c = conditions(1)
+    for ((w, sc) <- Seq((-3600L, 100), (0L, 100), (3600L, 0))) {
+      val p = tmp("cagg_refresh_params")
+      val ex = intercept[IllegalArgumentException](ContinuousAggregate.refresh(
+        c, p, widthS = w, sinceDate = "2024-01-03", scale = sc))
+      assert(ex.getMessage.contains("positive"), ex.getMessage)
+      val sp = tmp("cagg_refresh_stats_params")
+      val ex2 = intercept[IllegalArgumentException](ContinuousAggregate.refreshStats(
+        c, sp, widthS = w, sinceDate = "2024-01-03", scale = sc))
+      assert(ex2.getMessage.contains("positive"), ex2.getMessage)
+      assert(!new java.io.File(p).exists && !new java.io.File(sp).exists,
+        s"a rejected refresh (widthS $w, scale $sc) must write nothing")
+    }
   }
 }

@@ -121,4 +121,35 @@ class PercentileSketchSpec extends AnyFunSuite {
     val Array((_, _, _, _, n)) = serveDay(path, 1, 6)
     assert(n == 2L)
   }
+
+  test("a sketch created over an empty slice serves no rows in the serve's usual schema") {
+    val c = df(Seq((0L, 1.0), (60L, 2.0)))
+    val (empty, full) = (tmp("psk_empty"), tmp("psk_full_schema"))
+    PercentileSketch.create(c.filter(lit(false)), empty, "m", T0, T0 + 86400,
+      widthS = 3600, subBits = 6)
+    PercentileSketch.create(c, full, "m", T0, T0 + 86400, widthS = 3600, subBits = 6)
+    def serve(p: String) =
+      PercentileSketch.query(spark, p, T0, T0 + 86400L, widthS = 86400, subBits = 6)
+    def fields(d: org.apache.spark.sql.DataFrame) =
+      d.schema.fields.map(f => (f.name, f.dataType)).toSeq
+    assert(serve(empty).collect().isEmpty)
+    assert(serve(full).count() == 1)
+    assert(fields(serve(empty)) == fields(serve(full)))
+  }
+
+  test("sketch stores record the bucket grid and refuse a mismatched one") {
+    val c = df(Seq((0L, 1.0), (60L, 2.0)))
+    val path = tmp("psk_grid")
+    PercentileSketch.create(c, path, "m", T0, T0 + 86400, widthS = 3600, subBits = 6)
+    assert(RollupStore.recorded(spark, path).grid.contains(RollupStore.OriginS))
+    RollupStore.writeSidecar(spark, path, RollupStore.GridFile, 0L)
+    val ex = intercept[IllegalArgumentException](
+      PercentileSketch.query(spark, path, T0, T0 + 86400, widthS = 86400,
+        subBits = 6).collect())
+    assert(ex.getMessage.contains("grid"), ex.getMessage)
+    val ex2 = intercept[IllegalArgumentException](
+      PercentileSketch.refresh(c, path, "m", T0, T0 + 86400, widthS = 3600,
+        subBits = 6, sinceDate = "2024-01-03"))
+    assert(ex2.getMessage.contains("grid"), ex2.getMessage)
+  }
 }
