@@ -22,25 +22,19 @@ import graft.model.TimeseriesRecord
   */
 object Bmw {
 
-  final case class Key(vin: String, lastUpdatedAt: String)
-
   /** One parse of a raw poll: its dedup key, the instant of its
     * `lastUpdatedAt` and its records, all stamped with that instant.
     */
   final case class Poll(vin: String, lastUpdatedAt: String, eventTime: java.time.Instant,
                         records: Vector[TimeseriesRecord])
 
-  def key(body: JsonNode): Key =
-    Key(body.get("vin").asText, body.get("state").get("lastUpdatedAt").asText)
-
   /** `shared_code/bmw_to_timescale.py:221-259` */
   def validLatLon(lat: Double, lon: Double): Boolean =
     lat >= -90 && lat <= 90 && lon >= -180 && lon <= 180
 
-  def convert(body: JsonNode): Vector[TimeseriesRecord] = poll(body).records
-
   private def poll(body: JsonNode): Poll = {
-    val Key(vin, lastUpdatedAt) = key(body)
+    val vin = body.get("vin").asText
+    val lastUpdatedAt = body.get("state").get("lastUpdatedAt").asText
     // The reference stores lastUpdatedAt raw and relies on PostgreSQL's
     // timestamptz parse (`bmw_to_timescale.py:178`), which APPLIES UTC
     // offsets — so this boundary uses the offset-applying normalization,
@@ -95,17 +89,19 @@ object Bmw {
     Poll(vin, lastUpdatedAt, ts, out.result())
   }
 
-  /** Parse one raw BMW message once; `None` on malformed input, an
-    * unparseable `lastUpdatedAt` included.
+  /** Parse one raw BMW message once; `Left` with the cause on malformed
+    * input, an unparseable `lastUpdatedAt` included — the one parse behind
+    * both the stored records and the dead letters.
     */
-  def parsePoll(raw: String): Option[Poll] =
+  def parsePoll(raw: String): Either[Throwable, Poll] =
     try {
       val body = Converters.mapper.readTree(raw)
       require(body.hasNonNull("vin") && body.hasNonNull("state"), "missing vin/state")
       require(body.get("state").hasNonNull("lastUpdatedAt"), "missing lastUpdatedAt")
-      Some(poll(body))
-    } catch { case scala.util.control.NonFatal(_) => None }
+      Right(poll(body))
+    } catch { case scala.util.control.NonFatal(e) => Left(e) }
 
   /** Parse + convert one raw BMW message; `None` on malformed input. */
-  def convertMessage(raw: String): Option[Vector[TimeseriesRecord]] = parsePoll(raw).map(_.records)
+  def convertMessage(raw: String): Option[Vector[TimeseriesRecord]] =
+    parsePoll(raw).toOption.map(_.records)
 }

@@ -2,10 +2,12 @@ package graft.sources
 
 import graft.model.TimeseriesRecord
 import java.time.LocalDate
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{GreaterThanOrEqual, LessThanOrEqual, Literal}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.types.DateType
 
 /** The `conditions` table — storage boundary of the normalize pipeline.
@@ -22,6 +24,12 @@ import org.apache.spark.sql.types.DateType
   * partition, sorting by `(measurement_of, measurement_subject, timestamp)`
   * at write time clusters row groups so the dashboard predicates prune
   * row groups too, not just partitions.
+  *
+  * The store contract: only this object writes rows into a
+  * date-partitioned conditions store ([[write]], [[append]], [[sink]], all
+  * clustered by [[dateKey]]) or changes its files ([[compact]],
+  * [[dropPartitionsOlderThan]], through the Hadoop `FileSystem` API only,
+  * so any path Spark reads works, a `file://` URI included).
   */
 object ConditionsTable {
 
@@ -229,12 +237,30 @@ object ConditionsTable {
   def pgRows(storage: DataFrame): DataFrame =
     storage.drop("date", "measurement_data_type")
 
-  /** Write date-partitioned, row-group-clustered Parquet. */
-  def write(storage: DataFrame, path: String): Unit =
-    storage
-      .repartition(col("date"))
-      .sortWithinPartitions("measurement_of", "measurement_subject", "timestamp")
-      .write.mode("overwrite").partitionBy("date").parquet(path)
+  /** Row order in every sorted file: row-group min/max prune the dashboard scan. */
+  private val ClusterOrder = Seq("measurement_of", "measurement_subject", "timestamp")
+
+  /** Overwrite the store at `path` with `storage` (keyed by [[dateKey]] as
+    * `date`, as [[toStorage]] makes): one sorted file per date.
+    */
+  def write(storage: DataFrame, path: String): Unit = save(storage, path, "overwrite")
+
+  /** Append `storage` with [[write]]'s layout: the batch append of every
+    * `foreachBatch` writer of a conditions store.
+    */
+  def append(storage: DataFrame, path: String): Unit = save(storage, path, "append")
+
+  private def save(storage: DataFrame, path: String, mode: String): Unit =
+    storage.repartition(col("date")).sortWithinPartitions(ClusterOrder.map(col): _*)
+      .write.mode(mode).partitionBy("date").parquet(path)
+
+  /** The streaming file sink into `path`, clustered by `date` like [[write]]
+    * but unsorted (Spark rejects `sortWithinPartitions` on a streaming
+    * Dataset); the caller sets mode, trigger and checkpoint, and starts it.
+    */
+  def sink(storage: DataFrame, path: String): DataStreamWriter[Row] =
+    storage.repartition(col("date")).writeStream
+      .format("parquet").option("path", path).partitionBy("date")
 
   def read(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path)
@@ -256,83 +282,62 @@ object ConditionsTable {
       .format("parquet")
       .saveAsTable(tableName)
 
-  /** Small-file compaction — the maintenance job every streaming sink
-    * eventually needs: micro-batch appends leave one (or more) file per
-    * trigger per date, and a year of 1-minute triggers is ~500k files
-    * whose open/footer overhead dominates scans long before data size
-    * does (the reference's TimescaleDB gets this for free from chunk
-    * management; parquet stores must compact).
+  /** Small-file compaction: micro-batch appends leave a file per trigger
+    * per date, and a year of 1-minute triggers is ~500k files whose
+    * open/footer overhead dominates scans long before data size does
+    * (TimescaleDB gets this from chunk management; parquet must compact).
     *
     * Rewrites only the date partitions with more than `maxFilesPerDate`
     * files — content-identical, re-clustered by [[write]]'s sort, ONE
-    * file per rewritten date — into the same directory via a staged
-    * swap (write staged → delete old files → rename in). The file set is
-    * SNAPSHOTTED before the read and only that exact set is deleted, so
-    * a micro-batch landing a new file mid-compaction is left untouched
-    * (it simply survives into the next compaction run). The staged dir
-    * lives inside the store root (dot-prefixed, invisible to partition
-    * discovery), so the move-in is a same-filesystem rename, never a
-    * copy. The swap is still not atomic: a reader listing the partition
-    * between the deletes and the renames sees the date incomplete for
-    * that instant — run compaction in the maintenance window if readers
-    * need strict point-in-time counts. Returns the number of compacted
-    * date partitions.
+    * file per rewritten date — via a staged swap (write staged → delete
+    * old files → rename in). The file set is SNAPSHOTTED before the read
+    * and only that set is deleted, so a micro-batch landing mid-compaction
+    * survives into the next run. The staged dir lives inside the store
+    * root (dot-prefixed, invisible to partition discovery), so the
+    * move-in is a same-filesystem rename. The swap is not atomic: a
+    * reader listing the partition between the deletes and the renames
+    * sees the date incomplete. Returns the number of compacted dates.
     *
-    * NOT for stores managed by a Structured Streaming FILE SINK
-    * (`writeStream.format("parquet")`): those pin their exact file set
-    * in `_spark_metadata`, and log-based reads would throw on the
-    * deleted files and never see the compacted ones — guarded with a
-    * hard error. Of [[graft.streaming.IngestPipeline]]'s conditions
-    * sinks, only `startBmw` is a foreachBatch writer (no metadata log)
-    * whose store compacts; `startMqtt` and `startWire` use the file sink,
-    * so their stores are refused.
+    * NOT for a [[sink]] store (`startMqtt`, `startWire`): its
+    * `_spark_metadata` log pins the exact file set, so log-based reads
+    * would throw on the deleted files — refused with a hard error.
+    * `startBmw`'s store ([[append]]) compacts.
     *
-    * Scale shape: the file census is listing metadata only; each
-    * compacted date is one narrow read → sort → write of that date's
-    * rows. Dates are independent — a 100 TB store compacts incrementally
-    * (bound the run with `maxDates`) instead of rewriting the table.
+    * Scale shape: the census is listing metadata; each compacted date is
+    * one narrow read → sort → write, so a 100 TB store compacts
+    * incrementally (bound a run with `maxDates`).
     */
   def compact(spark: SparkSession, path: String, maxFilesPerDate: Int = 8,
               maxDates: Int = Int.MaxValue): Int = {
     require(maxFilesPerDate > 0, "maxFilesPerDate must be positive")
-    val root = new java.io.File(path)
-    require(!new java.io.File(root, "_spark_metadata").exists(),
-      s"$path is managed by a Structured Streaming file sink: its " +
-        "_spark_metadata log pins the exact file set, so compaction would " +
-        "break log-based reads — compact a foreachBatch-written store, or " +
-        "rewrite the table through a batch job instead")
-    val dateDirs = Option(root.listFiles()).getOrElse(Array.empty)
-      .filter(d => d.isDirectory && d.getName.startsWith("date="))
-    def parquets(d: java.io.File) =
-      Option(d.listFiles()).getOrElse(Array.empty)
-        .filter(f => f.isFile && f.getName.endsWith(".parquet"))
+    val (fs, root) = maintained(spark, path, "compaction")
+    def parquets(d: Path) = children(fs, d, _.endsWith(".parquet"))
     // finish any swap a previous run crashed inside of FIRST: a COMMIT
     // marker means the staged rewrite is complete and the old files are
     // condemned — without this, the next run's mode("overwrite") of the
     // staged dir would destroy the only complete copy of that date's rows
-    Option(root.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isFile && f.getName.startsWith(".compact_") &&
-        f.getName.endsWith(".COMMIT"))
-      .foreach(m => finishSwap(root, m))
-    val targets = dateDirs.filter(d => parquets(d).length > maxFilesPerDate)
-      .sortBy(_.getName).take(maxDates)
+    children(fs, root, n => n.startsWith(".compact_") && n.endsWith(".COMMIT"))
+      .foreach(finishSwap(fs, root, _))
+    val targets = children(fs, root, _.startsWith("date="), dirs = true)
+      .filter(d => parquets(d).length > maxFilesPerDate).sortBy(_.getName).take(maxDates)
     targets.foreach { d =>
       // snapshot ONCE: read exactly these files, delete exactly these
       // files — a concurrent append between the two is neither lost nor
       // double-counted, it just stays uncompacted until the next run
       val before = parquets(d)
-      val staged = new java.io.File(root, s".compact_${d.getName}")
-      val marker = new java.io.File(root, s".compact_${d.getName}.COMMIT")
-      spark.read.parquet(before.map(_.getAbsolutePath).toSeq: _*)
+      val staged = new Path(root, s".compact_${d.getName}")
+      val marker = new Path(root, s".compact_${d.getName}.COMMIT")
+      spark.read.parquet(before.map(_.toString).toSeq: _*)
         .coalesce(1)
-        .sortWithinPartitions("measurement_of", "measurement_subject", "timestamp")
-        .write.mode("overwrite").parquet(staged.getAbsolutePath)
+        .sortWithinPartitions(ClusterOrder.map(col): _*)
+        .write.mode("overwrite").parquet(staged.toString)
       // the marker names the condemned snapshot; written only AFTER the
       // staged rewrite succeeded, so marker-present ⇒ staged-complete and
       // a crash anywhere past this point resumes via finishSwap
-      java.nio.file.Files.write(marker.toPath,
-        before.map(_.getName).sorted.mkString("\n").getBytes("UTF-8"))
-      finishSwap(root, marker)
+      val out = fs.create(marker, true)
+      try out.write(before.map(_.getName).sorted.mkString("\n").getBytes("UTF-8"))
+      finally out.close()
+      finishSwap(fs, root, marker)
     }
     targets.length
   }
@@ -344,62 +349,70 @@ object ConditionsTable {
     * marker and staged dir. Idempotent: already-deleted and already-moved
     * files are skipped, so a crashed run finishes on the next call.
     */
-  private def finishSwap(root: java.io.File, marker: java.io.File): Unit = {
+  private def finishSwap(fs: FileSystem, root: Path, marker: Path): Unit = {
     val dateName = marker.getName.stripPrefix(".compact_").stripSuffix(".COMMIT")
-    val d = new java.io.File(root, dateName)
-    val staged = new java.io.File(root, s".compact_$dateName")
-    val condemned = new String(
-      java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8")
-      .split("\n").filter(_.nonEmpty)
-    condemned.foreach { name =>
-      val f = new java.io.File(d, name)
-      require(!f.exists() || f.delete(),
-        s"compaction could not delete $f — aborting before the staged " +
-          s"rename so the partition is never double-counted; the staged " +
-          s"copy and $marker remain for a retry")
+    val d = new Path(root, dateName)
+    val staged = new Path(root, s".compact_$dateName")
+    val in = fs.open(marker)
+    val condemned = try new String(in.readAllBytes(), "UTF-8") finally in.close()
+    condemned.split("\n").filter(_.nonEmpty).foreach { name =>
+      delete(fs, new Path(d, name), s"compaction could not delete $name in $d — aborting " +
+        s"before the staged rename; the staged copy and $marker remain for a retry")
     }
-    val stagedFiles = Option(staged.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isFile && f.getName.endsWith(".parquet")).sortBy(_.getName)
-    val taken = Option(d.listFiles()).getOrElse(Array.empty)
-      .map(_.getName).toSet
+    val stagedFiles = children(fs, staged, _.endsWith(".parquet")).sortBy(_.getName)
+    val taken = children(fs, d, _ => true).map(_.getName).toSet
     var i = 0
     stagedFiles.foreach { f =>
       while (taken.contains(f"compacted-$i%05d.parquet")) i += 1
-      java.nio.file.Files.move(f.toPath,
-        new java.io.File(d, f"compacted-$i%05d.parquet").toPath)
+      val dest = new Path(d, f"compacted-$i%05d.parquet")
+      if (!fs.rename(f, dest))
+        throw new IllegalStateException(s"compaction could not move $f to $dest; " +
+          s"$marker remains for a retry")
       i += 1
     }
-    require(marker.delete() || !marker.exists(),
-      s"compaction could not remove $marker")
-    deleteDir(staged)
+    delete(fs, marker, s"compaction could not remove $marker")
+    delete(fs, staged, s"compaction could not remove $staged")
   }
 
   /** Retention policy — the TimescaleDB `drop_chunks` analogue: delete
     * every date partition strictly OLDER than `cutoffDate` (ISO
-    * `yyyy-MM-dd`; the cutoff date itself is kept). Dropping a partition
-    * directory is a metadata-speed operation exactly like chunk
-    * dropping — no rewrite, no scan of surviving data. Returns the
-    * dropped partition names (sorted) so a scheduler can log them.
+    * `yyyy-MM-dd`; the cutoff date itself is kept), a metadata-speed
+    * directory drop with no rewrite. Returns the dropped partition names
+    * (sorted); a partition that cannot be deleted throws, naming it.
     */
-  def dropPartitionsOlderThan(path: String, cutoffDate: String): Seq[String] = {
+  def dropPartitionsOlderThan(spark: SparkSession, path: String,
+                              cutoffDate: String): Seq[String] = {
     require(cutoffDate.matches("""\d{4}-\d{2}-\d{2}"""),
       s"cutoffDate must be yyyy-MM-dd, got $cutoffDate")
-    val root = new java.io.File(path)
-    // same contract as [[compact]]: a file-sink-managed store pins its
-    // file set in _spark_metadata — dropping partitions under the log
-    // leaves dangling entries that break log-based reads
-    require(!new java.io.File(root, "_spark_metadata").exists(),
-      s"$path is managed by a Structured Streaming file sink " +
-        "(_spark_metadata present); dropping partitions would break " +
-        "log-based reads")
-    val dropped = Option(root.listFiles()).getOrElse(Array.empty)
-      .filter(d => d.isDirectory && d.getName.startsWith("date=") &&
-        d.getName.stripPrefix("date=") < cutoffDate)
-      .sortBy(_.getName)
-    dropped.foreach(deleteDir)
+    val (fs, root) = maintained(spark, path, "dropping partitions")
+    val dropped = children(fs, root, n => n.startsWith("date=") &&
+      n.stripPrefix("date=") < cutoffDate, dirs = true).sortBy(_.getName)
+    dropped.foreach(d => delete(fs, d, s"retention could not delete $d"))
     dropped.map(_.getName).toSeq
   }
 
-  private def deleteDir(f: java.io.File): Unit =
-    graft.util.FsUtil.deleteRecursively(f)
+  /** The filesystem and root of a store [[compact]] or
+    * [[dropPartitionsOlderThan]] may change: any but a [[sink]] store.
+    */
+  private def maintained(spark: SparkSession, path: String, what: String): (FileSystem, Path) = {
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    require(!fs.exists(new Path(root, "_spark_metadata")),
+      s"$path is managed by a Structured Streaming file sink: its _spark_metadata " +
+        s"log pins the exact file set, so $what would break log-based reads")
+    (fs, root)
+  }
+
+  /** The files (the directories, with `dirs`) directly under `dir` whose
+    * name passes `keep`; none when `dir` is missing.
+    */
+  private def children(fs: FileSystem, dir: Path, keep: String => Boolean,
+                       dirs: Boolean = false): Array[Path] =
+    if (!fs.exists(dir)) Array.empty
+    else fs.listStatus(dir).filter(f => f.isDirectory == dirs && keep(f.getPath.getName))
+      .map(_.getPath)
+
+  /** Delete `p` unless already gone; a refused delete throws `failure`. */
+  private def delete(fs: FileSystem, p: Path, failure: => String): Unit =
+    if (fs.exists(p) && !fs.delete(p, true)) throw new IllegalStateException(failure)
 }

@@ -38,9 +38,10 @@ object CaggStream {
     *    that the next start() finishes moving — reads never see root
     *    files and quarantine files double-counted, because neither side
     *    is under `date=` yet);
-    *  2. STAGE: rewrite the quarantined rows date-partitioned into
-    *    `.legacy_migration/.staged/` (a crash mid-write leaves a partial
-    *    staged dir that the next run overwrites — the store is
+    *  2. STAGE: rewrite the quarantined rows with
+    *    [[ConditionsTable.write]] into `.legacy_migration/.staged/`, one
+    *    file per date (a crash mid-write leaves a partial staged dir
+    *    that the next run's overwrite replaces — the store is
     *    untouched), then write a `_STAGED` marker that FREEZES the
     *    staged file set;
     *  3. MOVE-IN: rename each staged file under its store `date=`
@@ -132,9 +133,8 @@ object CaggStream {
       .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
     if (!fs.exists(stagedMarker)) {
       if (pending.isEmpty) { fs.delete(quarantine, true); return }
-      spark.read.parquet(pending.map(_.getPath.toString).toSeq: _*)
-        .withColumn("date", ConditionsTable.dateKey)
-        .write.mode("overwrite").partitionBy("date").parquet(stagedDir.toString)
+      ConditionsTable.write(spark.read.parquet(pending.map(_.getPath.toString).toSeq: _*)
+        .withColumn("date", ConditionsTable.dateKey), stagedDir.toString)
       fs.create(stagedMarker, true).close()
     } else if (!fs.exists(stagedDir) && pending.nonEmpty)
       throw new IllegalStateException(
@@ -202,8 +202,7 @@ object CaggStream {
           // refresh below reads only the touched date directories
           // (partition pruning on the filter) — per-batch cost ∝ the
           // days the batch touches, never the store's age
-          b.withColumn("date", ConditionsTable.dateKey)
-            .write.mode("append").partitionBy("date").parquet(storePath)
+          ConditionsTable.append(b.withColumn("date", ConditionsTable.dateKey), storePath)
           val minDate = b.agg(min(ConditionsTable.dateKey)).head()
           if (!minDate.isNullAt(0)) {
             val md = minDate.getDate(0).toString

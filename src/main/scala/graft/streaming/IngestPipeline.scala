@@ -1,11 +1,11 @@
 package graft.streaming
 
-import graft.convert.{Bmw, Converters}
+import graft.convert.Bmw
 import graft.model.TimeseriesRecord
 import graft.sources.ConditionsTable
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 
 /** Structured Streaming re-expression of the reference's ingest dataflow
   * (SURVEY §3.1/§3.2).
@@ -20,10 +20,18 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * check-then-act dedup becomes `dropDuplicatesWithinWatermark` over
   * checkpointed state (at-most-once per key INTO the pipeline — stronger
   * than the reference, whose emit-then-store-id ordering can duplicate on
-  * crash, `shared_code/bmw_to_timescale.py:28-37`). Sink-side,
-  * `foreachBatch` parquet appends are at-least-once on batch replay, like
-  * any non-transactional multi-sink write; an idempotent or transactional
-  * sink upgrades the end-to-end guarantee.
+  * crash, `shared_code/bmw_to_timescale.py:28-37`).
+  *
+  * Every stream starts through one private `start`. `startMqtt` and
+  * `startWire` store through the file sink ([[ConditionsTable.sink]]):
+  * exactly-once, a replayable source plus the sink's `_spark_metadata`
+  * commit log. `startBmw` ([[ConditionsTable.append]] and a monitor copy)
+  * and [[jdbcBatchWriter]] are at-least-once: a batch replayed after a
+  * crash between the write and the offset commit is written again.
+  * Dead letters, per format, are a batch pass over the same raw text:
+  * [[ConditionsTable.deadLetters]] (MQTT envelopes; a filtered topic is
+  * not one), [[graft.sources.WireRecords.deadLetters]] (wire messages)
+  * and [[bmwDeadLetters]] (BMW polls; a duplicate is not one).
   */
 object IngestPipeline {
 
@@ -64,17 +72,23 @@ object IngestPipeline {
     Map("kafka.bootstrap.servers" -> k.bootstrapServers,
       "topic" -> k.topic) ++ k.options
 
-  /** The raw-text stream behind a [[SourceConfig]]: file lines, or the
-    * kafka record `value` cast to string (the Event Hub payload).
+  /** The one start of every ingest stream: the raw text behind `src`
+    * (file lines, or the kafka record `value` — the Event Hub payload)
+    * into the writer `sink` builds, in append mode.
     */
-  private[streaming] def readText(spark: SparkSession, src: SourceConfig): Dataset[String] = {
+  private def start(spark: SparkSession, src: SourceConfig, checkpointDir: String,
+                    trigger: Trigger)(sink: Dataset[String] => DataStreamWriter[_]): StreamingQuery = {
     import spark.implicits._
-    src match {
+    val raw = src match {
       case SourceConfig.Files(dir) => spark.readStream.textFile(dir)
       case k: SourceConfig.Kafka =>
         spark.readStream.format("kafka").options(kafkaSourceOptions(k))
           .load().select(col("value").cast("string")).as[String]
     }
+    sink(raw).outputMode("append")
+      .trigger(trigger)
+      .option("checkpointLocation", checkpointDir)
+      .start()
   }
 
   /** MQTT-side pipeline (A1/A5/A7): text-file source (one JSON event per
@@ -93,29 +107,8 @@ object IngestPipeline {
     */
   def startMqtt(spark: SparkSession, src: SourceConfig, outputDir: String,
                 checkpointDir: String, trigger: Trigger): StreamingQuery =
-    startConditionsSink(ConditionsTable.normalize(spark, readText(spark, src)),
-      outputDir, checkpointDir, trigger)
-
-  /** The conditions file sink of [[startMqtt]] and [[startWire]]: storage
-    * rows → date-partitioned parquet. Each micro-batch is clustered by
-    * the partition column before the partitioned write: files per batch
-    * ≈ #dates instead of #tasks × #dates — the small-files cliff of
-    * partitioned sinks (same pattern as the IVF index write; measured
-    * ~1.5 s of the q_ingest_wire bench on the storage hop).
-    */
-  private def startConditionsSink(records: Dataset[TimeseriesRecord],
-                                  outputDir: String, checkpointDir: String,
-                                  trigger: Trigger): StreamingQuery =
-    ConditionsTable.toStorage(records)
-      .repartition(col("date"))
-      .writeStream
-      .partitionBy("date")
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointDir)
-      .format("parquet")
-      .option("path", outputDir)
-      .start()
+    start(spark, src, checkpointDir, trigger)(raw => ConditionsTable.sink(
+      ConditionsTable.toStorage(ConditionsTable.normalize(spark, raw)), outputDir))
 
   /** Convert stage as its OWN pipeline (the reference's two-function
     * topology, `json_to_timeseries` → hub → `timeseries_to_timescale`):
@@ -134,18 +127,15 @@ object IngestPipeline {
     * verbatim (A5's sink becomes a kafka `value` write).
     */
   def startConvertToWire(spark: SparkSession, src: SourceConfig, wire: SourceConfig,
-                         checkpointDir: String, trigger: Trigger): StreamingQuery = {
-    val out = graft.sources.WireRecords.emit(
-      ConditionsTable.normalize(spark, readText(spark, src)))
-    val base = out.toDF("value").writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointDir)
-    wire match {
-      case SourceConfig.Files(dir) => base.format("text").option("path", dir).start()
-      case k: SourceConfig.Kafka   => base.format("kafka").options(kafkaSinkOptions(k)).start()
+                         checkpointDir: String, trigger: Trigger): StreamingQuery =
+    start(spark, src, checkpointDir, trigger) { raw =>
+      val out = graft.sources.WireRecords.emit(ConditionsTable.normalize(spark, raw))
+        .toDF("value").writeStream
+      wire match {
+        case SourceConfig.Files(dir) => out.format("text").option("path", dir)
+        case k: SourceConfig.Kafka   => out.format("kafka").options(kafkaSinkOptions(k))
+      }
     }
-  }
 
   /** Storage stage as its OWN pipeline (`timeseries_to_timescale`): wire
     * messages (single record or v1 array envelope) → validate/decode →
@@ -159,28 +149,36 @@ object IngestPipeline {
   /** [[startWire]] with a config-selected wire source (A1's second hop). */
   def startWire(spark: SparkSession, wire: SourceConfig, outputDir: String,
                 checkpointDir: String, trigger: Trigger): StreamingQuery =
-    startConditionsSink(graft.sources.WireRecords.decode(readText(spark, wire)),
-      outputDir, checkpointDir, trigger)
+    start(spark, wire, checkpointDir, trigger)(raw => ConditionsTable.sink(
+      ConditionsTable.toStorage(graft.sources.WireRecords.decode(raw)), outputDir))
 
   /** BMW-side dedup + convert (A23/A21): parse each poll once into its
     * (vin, lastUpdatedAt) key, its event instant and its records
     * ([[Bmw.parsePoll]]; a malformed poll or an unparseable time is
-    * dropped there), drop duplicate keys within a 1-day watermark on that
-    * instant (the poll cadence is 10 min, so a day of dedup state safely
-    * covers the reference's semantics while keeping state bounded — the
-    * Azure Table grew forever), then explode the records.
+    * dropped here and kept by [[bmwDeadLetters]]), drop duplicate keys
+    * within a 1-day watermark on that instant (the poll cadence is
+    * 10 min, so a day of dedup state safely covers the reference's
+    * semantics while keeping state bounded — the Azure Table grew
+    * forever), then explode the records.
     */
   def bmwDeduped(raw: Dataset[String]): Dataset[TimeseriesRecord] = {
     import raw.sparkSession.implicits._
-    raw.flatMap(Bmw.parsePoll(_))
+    raw.flatMap(Bmw.parsePoll(_).toOption)
       .withWatermark("eventTime", "1 day")
       .dropDuplicatesWithinWatermark("vin", "lastUpdatedAt")
       .flatMap(_.records)
   }
 
+  /** The raw polls [[Bmw.parsePoll]] rejects, which [[bmwDeduped]] drops:
+    * not JSON, no vin/state, no `lastUpdatedAt`, or an unparseable time.
+    */
+  def bmwDeadLetters(raw: Dataset[String]): Dataset[String] =
+    raw.filter((s: String) => Bmw.parsePoll(s).isLeft)
+
   /** BMW pipeline with the reference's dual-sink fan-out (A6): every
-    * micro-batch lands in the conditions store AND a monitor copy.
-    * `foreachBatch` is the Spark idiom for multi-sink writes.
+    * micro-batch lands in the conditions store ([[ConditionsTable.append]])
+    * AND a monitor copy. `foreachBatch` is the Spark idiom for multi-sink
+    * writes.
     */
   def startBmw(spark: SparkSession, inputDir: String, outputDir: String,
                monitorDir: String, checkpointDir: String,
@@ -191,21 +189,15 @@ object IngestPipeline {
   /** [[startBmw]] with a config-selected source. */
   def startBmw(spark: SparkSession, src: SourceConfig, outputDir: String,
                monitorDir: String, checkpointDir: String,
-               trigger: Trigger): StreamingQuery = {
-    bmwDeduped(readText(spark, src))
-      .writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointDir)
+               trigger: Trigger): StreamingQuery =
+    start(spark, src, checkpointDir, trigger)(raw => bmwDeduped(raw).writeStream
       .foreachBatch { (batch: Dataset[TimeseriesRecord], _: Long) =>
         val storage = ConditionsTable.toStorage(batch).cache()
         try {
-          storage.write.mode("append").partitionBy("date").parquet(outputDir)
+          ConditionsTable.append(storage, outputDir)
           storage.write.mode("append").parquet(monitorDir)
         } finally storage.unpersist()
-      }
-      .start()
-  }
+      })
 
   /** JDBC conditions sink (A7) for parity mode against a real
     * TimescaleDB: per-batch batched inserts replace the reference's

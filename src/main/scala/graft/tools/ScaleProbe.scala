@@ -846,7 +846,7 @@ object ScaleProbe {
     * window's buckets and the tail scan prunes to the stale dates.
     */
   private def caggTailProbe(spark: SparkSession, ms: Seq[Int]): Unit = {
-    import graft.sources.ContinuousAggregate
+    import graft.sources.{ConditionsTable, ContinuousAggregate}
     import spark.implicits._
     val t0 = 1704240000L // 2024-01-03T00:00:00Z
     for (days <- ms) {
@@ -856,9 +856,7 @@ object ScaleProbe {
           "s1", "m", Option((i % 97).toDouble), Option.empty[String])
       }.toDF("timestamp", "measurement_subject", "measurement_of",
         "measurement_number", "measurement_string")
-      rows.withColumn("date", to_date(col("timestamp")))
-        .repartition(col("date"))
-        .write.partitionBy("date").parquet(s"$tmp/store")
+      ConditionsTable.write(rows.withColumn("date", ConditionsTable.dateKey), s"$tmp/store")
       val endS = t0 + days.toLong * 86400L
       val staleFrom = endS - 86400L // rollup covers all but the last day
       ContinuousAggregate.create(

@@ -21,9 +21,9 @@ object JsonNum {
 }
 
 /** Local-filesystem helpers shared by the entry point, the probes and the
-  * streaming specs (driver-side scratch-dir cleanup only — store-side
-  * deletes go through the Hadoop FileSystem API with checked results, see
-  * `CaggStream.migrateLegacyFlatStore`).
+  * specs (cleanup of local temporary directories only — store-side deletes
+  * go through the Hadoop FileSystem API with checked results, see
+  * `ConditionsTable.compact` and `CaggStream.migrateLegacyFlatStore`).
   */
 object FsUtil {
   def deleteRecursively(f: java.io.File): Unit = {

@@ -169,9 +169,10 @@ class GoldenCorpusSpec extends AnyFunSuite {
   test("bmw golden messages: 3 messages, 2 unique keys, 6 records each") {
     val msgs = mapper.readTree(getClass.getResourceAsStream("/bmw_topic_messages.json"))
       .elements.asScala.toVector
-    val keys = msgs.map(m => Bmw.key(m))
+    val polls = msgs.map(m => Bmw.parsePoll(m.toString).toTry.get)
+    val keys = polls.map(p => (p.vin, p.lastUpdatedAt))
     assert(keys.distinct.size == 2)
-    val recs = Bmw.convert(msgs.head)
+    val recs = polls.head.records
     assert(recs.size == 6)
     val byOf = recs.map(r => r.measurement_of -> r).toMap
     assert(byOf("chargingLevelPercent").measurement_number.contains(67.0))

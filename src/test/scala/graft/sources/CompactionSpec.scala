@@ -99,6 +99,63 @@ class CompactionSpec extends AnyFunSuite {
     assert(!staged.exists())
   }
 
+  test("compaction and retention work on a store given as a file:// URI") {
+    val path = fragmentedStore()
+    val uri = new java.io.File(path).toURI.toString
+    assert(uri.startsWith("file:/"), uri)
+    val before = spark.read.parquet(path).orderBy("timestamp", "measurement_number")
+      .collect().map(_.toSeq)
+    assert(ConditionsTable.compact(spark, uri, maxFilesPerDate = 8) == 1)
+    assert(parquetsIn(new java.io.File(path, "date=2024-01-03")).length == 1)
+    assert(spark.read.parquet(path).orderBy("timestamp", "measurement_number")
+      .collect().map(_.toSeq).toSeq == before.toSeq)
+    assert(ConditionsTable.dropPartitionsOlderThan(spark, uri, "2024-01-04") ==
+      Seq("date=2024-01-03"))
+    assert(new java.io.File(path).listFiles().map(_.getName).filter(_.startsWith("date="))
+      .toSeq == Seq("date=2024-01-04"))
+  }
+
+  test("a crashed swap whose marker has a checksum sidecar finishes and leaves no sidecar") {
+    import org.apache.hadoop.fs.Path
+    val path = fragmentedStore()
+    val before = spark.read.parquet(path).orderBy("timestamp", "measurement_number")
+      .collect().map(_.toSeq)
+    val root = new java.io.File(path)
+    val old = parquetsIn(new java.io.File(root, "date=2024-01-03"))
+    spark.read.parquet(old.map(_.getAbsolutePath).toSeq: _*).coalesce(1)
+      .write.mode("overwrite").parquet(new java.io.File(root, ".compact_date=2024-01-03").getPath)
+    // the local Hadoop filesystem writes `..compact_date=2024-01-03.COMMIT.crc` beside it
+    val marker = new Path(new java.io.File(root, ".compact_date=2024-01-03.COMMIT").toURI)
+    val out = marker.getFileSystem(spark.sparkContext.hadoopConfiguration).create(marker)
+    try out.write(old.map(_.getName).sorted.mkString("\n").getBytes("UTF-8")) finally out.close()
+    assert(new java.io.File(root, "..compact_date=2024-01-03.COMMIT.crc").exists())
+    ConditionsTable.compact(spark, path, maxFilesPerDate = 8)
+    assert(spark.read.parquet(path).orderBy("timestamp", "measurement_number")
+      .collect().map(_.toSeq).toSeq == before.toSeq)
+    assert(!root.listFiles().exists(_.getName.contains(".compact_")),
+      root.listFiles().map(_.getName).mkString(", "))
+  }
+
+  test("retention checks each delete: a refused one throws naming it, the cutoff date is kept") {
+    val path = fragmentedStore()
+    spark.read.parquet(path).filter(col("date") === "2024-01-04")
+      .withColumn("timestamp", col("timestamp") + expr("INTERVAL 1 DAY")).drop("date")
+      .withColumn("date", ConditionsTable.dateKey).coalesce(1)
+      .write.mode("append").partitionBy("date").parquet(path)
+    def dates = new java.io.File(path).listFiles().map(_.getName)
+      .filter(_.startsWith("date=")).sorted.toSeq
+    assert(dates == Seq("date=2024-01-03", "date=2024-01-04", "date=2024-01-05"))
+    spark.sparkContext.hadoopConfiguration.set("fs.refusedel.impl", classOf[RefusingDeleteFs].getName)
+    val ex = intercept[IllegalStateException](ConditionsTable.dropPartitionsOlderThan(spark,
+      "refusedel://" + new java.io.File(path).toURI.getPath, "2024-01-05"))
+    assert(ex.getMessage.contains("date=2024-01-04"), ex.getMessage)
+    assert(dates == Seq("date=2024-01-04", "date=2024-01-05"))
+    // a retry deletes what is left older than the cutoff, and only that
+    assert(ConditionsTable.dropPartitionsOlderThan(spark, path, "2024-01-05") ==
+      Seq("date=2024-01-04"))
+    assert(dates == Seq("date=2024-01-05"))
+  }
+
   test("file-sink-managed stores (_spark_metadata) refuse compaction and retention") {
     // a Structured Streaming file sink pins its exact file set in the
     // metadata log; mutating files underneath it breaks log-based reads
@@ -107,7 +164,18 @@ class CompactionSpec extends AnyFunSuite {
     val ex = intercept[IllegalArgumentException](ConditionsTable.compact(spark, path))
     assert(ex.getMessage.contains("_spark_metadata"), ex.getMessage)
     val ex2 = intercept[IllegalArgumentException](
-      ConditionsTable.dropPartitionsOlderThan(path, "2024-01-04"))
+      ConditionsTable.dropPartitionsOlderThan(spark, path, "2024-01-04"))
     assert(ex2.getMessage.contains("_spark_metadata"), ex2.getMessage)
   }
+}
+
+/** The local filesystem under the `refusedel` scheme, refusing to delete
+  * any path named `date=2024-01-04` — a delete failure a root process
+  * cannot force through file permissions.
+  */
+class RefusingDeleteFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("refusedel:///")
+  override def getScheme: String = "refusedel"
+  override def delete(p: org.apache.hadoop.fs.Path, recursive: Boolean): Boolean =
+    p.getName != "date=2024-01-04" && super.delete(p, recursive)
 }

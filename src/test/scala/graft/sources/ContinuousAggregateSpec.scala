@@ -270,13 +270,13 @@ class ContinuousAggregateSpec extends AnyFunSuite {
     ConditionsTable.write(conditions(4).drop("measurement_string")
       .withColumn("measurement_string", lit(null).cast("string"))
       .withColumn("date", to_date(col("timestamp"))), store)
-    val dropped = ConditionsTable.dropPartitionsOlderThan(store, "2024-01-05")
+    val dropped = ConditionsTable.dropPartitionsOlderThan(spark, store, "2024-01-05")
     assert(dropped == Seq("date=2024-01-03", "date=2024-01-04"))
     val left = spark.read.parquet(store).select("date").distinct()
       .collect().map(_.get(0).toString).sorted
     assert(left.toSeq == Seq("2024-01-05", "2024-01-06"))
     // idempotent
-    assert(ConditionsTable.dropPartitionsOlderThan(store, "2024-01-05").isEmpty)
+    assert(ConditionsTable.dropPartitionsOlderThan(spark, store, "2024-01-05").isEmpty)
   }
 
   test("realtime serving: stale rollup union raw tail equals from-scratch; materialized-only loses the tail") {

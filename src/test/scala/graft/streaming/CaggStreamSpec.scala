@@ -65,6 +65,23 @@ class CaggStreamSpec extends AnyFunSuite {
     } finally rmTree(new java.io.File(tmp))
   }
 
+  test("a batch spanning 3 days appends one parquet file per date") {
+    val day = 86400L
+    val tmp = java.nio.file.Files.createTempDirectory("cagg_files").toString
+    try {
+      // 4 input files, each holding rows of all 3 days
+      rows((0 until 60).map(i => ((i % 3) * day + i * 60L, i.toDouble)))
+        .repartition(4).write.parquet(s"$tmp/in")
+      CaggStream.start(spark, s"$tmp/in", s"$tmp/store", s"$tmp/agg",
+        s"$tmp/cp", widthS = 3600).awaitTermination()
+      val files = new java.io.File(s"$tmp/store").listFiles().filter(_.isDirectory)
+        .map(d => d.getName -> d.listFiles().count(_.getName.endsWith(".parquet"))).toMap
+      assert(files == Map("date=2024-01-03" -> 1, "date=2024-01-04" -> 1, "date=2024-01-05" -> 1),
+        s"files per date: $files")
+      assert(spark.read.parquet(s"$tmp/store").count() == 60)
+    } finally rmTree(new java.io.File(tmp))
+  }
+
   test("legacy flat raw store migrates on resume: no mixed layout, history preserved") {
     // a store written by the pre-partitioning layout (flat parquet files
     // at the root) must not break the next batch — Spark's partition

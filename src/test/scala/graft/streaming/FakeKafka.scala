@@ -40,7 +40,7 @@ object FakeKafka {
 
   /** The kafka source's fixed wire schema (key/value/topic/partition/
     * offset/timestamp/timestampType) — what the real connector exposes
-    * and what `readText` projects `value` out of.
+    * and what `IngestPipeline`'s kafka source projects `value` out of.
     */
   val schema: StructType = StructType(Seq(
     StructField("key", BinaryType),

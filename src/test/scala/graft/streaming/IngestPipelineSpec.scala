@@ -259,6 +259,53 @@ class IngestPipelineSpec extends AnyFunSuite {
     assert(spark.read.parquet(out).count() == 12)
   }
 
+  /** Parquet files per `date=` directory of the store at `dir`. */
+  private def filesPerDate(dir: String): Map[String, Int] =
+    new java.io.File(dir).listFiles().filter(_.getName.startsWith("date="))
+      .map(d => d.getName -> d.listFiles().count(_.getName.endsWith(".parquet"))).toMap
+
+  test("bmw dead letters are exactly the bad polls; the store keeps only the good ones") {
+    import spark.implicits._
+    val good = mapper.readTree(getClass.getResourceAsStream("/bmw_topic_messages.json"))
+      .elements.asScala.map(_.toString).toVector
+    val bad = Seq(
+      "not json at all",
+      """{"vin": "NOTIME", "state": {"currentMileage": 5}}""",
+      """{"vin": "BADTIME", "state": {"lastUpdatedAt": "yesterday", "currentMileage": 5}}""")
+    val corpus = good.take(2) ++ bad ++ good.drop(2)
+    assert(IngestPipeline.bmwDeadLetters(corpus.toDS()).collect().toSeq == bad)
+    val in = Files.createTempDirectory("bmw_dl_in").toString
+    val out = Files.createTempDirectory("bmw_dl_out").toString
+    val mon = Files.createTempDirectory("bmw_dl_mon").toString
+    val ckpt = Files.createTempDirectory("bmw_dl_ckpt").toString
+    Files.write(java.nio.file.Paths.get(s"$in/polls.txt"), corpus.mkString("\n").getBytes)
+    IngestPipeline.startBmw(spark, in, out, mon, ckpt).awaitTermination(60000)
+    // the 3 good polls hold 2 unique keys x 6 fields; no bad vin is stored
+    val stored = spark.read.parquet(out)
+    assert(stored.count() == 12)
+    assert(stored.filter($"measurement_subject".isin("NOTIME", "BADTIME")).count() == 0)
+  }
+
+  test("bmw drain over 3 days appends one parquet file per date per batch") {
+    val in = Files.createTempDirectory("bmw_days_in").toString
+    val out = Files.createTempDirectory("bmw_days_out").toString
+    val mon = Files.createTempDirectory("bmw_days_mon").toString
+    val ckpt = Files.createTempDirectory("bmw_days_ckpt").toString
+    // 120 polls over 2024-01-03..05, which the dedup shuffles across all
+    // 4 shuffle partitions
+    val polls = (0 until 120).map { i =>
+      val at = f"2024-01-0${3 + i % 3}T${i % 24}%02d:00:00Z"
+      s"""{"vin": "V$i", "state": {"lastUpdatedAt": "$at", "currentMileage": $i}}"""
+    }
+    Files.write(java.nio.file.Paths.get(s"$in/polls.txt"), polls.mkString("\n").getBytes)
+    val q = IngestPipeline.startBmw(spark, in, out, mon, ckpt)
+    q.awaitTermination(60000)
+    assert(q.recentProgress.count(_.numInputRows > 0) == 1, "one batch expected")
+    assert(filesPerDate(out) == Map("date=2024-01-03" -> 1, "date=2024-01-04" -> 1,
+      "date=2024-01-05" -> 1), filesPerDate(out))
+    assert(spark.read.parquet(out).count() == 120)
+  }
+
   test("source seam: explicit Files config is the exact path the string API takes; kafka branch translates options") {
     import IngestPipeline.SourceConfig
     // the file branch through the EXPLICIT SourceConfig must behave
