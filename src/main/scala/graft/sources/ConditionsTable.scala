@@ -257,6 +257,12 @@ object ConditionsTable {
   /** The streaming file sink into `path`, clustered by `date` like [[write]]
     * but unsorted (Spark rejects `sortWithinPartitions` on a streaming
     * Dataset); the caller sets mode, trigger and checkpoint, and starts it.
+    *
+    * The clustering hashes the date, so a batch's dates share a task
+    * whenever they share a hash bucket: at 4 shuffle partitions the
+    * three dates of the perfbench `ingest_backlog` backlog (epoch days
+    * 19780–19782) all land in one, and one task writes the whole 3-day
+    * MQTT batch (0.8–1.0 s of a 1.5 s `addBatch` on 4 vCPU).
     */
   def sink(storage: DataFrame, path: String): DataStreamWriter[Row] =
     storage.repartition(col("date")).writeStream

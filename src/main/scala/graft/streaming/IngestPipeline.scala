@@ -3,6 +3,7 @@ package graft.streaming
 import graft.convert.Bmw
 import graft.model.TimeseriesRecord
 import graft.sources.ConditionsTable
+import graft.util.StreamParallelism
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
@@ -156,10 +157,16 @@ object IngestPipeline {
     * (vin, lastUpdatedAt) key, its event instant and its records
     * ([[Bmw.parsePoll]]; a malformed poll or an unparseable time is
     * dropped here and kept by [[bmwDeadLetters]]), drop duplicate keys
-    * within a 1-day watermark on that instant (the poll cadence is
-    * 10 min, so a day of dedup state safely covers the reference's
-    * semantics while keeping state bounded — the Azure Table grew
-    * forever), then explode the records.
+    * within a 1-day watermark on that instant, then explode the records.
+    *
+    * The watermark bounds the dedup state (the reference's Azure Table
+    * grew forever), but it is not the reference's semantics: a poll whose
+    * `lastUpdatedAt` is at or below the watermark (the newest instant an
+    * earlier micro-batch saw, minus 1 day) is dropped — not stored, not
+    * dead-lettered, not counted — where the reference stores it. On the
+    * 10-min poll cadence that is a poll more than a day late, such as a
+    * backlog replayed after an outage; `IngestPipelineSpec`'s three-drain
+    * replay pins which rows survive.
     */
   def bmwDeduped(raw: Dataset[String]): Dataset[TimeseriesRecord] = {
     import raw.sparkSession.implicits._
@@ -186,18 +193,35 @@ object IngestPipeline {
     startBmw(spark, SourceConfig.Files(inputDir), outputDir, monitorDir,
       checkpointDir, trigger)
 
-  /** [[startBmw]] with a config-selected source. */
+  /** [[startBmw]] with a config-selected source.
+    *
+    * The dedup state's partition count is sized from a [[SourceConfig.Files]]
+    * input at start ([[StreamParallelism.withSizedShufflePartitions]], the
+    * rule every gate stream follows; `graft.stream.shufflePartitions` still
+    * pins it). A kafka source carries no size signal and keeps the
+    * session's `spark.sql.shuffle.partitions`.
+    *
+    * A micro-batch with no rows writes nothing. The watermark's no-data
+    * batch is one: it still runs the dedup (the `isEmpty` probe executes
+    * the cached plan, so the state store evicts and commits its version),
+    * but adds no empty parquet file to the monitor store.
+    */
   def startBmw(spark: SparkSession, src: SourceConfig, outputDir: String,
                monitorDir: String, checkpointDir: String,
-               trigger: Trigger): StreamingQuery =
-    start(spark, src, checkpointDir, trigger)(raw => bmwDeduped(raw).writeStream
+               trigger: Trigger): StreamingQuery = {
+    def run = start(spark, src, checkpointDir, trigger)(raw => bmwDeduped(raw).writeStream
       .foreachBatch { (batch: Dataset[TimeseriesRecord], _: Long) =>
         val storage = ConditionsTable.toStorage(batch).cache()
-        try {
+        try if (!storage.isEmpty) {
           ConditionsTable.append(storage, outputDir)
           storage.write.mode("append").parquet(monitorDir)
         } finally storage.unpersist()
       })
+    src match {
+      case SourceConfig.Files(dir) => StreamParallelism.withSizedShufflePartitions(spark, dir)(run)
+      case _: SourceConfig.Kafka => run
+    }
+  }
 
   /** JDBC conditions sink (A7) for parity mode against a real
     * TimescaleDB: per-batch batched inserts replace the reference's

@@ -5,10 +5,13 @@ import org.apache.spark.sql.SparkSession
 /** Size-derived shuffle parallelism for STREAMING queries.
   *
   * Batch queries already size their post-shuffle partitions adaptively
-  * (AQE coalescing against `spark.sql.adaptive.advisoryPartitionSizeInBytes`);
-  * Structured Streaming cannot — AQE is unsupported in streaming plans,
-  * and the stateful-operator partition count is latched into the
-  * checkpoint from `spark.sql.shuffle.partitions` at FIRST query start.
+  * (AQE coalescing against `spark.sql.adaptive.advisoryPartitionSizeInBytes`).
+  * A streaming query only partly can: Spark 4.1.2 plans a STATELESS
+  * micro-batch adaptively (the MQTT sink's plan is an `AdaptiveSparkPlan`
+  * whose `AQEShuffleRead` coalesces the date shuffle), but it turns AQE
+  * off for a query holding a stateful operator (the BMW dedup, every
+  * windowed gate), and that operator's partition count is latched into
+  * the checkpoint from `spark.sql.shuffle.partitions` at FIRST query start.
   * Leaving that at a constant (the session's core count) is therefore a
   * constant tuned for one deployment: at toy input volumes every
   * micro-batch pays ~32 state-store instances + 32-task shuffles + a

@@ -1,7 +1,9 @@
 package graft.streaming
 
 import com.fasterxml.jackson.databind.ObjectMapper
+import graft.util.StreamParallelism
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryProgress}
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.file.Files
@@ -259,6 +261,105 @@ class IngestPipelineSpec extends AnyFunSuite {
     assert(spark.read.parquet(out).count() == 12)
   }
 
+  /** `start` with `graft.stream.shufflePartitions` set to `n`. */
+  private def withForcedPartitions[T](n: Int)(start: => T): T = {
+    spark.conf.set(StreamParallelism.ForcedKey, n.toString)
+    try start finally spark.conf.unset(StreamParallelism.ForcedKey)
+  }
+
+  /** The progress of each micro-batch of `q` that read rows. */
+  private def dataBatches(q: StreamingQuery): Seq[StreamingQueryProgress] =
+    q.recentProgress.toSeq.filter(_.numInputRows > 0)
+
+  /** A BMW poll carrying all six fields the converter stores. */
+  private def fullPoll(vin: String, at: String, i: Int): String =
+    s"""{"vin": "$vin", "state": {"lastUpdatedAt": "$at", "currentMileage": $i,
+       |"electricChargingState": {"chargingLevelPercent": ${i % 100}, "range": ${100 + i},
+       |"isChargerConnected": ${i % 2 == 0}, "chargingStatus": "S${i % 3}"},
+       |"location": {"coordinates": {"latitude": 48.${i}, "longitude": 11.${i}}}}}"""
+      .stripMargin.replace("\n", " ")
+
+  test("bmw dedup state is sized from its input; the override pins it; a restart stores nothing new") {
+    val msgs = mapper.readTree(getClass.getResourceAsStream("/bmw_topic_messages.json"))
+      .elements.asScala.map(_.toString).toVector
+    def drain(tag: String)(start: (String, String, String, String) => StreamingQuery) = {
+      val dirs = Seq("in", "out", "mon", "ckpt").map(d => Files.createTempDirectory(s"bmw_${tag}_$d").toString)
+      Files.write(java.nio.file.Paths.get(s"${dirs(0)}/msgs.txt"), msgs.mkString("\n").getBytes)
+      val q = start(dirs(0), dirs(1), dirs(2), dirs(3))
+      q.awaitTermination(60000)
+      (q, dirs)
+    }
+    // a few hundred bytes sized against a 64 MB target: one state partition
+    // where the session's shuffle partitions would give four
+    val (sized, Seq(in, out, mon, ckpt)) = drain("sized")(IngestPipeline.startBmw(spark, _, _, _, _))
+    assert(dataBatches(sized).map(_.stateOperators(0).numShufflePartitions) == Seq(1))
+    assert(spark.read.parquet(out).count() == 12)
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == "4", "the session's count is restored")
+    // a restart on that checkpoint, even under another pinned count, keeps
+    // the checkpoint's dedup state and stores nothing new
+    withForcedPartitions(3)(IngestPipeline.startBmw(spark, in, out, mon, ckpt)).awaitTermination(60000)
+    assert(spark.read.parquet(out).count() == 12)
+    assert(spark.read.parquet(mon).count() == 12)
+
+    val (pinned, _) = drain("pinned")((i, o, m, c) =>
+      withForcedPartitions(3)(IngestPipeline.startBmw(spark, i, o, m, c)))
+    assert(dataBatches(pinned).map(_.stateOperators(0).numShufflePartitions) == Seq(3))
+  }
+
+  test("an empty bmw micro-batch writes no file to either store") {
+    val in = Files.createTempDirectory("bmw_empty_in").toString
+    val out = Files.createTempDirectory("bmw_empty_out").toString
+    val mon = Files.createTempDirectory("bmw_empty_mon").toString
+    val ckpt = Files.createTempDirectory("bmw_empty_ckpt").toString
+    val polls = (0 until 30).map(i => fullPoll(s"V$i", f"2024-01-0${3 + i % 3}T${i % 24}%02d:00:00Z", i))
+    Files.write(java.nio.file.Paths.get(s"$in/polls.txt"), polls.mkString("\n").getBytes)
+    val q = IngestPipeline.startBmw(spark, in, out, mon, ckpt)
+    q.awaitTermination(60000)
+    // the data batch moves the watermark, so a no-data batch follows it
+    assert(q.recentProgress.map(_.numInputRows).toSeq == Seq(30L, 0L))
+    def parquetFiles(dir: String): Seq[String] = {
+      val files = Files.walk(java.nio.file.Paths.get(dir)).iterator().asScala
+        .map(_.toString).filter(_.endsWith(".parquet")).toVector
+      files.foreach(f => assert(spark.read.parquet(f).count() > 0, s"zero-row file $f"))
+      files
+    }
+    assert(parquetFiles(mon).size == 1)
+    assert(parquetFiles(out).size == 3)
+    assert(spark.read.parquet(mon).count() == 180)
+  }
+
+  test("three bmw drains on one checkpoint: later drains drop the polls below the watermark") {
+    import spark.implicits._
+    val in = Files.createTempDirectory("bmw_replay_in").toString
+    val out = Files.createTempDirectory("bmw_replay_out").toString
+    val mon = Files.createTempDirectory("bmw_replay_mon").toString
+    val ckpt = Files.createTempDirectory("bmw_replay_ckpt").toString
+    // each drain adds one file of 90 new-keyed polls over 2024-01-03..05
+    // (newest 2024-01-05T23:00), so from the second drain on the watermark
+    // stands at 2024-01-04T23:00
+    val drains = (0 until 3).map(d => (0 until 90).map { i =>
+      val at = f"2024-01-0${3 + i % 3}T${i % 24}%02d:00:00Z"
+      (at, fullPoll(s"D${d}V$i", at, i))
+    })
+    drains.zipWithIndex.foreach { case (polls, d) =>
+      Files.write(java.nio.file.Paths.get(s"$in/drain_$d.txt"), polls.map(_._2).mkString("\n").getBytes)
+      IngestPipeline.startBmw(spark, in, out, mon, ckpt).awaitTermination(60000)
+    }
+    // the late-poll loss as it stands (the reference would store every
+    // poll): the first drain stores all its polls, the later two only
+    // those of 2024-01-05 — 90 + 30 + 30 polls of 6 records
+    val kept = drains.head.map(_._2) ++
+      drains.tail.flatMap(_.filter(_._1.startsWith("2024-01-05")).map(_._2))
+    val expectedDir = Files.createTempDirectory("bmw_replay_expected").toString
+    graft.sources.ConditionsTable.write(graft.sources.ConditionsTable.toStorage(
+      kept.toDS().flatMap(graft.convert.Bmw.convertMessage(_).get)), expectedDir)
+    def rows(dir: String) = spark.read.parquet(dir).collect().map(_.toString).sorted.toSeq
+    val stored = rows(out)
+    assert(stored.size == 900)
+    assert(stored == rows(expectedDir))
+    assert(rows(mon) == stored)
+  }
+
   /** Parquet files per `date=` directory of the store at `dir`. */
   private def filesPerDate(dir: String): Map[String, Int] =
     new java.io.File(dir).listFiles().filter(_.getName.startsWith("date="))
@@ -291,15 +392,17 @@ class IngestPipelineSpec extends AnyFunSuite {
     val out = Files.createTempDirectory("bmw_days_out").toString
     val mon = Files.createTempDirectory("bmw_days_mon").toString
     val ckpt = Files.createTempDirectory("bmw_days_ckpt").toString
-    // 120 polls over 2024-01-03..05, which the dedup shuffles across all
-    // 4 shuffle partitions
+    // 120 polls over 2024-01-03..05; the pinned count makes the dedup
+    // shuffle them across 4 partitions (sized from this input it would
+    // use 1), so the append must cluster several tasks' rows per date
     val polls = (0 until 120).map { i =>
       val at = f"2024-01-0${3 + i % 3}T${i % 24}%02d:00:00Z"
       s"""{"vin": "V$i", "state": {"lastUpdatedAt": "$at", "currentMileage": $i}}"""
     }
     Files.write(java.nio.file.Paths.get(s"$in/polls.txt"), polls.mkString("\n").getBytes)
-    val q = IngestPipeline.startBmw(spark, in, out, mon, ckpt)
+    val q = withForcedPartitions(4)(IngestPipeline.startBmw(spark, in, out, mon, ckpt))
     q.awaitTermination(60000)
+    assert(dataBatches(q).map(_.stateOperators(0).numShufflePartitions) == Seq(4))
     assert(q.recentProgress.count(_.numInputRows > 0) == 1, "one batch expected")
     assert(filesPerDate(out) == Map("date=2024-01-03" -> 1, "date=2024-01-04" -> 1,
       "date=2024-01-05" -> 1), filesPerDate(out))
