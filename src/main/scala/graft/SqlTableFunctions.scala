@@ -254,7 +254,7 @@ object SqlTableFunctions {
     }
     add("graft_gapfill", "graft_gapfill(of, start_s, end_s, width_s, method)", 5) {
       (s, f, a) =>
-        val method = strArg(f, a, 4).toLowerCase match {
+        val method = strArg(f, a, 4).toLowerCase(java.util.Locale.ROOT) match {
           case "locf"   => graft.queries.GapfillLocf
           case "linear" => graft.queries.GapfillLinear
           case other => throw new IllegalArgumentException(
@@ -632,7 +632,7 @@ object SqlTableFunctions {
       val m = longArg(f, a, 0)
       val corpus = docs.filter(col("doc_id") % m =!= 0)
       val ref = docs.filter(col("doc_id") % m === 0)
-      strArg(f, a, 1).toLowerCase match {
+      strArg(f, a, 1).toLowerCase(java.util.Locale.ROOT) match {
         case "exact"  => TextAnalysis.ccnetBuckets(corpus, ref)
         case "approx" => TextAnalysis.ccnetBucketsApprox(corpus, ref)
         case other => throw new IllegalArgumentException(

@@ -214,7 +214,7 @@ object Converters {
         s"Error extracting topic")
       val topic = topicNode.asText
       val publisher = topic.split("/")(0)
-      val converted = publisher.toLowerCase match {
+      val converted = publisher.toLowerCase(java.util.Locale.ROOT) match {
         case "glow"  => glow(body, topic, publisher, correlationId)
         case "homie" => homie(body, topic, publisher, correlationId)
         case "emon"  => emon(body, topic, publisher, correlationId)

@@ -30,7 +30,7 @@ object TimeWeight {
   case object Locf extends Method
 
   /** The `method` argument of the B6 surfaces (`linear` | `locf`, any case). */
-  def method(name: String): Method = name.toLowerCase match {
+  def method(name: String): Method = name.toLowerCase(java.util.Locale.ROOT) match {
     case "linear" => Linear
     case "locf"   => Locf
     case other => throw new IllegalArgumentException(

@@ -21,11 +21,11 @@ import org.apache.spark.sql.functions._
   * EMPIRICAL recall check for this corpus and seed set — not a proof:
   * per-pair recall at j=0.8 (bands=16, rows=4) is ~0.9998, so a
   * near-threshold pair can in principle be missed at larger scale
-  * factors. Measured (r9): `ScaleProbe … recall` at sf0.1 across 3
-  * permutation seeds × bands {16, 32} found 0 misses in 1,536
-  * pair-draws (SCALING.md "MinHash-LSH recall" table, with the
-  * bands-escalation policy). Inject [[Dedup.jaccardPairs]] to force
-  * the exact tier when recall 1 is required.
+  * factors. Measured (r9) at sf0.1 across 3 permutation seeds × bands
+  * {16, 32}: 0 misses in 1,536 pair-draws (SCALING.md "MinHash-LSH
+  * recall" table, with the bands-escalation policy). Inject
+  * [[Dedup.jaccardPairs]] to force the exact tier when recall 1 is
+  * required.
   */
 object CorpusCuration {
 

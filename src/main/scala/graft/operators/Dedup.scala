@@ -299,24 +299,20 @@ object Dedup {
 
   val MinhashPrime: Long = 2147483647L // 2^31 - 1; products stay in Long
 
-  /** Seeded universal-hash coefficients (deterministic across runs).
-    * Non-default seeds exist for RECALL MEASUREMENT (ScaleProbe's
-    * `recall` mode re-draws the permutation family to estimate banding
-    * recall empirically); every pipeline path keeps the default so
-    * persisted indexes and oracles stay reproducible.
+  /** Universal-hash coefficients from the fixed seed 42, so persisted
+    * signature indexes and oracle hashes are the same on every run.
     */
-  private def coeffs(numPerm: Int, seed: Long = 42L): (Array[Long], Array[Long]) = {
-    val rng = new scala.util.Random(seed)
+  private def coeffs(numPerm: Int): (Array[Long], Array[Long]) = {
+    val rng = new scala.util.Random(42L)
     val a = Array.fill(numPerm)(1L + rng.nextInt((MinhashPrime - 1).toInt))
     val b = Array.fill(numPerm)(rng.nextInt(MinhashPrime.toInt).toLong)
     (a, b)
   }
 
-  private def signaturesFromExploded(ex: DataFrame, numPerm: Int,
-                                     seed: Long = 42L): DataFrame = {
+  private def signaturesFromExploded(ex: DataFrame, numPerm: Int): DataFrame = {
     val spark = ex.sparkSession
     import spark.implicits._
-    val (a, b) = coeffs(numPerm, seed)
+    val (a, b) = coeffs(numPerm)
     val agg = new graft.functions.Sketches.MinHashAgg(numPerm, a, b, MinhashPrime)
     ex.select(col("doc_id"), pmod(xxhash64(col("s")), lit(MinhashPrime)).as("x"))
       .as[(Long, Long)]
@@ -387,7 +383,7 @@ object Dedup {
     */
   def minhashPairs(docs: DataFrame, n: Int = 3, numPerm: Int = 64,
                    bands: Int = 16, threshold: Double = 0.8,
-                   materialize: Boolean = true, seed: Long = 42L): DataFrame = {
+                   materialize: Boolean = true): DataFrame = {
     // one shingle pass feeds signatures AND both verification joins; at a
     // real 100 TB scale this would be a checkpointed table instead of an
     // in-memory persist (Spark evicts LRU, so this degrades, not breaks)
@@ -395,7 +391,7 @@ object Dedup {
     val ex =
       if (materialize) ex0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       else ex0
-    val cands = minhashCandidates(signaturesFromExploded(ex, numPerm, seed), bands, numPerm)
+    val cands = minhashCandidates(signaturesFromExploded(ex, numPerm), bands, numPerm)
     val a = ex.select(col("doc_id").as("doc_a"), col("s"), col("nsh").as("na"))
     val b = ex.select(col("doc_id").as("doc_b"), col("s"), col("nsh").as("nb"))
     val raw = verifyPairs(cands, a, b, "doc_a", "doc_b", threshold)
@@ -679,12 +675,11 @@ object Dedup {
 
   /** The distinct in-bucket pairs BEFORE the Hamming cut — the
     * candidate volume the verification step actually pays per
-    * threshold ([[sigPairs]] = this + the cut). Exposed for the
-    * ScaleProbe cost table; spurious bucket collisions (pairs beyond
-    * the threshold that happened to share a segment) are only visible
-    * here.
+    * threshold ([[sigPairs]] = this + the cut); spurious bucket
+    * collisions (pairs beyond the threshold that happened to share a
+    * segment) are only visible here.
     */
-  private[graft] def sigCandidates(sigs: DataFrame, maxHamming: Int): DataFrame = {
+  private def sigCandidates(sigs: DataFrame, maxHamming: Int): DataFrame = {
     val spark = sigs.sparkSession
     import spark.implicits._
     simhashBanded(sigs, maxHamming)

@@ -431,10 +431,10 @@ object LinkGraph {
   /** The fused single-scan frame [[urlReport]] persists:
     * `(src, _rel: array<(dst, nofollow)>, _anc: array<(dst, anchor)>)`,
     * one row per page, both extraction families from ONE read of the
-    * page frame. `private[graft]` so the plan probe can dump its shape.
+    * page frame.
     */
-  private[graft] def fusedRelAnchors(pages: DataFrame, urlCol: String,
-                                     htmlCol: String): DataFrame =
+  private def fusedRelAnchors(pages: DataFrame, urlCol: String,
+                              htmlCol: String): DataFrame =
     pages
       .select(UrlOps.canonicalizeUrl(col(urlCol)).as("src"),
         col(htmlCol).as("_html"))

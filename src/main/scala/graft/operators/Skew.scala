@@ -28,7 +28,7 @@ object Skew {
     // salt replica — only join types that never emit unmatched small rows
     // are sound under the replicate-small strategy
     require(Set("inner", "left", "leftouter", "leftsemi", "leftanti", "cross")
-      .contains(joinType.toLowerCase.replace("_", "")),
+      .contains(joinType.toLowerCase(java.util.Locale.ROOT).replace("_", "")),
       s"saltedJoin does not support joinType=$joinType (small side is replicated)")
     val bigCols = big.columns.map(col)
     val salted = big.withColumn("__salt",

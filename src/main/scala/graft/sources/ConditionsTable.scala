@@ -384,12 +384,16 @@ object ConditionsTable {
     * every date partition strictly OLDER than `cutoffDate` (ISO
     * `yyyy-MM-dd`; the cutoff date itself is kept), a metadata-speed
     * directory drop with no rewrite. Returns the dropped partition names
-    * (sorted); a partition that cannot be deleted throws, naming it.
+    * (sorted); a partition that cannot be deleted throws, naming it. A
+    * cutoff that is not a calendar date (`2024-13-01`, `2024-02-30`) is
+    * refused before anything is deleted: the partitions are compared as
+    * strings, and `2024-12-05` sorts below `2024-13-01`.
     */
   def dropPartitionsOlderThan(spark: SparkSession, path: String,
                               cutoffDate: String): Seq[String] = {
-    require(cutoffDate.matches("""\d{4}-\d{2}-\d{2}"""),
-      s"cutoffDate must be yyyy-MM-dd, got $cutoffDate")
+    require(cutoffDate.matches("""\d{4}-\d{2}-\d{2}""") &&
+      scala.util.Try(LocalDate.parse(cutoffDate)).isSuccess,
+      s"cutoffDate must be a yyyy-MM-dd calendar date, got $cutoffDate")
     val (fs, root) = maintained(spark, path, "dropping partitions")
     val dropped = children(fs, root, n => n.startsWith("date=") &&
       n.stripPrefix("date=") < cutoffDate, dirs = true).sortBy(_.getName)

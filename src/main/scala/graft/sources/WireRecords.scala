@@ -67,8 +67,8 @@ object WireRecords {
       case "boolean" =>
         val b =
           if (v.isBoolean) v.asBoolean
-          else if (v.isTextual && Set("true", "false")(v.asText.toLowerCase))
-            v.asText.toLowerCase == "true"
+          else if (v.isTextual && Set("true", "false")(v.asText.toLowerCase(java.util.Locale.ROOT)))
+            v.asText.toLowerCase(java.util.Locale.ROOT) == "true"
           else throw new IllegalArgumentException(s"Invalid boolean value: $v")
         TimeseriesRecord.boolean(ts, subject, publisher, of, b, cid)
       case "number" =>

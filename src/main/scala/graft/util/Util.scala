@@ -1,18 +1,11 @@
 package graft.util
 
-/** Locale-safe JSON number rendering for machine-parsed artifacts
-  * (`bench_out.json`, the ScaleProbe M-sweep lines). Both forms exist on
-  * purpose and both are locale-independent — the bug class they prevent
-  * is an `f"$x%.2f"` interpolation emitting `0,50` under a comma-decimal
-  * default locale, which breaks the JSON parser downstream.
+/** Locale-safe JSON number rendering for `bench_out.json`. The bug
+  * class it prevents is an `f"$x%.2f"` interpolation emitting `0,50`
+  * under a comma-decimal default locale, which breaks the JSON parser
+  * downstream.
   */
 object JsonNum {
-  /** Fixed-dp form (`"0.50"`) — probe lines and SCALING tables, where a
-    * constant column width keeps the tables diff-able.
-    */
-  def fixed(d: Double, dp: Int = 2): String =
-    String.format(java.util.Locale.ROOT, "%." + dp + "f", Double.box(d))
-
   /** Minimal 3-dp form (`"0.5"`) — bench artifact values.
     * `Double.toString` is locale-independent by spec; round-then-toString
     * keeps the committed artifact byte-stable across runs of equal value.
@@ -20,10 +13,11 @@ object JsonNum {
   def minimal3(d: Double): String = (math.round(d * 1000) / 1000.0).toString
 }
 
-/** Local-filesystem helpers shared by the entry point, the probes and the
-  * specs (cleanup of local temporary directories only — store-side deletes
-  * go through the Hadoop FileSystem API with checked results, see
-  * `ConditionsTable.compact` and `CaggStream.migrateLegacyFlatStore`).
+/** Local-filesystem helpers shared by the contract fixtures, the
+  * benchmark and the specs (cleanup of local temporary directories only
+  * — store-side deletes go through the Hadoop FileSystem API with checked
+  * results, see `ConditionsTable.compact` and
+  * `CaggStream.migrateLegacyFlatStore`).
   */
 object FsUtil {
   def deleteRecursively(f: java.io.File): Unit = {

@@ -156,6 +156,21 @@ class CompactionSpec extends AnyFunSuite {
     assert(dates == Seq("date=2024-01-05"))
   }
 
+  test("retention refuses a cutoff that is not a calendar date before deleting anything") {
+    val path = fragmentedStore()
+    def dates = new java.io.File(path).listFiles().map(_.getName)
+      .filter(_.startsWith("date=")).sorted.toSeq
+    val all = Seq("date=2024-01-03", "date=2024-01-04")
+    assert(dates == all)
+    // both sort above every 2024-01 partition as strings
+    for (cutoff <- Seq("2024-13-01", "2024-02-30")) {
+      val ex = intercept[IllegalArgumentException](
+        ConditionsTable.dropPartitionsOlderThan(spark, path, cutoff))
+      assert(ex.getMessage.contains(cutoff), ex.getMessage)
+      assert(dates == all, s"cutoff $cutoff")
+    }
+  }
+
   test("file-sink-managed stores (_spark_metadata) refuse compaction and retention") {
     // a Structured Streaming file sink pins its exact file set in the
     // metadata log; mutating files underneath it breaks log-based reads
